@@ -2089,7 +2089,8 @@ def neardup_components(
     chain length).
     """
     labels, n_bound = _neardup_labels(
-        df, id_col, text_col, threshold, minhash_k, bands, algorithm
+        df, id_col, text_col, threshold, algorithm,
+        minhash_k=minhash_k, bands=bands,
     )
     return _attach_labels(
         df.select(F.col(id_col).alias("id")), "id", labels, n_bound
@@ -2101,9 +2102,9 @@ def _neardup_labels(
     id_col: str,
     text_col: str,
     threshold: float,
-    minhash_k: int,
-    bands: int,
     algorithm: str,
+    minhash_k: int = 16,
+    bands: int = 4,
 ) -> tuple[DataFrame, int]:
     """Converged (id, label) over the minhash-LSH pair graph's edge
     ENDPOINTS plus the broadcast bound — shared by the component table
@@ -2161,7 +2162,7 @@ def keep_best_per_component(
     # endpoint labels broadcast straight onto it — the former
     # comp ⋈ scored equi-join shuffled BOTH 1-row-per-doc tables (r6)
     labels, n_bound = _neardup_labels(
-        df, id_col, text_col, threshold, 16, 4, algorithm
+        df, id_col, text_col, threshold, algorithm
     )
     scored = df.select(
         F.col(id_col).alias("doc_id"), score.alias("score")

@@ -611,8 +611,7 @@ def neardup_cluster_sizes(spark, sf_dir):
     # building and re-aggregating the full 1-row-per-doc component
     # table (the vertices join + a 50k-row groupBy).
     labels, n_endpoints = D._neardup_labels(
-        _docs_par(spark, sf_dir, mult=1), "doc_id", "text", 0.7, 16, 4,
-        "label",
+        _docs_par(spark, sf_dir, mult=1), "doc_id", "text", 0.7, "label"
     )
     n_docs = _docs(spark, sf_dir).count()
     hist = (

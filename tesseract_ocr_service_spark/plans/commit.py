@@ -12,16 +12,18 @@ Protocol (emulating the Iceberg snapshot-commit behaviors named by the
 rule, with plain parquet — no Iceberg jars offline):
 
 1. ``pending = input warc_days - committed warc_days`` where committed =
-   days present in the lineage table. This is an metadata-only anti-join
-   (distinct partition values vs a tiny lineage read).
+   days present in the lineage table: one ``distinct()`` scan job over
+   the input's ``warc_day`` column, set-differenced on the driver
+   against the days of a tiny lineage read.
 2. Process ONLY pending days; write the wide output with **dynamic
    partition overwrite** — a re-attempt replaces exactly the partitions
    it produces, never touching committed ones, and Spark's output
    committer keeps half-written files in ``_temporary`` out of reads.
-3. Append per-day counter rows to ``lineage/`` LAST. A crash between
-   (2) and (3) leaves the day un-committed -> step 1 reprocesses it ->
-   overwrite makes the retry idempotent. Bytes in committed partitions
-   are never rewritten, so re-runs are also byte-stable.
+3. Append per-day counter rows to ``lineage/`` LAST, as one file built
+   on the driver from one counter aggregate over the files just
+   written. A crash between (2) and (3) leaves the day un-committed ->
+   step 1 reprocesses it -> overwrite makes the retry idempotent.
+   Committed partitions are never rewritten, so re-runs are byte-stable.
 
 Output layout (one wide columnar table — parquet column pruning means
 text-only readers never touch the fat ``spans`` pages):
@@ -35,14 +37,14 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import ExtractConfig
 from ..operators import extract as X
-
-
-from pyspark.accumulators import AccumulatorParam
+from ..schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
 
 
 class _DayMsParam(AccumulatorParam):
@@ -74,22 +76,6 @@ def committed_days(spark: SparkSession, out_root: str) -> set[str]:
         r["warc_day"]
         for r in spark.read.parquet(path).select("warc_day").distinct().collect()
     }
-
-
-def attempt_numbers(spark: SparkSession, out_root: str) -> dict[str, int]:
-    """Driver-side {day: max attempt} — an introspection convenience;
-    run_checkpointed itself joins against the lineage table instead
-    (a collected dict is unbounded at real day cardinality)."""
-    path = f"{out_root}/lineage"
-    if not _exists(spark, path):
-        return {}
-    rows = (
-        spark.read.parquet(path)
-        .groupBy("warc_day")
-        .agg(F.max("attempt").alias("a"))
-        .collect()
-    )
-    return {r["warc_day"]: r["a"] for r in rows}
 
 
 @dataclass
@@ -202,18 +188,11 @@ def _run_checkpointed_body(
         raise RuntimeError("injected failure between data write and commit marker")
 
     # ---- step 3: append lineage rows LAST (the commit marker) --------
-    # counters re-read from the just-written files: a cheap columnar
-    # scan of the counter columns only (spans pages never touched).
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    # explicit schema: a run whose rows were ALL filtered writes no
-    # parquet files, and schema inference on an empty dir throws.
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from ..schema import EXTRACTED_SCHEMA
-
+    # counters: ONE aggregate over the just-written files. Explicit schema:
+    # an all-filtered run writes no files, and inferring an empty dir throws.
     ext_schema = StructType(
-        list(EXTRACTED_SCHEMA.fields)
-        + [StructField("warc_day", StringType(), True)]
+        EXTRACTED_SCHEMA.fields + [StructField("warc_day", StringType())]
     )
     if _exists(spark, f"{out_root}/extracted"):
         written = (
@@ -223,61 +202,24 @@ def _run_checkpointed_body(
         )
     else:
         written = spark.createDataFrame([], ext_schema)
-    # EVERY pending day gets a marker row, including days whose rows
-    # were all filtered away (0 output): without the zero-row marker a
-    # filtered-empty day stays "pending" forever and resume never
-    # converges.
-    days_df = spark.createDataFrame(
-        [(d,) for d in pending], "warc_day string"
-    )
-    counters = X.lineage_view(written)
-    zero_filled = days_df.join(counters, "warc_day", "left").select(
-        "warc_day",
-        *[
-            F.coalesce(F.col(c), F.lit(0).cast("bigint")).alias(c)
-            for c in counters.columns
-            if c != "warc_day"
-        ],
-    )
-    # per-day kernel wall from the accumulator (filled by the write
-    # action above; empty when salting/AQE retries raced it — metrics,
-    # not a contract). kernel_ms attributes THIS day's extraction cost;
-    # wall_ms stays the whole-run wall for cross-checking overheads.
-    kern = spark.createDataFrame(
-        [(d, int(ms)) for d, ms in day_acc.value.items()] or
-        [(None, None)],
-        "warc_day string, kernel_ms bigint",
-    ).where(F.col("warc_day").isNotNull())
-    # prior attempt number via a JOIN against the lineage table — a
-    # create_map literal over all committed days grows unboundedly with
-    # run count at 10^12-scale day cardinality.
-    if _exists(spark, f"{out_root}/lineage"):
-        prev = (
-            spark.read.parquet(f"{out_root}/lineage")
-            .groupBy("warc_day")
-            .agg(F.max("attempt").alias("_prev_attempt"))
-        )
-    else:
-        prev = spark.createDataFrame(
-            [], "warc_day string, _prev_attempt int"
-        )
-    lineage = (
-        zero_filled
-        .join(kern, "warc_day", "left")
-        .join(prev, "warc_day", "left")
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn(
-            "kernel_ms",
-            F.coalesce(F.col("kernel_ms"), F.lit(0).cast("bigint")),
-        )
-        .withColumn(
-            "attempt", F.coalesce(F.col("_prev_attempt"), F.lit(0)) + 1
-        )
-        .drop("_prev_attempt")
-    )
+    got = {r["warc_day"]: r.asDict() for r in X.lineage_view(written).collect()}
+    # EVERY pending day gets a marker, zero-filled if all its rows were
+    # filtered away (else it stays pending and resume never converges).
+    # kernel_ms: the write's per-day accumulator (metrics, not a contract).
+    zero = dict.fromkeys(LINEAGE_SCHEMA.fieldNames(), 0)
+    rows = [
+        {
+            **got.get(d, zero),
+            "warc_day": d,
+            "kernel_ms": int(day_acc.value.get(d, 0)),
+            "wall_ms": wall_ms,
+            "attempt": 1,  # a pending day has no lineage row yet
+        }
+        for d in pending
+    ]
+    lineage = spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1)
     lineage.write.mode("append").parquet(f"{out_root}/lineage")
-    n_docs = written.count()
-    return RunSummary(pending, skipped, n_docs, wall_ms)
+    return RunSummary(pending, skipped, sum(r["n_docs"] for r in rows), wall_ms)
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

@@ -150,7 +150,9 @@ LINEAGE_SCHEMA = StructType(
         StructField("n_blocks_dropped", LongType(), False),
         StructField("n_words", LongType(), False),
         StructField("n_chars", LongType(), False),
-        StructField("wall_ms", LongType(), False),
+        StructField("kernel_ms", LongType(), False),
+        # written as int32 since the first commit: appends keep that type
+        StructField("wall_ms", IntegerType(), False),
         StructField("attempt", IntegerType(), False),
     ]
 )

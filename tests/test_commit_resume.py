@@ -3,9 +3,13 @@ per-partition commit, lineage, resumability)."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from tesseract_ocr_service_spark.operators import extract as X
 from tesseract_ocr_service_spark.plans import commit as C
 from tesseract_ocr_service_spark.sources import gen
 
@@ -104,9 +108,18 @@ def test_lineage_per_day_kernel_ms(spark, paths):
     assert all(r["wall_ms"] == s.wall_ms for r in rows)
 
 
+def _lineage_files(out):
+    return glob.glob(os.path.join(out, "lineage", "*.parquet"))
+
+
 def test_lineage_counters_consistent(spark, paths):
     pages, out = paths
+    C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-10")
+    files_before = len(_lineage_files(out))
     C.run_checkpointed(spark, pages, out)
+    # one run appends its whole marker as exactly one lineage file
+    assert len(_lineage_files(out)) == files_before + 1
+
     lineage = C.read_lineage(spark, out)
     ext = C.read_extracted(spark, out)
     agg = ext.agg(
@@ -124,3 +137,28 @@ def test_lineage_counters_consistent(spark, paths):
         lin["words"],
         lin["ok"],
     )
+
+    # every counter of every day equals lineage_view over the output
+    view = {r["warc_day"]: r.asDict() for r in X.lineage_view(ext).collect()}
+    marker = {r["warc_day"]: r.asDict() for r in lineage.collect()}
+    assert set(marker) == set(view)
+    for day, counters in view.items():
+        assert {k: marker[day][k] for k in counters} == counters, day
+
+
+def test_all_filtered_run_commits_zero_markers(spark, paths):
+    """A run whose language filter drops every row still commits one
+    zero-count marker per day, so the next run skips them all."""
+    pages, out = paths
+    s1 = C.run_checkpointed(spark, pages, out, languages=("zz",))
+    assert s1.n_docs == 0
+    assert len(s1.pending_days) == 30 and not s1.skipped_days
+
+    rows = C.read_lineage(spark, out).collect()
+    assert sorted(r["warc_day"] for r in rows) == s1.pending_days
+    counters = [c for c in rows[0].asDict() if c.startswith("n_")]
+    assert all(r[c] == 0 for r in rows for c in counters)
+    assert all(r["kernel_ms"] == 0 and r["attempt"] == 1 for r in rows)
+
+    s2 = C.run_checkpointed(spark, pages, out, languages=("zz",))
+    assert not s2.pending_days and s2.skipped_days == s1.pending_days
