@@ -37,10 +37,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-#: grouping key of the hierarchy, in traversal order.
-_KEY = ["doc", "page_number", "block_num", "par_num", "line_num"]
-
-
 def assemble_pages(
     words: pd.DataFrame, emit_spans: bool = True
 ) -> tuple[dict[tuple[int, int], str], dict[tuple[int, int], list[dict]]]:
@@ -52,10 +48,11 @@ def assemble_pages(
 
     `words` columns: doc, page_number, block_num, par_num, line_num,
     text, left, top, width, height, conf — rows in arrival order.
-    Returns (text_map, spans_map); pages with no non-empty words are
-    absent from both (callers fill ""/[]).
+    Returns (text_map, spans_map), spans in the dict form of
+    :func:`blocks_to_dicts`; pages with no non-empty words are absent
+    from both (callers fill ""/[]).
     """
-    return assemble_pages_arrays(
+    text_map, spans_map = assemble_pages_arrays(
         words["doc"].to_numpy(),
         words["page_number"].to_numpy(),
         words["block_num"].to_numpy(),
@@ -69,6 +66,7 @@ def assemble_pages(
         words["conf"].to_numpy(),
         emit_spans=emit_spans,
     )
+    return text_map, {k: blocks_to_dicts(v) for k, v in spans_map.items()}
 
 
 def assemble_pages_arrays(
@@ -84,7 +82,6 @@ def assemble_pages_arrays(
     height_r,
     conf_r,
     emit_spans: bool = True,
-    as_tuples: bool = False,
 ) -> tuple[dict[tuple[int, int], str], dict[tuple[int, int], list]]:
     """Array-native fused boundary-index pass (raw arrival order in).
 
@@ -94,11 +91,10 @@ def assemble_pages_arrays(
     ocr_processor.py:157-160,231-237, while preserving arrival order
     within a line, :152,:226).
 
-    ``as_tuples=True`` emits every hierarchy node as a TUPLE in the
-    schema's field order (schema.BLOCK/PARAGRAPH/LINE/WORD/BBOX)
-    instead of a dict — identical data, but pyarrow's struct conversion
-    skips per-key lookups; the kernel uses this for the Arrow boundary
-    while tests read the dict form.
+    Every hierarchy node is a TUPLE in the schema's field order
+    (schema.BLOCK/PARAGRAPH/LINE/WORD/BBOX) — the form that crosses the
+    kernel's Arrow boundary; :func:`blocks_to_dicts` gives the dict
+    form tests assert on.
     """
     stripped = [t.strip() for t in text_r]
     keep = np.fromiter(
@@ -176,66 +172,43 @@ def assemble_pages_arrays(
     blk_starts = np.flatnonzero(new_block)
 
     def _bboxes(starts: np.ndarray) -> list:
-        quads = zip(
-            np.minimum.reduceat(left_np, starts).tolist(),
-            np.minimum.reduceat(top_np, starts).tolist(),
-            np.maximum.reduceat(right_np, starts).tolist(),
-            np.maximum.reduceat(bottom_np, starts).tolist(),
+        return list(
+            zip(
+                np.minimum.reduceat(left_np, starts).tolist(),
+                np.minimum.reduceat(top_np, starts).tolist(),
+                np.maximum.reduceat(right_np, starts).tolist(),
+                np.maximum.reduceat(bottom_np, starts).tolist(),
+            )
         )
-        if as_tuples:
-            return list(quads)
-        return [
-            {"left": l, "top": t, "right": r, "bottom": b}
-            for l, t, r, b in quads
-        ]
 
-    wl = left_np.tolist()
-    wt = top_np.tolist()
-    ww = width_np.tolist()
-    wh = height_np.tolist()
-    wc = conf_np.tolist()
-
-    # lines: words are the contiguous word slice; text = " ".join
+    # lines: words are the contiguous word slice; text = " ".join.
+    # Nodes are tuples in schema field order (schema.WORD/LINE/...):
+    # pyarrow converts tuples into structs without per-key hashing —
+    # measurably cheaper than dicts on the 10^5-words-per-batch path.
+    word_tuples = list(
+        zip(
+            text_a,
+            left_np.tolist(),
+            top_np.tolist(),
+            width_np.tolist(),
+            height_np.tolist(),
+            conf_np.tolist(),
+        )
+    )
     line_bounds = np.append(line_starts, n).tolist()
     line_ids = line_np[line_starts].tolist()
     line_bbs = _bboxes(line_starts)
     lines_all = []
-    if as_tuples:
-        # struct-as-tuple form (field order == schema.WORD/LINE/...):
-        # pyarrow converts tuples into structs without per-key hashing —
-        # measurably cheaper than dicts on the 10^5-words-per-batch path
-        word_tuples = list(zip(text_a, wl, wt, ww, wh, wc))
-        for idx in range(len(line_starts)):
-            s, e = line_bounds[idx], line_bounds[idx + 1]
-            lines_all.append(
-                (
-                    line_ids[idx],
-                    " ".join(text_a[s:e]),
-                    line_bbs[idx],
-                    word_tuples[s:e],
-                )
+    for idx in range(len(line_starts)):
+        s, e = line_bounds[idx], line_bounds[idx + 1]
+        lines_all.append(
+            (
+                line_ids[idx],
+                " ".join(text_a[s:e]),
+                line_bbs[idx],
+                word_tuples[s:e],
             )
-    else:
-        for idx in range(len(line_starts)):
-            s, e = line_bounds[idx], line_bounds[idx + 1]
-            lines_all.append(
-                {
-                    "line_id": line_ids[idx],
-                    "text": " ".join(text_a[s:e]),
-                    "bbox": line_bbs[idx],
-                    "words": [
-                        {
-                            "text": text_a[i],
-                            "left": wl[i],
-                            "top": wt[i],
-                            "width": ww[i],
-                            "height": wh[i],
-                            "conf": wc[i],
-                        }
-                        for i in range(s, e)
-                    ],
-                }
-            )
+        )
 
     # paragraphs group contiguous lines; blocks group contiguous
     # paragraphs; pages group contiguous blocks — each via searchsorted
@@ -244,47 +217,27 @@ def assemble_pages_arrays(
     par_line_idx.append(len(lines_all))
     par_ids = par_np[par_starts].tolist()
     par_bbs = _bboxes(par_starts)
-    if as_tuples:
-        pars_all = [
-            (
-                par_ids[idx],
-                par_bbs[idx],
-                lines_all[par_line_idx[idx] : par_line_idx[idx + 1]],
-            )
-            for idx in range(len(par_starts))
-        ]
-    else:
-        pars_all = [
-            {
-                "par_id": par_ids[idx],
-                "bbox": par_bbs[idx],
-                "lines": lines_all[par_line_idx[idx] : par_line_idx[idx + 1]],
-            }
-            for idx in range(len(par_starts))
-        ]
+    pars_all = [
+        (
+            par_ids[idx],
+            par_bbs[idx],
+            lines_all[par_line_idx[idx] : par_line_idx[idx + 1]],
+        )
+        for idx in range(len(par_starts))
+    ]
 
     blk_par_idx = np.searchsorted(par_starts, blk_starts).tolist()
     blk_par_idx.append(len(pars_all))
     blk_ids = blk_np[blk_starts].tolist()
     blk_bbs = _bboxes(blk_starts)
-    if as_tuples:
-        blocks_all = [
-            (
-                blk_ids[idx],
-                blk_bbs[idx],
-                pars_all[blk_par_idx[idx] : blk_par_idx[idx + 1]],
-            )
-            for idx in range(len(blk_starts))
-        ]
-    else:
-        blocks_all = [
-            {
-                "block_id": blk_ids[idx],
-                "bbox": blk_bbs[idx],
-                "paragraphs": pars_all[blk_par_idx[idx] : blk_par_idx[idx + 1]],
-            }
-            for idx in range(len(blk_starts))
-        ]
+    blocks_all = [
+        (
+            blk_ids[idx],
+            blk_bbs[idx],
+            pars_all[blk_par_idx[idx] : blk_par_idx[idx + 1]],
+        )
+        for idx in range(len(blk_starts))
+    ]
 
     page_blk_idx = np.searchsorted(blk_starts, page_starts).tolist()
     page_blk_idx.append(len(blocks_all))
@@ -377,25 +330,12 @@ def word_counts_arrays(doc_r, text_r: list) -> dict[int, int]:
     return dict(zip(uniq.tolist(), counts.tolist()))
 
 
-def word_counts(words: pd.DataFrame) -> pd.DataFrame:
-    """pandas wrapper over :func:`word_counts_arrays` (test surface)."""
-    d = word_counts_arrays(words["doc"].to_numpy(), words["text"].tolist())
-    if not d:
-        return pd.DataFrame({"doc": [], "n_words": []})
-    return pd.DataFrame(
-        sorted(d.items()), columns=["doc", "n_words"]
-    ).astype({"n_words": "int64"})
-
-
 def blocks_to_dicts(blocks: list) -> list[dict]:
-    """Normalize the tuple-form hierarchy (as_tuples=True, schema field
-    order) back to the dict form — test/debug surface; the Arrow
-    boundary consumes tuples directly."""
+    """Convert the tuple-form hierarchy (schema field order) to the dict
+    form — test/debug surface; the Arrow boundary consumes tuples
+    directly."""
     out = []
     for b in blocks:
-        if isinstance(b, dict):
-            out.append(b)
-            continue
         blk_id, bbox, pars = b
         out.append(
             {
@@ -433,7 +373,5 @@ def blocks_to_dicts(blocks: list) -> list[dict]:
 
 
 def _bbox_dict(bb) -> dict:
-    if isinstance(bb, dict):
-        return bb
     left, top, right, bottom = bb
     return {"left": left, "top": top, "right": right, "bottom": bottom}

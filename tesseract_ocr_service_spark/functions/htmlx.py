@@ -32,8 +32,6 @@ Rules (deterministic, part of the engine contract):
 from __future__ import annotations
 
 import re
-from typing import Any
-
 from ..config import ExtractConfig
 
 _SCRIPT_RE = re.compile(
@@ -45,9 +43,6 @@ _SCRIPT_RE = re.compile(
 #: documents never hit it.
 _SCRIPT_OPEN_RE = re.compile(
     r"<(?:script|style)\b[^>]*>.*$", re.IGNORECASE | re.DOTALL
-)
-_BLOCK_TAGS = frozenset(
-    "nav header footer aside h1 h2 h3 h4 h5 h6 p li div td blockquote".split()
 )
 #: BLOCK tags only, open or close — the segmenter's one scan. Matching
 #: only block tags keeps the skip-work in the C regex engine (an
@@ -186,22 +181,6 @@ WORD_H = 18  # word bbox height
 PAGE_W = 12 * COL_W  # = line_wrap_words(default) * COL_W
 
 
-def extract_word_records(
-    html: str, cfg: ExtractConfig
-) -> tuple[list[tuple[Any, ...]], int, int, int]:
-    """HTML -> (word records, n_blocks_kept, n_blocks_dropped, page_height).
-
-    Records use the WORD_FIELDS tuple layout of ``pdfstream``; a single
-    page (page_number handled by the caller). Lines wrap every
-    ``cfg.line_wrap_words`` words; line_num runs document-global (top of
-    page downward) like a single-column render. (Row-tuple convenience
-    API; the kernel hot path uses :func:`extract_words_columnar`.)
-    """
-    cols, kept, dropped, page_h = extract_words_columnar(html, cfg)
-    records = list(zip(*cols)) if cols[0] else []
-    return records, kept, dropped, page_h
-
-
 from functools import lru_cache
 
 #: only cache templates for blocks this small: block sizes that repeat
@@ -234,11 +213,15 @@ def _flow_template(
 def extract_words_columnar(
     html: str, cfg: ExtractConfig
 ) -> tuple[tuple[list, ...], int, int, int]:
-    """Columnar variant: -> ((block, par, line, word, text, left, top,
-    width, height, conf) column lists, kept, dropped, page_height).
-    Per-column list building beats per-word tuple rows by ~2x in the
-    kernel's record-table construction; geometry columns come from the
-    per-(ntok, wrap) template cache above."""
+    """HTML -> ((block, par, line, word, text, left, top, width, height,
+    conf) column lists, n_blocks_kept, n_blocks_dropped, page_height).
+
+    A single page (page_number handled by the caller). Lines wrap every
+    ``cfg.line_wrap_words`` words; line_num runs document-global (top of
+    page downward) like a single-column render. Per-column list building
+    beats per-word tuple rows by ~2x in the kernel's record-table
+    construction; geometry columns come from the per-(ntok, wrap)
+    template cache above."""
     blk_c: list = []
     par_c: list = []
     line_c: list = []

@@ -316,7 +316,7 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     # profiled at ~40% of the whole kernel. The assembly contract
     # functions take the columns directly.
     text_map: dict[tuple[int, int], str] = {}
-    spans_map: dict[tuple[int, int], list[dict]] = {}
+    spans_map: dict[tuple[int, int], list[tuple]] = {}
     conf_map: dict[tuple[int, int], float] = {}
     nwords_map: dict[int, int] = {}
     if _c_doc:
@@ -334,7 +334,6 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             cols["height"],
             cols["conf"],
             emit_spans=cfg.emit_spans,
-            as_tuples=True,  # structs in schema field order (Arrow-fast)
         )
         for doc, pn, c in assembly.page_confidence_arrays(
             _c_doc, _c_page, cols["conf"]
@@ -438,18 +437,16 @@ def kernel_iter(
     for batch in batches:
         if not len(batch):
             continue
-        if day_acc is None:
-            yield extract_batch(batch, cfg)
-            continue
         t0 = _time.perf_counter()
         out = extract_batch(batch, cfg)
-        ms = (_time.perf_counter() - t0) * 1000.0
-        # count on the normalized datetime64 (vectorized), format only
-        # the handful of UNIQUE day keys — per-row strftime is object-
-        # dtype string work on the kernel hot path
-        counts = batch["warc_ts"].dt.normalize().value_counts()
-        total = int(counts.sum()) or 1
-        day_acc.add(
-            {str(d.date()): ms * int(c) / total for d, c in counts.items()}
-        )
+        if day_acc is not None:
+            ms = (_time.perf_counter() - t0) * 1000.0
+            # count on the normalized datetime64 (vectorized), format
+            # only the handful of UNIQUE day keys — per-row strftime is
+            # object-dtype string work on the kernel hot path
+            counts = batch["warc_ts"].dt.normalize().value_counts()
+            total = int(counts.sum()) or 1
+            day_acc.add(
+                {str(d.date()): ms * int(c) / total for d, c in counts.items()}
+            )
         yield out

@@ -37,6 +37,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -217,7 +218,11 @@ def _run_checkpointed_body(
         }
         for d in pending
     ]
-    lineage = spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1)
+    # from pandas (Arrow), not the row list: createDataFrame(list) pickles
+    # the rows through parallelize and runs a Python-worker job.
+    lineage = spark.createDataFrame(
+        pd.DataFrame(rows, columns=LINEAGE_SCHEMA.fieldNames()), LINEAGE_SCHEMA
+    ).coalesce(1)
     lineage.write.mode("append").parquet(f"{out_root}/lineage")
     return RunSummary(pending, skipped, sum(r["n_docs"] for r in rows), wall_ms)
 

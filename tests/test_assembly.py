@@ -179,6 +179,33 @@ def test_hierarchy_matches_oracle():
     assert line1["bbox"] == {"left": 10, "top": 20, "right": 110, "bottom": 32}
 
 
+def test_tuple_field_order_matches_spark_schema():
+    """The kernel hands tuple-form nodes straight to Arrow, which maps
+    tuple members to struct fields by POSITION: converting through the
+    Spark schema must give exactly the dict form."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import ArrayType
+
+    from tesseract_ocr_service_spark import schema
+
+    records = [
+        rec(2, 1, 1, "b2", left=5, top=6, width=11, height=13, conf=50),
+        rec(1, 1, 1, "Hello", left=10, top=20, width=40, height=12, conf=91),
+        rec(1, 1, 2, "world", left=60, top=22, width=50, height=9, conf=-1),
+        rec(1, 2, 1, "next", left=17, top=40, width=30, height=14, conf=88),
+    ]
+    words = _df(records)
+    _, spans = assembly.assemble_pages_arrays(
+        *(words[c].to_numpy() for c in REC_COLS[:5]),
+        words["text"].tolist(),
+        *(words[c].to_numpy() for c in REC_COLS[7:]),
+    )
+    blocks = spans[(0, 1)]
+    arrow = pa.array([blocks], type=to_arrow_type(ArrayType(schema.BLOCK)))
+    assert arrow.to_pylist() == [assembly.blocks_to_dicts(blocks)]
+
+
 @pytest.mark.parametrize("seed", [3, 99])
 def test_hierarchy_random_vs_oracle(seed):
     rnd = random.Random(seed)

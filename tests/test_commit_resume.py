@@ -146,6 +146,32 @@ def test_lineage_counters_consistent(spark, paths):
         assert {k: marker[day][k] for k in counters} == counters, day
 
 
+def test_lineage_file_physical_schema(spark, paths):
+    """The marker file pins LINEAGE_SCHEMA physically: column names in
+    order, int64 counters, int32 wall_ms/attempt, every column
+    required — appends by any writer must keep these types."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tesseract_ocr_service_spark.schema import LINEAGE_SCHEMA
+
+    pages, out = paths
+    C.run_checkpointed(spark, pages, out)
+    (path,) = _lineage_files(out)
+    got = pq.read_schema(path)
+    assert got.names == LINEAGE_SCHEMA.fieldNames()
+    int32 = {"wall_ms", "attempt"}
+    for field in got:
+        if field.name == "warc_day":
+            expected = pa.string()
+        elif field.name in int32:
+            expected = pa.int32()
+        else:
+            expected = pa.int64()
+        assert field.type == expected, field
+        assert not field.nullable, field
+
+
 def test_all_filtered_run_commits_zero_markers(spark, paths):
     """A run whose language filter drops every row still commits one
     zero-count marker per day, so the next run skips them all."""

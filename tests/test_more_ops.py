@@ -171,6 +171,39 @@ def test_connected_components_nonconvergence_raises(spark):
     assert out.count() == n
 
 
+def test_label_prop_branches_agree_at_max_iter_boundary(
+    spark, monkeypatch, caplog
+):
+    """The small-graph branch (probe, then update) and the at-scale
+    branch (update, then count changes) both need max_iter >= R + 1
+    when labels stop changing after R loop updates: same verdict and
+    same labels at R and at R + 1."""
+    from tesseract_ocr_service_spark.operators import dedup as D
+
+    # path 1-2-...-7: the seed round leaves v at label v-1, each update
+    # lowers every label > 1 by one, so R = 5 updates reach all-ones
+    n = 7
+    r = n - 2
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], ["src", "dst"]
+    )
+
+    def run(max_iter):
+        caplog.clear()
+        labels, _ = D._label_prop_labels(
+            edges, max_iter=max_iter, on_nonconverged="warn"
+        )
+        converged = "NOT converged" not in caplog.text
+        return converged, {x["id"]: x["label"] for x in labels.collect()}
+
+    small = {m: run(m) for m in (r, r + 1)}
+    monkeypatch.setattr(D, "_BCAST_ROWS_CAP", 0)  # force the at-scale branch
+    at_scale = {m: run(m) for m in (r, r + 1)}
+    assert small == at_scale
+    assert small[r][0] is False and small[r + 1][0] is True
+    assert small[r + 1][1] == dict.fromkeys(range(1, n + 1), 1)
+
+
 def test_star_contraction_matches_label_propagation(spark):
     """Large-star/small-star contraction (Kiveris et al.) agrees with
     min-label propagation on hand and pseudo-random graphs."""
