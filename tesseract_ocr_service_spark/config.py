@@ -99,8 +99,6 @@ class ExtractConfig:
         return "+".join(self.languages)
 
 
-DEFAULT_CONFIG = ExtractConfig()
-
 # Row statuses produced by the pipeline (FIXTURES.md §2).
 STATUS_OK = "ok"
 STATUS_REJECTED = "rejected"  # bad magic / oversize (ocr/main.py:335-390)

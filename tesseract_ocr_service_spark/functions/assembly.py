@@ -52,7 +52,7 @@ def assemble_pages(
     :func:`blocks_to_dicts`; pages with no non-empty words are absent
     from both (callers fill ""/[]).
     """
-    text_map, spans_map = assemble_pages_arrays(
+    text_map, spans_map, _, _ = assemble_pages_arrays(
         words["doc"].to_numpy(),
         words["page_number"].to_numpy(),
         words["block_num"].to_numpy(),
@@ -82,8 +82,9 @@ def assemble_pages_arrays(
     height_r,
     conf_r,
     emit_spans: bool = True,
-) -> tuple[dict[tuple[int, int], str], dict[tuple[int, int], list]]:
-    """Array-native fused boundary-index pass (raw arrival order in).
+) -> tuple[dict, dict, dict[int, int], dict[int, int]]:
+    """Array-native fused boundary-index pass (raw arrival order in)
+    -> (text_map, spans_map, n_words, n_blocks_kept).
 
     Preparation replicates the contract: strip texts, DROP empty-text
     records, stable-sort by the hierarchy keys (np.lexsort is stable —
@@ -95,13 +96,18 @@ def assemble_pages_arrays(
     (schema.BLOCK/PARAGRAPH/LINE/WORD/BBOX) — the form that crosses the
     kernel's Arrow boundary; :func:`blocks_to_dicts` gives the dict
     form tests assert on.
+
+    The per-doc lineage counters come from the same pass: ``n_words``
+    counts non-empty records (the reference's total_words log,
+    ocr_processor.py:465-469), ``n_blocks_kept`` the distinct
+    (page, block) keys among them; docs with neither are absent.
     """
     stripped = [t.strip() for t in text_r]
     keep = np.fromiter(
         (t != "" for t in stripped), dtype=bool, count=len(stripped)
     )
     if not keep.any():
-        return {}, {}
+        return {}, {}, {}, {}
     doc_k = np.asarray(doc_r)[keep]
     page_k = np.asarray(page_r)[keep]
     blk_k = np.asarray(blk_r)[keep]
@@ -129,6 +135,14 @@ def assemble_pages_arrays(
     new_par[1:] |= par_np[1:] != par_np[:-1]
     new_line = new_par.copy()
     new_line[1:] |= line_np[1:] != line_np[:-1]
+    blk_starts = np.flatnonzero(new_block)
+
+    def _per_doc(docs: np.ndarray) -> dict[int, int]:
+        uniq, counts = np.unique(docs, return_counts=True)
+        return dict(zip(uniq.tolist(), counts.tolist()))
+
+    n_words = _per_doc(doc_np)
+    n_blocks = _per_doc(doc_np[blk_starts])
 
     # ---- canonical text: interleave separators with word texts, then
     # one join per page slice. Separator precedence matches the
@@ -156,7 +170,7 @@ def assemble_pages_arrays(
         text_map[key] = "".join(interleaved[2 * s : 2 * e])
 
     if not emit_spans:
-        return text_map, {}
+        return text_map, {}, n_words, n_blocks
 
     # ---- spans hierarchy ------------------------------------------
     left_np = np.asarray(left_r)[keep][order]
@@ -169,7 +183,6 @@ def assemble_pages_arrays(
 
     line_starts = np.flatnonzero(new_line)
     par_starts = np.flatnonzero(new_par)
-    blk_starts = np.flatnonzero(new_block)
 
     def _bboxes(starts: np.ndarray) -> list:
         return list(
@@ -245,7 +258,7 @@ def assemble_pages_arrays(
         page_keys[idx]: blocks_all[page_blk_idx[idx] : page_blk_idx[idx + 1]]
         for idx in range(len(page_starts))
     }
-    return text_map, spans_map
+    return text_map, spans_map, n_words, n_blocks
 
 
 def assemble_text(words: pd.DataFrame) -> pd.DataFrame:
@@ -316,18 +329,6 @@ def page_confidence(records: pd.DataFrame) -> pd.DataFrame:
     if not rows:
         return pd.DataFrame({"doc": [], "page_number": [], "confidence": []})
     return pd.DataFrame(rows, columns=["doc", "page_number", "confidence"])
-
-
-def word_counts_arrays(doc_r, text_r: list) -> dict[int, int]:
-    """Per-doc count of non-empty records (lineage counter, mirrors the
-    reference's total_words log, ocr_processor.py:465-469) -> {doc: n}."""
-    keep = np.fromiter(
-        (t.strip() != "" for t in text_r), dtype=bool, count=len(text_r)
-    )
-    if not keep.any():
-        return {}
-    uniq, counts = np.unique(np.asarray(doc_r)[keep], return_counts=True)
-    return dict(zip(uniq.tolist(), counts.tolist()))
 
 
 def blocks_to_dicts(blocks: list) -> list[dict]:

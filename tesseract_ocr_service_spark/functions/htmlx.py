@@ -185,36 +185,33 @@ from functools import lru_cache
 
 #: only cache templates for blocks this small: block sizes that repeat
 #: often enough to benefit are overwhelmingly small, and 2048 cached
-#: entries of four up-to-4096-element tuples would retain hundreds of
+#: entries of three up-to-4096-element tuples would retain hundreds of
 #: MB per Python worker on a corpus with diverse large blocks.
 _CACHE_NTOK_MAX = 512
 
 
 @lru_cache(maxsize=2048)
-def _flow_template(
-    ntok: int, wrap: int
-) -> tuple[tuple, tuple, tuple, tuple, int]:
+def _flow_template(ntok: int, wrap: int) -> tuple[tuple, tuple, tuple, int]:
     """Flow-layout columns that depend ONLY on (ntok, wrap): block-
-    relative line numbers, word slots, x offsets, block-relative y
-    offsets, and the line count. Block sizes repeat heavily across a
-    corpus, so caching these avoids recomputing the same integer
-    sequences per block (identical values — byte-identity preserved).
+    relative line numbers, x offsets, block-relative y offsets, and the
+    line count. Block sizes repeat heavily across a corpus, so caching
+    these avoids recomputing the same integer sequences per block
+    (identical values — byte-identity preserved).
     Columns are TUPLES: the cache shares one object across blocks, so
     a mutable return would let any in-place edit corrupt every later
     same-sized block."""
     pos = [i % wrap for i in range(ntok)]
     line_rel = tuple(i // wrap + 1 for i in range(ntok))
-    word = tuple(p + 1 for p in pos)
     left = tuple(p * COL_W for p in pos)
     top_rel = tuple((l - 1) * LINE_H for l in line_rel)
-    return line_rel, word, left, top_rel, (ntok + wrap - 1) // wrap
+    return line_rel, left, top_rel, (ntok + wrap - 1) // wrap
 
 
 def extract_words_columnar(
     html: str, cfg: ExtractConfig
 ) -> tuple[tuple[list, ...], int, int, int]:
-    """HTML -> ((block, par, line, word, text, left, top, width, height,
-    conf) column lists, n_blocks_kept, n_blocks_dropped, page_height).
+    """HTML -> ((block, par, line, text, left, top, width, height, conf)
+    column lists, n_blocks_kept, n_blocks_dropped, page_height).
 
     A single page (page_number handled by the caller). Lines wrap every
     ``cfg.line_wrap_words`` words; line_num runs document-global (top of
@@ -222,16 +219,8 @@ def extract_words_columnar(
     beats per-word tuple rows by ~2x in the kernel's record-table
     construction; geometry columns come from the per-(ntok, wrap)
     template cache above."""
-    blk_c: list = []
-    par_c: list = []
-    line_c: list = []
-    word_c: list = []
-    text_c: list = []
-    left_c: list = []
-    top_c: list = []
-    wid_c: list = []
-    hgt_c: list = []
-    conf_c: list = []
+    cols: tuple[list, ...] = tuple([] for _ in range(9))
+    blk_c, par_c, line_c, text_c, left_c, top_c, wid_c, hgt_c, conf_c = cols
     kept = dropped = 0
     global_line = 0
     wrap = cfg.line_wrap_words
@@ -246,15 +235,14 @@ def extract_words_columnar(
         kept += 1
         ntok = len(tokens)
         if ntok <= _CACHE_NTOK_MAX:
-            line_rel, word, left, top_rel, n_lines = _flow_template(ntok, wrap)
+            line_rel, left, top_rel, n_lines = _flow_template(ntok, wrap)
         else:  # pathological block: compute directly, don't cache
-            line_rel, word, left, top_rel, n_lines = _flow_template.__wrapped__(
+            line_rel, left, top_rel, n_lines = _flow_template.__wrapped__(
                 ntok, wrap
             )
         blk_c.extend([kept] * ntok)
         par_c.extend([1] * ntok)
         line_c.extend(line_rel)
-        word_c.extend(word)
         text_c.extend(tokens)
         left_c.extend(left)
         base_top = global_line * LINE_H
@@ -264,9 +252,4 @@ def extract_words_columnar(
         conf_c.extend([conf] * ntok)
         global_line += n_lines
     page_height = max(global_line * LINE_H, LINE_H)
-    return (
-        (blk_c, par_c, line_c, word_c, text_c, left_c, top_c, wid_c, hgt_c, conf_c),
-        kept,
-        dropped,
-        page_height,
-    )
+    return cols, kept, dropped, page_height

@@ -48,7 +48,6 @@ _REC_COLS = [
     "block_num",
     "par_num",
     "line_num",
-    "word_num",
     "text",
     "left",
     "top",
@@ -56,24 +55,6 @@ _REC_COLS = [
     "height",
     "conf",
 ]
-
-OUTPUT_COLUMNS = [
-    "url",
-    "warc_ts",
-    "lang",
-    "status",
-    "error",
-    "total_pages",
-    "avg_confidence",
-    "canonical_text",
-    "pages",
-    "spans",
-    "n_blocks_kept",
-    "n_blocks_dropped",
-    "n_words",
-    "n_chars",
-]
-
 
 def _route(
     payload: Any, max_bytes: int, ct_reject: bool = False
@@ -129,33 +110,46 @@ def _row_selections(
     priority rule (explicit list > range > all) is applied downstream by
     pdfstream.select_pages on the resolved values.
     """
-    sel = [(cfg.pages, cfg.page_start, cfg.page_end)] * n
     if not ({"pages", "page_start", "page_end"} & set(batch.columns)):
-        return sel
-    pl_col = batch["pages"].tolist() if "pages" in batch.columns else None
-    ps_col = (
-        batch["page_start"].tolist() if "page_start" in batch.columns else None
-    )
-    pe_col = (
-        batch["page_end"].tolist() if "page_end" in batch.columns else None
-    )
+        return [(cfg.pages, cfg.page_start, cfg.page_end)] * n
 
-    def _i(v):  # Arrow nullable ints arrive as float NaN
-        return None if v is None or v != v else int(v)
+    def _col(name):  # an absent column is all NULL
+        return batch[name].tolist() if name in batch.columns else [None] * n
 
-    out = []
-    for d in range(n):
-        pl = cfg.pages
-        if pl_col is not None and pl_col[d] is not None:
-            pl = tuple(int(x) for x in pl_col[d])
-        ps = _i(ps_col[d]) if ps_col is not None else None
-        if ps is None:
-            ps = cfg.page_start
-        pe = _i(pe_col[d]) if pe_col is not None else None
-        if pe is None:
-            pe = cfg.page_end
-        out.append((pl, ps, pe))
-    return out
+    def _int(v, default):  # Arrow nullable ints arrive as float NaN
+        return default if v is None or v != v else int(v)
+
+    return [
+        (
+            cfg.pages if pl is None else tuple(int(x) for x in pl),
+            _int(ps, cfg.page_start),
+            _int(pe, cfg.page_end),
+        )
+        for pl, ps, pe in zip(
+            _col("pages"), _col("page_start"), _col("page_end")
+        )
+    ]
+
+
+def _html_page(payload: bytes, cfg: ExtractConfig) -> tuple[dict, int]:
+    """HTML payload -> (its single page, in the shape pdfstream.decode
+    gives a PDF page, with the word columns attached; n_blocks_dropped).
+    Any parse failure becomes a doc-level error row."""
+    try:
+        wcols, _, dropped, page_h = htmlx.extract_words_columnar(
+            payload.decode("utf-8", errors="replace"), cfg
+        )
+    except Exception as e:  # defensive: never fail the task
+        raise pdfstream.DocumentParseError(f"html_parse_error: {e}") from e
+    page = {
+        "page_number": 1,
+        "width": htmlx.PAGE_W,
+        "height": page_h,
+        "rotate": 0,
+        "skew_angle": 0.0,
+        "columns": wcols,
+    }
+    return page, dropped
 
 
 def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
@@ -165,7 +159,11 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     pruned before the kernel — column-pruning is part of the contract),
     plus the optional per-row config columns ``pages``/``page_start``/
     ``page_end`` (see :func:`_row_selections`).
-    Output columns: :data:`OUTPUT_COLUMNS` (schema.EXTRACTED_SCHEMA).
+    Output columns: schema.EXTRACTED_SCHEMA.
+
+    Both payload kinds run one page loop: an HTML document is a single
+    synthetic page (page_number=1) carrying its word columns, so page
+    selection, page meta and the word table are shared with PDF pages.
     """
     n = len(batch)
     urls = batch["url"].tolist()
@@ -183,7 +181,7 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             for x in batch["_ct_reject"].tolist()
         ]
         if "_ct_reject" in batch.columns
-        else None
+        else [False] * n
     )
 
     # per-doc state -------------------------------------------------
@@ -192,7 +190,6 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     # page meta: doc -> list of dicts (page_number, rotation_applied,
     # deskew_angle, width, height, failed)
     page_meta: list[list[dict]] = [[] for _ in range(n)]
-    blocks_kept = [0] * n
     blocks_dropped = [0] * n
 
     # word-record accumulator — COLUMNAR (per-column python lists feed
@@ -201,64 +198,30 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     cols: dict[str, list] = {c: [] for c in _REC_COLS}
     _c_doc = cols["doc"]
     _c_page = cols["page_number"]
-    _WORD_COLS = _REC_COLS[2:]  # block..conf, matching WORD_FIELDS order
+    _WORD_COLS = _REC_COLS[2:]  # block..conf: WORD_FIELDS minus word_num
 
     for d in range(n):
         kind, reason = _route(
-            payloads[d],
-            cfg.max_file_size_bytes,
-            ct_rej is not None and ct_rej[d],
+            payloads[d], cfg.max_file_size_bytes, ct_rej[d]
         )
         if kind == "rejected":
             status[d] = STATUS_REJECTED
             error[d] = reason
             continue
 
-        sel_pages, sel_start, sel_end = selections[d]
-        if kind == "html":
-            # one synthetic page (page_number=1) per HTML document; page
-            # selection applies uniformly to both payload kinds, so a
-            # selection that excludes page 1 empties the document.
-            if pdfstream.select_pages(
-                [{"page_number": 1}], sel_pages, sel_start, sel_end
-            ) == []:
-                status[d] = STATUS_EMPTY
-                error[d] = "no pages to process"
-                continue
-            try:
-                html = payloads[d].decode("utf-8", errors="replace")
-                wcols, kept, dropped, page_h = htmlx.extract_words_columnar(
-                    html, cfg
-                )
-            except Exception as e:  # defensive: never fail the task
-                status[d] = STATUS_ERROR
-                error[d] = f"html_parse_error: {e}"
-                continue
-            blocks_kept[d] = kept
-            blocks_dropped[d] = dropped
-            page_meta[d].append(
-                {
-                    "page_number": 1,
-                    "rotation_applied": 0,
-                    "deskew_angle": 0.0,
-                    "width": htmlx.PAGE_W,
-                    "height": page_h,
-                    "failed": False,
-                }
-            )
-            nw = len(wcols[0])
-            _c_doc.extend([d] * nw)
-            _c_page.extend([1] * nw)
-            for name, col in zip(_WORD_COLS, wcols):
-                cols[name].extend(col)
-            continue
-
-        # pdf path ---------------------------------------------------
         try:
-            pages = pdfstream.decode(payloads[d])
-            pages = pdfstream.select_pages(
-                pages, sel_pages, sel_start, sel_end
-            )
+            if kind == "pdf":
+                pages = pdfstream.select_pages(
+                    pdfstream.decode(payloads[d]), *selections[d]
+                )
+            # page selection applies uniformly to both payload kinds and
+            # is checked before the HTML is parsed: a selection that
+            # excludes page 1 empties the document.
+            elif pdfstream.select_pages([{"page_number": 1}], *selections[d]):
+                page, blocks_dropped[d] = _html_page(payloads[d], cfg)
+                pages = [page]
+            else:
+                pages = []
         except pdfstream.DocumentParseError as e:
             status[d] = STATUS_ERROR
             error[d] = str(e)
@@ -270,19 +233,17 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             error[d] = "no pages to process"
             continue
 
-        doc_block_ids: set[tuple[int, int]] = set()
         for p in pages:
-            rotate = int(p.get("rotate", 0))
-            angle = float(p.get("skew_angle", 0.0))
+            angle = p["skew_angle"]
             applied = abs(angle) > cfg.skew_threshold  # strict > (:443)
             w, h = pdfstream.corrected_size(
-                p["width"], p["height"], rotate, angle, applied
+                p["width"], p["height"], p["rotate"], angle, applied
             )
             meta = {
-                "page_number": int(p["page_number"]),
+                "page_number": p["page_number"],
                 # rotation applied whenever rotate != 0, ignoring the dead
                 # osd_confidence_threshold (SURVEY.md §4).
-                "rotation_applied": rotate,
+                "rotation_applied": p["rotate"],
                 # detected angle reported even when below threshold
                 # (ocr_processor.py:500 reports skew_angles[] raw).
                 "deskew_angle": angle,
@@ -290,44 +251,40 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                 "height": h,
                 "failed": False,
             }
-            try:
-                words = pdfstream.page_word_records(p)
-            except Exception:
-                meta["failed"] = True  # empty text/conf/blocks, page kept
-                page_meta[d].append(meta)
-                continue
             page_meta[d].append(meta)
-            pn = meta["page_number"]
-            if words:
-                wcols = list(zip(*words))  # row tuples -> columns, C-fast
-                nw = len(words)
+            if kind == "html":
+                wcols = p["columns"]
+            else:
+                try:
+                    rows = pdfstream.page_word_records(p)
+                except Exception:
+                    meta["failed"] = True  # empty text/conf/blocks, page kept
+                    continue
+                # row tuples -> columns, C-fast; word_num (field 3) is
+                # skipped: arrival order decides word order in a line
+                wcols = list(zip(*rows))
+                del wcols[3:4]
+            nw = len(wcols[0]) if wcols else 0
+            if nw:
                 _c_doc.extend([d] * nw)
-                _c_page.extend([pn] * nw)
+                _c_page.extend([p["page_number"]] * nw)
                 for name, col in zip(_WORD_COLS, wcols):
                     cols[name].extend(col)
-                for b, t in zip(wcols[0], wcols[4]):
-                    if str(t).strip():
-                        doc_block_ids.add((pn, int(b)))
-        blocks_kept[d] = len(doc_block_ids)
 
-    # ---- batch-wide columnar passes over the word table -------------
+    # ---- batch-wide columnar pass over the word table ---------------
     # Arrays, not a pandas DataFrame: constructing a dict-of-lists
     # frame consolidates all int columns into one 2D block (vstack) —
     # profiled at ~40% of the whole kernel. The assembly contract
-    # functions take the columns directly.
-    text_map: dict[tuple[int, int], str] = {}
-    spans_map: dict[tuple[int, int], list[tuple]] = {}
-    conf_map: dict[tuple[int, int], float] = {}
-    nwords_map: dict[int, int] = {}
-    if _c_doc:
-        text_list = [str(t) for t in cols["text"]]
-        text_map, spans_map = assembly.assemble_pages_arrays(
+    # functions take the columns directly, and the assembly pass also
+    # yields the per-doc word and kept-block counters.
+    text_map, spans_map, nwords_map, nblocks_map = (
+        assembly.assemble_pages_arrays(
             _c_doc,
             _c_page,
             cols["block_num"],
             cols["par_num"],
             cols["line_num"],
-            text_list,
+            [str(t) for t in cols["text"]],
             cols["left"],
             cols["top"],
             cols["width"],
@@ -335,16 +292,13 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             cols["conf"],
             emit_spans=cfg.emit_spans,
         )
+    )
+    conf_map = {
+        (doc, pn): c
         for doc, pn, c in assembly.page_confidence_arrays(
             _c_doc, _c_page, cols["conf"]
-        ):
-            conf_map[(int(doc), int(pn))] = float(c)
-        nwords_map = {
-            int(d): int(nw)
-            for d, nw in assembly.word_counts_arrays(
-                _c_doc, text_list
-            ).items()
-        }
+        )
+    }
 
     # ---- compose per-doc outputs ------------------------------------
     out_pages: list[list[dict]] = []
@@ -411,7 +365,7 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             "canonical_text": canonical,
             "pages": out_pages,
             "spans": out_spans,
-            "n_blocks_kept": blocks_kept,
+            "n_blocks_kept": [nblocks_map.get(d, 0) for d in range(n)],
             "n_blocks_dropped": blocks_dropped,
             "n_words": [nwords_map.get(d, 0) for d in range(n)],
             "n_chars": n_chars,
@@ -429,9 +383,12 @@ def kernel_iter(
     ``day_acc`` (optional Spark accumulator of dict[str, float], see
     ``plans.commit._DayMsParam``) collects kernel wall milliseconds
     attributed per warc_day: each batch's wall is split proportionally
-    to its per-day row counts. Semantics are Spark's for accumulators
-    in transformations — at-least-once under task retry — so the
-    numbers are metrics, not an audit log."""
+    to its per-day row counts. Its day keys are the pandas mirror of
+    ``operators.extract.warc_day`` (the lineage key);
+    ``test_lineage_per_day_kernel_ms`` pins that the two agree.
+    Semantics are Spark's for accumulators in transformations —
+    at-least-once under task retry — so the numbers are metrics, not an
+    audit log."""
     import time as _time
 
     for batch in batches:

@@ -95,9 +95,25 @@ def decode(payload: bytes) -> list[dict]:
         body = json.loads(payload[len(HEADER):].decode("utf-8"))
     except Exception as e:  # corrupt body
         raise DocumentParseError(f"corrupt layout stream: {e}") from e
+    if not isinstance(body, dict) or not isinstance(body.get("pages"), list):
+        raise DocumentParseError("corrupt layout stream: no pages list")
     if body.get("poison_doc"):
         raise DocumentParseError(POISON_DOC)
-    return body["pages"]
+    pages = body["pages"]
+    for p in pages:
+        # the page fields the kernel reads, normalized in place: a
+        # missing or non-numeric one is a corrupt stream, not a crash
+        try:
+            p["page_number"] = int(p["page_number"])
+            p["width"] = int(p["width"])
+            p["height"] = int(p["height"])
+            p["rotate"] = int(p.get("rotate", 0))
+            p["skew_angle"] = float(p.get("skew_angle", 0.0))
+        except (KeyError, TypeError, ValueError, OverflowError) as e:
+            raise DocumentParseError(
+                f"corrupt layout stream: page {e!r}"
+            ) from e
+    return pages
 
 
 def select_pages(
@@ -145,8 +161,12 @@ def corrected_size(
 
 
 def page_word_records(page: dict) -> list[tuple[Any, ...]]:
-    """Word tuples of one page; a poisoned page raises (isolated upstream
-    into an empty page, mirroring ocr_processor.py:95-105)."""
+    """Word tuples of one page; a poisoned page, or a word row that is
+    not :data:`WORD_FIELDS` wide, raises (isolated upstream into an
+    empty page, mirroring ocr_processor.py:95-105)."""
     if page.get("poison"):
         raise ValueError(POISON_PAGE)
-    return [tuple(w) for w in page["words"]]
+    rows = [tuple(w) for w in page["words"]]
+    if any(len(w) != len(WORD_FIELDS) for w in rows):
+        raise ValueError("word row width != len(WORD_FIELDS)")
+    return rows

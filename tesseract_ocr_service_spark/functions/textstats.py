@@ -155,17 +155,6 @@ def quality_keep(col: Column) -> Column:
 #: at least TWO distinct members or it is dropped.
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
-#: severity-ordered (rule, reason) labels — first match wins.
-GOPHER_REASONS = (
-    "word_count",
-    "mean_word_len",
-    "symbol_ratio",
-    "bullet_lines",
-    "ellipsis_lines",
-    "alpha_words",
-    "stopwords",
-)
-
 
 def gopher_signals(col: Column) -> dict[str, Column]:
     """The integer inputs of the full Gopher quality rule set (Rae et

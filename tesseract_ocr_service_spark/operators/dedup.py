@@ -36,9 +36,22 @@ from ..functions import textstats as T
 log = logging.getLogger(__name__)
 
 
-#: row cap for broadcasting checkpointed/statless small frames (~tens
-#: of MB hashed at 2 longs/row — comfortably inside any executor).
+#: byte budget for broadcasting checkpointed/stat-less small frames,
+#: as rows of the (long, long) id pair most of them are: 1M rows x 16 B
+#: (~tens of MB hashed — comfortably inside any executor). A frame is
+#: measured at Spark's per-type default sizes, so frames keyed by
+#: strings (20 B per id) broadcast fewer rows.
 _BCAST_ROWS_CAP = 1_000_000
+_BCAST_ROW_BYTES = 16
+
+
+def _bcast_fits(df: DataFrame, rows: int | None) -> bool:
+    """True when ``rows`` rows of ``df``'s schema fit the broadcast
+    byte budget (``rows`` None = unknown = never)."""
+    if rows is None:
+        return False
+    row_bytes = df._jdf.schema().defaultSize()  # sum of field defaults
+    return rows * row_bytes <= _BCAST_ROWS_CAP * _BCAST_ROW_BYTES
 
 
 def _bcast_if_small(df: DataFrame, rows: int | None) -> DataFrame:
@@ -49,11 +62,10 @@ def _bcast_if_small(df: DataFrame, rows: int | None) -> DataFrame:
     shuffle + sort of the corpus-sized side of its join (observed:
     SortMergeJoin of 50k vertices against 1.1k checkpointed labels).
     ``rows`` must be an ALREADY-KNOWN count (the caller materialized
-    the frame — counting here would add an eager consumer); None keeps
-    the shuffled join (the scale-safe default)."""
-    if rows is not None and rows <= _BCAST_ROWS_CAP:
-        return F.broadcast(df)
-    return df
+    the frame — counting here would add an eager consumer); None, or
+    a count over the byte budget (:func:`_bcast_fits`), keeps the
+    shuffled join (the scale-safe default)."""
+    return F.broadcast(df) if _bcast_fits(df, rows) else df
 
 
 def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -1806,7 +1818,7 @@ def _label_prop_labels(
     # then broadcast through every round's join AND the final
     # vertices join instead of forcing shuffle+sort of the big sides.
     n_endpoints = labels.count()
-    small = n_endpoints <= _BCAST_ROWS_CAP
+    small = _bcast_fits(labels, n_endpoints)
     changed = -1
     for _ in range(max_iter):
         neighbor_min = (
@@ -2109,7 +2121,15 @@ def _neardup_labels(
     """Converged (id, label) over the minhash-LSH pair graph's edge
     ENDPOINTS plus the broadcast bound — shared by the component table
     (vertices join) and keep_best (labels joined straight onto the
-    score projection, skipping a comp ⋈ scored shuffle)."""
+    score projection, skipping a comp ⋈ scored shuffle).
+
+    The bound depends on ``algorithm``: for ``label`` it is the
+    endpoint row count (every endpoint has exactly one label row, which
+    ``queries.neardup_cluster_sizes``' singleton math relies on); for
+    ``star`` it is the converged EDGE count (an upper bound on the label
+    rows), and the labels omit the component roots (a root has no edge
+    to a smaller id). Only the ``label`` form supports per-component
+    counting."""
     pairs = minhash_dedup_pairs(
         df, id_col, text_col, k=minhash_k, bands=bands, threshold=threshold
     )

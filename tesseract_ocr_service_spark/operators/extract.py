@@ -26,7 +26,7 @@ from __future__ import annotations
 import functools
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ALLOWED_CONTENT_TYPES, ExtractConfig
@@ -36,6 +36,14 @@ from ..schema import EXTRACTED_SCHEMA
 #: columns the kernel needs — `text` (the raw noise column) is never read,
 #: so parquet column pruning skips it (verify: ReadSchema in explain()).
 KERNEL_INPUT = ("url", "warc_ts", "html", "lang")
+
+
+def warc_day() -> Column:
+    """``warc_ts`` as its 'yyyy-MM-dd' day string: the partition value
+    of the committed output and the key of the lineage counters (the
+    one definition — ``kernel.kernel_iter``'s per-day accumulator keys
+    are its pandas mirror)."""
+    return F.date_format("warc_ts", "yyyy-MM-dd")
 
 
 def content_type_ok(ct, allowed: tuple[str, ...] = ALLOWED_CONTENT_TYPES):
@@ -243,7 +251,7 @@ def lineage_view(wide: DataFrame) -> DataFrame:
     """Output table 3 `lineage` — per-warc_day counters (the reference
     logs these per request, ocr_processor.py:463-475,512-527)."""
     return (
-        wide.groupBy(F.date_format("warc_ts", "yyyy-MM-dd").alias("warc_day"))
+        wide.groupBy(warc_day().alias("warc_day"))
         .agg(
             F.count("*").alias("n_docs"),
             F.count(F.when(F.col("status") == "ok", 1)).alias("n_ok"),

@@ -175,7 +175,7 @@ def _run_checkpointed_body(
     # warc_ts is non-null by schema contract (undated WARC records ride
     # the epoch sentinel, sources/warc.UNDATED_TS), so warc_day here is
     # always a real partition value step 1 can enumerate.
-    out = wide.withColumn("warc_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+    out = wide.withColumn("warc_day", X.warc_day())
     (
         out.write.mode("overwrite")
         # dynamic: replace only the partitions present in this write,

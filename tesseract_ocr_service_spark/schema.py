@@ -156,24 +156,3 @@ LINEAGE_SCHEMA = StructType(
         StructField("attempt", IntegerType(), False),
     ]
 )
-
-#: flat word-record intermediate (kernel-internal, unit-test surface;
-#: FIXTURES.md §3). Matches Tesseract's image_to_data columnar dict keys
-#: used by the reference: text, conf, block_num, par_num, line_num, left,
-#: top, width, height (ocr_processor.py:72-77,136-153,199-226).
-WORD_RECORDS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("page_number", IntegerType(), False),
-        StructField("block_num", IntegerType(), False),
-        StructField("par_num", IntegerType(), False),
-        StructField("line_num", IntegerType(), False),
-        StructField("word_num", IntegerType(), False),
-        StructField("text", StringType(), False),
-        StructField("left", IntegerType(), False),
-        StructField("top", IntegerType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("conf", IntegerType(), False),
-    ]
-)

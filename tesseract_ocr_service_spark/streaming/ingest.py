@@ -154,7 +154,7 @@ def epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
         wide = X.extract(batch_df, cfg)
         (
             wide.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .withColumn("warc_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+            .withColumn("warc_day", X.warc_day())
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("epoch_id", "warc_day")

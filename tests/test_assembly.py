@@ -196,7 +196,7 @@ def test_tuple_field_order_matches_spark_schema():
         rec(1, 2, 1, "next", left=17, top=40, width=30, height=14, conf=88),
     ]
     words = _df(records)
-    _, spans = assembly.assemble_pages_arrays(
+    _, spans, _, _ = assembly.assemble_pages_arrays(
         *(words[c].to_numpy() for c in REC_COLS[:5]),
         words["text"].tolist(),
         *(words[c].to_numpy() for c in REC_COLS[7:]),

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import math
 
 import pandas as pd
@@ -9,6 +10,7 @@ import pytest
 
 from tesseract_ocr_service_spark.config import ExtractConfig
 from tesseract_ocr_service_spark.functions import assembly, htmlx, kernel, pdfstream
+from tesseract_ocr_service_spark.sources import gen
 
 from . import oracle
 
@@ -262,6 +264,63 @@ def test_block_counters_pdf():
     assert row["n_chars"] == len("a\n\nb")
 
 
+@pytest.mark.parametrize(
+    "body, status",
+    [
+        ([], "error"),  # not an object
+        ({"nopages": 1}, "error"),  # no pages list
+        # a page without width
+        ({"pages": [{"page_number": 1, "height": 10, "words": []}]}, "error"),
+        # a word row narrower than WORD_FIELDS fails its page only
+        (
+            {"pages": [{"page_number": 1, "width": 10, "height": 10,
+                        "words": [[1]]}]},
+            "ok",
+        ),
+    ],
+)
+def test_malformed_layout_stream_gives_row_not_task_failure(body, status):
+    row = one(pdfstream.HEADER + json.dumps(body).encode("utf-8"))
+    assert row["status"] == status
+    if status == "error":
+        assert row["error"].startswith("corrupt layout stream")
+        assert row["pages"] == []
+    else:
+        [page] = row["pages"]
+        assert page["text"] == "" and page["confidence"] == 0.0
+        assert row["spans"][0]["blocks"] == []
+        assert row["n_words"] == 0 and row["n_blocks_kept"] == 0
+
+
+def test_counters_independent_of_spans_and_match_hierarchy():
+    """n_words / n_blocks_kept come from the assembly pass: the same
+    with and without spans, and equal to the hierarchy's totals."""
+    batch = gen.gen_batch(list(range(300)), seed=11)
+    with_spans = kernel.extract_batch(batch, ExtractConfig(emit_spans=True))
+    no_spans = kernel.extract_batch(batch, ExtractConfig(emit_spans=False))
+    kinds = {
+        "pdf" if p.startswith(pdfstream.MAGIC) else "html"
+        for p, st in zip(batch["html"], with_spans["status"])
+        if p is not None and st == "ok"
+    }
+    assert kinds == {"pdf", "html"}
+    for c in ("n_words", "n_blocks_kept", "n_blocks_dropped"):
+        assert list(with_spans[c]) == list(no_spans[c]), c
+    ok = with_spans[with_spans["status"] == "ok"]
+    assert len(ok) and ok["n_words"].sum() > 0
+    for _, row in ok.iterrows():
+        blocks = [b for page in row["spans"] for b in page["blocks"]]
+        words = [
+            w
+            for _, _, pars in blocks
+            for _, _, lines in pars
+            for _, _, _, ws in lines
+            for w in ws
+        ]
+        assert row["n_blocks_kept"] == len(blocks)
+        assert row["n_words"] == len(words)
+
+
 def test_batch_mixed_kinds_alignment():
     """Outputs stay row-aligned when kinds interleave in one batch."""
     out = run(
@@ -354,12 +413,11 @@ def test_flow_template_fallback_matches_cached_path():
     ) + "</p></body></html>"
     cfg = ExtractConfig()
     cols, kept, dropped, page_h = htmlx.extract_words_columnar(html, cfg)
-    blk, par, line, word, text, left, top, wid, hgt, conf = cols
+    blk, par, line, text, left, top, wid, hgt, conf = cols
     assert kept == 1 and dropped == 0 and len(text) == n
     wrap = cfg.line_wrap_words
     n_lines = (n + wrap - 1) // wrap
     assert line[-1] == n_lines
-    assert word[:wrap] == list(range(1, wrap + 1))
     assert left[wrap] == 0 and top[wrap] == htmlx.LINE_H
     assert top[-1] == (n_lines - 1) * htmlx.LINE_H
     assert page_h == n_lines * htmlx.LINE_H

@@ -204,6 +204,40 @@ def test_label_prop_branches_agree_at_max_iter_boundary(
     assert small[r + 1][1] == dict.fromkeys(range(1, n + 1), 1)
 
 
+def test_neardup_labels_bound_semantics(spark):
+    """neardup_cluster_sizes' histogram relies on the label path: every
+    pair endpoint has exactly one label row and the bound is that row
+    count. The star path's labels omit the component roots."""
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    other = "spark shuffles sort merge joins and broadcast hash joins too"
+    rows = [(1, base), (2, base), (3, base + " today"), (4, other),
+            (5, other), (6, "a lone document with nothing similar here")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    pairs = D.minhash_dedup_pairs(df, "doc_id", "text", threshold=0.7)
+    endpoints = {i for p in pairs.collect() for i in (p["id_a"], p["id_b"])}
+    assert {1, 2, 4, 5} <= endpoints and 6 not in endpoints
+
+    labels, n_bound = D._neardup_labels(df, "doc_id", "text", 0.7, "label")
+    got = {r["id"]: r["label"] for r in labels.collect()}
+    assert set(got) == endpoints
+    assert n_bound == labels.count() == len(endpoints)
+
+    star, _ = D._neardup_labels(df, "doc_id", "text", 0.7, "star")
+    roots = {i for i, lab in got.items() if i == lab}
+    assert {r["id"] for r in star.collect()} == endpoints - roots
+
+
+def test_bcast_cap_is_a_byte_budget(spark):
+    """The broadcast cap counts bytes at Spark's default type sizes:
+    500k (string, string) rows exceed it, 500k (long, long) rows fit."""
+    strs = spark.createDataFrame([("a", "b")], "x string, y string")
+    longs = spark.createDataFrame([(1, 2)], "x long, y long")
+    assert D._bcast_if_small(strs, 500_000) is strs
+    hinted = D._bcast_if_small(longs, 500_000)
+    plan = hinted._jdf.queryExecution().analyzed().toString()
+    assert "strategy=broadcast" in plan
+
+
 def test_star_contraction_matches_label_propagation(spark):
     """Large-star/small-star contraction (Kiveris et al.) agrees with
     min-label propagation on hand and pseudo-random graphs."""
