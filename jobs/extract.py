@@ -47,7 +47,8 @@ def parse_args(argv):
         "--salt",
         type=int,
         default=0,
-        help="explicit salted repartition width (0 = narrow plan + AQE)",
+        help="extraction tasks: the width of the (warc_day, url) range "
+        "partitioning of the input (0 = the default parallelism)",
     )
     p.add_argument("--langs", default=None, help="comma list: lang gate")
     p.add_argument("--pages-list", default=None, help="comma page numbers")

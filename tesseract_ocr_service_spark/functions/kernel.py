@@ -284,7 +284,7 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             cols["block_num"],
             cols["par_num"],
             cols["line_num"],
-            [str(t) for t in cols["text"]],
+            cols["text"],  # str: htmlx tokens, or checked by page_word_records
             cols["left"],
             cols["top"],
             cols["width"],

@@ -29,6 +29,8 @@ import json
 import math
 from typing import Any, Optional
 
+import numpy as np
+
 MAGIC = b"%PDF"
 HEADER = b"%PDF-1.7\n%GRAFT-LAYOUT-1\n"
 #: a page whose stream carries this marker fails to parse -> empty page
@@ -53,6 +55,26 @@ WORD_FIELDS = (
     "height",
     "conf",
 )
+#: the range of the IntegerType fields (schema.WORD, BBOX, PAGE_SPANS)
+#: every page and word number lands in at the Arrow boundary
+INT32_MIN, INT32_MAX = -(2**31), 2**31 - 1
+_TEXT = WORD_FIELDS.index("text")
+#: the numeric word fields, in row order without the text
+_NUMERIC = WORD_FIELDS[:_TEXT] + WORD_FIELDS[_TEXT + 1:]
+
+
+def _fits_int32(a: np.ndarray) -> bool:
+    return bool(
+        np.isfinite(a).all() and a.min() >= INT32_MIN and a.max() <= INT32_MAX
+    )
+
+
+def _int32(v) -> int:
+    """``int(v)``, raising ValueError when it does not fit int32."""
+    i = int(v)
+    if not INT32_MIN <= i <= INT32_MAX:
+        raise ValueError(f"{v!r} outside int32")
+    return i
 
 
 def encode(pages: list[dict], poison_doc: bool = False) -> bytes:
@@ -104,11 +126,13 @@ def decode(payload: bytes) -> list[dict]:
         # the page fields the kernel reads, normalized in place: a
         # missing or non-numeric one is a corrupt stream, not a crash
         try:
-            p["page_number"] = int(p["page_number"])
-            p["width"] = int(p["width"])
-            p["height"] = int(p["height"])
-            p["rotate"] = int(p.get("rotate", 0))
+            p["page_number"] = _int32(p["page_number"])
+            p["width"] = _int32(p["width"])
+            p["height"] = _int32(p["height"])
+            p["rotate"] = _int32(p.get("rotate", 0))
             p["skew_angle"] = float(p.get("skew_angle", 0.0))
+            if not math.isfinite(p["skew_angle"]):
+                raise ValueError(f"skew_angle {p['skew_angle']!r}")
         except (KeyError, TypeError, ValueError, OverflowError) as e:
             raise DocumentParseError(
                 f"corrupt layout stream: page {e!r}"
@@ -161,12 +185,32 @@ def corrected_size(
 
 
 def page_word_records(page: dict) -> list[tuple[Any, ...]]:
-    """Word tuples of one page; a poisoned page, or a word row that is
-    not :data:`WORD_FIELDS` wide, raises (isolated upstream into an
-    empty page, mirroring ocr_processor.py:95-105)."""
+    """Word tuples of one page. A poisoned page raises, and so does a
+    word row that is not :data:`WORD_FIELDS` wide, whose text is not a
+    UTF-8-encodable string, or whose numbers are not finite and inside int32 (the bbox
+    ends ``left + width`` / ``top + height`` included) — the kernel
+    isolates the raise into an empty page, mirroring
+    ocr_processor.py:95-105, so one bad row never fails its batch."""
     if page.get("poison"):
         raise ValueError(POISON_PAGE)
     rows = [tuple(w) for w in page["words"]]
     if any(len(w) != len(WORD_FIELDS) for w in rows):
         raise ValueError("word row width != len(WORD_FIELDS)")
+    if not rows:
+        return rows
+    cols = list(zip(*rows))
+    if not all(type(t) is str for t in cols[_TEXT]):
+        raise ValueError("word text is not a string")
+    # a lone surrogate (a JSON "\ud800" escape) has no UTF-8 form, so
+    # it could not cross Arrow: UnicodeEncodeError is a ValueError
+    "".join(cols[_TEXT]).encode("utf-8")
+    # one conversion for every numeric field: a None, string, bool or
+    # int beyond int64 leaves the array non-numeric
+    nums = np.array(cols[:_TEXT] + cols[_TEXT + 1:])
+    if nums.dtype.kind not in "iuf" or not _fits_int32(nums):
+        raise ValueError("word field is not a finite int32 number")
+    f = dict(zip(_NUMERIC, nums))
+    right, bottom = f["left"] + f["width"], f["top"] + f["height"]
+    if not (_fits_int32(right) and _fits_int32(bottom)):
+        raise ValueError("word bbox end outside int32")
     return rows

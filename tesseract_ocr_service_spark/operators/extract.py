@@ -19,19 +19,27 @@ Scale design notes (100 TB / 1000 executors):
   stays well inside executor memory.
 - Partition pruning on warc_ts is expressed as a plain filter on the
   partition column so Catalyst prunes warc_day directories at plan time.
+- A point read (``lookup_spans``/``document_json``) pays per file it
+  lists plus one schema-inference job, not per row it returns. On a root
+  committed by plans/commit.py the ``_urls`` url -> day index (one
+  filtered driver-side pyarrow read) narrows the read to the url's day
+  directory, read with the committed schema. A table without the index
+  is read whole.
 """
 
 from __future__ import annotations
 
 import functools
+import posixpath
 from typing import Optional
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ALLOWED_CONTENT_TYPES, ExtractConfig
 from ..functions.kernel import kernel_iter
-from ..schema import EXTRACTED_SCHEMA
+from ..schema import COMMITTED_SCHEMA, EXTRACTED_SCHEMA
 
 #: columns the kernel needs — `text` (the raw noise column) is never read,
 #: so parquet column pruning skips it (verify: ReadSchema in explain()).
@@ -269,18 +277,95 @@ def lineage_view(wide: DataFrame) -> DataFrame:
     )
 
 
+#: the url -> day index beside a committed table (plans/commit.py step 3)
+URL_INDEX = "_urls"
+
+
+def _day(name: str) -> Optional[str]:
+    """The day of a ``warc_day=...`` directory name (hive-unescaped, as
+    pyarrow's hive partitioning reads it); None for any other entry."""
+    key, eq, value = name.partition("=")
+    return unquote(value) if key == "warc_day" and eq else None
+
+
+def _indexed_entries(spans_path: str, url: str) -> Optional[list[str]]:
+    """Names of the table entries a read of ``url`` must open, or None
+    when the table has no url index.
+
+    The index covers the days that have a ``_urls/warc_day=D`` directory
+    (found by the index dataset's one listing). Of those, only the
+    url's own days are kept (one filtered driver-side read); every
+    entry the index does not cover is kept too: days committed before
+    the index existed, streaming ``epoch_id=`` directories, the files
+    of an unpartitioned table."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyarrow import fs as pafs
+
+    from ..sources.warc import arrow_fs
+
+    fs, root = arrow_fs(spans_path)
+    root = root.rstrip("/")
+    try:
+        index = ds.dataset(
+            f"{root}/{URL_INDEX}",
+            filesystem=fs,
+            format="parquet",
+            schema=pa.schema([("url", pa.string()), ("warc_day", pa.string())]),
+            partitioning="hive",
+        )
+    except FileNotFoundError:
+        return None
+    covered = {
+        _day(posixpath.basename(posixpath.dirname(f))) for f in index.files
+    } - {None}
+    days = set(
+        index.to_table(columns=["warc_day"], filter=ds.field("url") == url)
+        .column("warc_day")
+        .to_pylist()
+    )
+    names = [
+        posixpath.basename(e.path)
+        for e in fs.get_file_info(pafs.FileSelector(root))
+    ]
+    return [
+        n
+        for n in names
+        if not n.startswith(("_", "."))
+        and (_day(n) not in covered or _day(n) in days)
+    ]
+
+
 def lookup_spans(spark: SparkSession, spans_path: str, url: str) -> DataFrame:
     """Point lookup: url -> full hierarchy (GET /documents/{id}/coordinates,
     ocr/main.py:198-228; store get at coordinates_store.py:61-78).
-    Partition-pruned + min/max-skipped parquet read, no shuffle."""
-    return spark.read.parquet(spans_path).where(F.col("url") == F.lit(url))
+
+    On a committed root (plans/commit.py) the ``_urls`` index names the
+    url's day, so the read opens that one day directory (plus any entry
+    the index does not cover, see :func:`_indexed_entries`) with the
+    committed schema: no full-table listing and no schema-inference
+    job. A table without the index (a compacted or streaming root, a
+    ``spans_view`` written elsewhere) is read whole, partition-pruned
+    and min/max-skipped. Either way: a filter on url, no shuffle."""
+    entries = _indexed_entries(spans_path, url)
+    if entries is None:
+        df = spark.read.parquet(spans_path)
+    else:
+        base = spans_path.rstrip("/")
+        df = (
+            spark.read.schema(COMMITTED_SCHEMA)
+            .option("basePath", base)
+            .parquet(*(f"{base}/{n}" for n in entries))
+        )
+    return df.where(F.col("url") == F.lit(url))
 
 
 def document_json(spark: SparkSession, spans_path: str, url: str) -> DataFrame:
     """GET /documents/{id}/coordinates response shape (S12): the nested
     spans hierarchy rendered as unicode-preserving JSON — the reference's
     ``_document_to_dict`` + UnicodeJSONResponse (ocr/main.py:244-298,
-    41-51) as one partition-pruned read + to_json projection."""
+    41-51) as one :func:`lookup_spans` read (one day directory on an
+    indexed root) + to_json projection."""
     return lookup_spans(spark, spans_path, url).select(
         F.col("url").alias("doc_id"),  # deterministic key (uuid4 delta)
         F.to_json(

@@ -15,21 +15,39 @@ rule, with plain parquet — no Iceberg jars offline):
    days present in the lineage table: one ``distinct()`` scan job over
    the input's ``warc_day`` column, set-differenced on the driver
    against the days of a tiny lineage read.
-2. Process ONLY pending days; write the wide output with **dynamic
-   partition overwrite** — a re-attempt replaces exactly the partitions
-   it produces, never touching committed ones, and Spark's output
-   committer keeps half-written files in ``_temporary`` out of reads.
-3. Append per-day counter rows to ``lineage/`` LAST, as one file built
-   on the driver from one counter aggregate over the files just
-   written. A crash between (2) and (3) leaves the day un-committed ->
-   step 1 reprocesses it -> overwrite makes the retry idempotent.
-   Committed partitions are never rewritten, so re-runs are byte-stable.
+2. Process ONLY pending days. The raw pending pages are first
+   range-partitioned by ``(warc_day, url)`` (only the kernel's columns
+   cross the exchange; the kernel stage after it stays narrow), so each
+   task extracts one contiguous (day, url) slice and a day lands as ~one
+   file instead of one per input split. The wide output is written with
+   **dynamic partition overwrite** — a re-attempt replaces exactly the
+   partitions it produces, never touching committed ones, and Spark's
+   output committer keeps half-written files in ``_temporary`` out of
+   reads.
+3. Write the url -> day index of the pending days to
+   ``extracted/_urls/`` (same dynamic overwrite, so a retried day's
+   index rows are replaced, never duplicated), THEN append per-day
+   counter rows to ``lineage/`` LAST, as one file built on the driver
+   from one counter aggregate over the files just written. A crash
+   before the marker leaves the day un-committed -> step 1 reprocesses
+   it -> overwrite makes the retry idempotent; since the index precedes
+   the marker, every committed day has its index. Committed partitions
+   are never rewritten, so re-runs are byte-stable.
+
+``salt_partitions`` sizes step 2's range partitioning (the number of
+extraction tasks, and so at most ``days + n - 1`` data files per run);
+0 means the cluster's default parallelism.
 
 Output layout (one wide columnar table — parquet column pruning means
 text-only readers never touch the fat ``spans`` pages):
 
-    out_root/extracted/warc_day=YYYY-MM-DD/*.parquet   (EXTRACTED_SCHEMA + warc_day)
-    out_root/lineage/*.parquet                          (LINEAGE_SCHEMA)
+    out_root/extracted/warc_day=YYYY-MM-DD/*.parquet        (COMMITTED_SCHEMA)
+    out_root/extracted/_urls/warc_day=YYYY-MM-DD/*.parquet  (url: the index)
+    out_root/lineage/*.parquet                              (LINEAGE_SCHEMA)
+
+The ``_`` prefix hides ``_urls`` from every Spark and pyarrow listing of
+``extracted``; only ``operators.extract.lookup_spans`` reads it, to open
+one day directory per point read.
 """
 
 from __future__ import annotations
@@ -41,11 +59,10 @@ import pandas as pd
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import ExtractConfig
 from ..operators import extract as X
-from ..schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
+from ..schema import COMMITTED_SCHEMA, LINEAGE_SCHEMA
 
 
 class _DayMsParam(AccumulatorParam):
@@ -162,47 +179,48 @@ def _run_checkpointed_body(
     if not pending:
         return RunSummary(pending, skipped, 0, int((time.perf_counter() - t0) * 1000))
 
-    todo = pages.where(F.col("warc_day").isin(pending))
-
-    # ---- step 2: process + dynamic-partition-overwrite the data ------
+    # ---- step 2: cluster, process + dynamic-partition-overwrite ------
+    # range-partition the raw pages by (day, url): each task then writes
+    # one contiguous slice, ~1 file per day instead of one per split
+    n = (
+        salt_partitions if salt_partitions > 0
+        else spark.sparkContext.defaultParallelism
+    )
+    todo = pages.where(F.col("warc_day").isin(pending)).repartitionByRange(
+        n, "warc_day", "url"
+    )
     # per-day kernel wall collected executor-side (accumulator filled
     # by kernel_iter during the write action below)
     day_acc = spark.sparkContext.accumulator({}, _DayMsParam())
     wide = X.extract(
-        todo, cfg, salt_partitions=salt_partitions, languages=languages,
-        day_timer_acc=day_acc,
+        todo, cfg, languages=languages, day_timer_acc=day_acc,
     )
     # warc_ts is non-null by schema contract (undated WARC records ride
     # the epoch sentinel, sources/warc.UNDATED_TS), so warc_day here is
     # always a real partition value step 1 can enumerate.
     out = wide.withColumn("warc_day", X.warc_day())
-    (
-        out.write.mode("overwrite")
-        # dynamic: replace only the partitions present in this write,
-        # regardless of the session-level default.
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("warc_day")
-        .parquet(f"{out_root}/extracted")
-    )
+    _overwrite_days(out, f"{out_root}/extracted")
 
     if _fail_before_commit:
         raise RuntimeError("injected failure between data write and commit marker")
 
-    # ---- step 3: append lineage rows LAST (the commit marker) --------
+    # ---- step 3: the url index, then lineage rows LAST (the marker) --
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    # counters: ONE aggregate over the just-written files. Explicit schema:
-    # an all-filtered run writes no files, and inferring an empty dir throws.
-    ext_schema = StructType(
-        EXTRACTED_SCHEMA.fields + [StructField("warc_day", StringType())]
-    )
+    # Explicit schema: an all-filtered run writes no files, and
+    # inferring an empty dir throws.
     if _exists(spark, f"{out_root}/extracted"):
         written = (
-            spark.read.schema(ext_schema)
+            spark.read.schema(COMMITTED_SCHEMA)
             .parquet(f"{out_root}/extracted")
             .where(F.col("warc_day").isin(pending))
         )
+        _overwrite_days(
+            written.select("url", "warc_day"),
+            f"{out_root}/extracted/{X.URL_INDEX}",
+        )
     else:
-        written = spark.createDataFrame([], ext_schema)
+        written = spark.createDataFrame([], COMMITTED_SCHEMA)
+    # counters: ONE aggregate over the just-written files
     got = {r["warc_day"]: r.asDict() for r in X.lineage_view(written).collect()}
     # EVERY pending day gets a marker, zero-filled if all its rows were
     # filtered away (else it stays pending and resume never converges).
@@ -225,6 +243,18 @@ def _run_checkpointed_body(
     ).coalesce(1)
     lineage.write.mode("append").parquet(f"{out_root}/lineage")
     return RunSummary(pending, skipped, sum(r["n_docs"] for r in rows), wall_ms)
+
+
+def _overwrite_days(df: DataFrame, path: str) -> None:
+    """Write ``df`` under ``path`` partitioned by warc_day, replacing
+    only the days present in ``df`` (dynamic overwrite, regardless of
+    the session-level default)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("warc_day")
+        .parquet(path)
+    )
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

@@ -35,6 +35,11 @@ Shape (Spark-first, scales to any partition count):
   atomic rename/metastore repoint) — compaction must never destroy
   the only copy in place.
 
+A compacted root carries no url index: compaction reads the dataset
+through Spark, which never lists ``extracted/_urls`` (plans/commit.py),
+so ``operators.extract.lookup_spans`` on it falls back to the full,
+schema-inferred read.
+
 Reference parity: the reference service has no storage layer (it
 returns extraction results over HTTP, `ocr/main.py`); compaction is
 part of the batch engine's own sink contract (SURVEY.md §2 S8/S10

@@ -327,36 +327,44 @@ def _pafs_uri(uri: str) -> str:
     return uri
 
 
-def _iter_file_chunks(uri: str, chunk: int = 1 << 20) -> Iterator[bytes]:
-    """Stream a file's bytes in bounded chunks via pyarrow's
-    FileSystem layer (file://, hdfs://, s3://, ... resolve uniformly;
-    a bare path falls back to the local filesystem)."""
+def arrow_fs(uri: str):
+    """(pyarrow FileSystem, path inside it) for a Spark path or URI:
+    file://, hdfs://, s3:// (and s3a/s3n) ... resolve through
+    ``FileSystem.from_uri``; a bare path or a ``file:`` URI goes to the
+    local filesystem. Spark renders local paths as single-slash URIs
+    (file:/tmp/x) which from_uri rejects, so those are decoded here.
+    An unrecognized scheme raises ``pyarrow.lib.ArrowInvalid``."""
     from urllib.parse import unquote, urlparse
 
-    import pyarrow as pa
     from pyarrow import fs as pafs
 
     u = urlparse(uri)
-    scheme = u.scheme.lower()
-    if scheme in ("", "file"):
-        # Spark renders local paths as single-slash URIs (file:/tmp/x)
-        # which pyarrow's from_uri rejects; go straight to the local FS
-        # with the decoded path.
-        fsys, p = pafs.LocalFileSystem(), unquote(u.path) or uri
-    else:
-        try:
-            fsys, p = pafs.FileSystem.from_uri(_pafs_uri(uri))
-        except pa.lib.ArrowInvalid as e:
-            # unrecognized-scheme only — network/credential errors on
-            # a RECOGNIZED store must surface as themselves.
-            raise ValueError(
-                f"cannot stream {uri!r}: pyarrow FileSystem.from_uri "
-                f"does not recognize scheme {scheme!r} (hdfs/s3/gs "
-                "coverage depends on the installed pyarrow build; "
-                "abfss/wasbs need a pyarrow with Azure support). Use "
-                "read_warc (binaryFile) for archives under 2 GiB, or "
-                "mirror outlier archives to a supported store."
-            ) from e
+    if u.scheme.lower() in ("", "file"):
+        return pafs.LocalFileSystem(), unquote(u.path) or uri
+    return pafs.FileSystem.from_uri(_pafs_uri(uri))
+
+
+def _iter_file_chunks(uri: str, chunk: int = 1 << 20) -> Iterator[bytes]:
+    """Stream a file's bytes in bounded chunks via pyarrow's
+    FileSystem layer (:func:`arrow_fs`)."""
+    from urllib.parse import urlparse
+
+    import pyarrow as pa
+
+    try:
+        fsys, p = arrow_fs(uri)
+    except pa.lib.ArrowInvalid as e:
+        # unrecognized-scheme only — network/credential errors on
+        # a RECOGNIZED store must surface as themselves.
+        raise ValueError(
+            f"cannot stream {uri!r}: pyarrow FileSystem.from_uri "
+            "does not recognize scheme "
+            f"{urlparse(uri).scheme.lower()!r} (hdfs/s3/gs "
+            "coverage depends on the installed pyarrow build; "
+            "abfss/wasbs need a pyarrow with Azure support). Use "
+            "read_warc (binaryFile) for archives under 2 GiB, or "
+            "mirror outlier archives to a supported store."
+        ) from e
     # compression=None: open_input_stream defaults to 'detect' and
     # would transparently gunzip by the .gz extension — the raw
     # compressed bytes must reach the salvage-aware inflater instead

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +24,20 @@ def paths(spark, tmp_path):
     out = str(tmp_path / "out")
     gen.write_pages(spark, pages, N_DOCS, seed=SEED, partitions=4)
     return pages, out
+
+
+def _days(spark, out):
+    """url -> the warc_day directory its committed row lies in."""
+    return {
+        r["url"]: r["day"]
+        for r in C.read_extracted(spark, out)
+        .select("url", F.col("warc_day").cast("string").alias("day"))
+        .collect()
+    }
+
+
+def _lookup(spark, out, url):
+    return X.document_json(spark, f"{out}/extracted", url).collect()
 
 
 def _texts(spark, out):
@@ -75,6 +90,9 @@ def test_crash_before_marker_then_resume_is_idempotent(spark, paths):
 
     # the crashed days are NOT committed...
     assert C.committed_days(spark, out) == committed_before
+    # ...their rows have no index yet, yet a point read still finds them
+    crashed = [u for u, d in _days(spark, out).items() if d not in committed_before]
+    assert [r["doc_id"] for r in _lookup(spark, out, crashed[0])] == [crashed[0]]
 
     # ...and the retry reprocesses exactly them, idempotently
     s = C.run_checkpointed(spark, pages, out)
@@ -87,6 +105,11 @@ def test_crash_before_marker_then_resume_is_idempotent(spark, paths):
     lineage = C.read_lineage(spark, out).collect()
     assert len(lineage) == 30
     assert all(r["attempt"] == 1 for r in lineage)
+
+    # every sampled url of every committed day is found exactly once
+    days = _days(spark, out)
+    for url in sorted(days)[:: len(days) // 8]:
+        assert [r["doc_id"] for r in _lookup(spark, out, url)] == [url]
 
     # a full reference run in a fresh dir produces identical bytes
     out2 = out + "_ref"
@@ -188,3 +211,64 @@ def test_all_filtered_run_commits_zero_markers(spark, paths):
 
     s2 = C.run_checkpointed(spark, pages, out, languages=("zz",))
     assert not s2.pending_days and s2.skipped_days == s1.pending_days
+
+
+def test_index_covers_every_day_a_later_run_commits(spark, paths):
+    """Each run writes its days' url index before its marker: after a
+    second run adds days, the index has one directory per committed
+    day and a url only the second run committed is found."""
+    pages, out = paths
+    C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-10")
+    s2 = C.run_checkpointed(spark, pages, out)
+    index = sorted(os.listdir(os.path.join(out, "extracted", "_urls")))
+    assert index == [f"warc_day={d}" for d in sorted(C.committed_days(spark, out))]
+    late = [u for u, d in _days(spark, out).items() if d == s2.pending_days[-1]]
+    assert late
+    assert [r["doc_id"] for r in _lookup(spark, out, late[0])] == [late[0]]
+
+
+def test_point_read_opens_only_the_urls_day(spark, paths):
+    pages, out = paths
+    C.run_checkpointed(spark, pages, out)
+    days = _days(spark, out)
+    for url in sorted(days)[:: len(days) // 5]:
+        df = X.document_json(spark, f"{out}/extracted", url)
+        files = df.inputFiles()
+        assert files and all(f"/warc_day={days[url]}/" in f for f in files), url
+        assert len(df.collect()) == 1
+
+
+def test_lookup_reads_days_the_index_does_not_cover(spark, paths):
+    """A day without its index directory (committed before the index
+    existed) is read whole; a root without any index is read as a
+    plain table. Both return the same response bytes."""
+    pages, out = paths
+    C.run_checkpointed(spark, pages, out)
+    days = _days(spark, out)
+    url = sorted(days)[len(days) // 2]
+    indexed = _lookup(spark, out, url)
+    assert len(indexed) == 1
+
+    shutil.rmtree(os.path.join(out, "extracted", "_urls", f"warc_day={days[url]}"))
+    assert _lookup(spark, out, url) == indexed
+    other = next(u for u, d in sorted(days.items()) if d != days[url])
+    assert [r["doc_id"] for r in _lookup(spark, out, other)] == [other]
+
+    shutil.rmtree(os.path.join(out, "extracted", "_urls"))
+    assert _lookup(spark, out, url) == indexed
+
+
+def test_clustered_layout_matches_unclustered_extract(spark, paths):
+    """salt_partitions=n range-partitions the input into n extraction
+    tasks by (day, url): at most days + n - 1 data files, and the same
+    rows as the plain extraction of the same input."""
+    pages, out = paths
+    n = 3
+    s = C.run_checkpointed(spark, pages, out, salt_partitions=n)
+    files = glob.glob(os.path.join(out, "extracted", "warc_day=*", "*.parquet"))
+    assert len(files) <= len(s.pending_days) + n - 1
+
+    committed = C.read_extracted(spark, out).drop("warc_day").collect()
+    plain = X.extract(X.read_pages(spark, pages)).collect()
+    key = lambda r: r["url"]
+    assert sorted(committed, key=key) == sorted(plain, key=key)

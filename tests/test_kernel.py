@@ -277,6 +277,40 @@ def test_block_counters_pdf():
                         "words": [[1]]}]},
             "ok",
         ),
+        # a word row of the wrong types, or beyond the int32 output
+        # fields, fails its page only
+        *(
+            (
+                {"pages": [{"page_number": 1, "width": 10, "height": 10,
+                            "words": [[1, 1, 1, 1, "a", 1, 2, 3, 4, 50], bad]}]},
+                "ok",
+            )
+            for bad in (
+                [1, 1, 1, 2, "b", "abc", 2, 3, 4, 50],  # left not a number
+                [1, 1, 1, 2, "b", 1, 2, 3, 4, "x"],  # conf not a number
+                [None, 1, 1, 2, "b", 1, 2, 3, 4, 50],  # block_num null
+                [1, 1, 1, 2, 7, 1, 2, 3, 4, 50],  # text not a string
+                [1, 1, 1, 2, "\ud800", 1, 2, 3, 4, 50],  # text without UTF-8
+                [1, 1, 1, 2, "b", 2**40, 2, 3, 4, 50],  # left beyond int32
+                [1, 1, 1, 2, "b", 2**31 - 1, 2, 3, 4, 50],  # right beyond int32
+                [1, 1, 1, 2, "b", 1, 2, 3, 4, float("nan")],  # conf not finite
+            )
+        ),
+        # page meta beyond int32 is a corrupt stream
+        *(
+            (
+                {"pages": [{"page_number": 1, "width": 10, "height": 10,
+                            "rotate": 0, "words": [], field: 2**40}]},
+                "error",
+            )
+            for field in ("page_number", "width", "height", "rotate")
+        ),
+        # a skew angle that is not finite is a corrupt stream
+        (
+            {"pages": [{"page_number": 1, "width": 10, "height": 10,
+                        "skew_angle": float("inf"), "words": []}]},
+            "error",
+        ),
     ],
 )
 def test_malformed_layout_stream_gives_row_not_task_failure(body, status):
