@@ -1,6 +1,6 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry`` runs the flagship extraction (the fused mapInPandas kernel over
+``entry`` runs the flagship extraction (the fused mapInArrow kernel over
 HTML-wrapped documents); ``queries``/``oracle_sql`` expose each
 implemented operator from SURVEY.md §2 with a DuckDB-checkable analog.
 

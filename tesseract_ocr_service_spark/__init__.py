@@ -8,10 +8,11 @@ over an Iceberg-style table of Common-Crawl-like pages
 
 Architecture (Spark-first, not a port):
 
-- All heavy lifting happens inside ONE fused ``mapInPandas`` kernel
+- All heavy lifting happens inside ONE fused ``mapInArrow`` kernel
   (`operators.extract`), crossing the JVM<->Python Arrow boundary once per
-  batch — where the reference crosses a process boundary 5x per document
-  (reference ``ocr/services/ocr_processor.py:400-457``).
+  batch with output built as Arrow arrays — where the reference crosses
+  a process boundary 5x per document (reference
+  ``ocr/services/ocr_processor.py:400-457``).
 - Everything relational (validation predicates, partition pruning, column
   pruning, salting, lineage aggregation, dedup, similarity) is declarative
   DataFrame API so Catalyst/AQE optimize it.

@@ -25,17 +25,34 @@ indices come from ``np.flatnonzero``; envelope bboxes are
 text is one ``"".join`` over a pre-interleaved (separator, word) list
 per page, where the separator between consecutive words is a pure
 function of which key level changed (new block -> "\\n\\n", new
-(par,line) -> "\\n", else " "); the nested hierarchy is built by
-slicing each level's child list with ``np.searchsorted`` of the
-parents' start indices — no per-word Python branching anywhere
-(measured ~1.6x on the spans path vs the row-at-a-time loop this
-replaces).
+(par,line) -> "\\n", else " "); the nested hierarchy is one Arrow
+array per level — word, line, paragraph and block ``StructArray``s,
+each nested in a ``ListArray`` whose offsets are ``np.searchsorted``
+of the parents' start indices into the children's. No per-word
+Python branching, and no Python object per hierarchy node: the kernel
+hands these arrays to Spark as they are (``mapInArrow``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from ..schema import EXTRACTED_ARROW
+
+#: the nested Arrow node types of the span hierarchy, read off the
+#: kernel's output schema (schema.BLOCK/PARAGRAPH/LINE/WORD/BBOX)
+_BLOCKS = EXTRACTED_ARROW.field("spans").type.value_type.field("blocks").type
+_BLOCK = _BLOCKS.value_type
+_PARS = _BLOCK.field("paragraphs").type
+_LINES = _PARS.value_type.field("lines").type
+_WORDS = _LINES.value_type.field("words").type
+_BBOX = _BLOCK.field("bbox").type
+#: a list<BLOCK> array holding one empty list (no page has blocks)
+_NO_BLOCKS = pa.array([[]], _BLOCKS)
+
 
 def assemble_pages(
     words: pd.DataFrame, emit_spans: bool = True
@@ -48,11 +65,11 @@ def assemble_pages(
 
     `words` columns: doc, page_number, block_num, par_num, line_num,
     text, left, top, width, height, conf — rows in arrival order.
-    Returns (text_map, spans_map), spans in the dict form of
-    :func:`blocks_to_dicts`; pages with no non-empty words are absent
+    Returns (text_map, spans_map), each page's blocks as the
+    ``to_pylist()`` dict form; pages with no non-empty words are absent
     from both (callers fill ""/[]).
     """
-    text_map, spans_map, _, _ = assemble_pages_arrays(
+    text_map, page_index, page_blocks, _, _ = assemble_pages_arrays(
         words["doc"].to_numpy(),
         words["page_number"].to_numpy(),
         words["block_num"].to_numpy(),
@@ -66,7 +83,8 @@ def assemble_pages(
         words["conf"].to_numpy(),
         emit_spans=emit_spans,
     )
-    return text_map, {k: blocks_to_dicts(v) for k, v in spans_map.items()}
+    blocks = page_blocks.to_pylist()
+    return text_map, {k: blocks[i] for k, i in page_index.items()}
 
 
 def assemble_pages_arrays(
@@ -82,9 +100,9 @@ def assemble_pages_arrays(
     height_r,
     conf_r,
     emit_spans: bool = True,
-) -> tuple[dict, dict, dict[int, int], dict[int, int]]:
+) -> tuple[dict, dict, pa.ListArray, dict[int, int], dict[int, int]]:
     """Array-native fused boundary-index pass (raw arrival order in)
-    -> (text_map, spans_map, n_words, n_blocks_kept).
+    -> (text_map, page_index, page_blocks, n_words, n_blocks_kept).
 
     Preparation replicates the contract: strip texts, DROP empty-text
     records, stable-sort by the hierarchy keys (np.lexsort is stable —
@@ -92,10 +110,14 @@ def assemble_pages_arrays(
     ocr_processor.py:157-160,231-237, while preserving arrival order
     within a line, :152,:226).
 
-    Every hierarchy node is a TUPLE in the schema's field order
-    (schema.BLOCK/PARAGRAPH/LINE/WORD/BBOX) — the form that crosses the
-    kernel's Arrow boundary; :func:`blocks_to_dicts` gives the dict
-    form tests assert on.
+    The hierarchy is Arrow: ``page_blocks`` is a ``list<BLOCK>`` array
+    whose row ``page_index[(doc, page)]`` holds that page's blocks, and
+    whose LAST row is an empty list (the row for a page without
+    blocks). Each level is a ``ListArray`` over the next one, its
+    offsets the group start indices the text pass already computed,
+    and each bbox a ``StructArray`` of ``reduceat`` envelopes; no Python
+    object is made per node. With ``emit_spans=False`` page_index is
+    empty and page_blocks is that one empty list.
 
     The per-doc lineage counters come from the same pass: ``n_words``
     counts non-empty records (the reference's total_words log,
@@ -107,7 +129,7 @@ def assemble_pages_arrays(
         (t != "" for t in stripped), dtype=bool, count=len(stripped)
     )
     if not keep.any():
-        return {}, {}, {}, {}
+        return {}, {}, _NO_BLOCKS, {}, {}
     doc_k = np.asarray(doc_r)[keep]
     page_k = np.asarray(page_r)[keep]
     blk_k = np.asarray(blk_r)[keep]
@@ -162,17 +184,17 @@ def assemble_pages_arrays(
     page_l = page_np.tolist()
 
     text_map: dict[tuple[int, int], str] = {}
-    page_keys = []
+    page_index: dict[tuple[int, int], int] = {}
     for idx in range(len(page_starts)):
         s, e = page_bounds[idx], page_bounds[idx + 1]
         key = (doc_l[s], page_l[s])
-        page_keys.append(key)
+        page_index[key] = idx
         text_map[key] = "".join(interleaved[2 * s : 2 * e])
 
     if not emit_spans:
-        return text_map, {}, n_words, n_blocks
+        return text_map, {}, _NO_BLOCKS, n_words, n_blocks
 
-    # ---- spans hierarchy ------------------------------------------
+    # ---- spans hierarchy: one Arrow array per level ----------------
     left_np = np.asarray(left_r)[keep][order]
     top_np = np.asarray(top_r)[keep][order]
     width_np = np.asarray(width_r)[keep][order]
@@ -184,81 +206,77 @@ def assemble_pages_arrays(
     line_starts = np.flatnonzero(new_line)
     par_starts = np.flatnonzero(new_par)
 
-    def _bboxes(starts: np.ndarray) -> list:
-        return list(
-            zip(
-                np.minimum.reduceat(left_np, starts).tolist(),
-                np.minimum.reduceat(top_np, starts).tolist(),
-                np.maximum.reduceat(right_np, starts).tolist(),
-                np.maximum.reduceat(bottom_np, starts).tolist(),
-            )
+    def _int32(a) -> pa.Array:
+        # a fractional number (a float in the layout stream) truncates
+        # toward zero, as pyarrow converts a Python float; a value
+        # outside int32 raises, it never wraps
+        a = np.asarray(a)
+        return pa.array(a.astype(np.int64) if a.dtype.kind == "f" else a, pa.int32())
+
+    def _struct(t: pa.StructType, arrays: list) -> pa.StructArray:
+        return pa.StructArray.from_arrays(arrays, fields=list(t))
+
+    def _bboxes(starts: np.ndarray) -> pa.StructArray:
+        return _struct(
+            _BBOX,
+            [
+                _int32(np.minimum.reduceat(left_np, starts)),
+                _int32(np.minimum.reduceat(top_np, starts)),
+                _int32(np.maximum.reduceat(right_np, starts)),
+                _int32(np.maximum.reduceat(bottom_np, starts)),
+            ],
         )
 
-    # lines: words are the contiguous word slice; text = " ".join.
-    # Nodes are tuples in schema field order (schema.WORD/LINE/...):
-    # pyarrow converts tuples into structs without per-key hashing —
-    # measurably cheaper than dicts on the 10^5-words-per-batch path.
-    word_tuples = list(
-        zip(
-            text_a,
-            left_np.tolist(),
-            top_np.tolist(),
-            width_np.tolist(),
-            height_np.tolist(),
-            conf_np.tolist(),
-        )
+    def _nest(t: pa.ListType, first_child, values) -> pa.ListArray:
+        # parent i holds values[first_child[i] : first_child[i + 1]]
+        offsets = _int32(np.append(first_child, len(values)))
+        return pa.ListArray.from_arrays(offsets, values, type=t)
+
+    def _first(child_starts, starts):
+        # a parent's first child: where its word start falls among the
+        # children's word starts
+        return np.searchsorted(child_starts, starts)
+
+    texts = pa.array(text_a, pa.string())
+    words = _struct(
+        _WORDS.value_type,
+        [texts]
+        + [_int32(a) for a in (left_np, top_np, width_np, height_np, conf_np)],
     )
-    line_bounds = np.append(line_starts, n).tolist()
-    line_ids = line_np[line_starts].tolist()
-    line_bbs = _bboxes(line_starts)
-    lines_all = []
-    for idx in range(len(line_starts)):
-        s, e = line_bounds[idx], line_bounds[idx + 1]
-        lines_all.append(
-            (
-                line_ids[idx],
-                " ".join(text_a[s:e]),
-                line_bbs[idx],
-                word_tuples[s:e],
-            )
-        )
-
-    # paragraphs group contiguous lines; blocks group contiguous
-    # paragraphs; pages group contiguous blocks — each via searchsorted
-    # of the parent's word-start indices into the child's.
-    par_line_idx = np.searchsorted(line_starts, par_starts).tolist()
-    par_line_idx.append(len(lines_all))
-    par_ids = par_np[par_starts].tolist()
-    par_bbs = _bboxes(par_starts)
-    pars_all = [
-        (
-            par_ids[idx],
-            par_bbs[idx],
-            lines_all[par_line_idx[idx] : par_line_idx[idx + 1]],
-        )
-        for idx in range(len(par_starts))
-    ]
-
-    blk_par_idx = np.searchsorted(par_starts, blk_starts).tolist()
-    blk_par_idx.append(len(pars_all))
-    blk_ids = blk_np[blk_starts].tolist()
-    blk_bbs = _bboxes(blk_starts)
-    blocks_all = [
-        (
-            blk_ids[idx],
-            blk_bbs[idx],
-            pars_all[blk_par_idx[idx] : blk_par_idx[idx + 1]],
-        )
-        for idx in range(len(blk_starts))
-    ]
-
-    page_blk_idx = np.searchsorted(blk_starts, page_starts).tolist()
-    page_blk_idx.append(len(blocks_all))
-    spans_map = {
-        page_keys[idx]: blocks_all[page_blk_idx[idx] : page_blk_idx[idx + 1]]
-        for idx in range(len(page_starts))
-    }
-    return text_map, spans_map, n_words, n_blocks
+    words_per_line = _nest(_WORDS, line_starts, words)
+    lines = _struct(
+        _LINES.value_type,
+        [
+            _int32(line_np[line_starts]),
+            # line text: the line's words joined by " ", in Arrow
+            pc.binary_join(
+                pa.ListArray.from_arrays(words_per_line.offsets, texts), " "
+            ),
+            _bboxes(line_starts),
+            words_per_line,
+        ],
+    )
+    pars = _struct(
+        _PARS.value_type,
+        [
+            _int32(par_np[par_starts]),
+            _bboxes(par_starts),
+            _nest(_LINES, _first(line_starts, par_starts), lines),
+        ],
+    )
+    blocks = _struct(
+        _BLOCK,
+        [
+            _int32(blk_np[blk_starts]),
+            _bboxes(blk_starts),
+            _nest(_PARS, _first(par_starts, blk_starts), pars),
+        ],
+    )
+    # the trailing empty row: every page without blocks points at it
+    page_blocks = _nest(
+        _BLOCKS, _first(blk_starts, np.append(page_starts, n)), blocks
+    )
+    return text_map, page_index, page_blocks, n_words, n_blocks
 
 
 def assemble_text(words: pd.DataFrame) -> pd.DataFrame:
@@ -329,50 +347,3 @@ def page_confidence(records: pd.DataFrame) -> pd.DataFrame:
     if not rows:
         return pd.DataFrame({"doc": [], "page_number": [], "confidence": []})
     return pd.DataFrame(rows, columns=["doc", "page_number", "confidence"])
-
-
-def blocks_to_dicts(blocks: list) -> list[dict]:
-    """Convert the tuple-form hierarchy (schema field order) to the dict
-    form — test/debug surface; the Arrow boundary consumes tuples
-    directly."""
-    out = []
-    for b in blocks:
-        blk_id, bbox, pars = b
-        out.append(
-            {
-                "block_id": blk_id,
-                "bbox": _bbox_dict(bbox),
-                "paragraphs": [
-                    {
-                        "par_id": par_id,
-                        "bbox": _bbox_dict(pbb),
-                        "lines": [
-                            {
-                                "line_id": line_id,
-                                "text": ltext,
-                                "bbox": _bbox_dict(lbb),
-                                "words": [
-                                    {
-                                        "text": t,
-                                        "left": l,
-                                        "top": tp,
-                                        "width": wd,
-                                        "height": hg,
-                                        "conf": c,
-                                    }
-                                    for (t, l, tp, wd, hg, c) in words
-                                ],
-                            }
-                            for (line_id, ltext, lbb, words) in lines
-                        ],
-                    }
-                    for (par_id, pbb, lines) in pars
-                ],
-            }
-        )
-    return out
-
-
-def _bbox_dict(bb) -> dict:
-    left, top, right, bottom = bb
-    return {"left": left, "top": top, "right": right, "bottom": bottom}

@@ -2,25 +2,28 @@
 
 Replaces the reference's whole per-document pipeline — split -> OSD ->
 rotate -> deskew -> OCR -> assemble -> coordinates
-(``ocr/services/ocr_processor.py:325-533``) — with a single pandas pass
-over a batch of documents. Where the reference crosses a process
+(``ocr/services/ocr_processor.py:325-533``) — with a single pass over
+a batch of documents. Where the reference crosses a process
 boundary five times per document (pickling full-resolution images into
 ProcessPoolExecutor workers at :400-401,:425-426,:456-457), this kernel
 crosses the JVM<->Python Arrow boundary once per *batch*; the three
 stage barriers fuse away entirely.
 
 Granularity note ("zero per-row Python", BASELINE.json input_hint): the
-Spark plan contains no row-at-a-time Python UDF — only ``mapInPandas``
+Spark plan contains no row-at-a-time Python UDF — only ``mapInArrow``
 over Arrow batches. Inside the kernel, payload routing/parsing is O(1)
 per *document* (the document is the row; parsing a payload is inherently
 per-document), while all word-level work — sorting, grouping, text
-assembly, bbox envelopes, confidence means — is columnar pandas/numpy
-over the concatenated word table of the whole batch.
+assembly, bbox envelopes, confidence means — is columnar numpy over the
+concatenated word table of the whole batch. The output leaves as Arrow
+arrays: the span hierarchy is nested ``ListArray``s built from the
+group offsets (functions/assembly.py), never a Python object per node.
 
 Failure semantics (never fail the Spark task):
 - bad magic / oversize / null  -> status='rejected' (ocr/main.py:335-390)
 - doc-level parse error/poison -> status='error', pages=[]
-  (ocr_processor.py:535-542)
+  (ocr_processor.py:535-542); so is a page whose corrected size
+  leaves int32
 - zero pages after selection   -> status='empty' (ocr_processor.py:386-392)
 - page-level poison            -> page kept with text='', confidence=0.0,
   blocks=[] (ocr_processor.py:95-105)
@@ -31,7 +34,8 @@ from __future__ import annotations
 from typing import Any, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..config import (
     STATUS_EMPTY,
@@ -40,7 +44,19 @@ from ..config import (
     STATUS_REJECTED,
     ExtractConfig,
 )
+from ..schema import EXTRACTED_ARROW
 from . import assembly, htmlx, pdfstream
+
+#: the input columns the kernel reads (schema.PAGES_SCHEMA minus the
+#: noise column ``text``, plus the optional per-row config and the
+#: pre-computed Content-Type verdict)
+_INPUT_COLS = (
+    "url", "warc_ts", "html", "lang",
+    "pages", "page_start", "page_end", "_ct_reject",
+)
+_PAGES = EXTRACTED_ARROW.field("pages").type
+_SPANS = EXTRACTED_ARROW.field("spans").type
+_WARC_TS = EXTRACTED_ARROW.field("warc_ts").type
 
 _REC_COLS = [
     "doc",
@@ -99,7 +115,7 @@ def _route(
 
 
 def _row_selections(
-    batch: pd.DataFrame, cfg: ExtractConfig, n: int
+    batch: pa.RecordBatch, cfg: ExtractConfig, n: int
 ) -> list[tuple]:
     """Per-document page selection: optional per-row columns ``pages``
     (array<int>), ``page_start``, ``page_end`` override the job-level
@@ -110,14 +126,15 @@ def _row_selections(
     priority rule (explicit list > range > all) is applied downstream by
     pdfstream.select_pages on the resolved values.
     """
-    if not ({"pages", "page_start", "page_end"} & set(batch.columns)):
+    names = batch.schema.names
+    if not ({"pages", "page_start", "page_end"} & set(names)):
         return [(cfg.pages, cfg.page_start, cfg.page_end)] * n
 
     def _col(name):  # an absent column is all NULL
-        return batch[name].tolist() if name in batch.columns else [None] * n
+        return batch.column(name).to_pylist() if name in names else [None] * n
 
-    def _int(v, default):  # Arrow nullable ints arrive as float NaN
-        return default if v is None or v != v else int(v)
+    def _int(v, default):  # a pandas float column's NaN arrives as None
+        return default if v is None else int(v)
 
     return [
         (
@@ -152,48 +169,70 @@ def _html_page(payload: bytes, cfg: ExtractConfig) -> tuple[dict, int]:
     return page, dropped
 
 
-def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    """Extract one Arrow batch of pages rows -> one wide row per document.
+def _arrow_input(batch) -> pa.RecordBatch:
+    """The input batch as Arrow. ``mapInArrow`` hands the kernel a
+    ``RecordBatch``; a pandas frame (unit tests, perfbench's in-process
+    probe) is converted, the columns the kernel reads only."""
+    if isinstance(batch, pa.RecordBatch):
+        return batch
+    cols = [c for c in _INPUT_COLS if c in batch.columns]
+    return pa.RecordBatch.from_pandas(batch[cols], preserve_index=False)
 
-    Input columns: url, warc_ts, html, lang (the noise column ``text`` is
-    pruned before the kernel — column-pruning is part of the contract),
-    plus the optional per-row config columns ``pages``/``page_start``/
-    ``page_end`` (see :func:`_row_selections`).
-    Output columns: schema.EXTRACTED_SCHEMA.
+
+def _page_size(p: dict, cfg: ExtractConfig) -> tuple[int, int]:
+    """The page's corrected (width, height). A size outside int32 — a
+    huge page deskewed — is a corrupt stream: it could not cross the
+    Arrow boundary, and one bad document must not fail its batch."""
+    applied = abs(p["skew_angle"]) > cfg.skew_threshold  # strict > (:443)
+    w, h = pdfstream.corrected_size(
+        p["width"], p["height"], p["rotate"], p["skew_angle"], applied
+    )
+    if not all(pdfstream.INT32_MIN <= v <= pdfstream.INT32_MAX for v in (w, h)):
+        raise pdfstream.DocumentParseError(
+            f"corrupt layout stream: page {p['page_number']} corrected "
+            f"size {w}x{h} outside int32"
+        )
+    return w, h
+
+
+def extract_batch(batch, cfg: ExtractConfig) -> pa.RecordBatch:
+    """Extract one batch of pages rows -> one wide row per document.
+
+    Input: a ``pa.RecordBatch`` (or a pandas frame, see
+    :func:`_arrow_input`) with columns url, warc_ts, html, lang (the
+    noise column ``text`` is pruned before the kernel — column-pruning
+    is part of the contract), plus the optional per-row config columns
+    ``pages``/``page_start``/``page_end`` (see :func:`_row_selections`).
+    Output: a ``pa.RecordBatch`` in ``schema.EXTRACTED_ARROW``; url,
+    warc_ts and lang pass straight from the input, the span hierarchy
+    is assembly's Arrow arrays taken per page.
 
     Both payload kinds run one page loop: an HTML document is a single
     synthetic page (page_number=1) carrying its word columns, so page
     selection, page meta and the word table are shared with PDF pages.
     """
-    n = len(batch)
-    urls = batch["url"].tolist()
-    payloads = batch["html"].tolist()
+    batch = _arrow_input(batch)
+    n = batch.num_rows
+    payloads = batch.column("html").to_pylist()
     selections = _row_selections(batch, cfg, n)
     # pre-computed Content-Type verdicts (see _route): absent column =
-    # gate off for the whole batch. isinstance-guarded truthiness, not
-    # bool(x) — a NULL boolean crosses Arrow as None/NaN/pd.NA and
-    # must mean OFF (bool(nan) is True; pd.NA truthiness raises) —
-    # and not `x is True`, which misses np.bool_ values riding an
-    # object-dtype column from pandas-facing callers.
+    # gate off for the whole batch, and a NULL verdict means OFF.
     ct_rej = (
-        [
-            isinstance(x, (bool, np.bool_)) and bool(x)
-            for x in batch["_ct_reject"].tolist()
-        ]
-        if "_ct_reject" in batch.columns
+        [x is True for x in batch.column("_ct_reject").to_pylist()]
+        if "_ct_reject" in batch.schema.names
         else [False] * n
     )
 
     # per-doc state -------------------------------------------------
     status = [STATUS_OK] * n
     error: list[str | None] = [None] * n
-    # page meta: doc -> list of dicts (page_number, rotation_applied,
+    # page meta: doc -> list of (page_number, rotation_applied,
     # deskew_angle, width, height, failed)
-    page_meta: list[list[dict]] = [[] for _ in range(n)]
+    page_meta: list[list[tuple]] = [[] for _ in range(n)]
     blocks_dropped = [0] * n
 
     # word-record accumulator — COLUMNAR (per-column python lists feed
-    # pandas one typed array per column; object-row tuples cost a full
+    # numpy one typed array per column; object-row tuples cost a full
     # per-cell convert pass). Order of appends = arrival order.
     cols: dict[str, list] = {c: [] for c in _REC_COLS}
     _c_doc = cols["doc"]
@@ -222,6 +261,7 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                 pages = [page]
             else:
                 pages = []
+            sizes = [_page_size(p, cfg) for p in pages]
         except pdfstream.DocumentParseError as e:
             status[d] = STATUS_ERROR
             error[d] = str(e)
@@ -233,37 +273,34 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             error[d] = "no pages to process"
             continue
 
-        for p in pages:
-            angle = p["skew_angle"]
-            applied = abs(angle) > cfg.skew_threshold  # strict > (:443)
-            w, h = pdfstream.corrected_size(
-                p["width"], p["height"], p["rotate"], angle, applied
-            )
-            meta = {
-                "page_number": p["page_number"],
-                # rotation applied whenever rotate != 0, ignoring the dead
-                # osd_confidence_threshold (SURVEY.md §4).
-                "rotation_applied": p["rotate"],
-                # detected angle reported even when below threshold
-                # (ocr_processor.py:500 reports skew_angles[] raw).
-                "deskew_angle": angle,
-                "width": w,
-                "height": h,
-                "failed": False,
-            }
-            page_meta[d].append(meta)
+        for p, (w, h) in zip(pages, sizes):
+            failed = False
             if kind == "html":
                 wcols = p["columns"]
             else:
                 try:
                     rows = pdfstream.page_word_records(p)
                 except Exception:
-                    meta["failed"] = True  # empty text/conf/blocks, page kept
-                    continue
+                    failed = True  # empty text/conf/blocks, page kept
+                    rows = ()
                 # row tuples -> columns, C-fast; word_num (field 3) is
                 # skipped: arrival order decides word order in a line
                 wcols = list(zip(*rows))
                 del wcols[3:4]
+            page_meta[d].append(
+                (
+                    p["page_number"],
+                    # rotation applied whenever rotate != 0, ignoring the
+                    # dead osd_confidence_threshold (SURVEY.md §4).
+                    p["rotate"],
+                    # detected angle reported even when below threshold
+                    # (ocr_processor.py:500 reports skew_angles[] raw).
+                    p["skew_angle"],
+                    w,
+                    h,
+                    failed,
+                )
+            )
             nw = len(wcols[0]) if wcols else 0
             if nw:
                 _c_doc.extend([d] * nw)
@@ -277,7 +314,7 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     # profiled at ~40% of the whole kernel. The assembly contract
     # functions take the columns directly, and the assembly pass also
     # yields the per-doc word and kept-block counters.
-    text_map, spans_map, nwords_map, nblocks_map = (
+    text_map, page_index, page_blocks, nwords_map, nblocks_map = (
         assembly.assemble_pages_arrays(
             _c_doc,
             _c_page,
@@ -300,91 +337,109 @@ def extract_batch(batch: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
         )
     }
 
-    # ---- compose per-doc outputs ------------------------------------
-    out_pages: list[list[dict]] = []
-    out_spans: list[list[dict]] = []
+    # ---- compose: one flat row per page, nested per doc by offsets ---
+    no_blocks = len(page_blocks) - 1  # assembly's trailing empty row
+    pg_cols: list[list] = [[] for _ in range(8)]
+    pg_num, pg_text, pg_conf, pg_rot, pg_angle, pg_w, pg_h, pg_blocks = pg_cols
+    doc_offsets = [0]
     canonical: list[str] = []
     avg_conf: list[float] = []
-    total_pages: list[int] = []
     n_chars: list[int] = []
 
     for d in range(n):
-        metas = sorted(page_meta[d], key=lambda m: m["page_number"])  # :507
-        pages_out = []
-        spans_out = []
         page_texts = []
-        for m in metas:
-            key = (d, m["page_number"])
-            failed = m["failed"]
-            txt = "" if failed else text_map.get(key, "")
-            conf = 0.0 if failed else conf_map.get(key, 0.0)
-            pages_out.append(
-                {
-                    "page_number": m["page_number"],
-                    "text": txt,
-                    "confidence": conf,
-                    "rotation_applied": m["rotation_applied"],
-                    "deskew_angle": m["deskew_angle"],
-                    "width": m["width"],
-                    "height": m["height"],
-                }
-            )
-            if cfg.emit_spans:
-                spans_out.append(
-                    {
-                        "page_number": m["page_number"],
-                        "width": m["width"],
-                        "height": m["height"],
-                        "blocks": [] if failed else spans_map.get(key, []),
-                    }
-                )
+        conf_sum = 0.0
+        for pn, rot, angle, w, h, failed in sorted(
+            page_meta[d], key=lambda m: m[0]  # :507
+        ):
+            key = (d, pn)
+            if failed:
+                txt, conf, blk = "", 0.0, no_blocks
+            else:
+                txt = text_map.get(key, "")
+                conf = conf_map.get(key, 0.0)
+                # a duplicate page_number shares its key's row, like text
+                blk = page_index.get(key, no_blocks)
+            for col, v in zip(pg_cols, (pn, txt, conf, rot, angle, w, h, blk)):
+                col.append(v)
             page_texts.append(txt)
-        out_pages.append(pages_out)
-        out_spans.append(spans_out)
+            conf_sum += conf
+        doc_offsets.append(len(pg_num))
         # document text: pages joined "\n\n" (engine contract — the
         # reference returns per-page texts only; a single separator rule
         # makes the document-level column deterministic).
         canonical.append("\n\n".join(page_texts))
-        avg_conf.append(
-            sum(p["confidence"] for p in pages_out) / len(pages_out)
-            if pages_out
-            else 0.0  # ocr_processor.py:510
-        )
-        total_pages.append(len(pages_out))
+        # ocr_processor.py:510: 0.0 for a doc without pages
+        avg_conf.append(conf_sum / len(page_texts) if page_texts else 0.0)
         n_chars.append(sum(len(t) for t in page_texts))
 
-    return pd.DataFrame(
-        {
-            "url": urls,
-            "warc_ts": batch["warc_ts"].values,
-            "lang": batch["lang"].values,
-            "status": status,
-            "error": error,
-            "total_pages": total_pages,
-            "avg_confidence": avg_conf,
-            "canonical_text": canonical,
-            "pages": out_pages,
-            "spans": out_spans,
-            "n_blocks_kept": [nblocks_map.get(d, 0) for d in range(n)],
-            "n_blocks_dropped": blocks_dropped,
-            "n_words": [nwords_map.get(d, 0) for d in range(n)],
-            "n_chars": n_chars,
-        }
+    def _i32(v) -> pa.Array:
+        return pa.array(v, pa.int32())
+
+    def _per_doc(t: pa.ListType, arrays: list) -> pa.ListArray:
+        # one struct row per page entry, listed per doc by doc_offsets
+        return pa.ListArray.from_arrays(
+            _i32(doc_offsets),
+            pa.StructArray.from_arrays(arrays, fields=list(t.value_type)),
+            type=t,
+        )
+
+    number, width, height = _i32(pg_num), _i32(pg_w), _i32(pg_h)
+    pages_col = _per_doc(
+        _PAGES,
+        [
+            number,
+            pa.array(pg_text, pa.string()),
+            pa.array(pg_conf, pa.float64()),
+            _i32(pg_rot),
+            pa.array(pg_angle, pa.float64()),
+            width,
+            height,
+        ],
+    )
+    spans_col = (
+        _per_doc(
+            _SPANS,
+            [number, width, height, page_blocks.take(_i32(pg_blocks))],
+        )
+        if cfg.emit_spans
+        else pa.array([[]] * n, _SPANS)
+    )
+
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("url").cast(pa.string()),
+            batch.column("warc_ts").cast(_WARC_TS),
+            batch.column("lang").cast(pa.string()),
+            pa.array(status, pa.string()),
+            pa.array(error, pa.string()),
+            _i32(np.diff(doc_offsets)),
+            pa.array(avg_conf, pa.float64()),
+            pa.array(canonical, pa.string()),
+            pages_col,
+            spans_col,
+            _i32([nblocks_map.get(d, 0) for d in range(n)]),
+            _i32(blocks_dropped),
+            _i32([nwords_map.get(d, 0) for d in range(n)]),
+            _i32(n_chars),
+        ],
+        schema=EXTRACTED_ARROW,
     )
 
 
 def kernel_iter(
-    batches: Iterable[pd.DataFrame],
+    batches: Iterable[pa.RecordBatch],
     cfg: ExtractConfig,
     day_acc=None,
-) -> Iterator[pd.DataFrame]:
-    """``mapInPandas`` entrypoint: lazily extract each Arrow batch.
+) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` entrypoint: lazily extract each Arrow batch.
 
     ``day_acc`` (optional Spark accumulator of dict[str, float], see
     ``plans.commit._DayMsParam``) collects kernel wall milliseconds
     attributed per warc_day: each batch's wall is split proportionally
-    to its per-day row counts. Its day keys are the pandas mirror of
-    ``operators.extract.warc_day`` (the lineage key);
+    to its per-day row counts. Its day keys are the Arrow mirror of
+    ``operators.extract.warc_day`` (the lineage key: the date in the
+    timestamp's own, the session's, time zone);
     ``test_lineage_per_day_kernel_ms`` pins that the two agree.
     Semantics are Spark's for accumulators in transformations —
     at-least-once under task retry — so the numbers are metrics, not an
@@ -392,18 +447,22 @@ def kernel_iter(
     import time as _time
 
     for batch in batches:
-        if not len(batch):
+        if not batch.num_rows:
             continue
         t0 = _time.perf_counter()
         out = extract_batch(batch, cfg)
         if day_acc is not None:
             ms = (_time.perf_counter() - t0) * 1000.0
-            # count on the normalized datetime64 (vectorized), format
-            # only the handful of UNIQUE day keys — per-row strftime is
-            # object-dtype string work on the kernel hot path
-            counts = batch["warc_ts"].dt.normalize().value_counts()
-            total = int(counts.sum()) or 1
+            counts = pc.value_counts(
+                pc.strftime(batch.column("warc_ts"), "%Y-%m-%d")
+            )
             day_acc.add(
-                {str(d.date()): ms * int(c) / total for d, c in counts.items()}
+                {
+                    day: ms * c / batch.num_rows
+                    for day, c in zip(
+                        counts.field("values").to_pylist(),
+                        counts.field("counts").to_pylist(),
+                    )
+                }
             )
         yield out

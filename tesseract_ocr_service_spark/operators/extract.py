@@ -5,7 +5,7 @@ Plan shape (SURVEY.md §3.1 "Spark translation") — one shuffle-free pass:
     scan pages (PartitionFilters on warc_day, ReadSchema w/o `text`)
       -> native validation predicates (status routing stays relational)
       -> optional salted repartition (domain-skewed payload sizes)
-      -> mapInPandas(extract_kernel)  # ONE Arrow stage = split..OCR..spans
+      -> mapInArrow(kernel_iter)  # ONE Arrow stage = split..OCR..spans
       -> project extracted / spans / lineage
 
 Scale design notes (100 TB / 1000 executors):
@@ -50,7 +50,7 @@ def warc_day() -> Column:
     """``warc_ts`` as its 'yyyy-MM-dd' day string: the partition value
     of the committed output and the key of the lineage counters (the
     one definition — ``kernel.kernel_iter``'s per-day accumulator keys
-    are its pandas mirror)."""
+    are its Arrow mirror)."""
     return F.date_format("warc_ts", "yyyy-MM-dd")
 
 
@@ -192,7 +192,10 @@ def extract(
         # explicit skew control: uniform hash of the unique key ->
         # near-perfectly even partitions regardless of domain skew.
         df = df.repartition(salt_partitions, F.xxhash64("url"))
-    return df.mapInPandas(
+    # mapInArrow, not mapInPandas: the kernel's nested output leaves as
+    # the Arrow arrays it built (mapInPandas would rebuild every span
+    # node as a Python dict before converting it back to Arrow)
+    return df.mapInArrow(
         functools.partial(kernel_iter, cfg=cfg, day_acc=day_timer_acc),
         schema=EXTRACTED_SCHEMA,
     )
@@ -281,7 +284,7 @@ def lineage_view(wide: DataFrame) -> DataFrame:
 URL_INDEX = "_urls"
 
 
-def _day(name: str) -> Optional[str]:
+def dir_day(name: str) -> Optional[str]:
     """The day of a ``warc_day=...`` directory name (hive-unescaped, as
     pyarrow's hive partitioning reads it); None for any other entry."""
     key, eq, value = name.partition("=")
@@ -317,7 +320,7 @@ def _indexed_entries(spans_path: str, url: str) -> Optional[list[str]]:
     except FileNotFoundError:
         return None
     covered = {
-        _day(posixpath.basename(posixpath.dirname(f))) for f in index.files
+        dir_day(posixpath.basename(posixpath.dirname(f))) for f in index.files
     } - {None}
     days = set(
         index.to_table(columns=["warc_day"], filter=ds.field("url") == url)
@@ -332,7 +335,7 @@ def _indexed_entries(spans_path: str, url: str) -> Optional[list[str]]:
         n
         for n in names
         if not n.startswith(("_", "."))
-        and (_day(n) not in covered or _day(n) in days)
+        and (dir_day(n) not in covered or dir_day(n) in days)
     ]
 
 

@@ -12,8 +12,12 @@ Protocol (emulating the Iceberg snapshot-commit behaviors named by the
 rule, with plain parquet — no Iceberg jars offline):
 
 1. ``pending = input warc_days - committed warc_days`` where committed =
-   days present in the lineage table: one ``distinct()`` scan job over
-   the input's ``warc_day`` column, set-differenced on the driver
+   days present in the lineage table. The input days are the
+   ``warc_day=`` directories of the pages table's file listing (held by
+   the file index already, so no job runs; a day directory whose files
+   hold no rows is pending too, and gets a zero marker). A WARC source,
+   whose warc_day is a parsed column, takes one ``distinct()`` over its
+   persisted frame instead. The set difference runs on the driver
    against the days of a tiny lineage read.
 2. Process ONLY pending days. The raw pending pages are first
    range-partitioned by ``(warc_day, url)`` (only the kernel's columns
@@ -52,6 +56,8 @@ one day directory per point read.
 
 from __future__ import annotations
 
+import datetime
+import posixpath
 import time
 from dataclasses import dataclass
 
@@ -94,6 +100,34 @@ def committed_days(spark: SparkSession, out_root: str) -> set[str]:
         r["warc_day"]
         for r in spark.read.parquet(path).select("warc_day").distinct().collect()
     }
+
+
+def _bound_day(ts) -> str | None:
+    """A ts_from/ts_to bound as the day ``X.read_pages`` compares
+    warc_day with: Spark casts the bound's text to a date, which keeps
+    the leading yyyy-MM-dd of a timestamp."""
+    if ts is None:
+        return None
+    return datetime.date.fromisoformat(str(ts)[:10]).isoformat()
+
+
+def listed_days(pages: DataFrame, ts_from=None, ts_to=None) -> list[str]:
+    """The sorted ``warc_day`` values of the files a pages table read
+    lists (``pages.inputFiles()``: the file index holds them, so no job
+    runs), kept inside [ts_from, ts_to] as ``X.read_pages`` keeps them:
+    by date, a timestamp bound comparing by its date."""
+    days = {
+        day
+        for f in pages.inputFiles()
+        for day in map(X.dir_day, posixpath.dirname(f).split("/"))
+        if day is not None
+    }
+    lo, hi = _bound_day(ts_from), _bound_day(ts_to)
+    return sorted(
+        d
+        for d in days
+        if (lo is None or d >= lo) and (hi is None or d <= hi)
+    )
 
 
 @dataclass
@@ -155,9 +189,16 @@ def run_checkpointed(
         pages = X.read_pages(spark, pages_path, ts_from, ts_to)
 
     try:
+        if source_format == "warc":
+            input_days = sorted(
+                str(r["warc_day"])
+                for r in pages.select("warc_day").distinct().collect()
+            )
+        else:
+            input_days = listed_days(pages, ts_from, ts_to)
         return _run_checkpointed_body(
-            spark, pages, out_root, cfg, t0, salt_partitions, languages,
-            _fail_before_commit,
+            spark, pages, input_days, out_root, cfg, t0, salt_partitions,
+            languages, _fail_before_commit,
         )
     finally:
         if persisted is not None:
@@ -165,14 +206,10 @@ def run_checkpointed(
 
 
 def _run_checkpointed_body(
-    spark, pages, out_root, cfg, t0, salt_partitions, languages,
-    _fail_before_commit,
+    spark, pages, input_days, out_root, cfg, t0, salt_partitions,
+    languages, _fail_before_commit,
 ) -> RunSummary:
     # ---- step 1: partition-level anti-join against the commit log ----
-    input_days = sorted(
-        str(r["warc_day"])
-        for r in pages.select("warc_day").distinct().collect()
-    )
     done = committed_days(spark, out_root)
     pending = [d for d in input_days if d not in done]
     skipped = [d for d in input_days if d in done]

@@ -16,6 +16,7 @@ Type mapping notes (SURVEY.md §1.2):
 
 from __future__ import annotations
 
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -134,6 +135,11 @@ EXTRACTED_SCHEMA = StructType(
         StructField("n_chars", IntegerType(), False),
     ]
 )
+
+#: EXTRACTED_SCHEMA as the Arrow schema of the kernel's output batches
+#: (``mapInArrow`` hands Spark exactly this; the nested node types of
+#: functions/assembly.py are read off it).
+EXTRACTED_ARROW = to_arrow_schema(EXTRACTED_SCHEMA)
 
 #: a committed root's ``extracted/`` table as readers see it: the kernel
 #: row plus the ``warc_day`` directory value (plans/commit.py). Reading

@@ -1,7 +1,7 @@
 """Incremental extraction over a landing directory (Structured Streaming).
 
 Pattern: parquet file-source stream -> the SAME fused extraction kernel
-(mapInPandas works unchanged on streaming DataFrames — it is stateless)
+(mapInArrow works unchanged on streaming DataFrames — it is stateless)
 -> ``foreachBatch`` sink partitioned by (epoch_id, warc_day) with
 DYNAMIC partition overwrite.
 

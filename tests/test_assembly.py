@@ -179,15 +179,19 @@ def test_hierarchy_matches_oracle():
     assert line1["bbox"] == {"left": 10, "top": 20, "right": 110, "bottom": 32}
 
 
-def test_tuple_field_order_matches_spark_schema():
-    """The kernel hands tuple-form nodes straight to Arrow, which maps
-    tuple members to struct fields by POSITION: converting through the
-    Spark schema must give exactly the dict form."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+def test_arrow_output_schema_matches_spark_schema():
+    """mapInArrow hands the kernel's batches to Spark as they are, and
+    Arrow maps struct members by POSITION: assembly's block arrays and
+    every kernel batch must carry exactly the Spark schema's Arrow form
+    (field order, nested types and nullability), and the blocks must
+    read back as the oracle's dicts."""
+    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
     from pyspark.sql.types import ArrayType
 
     from tesseract_ocr_service_spark import schema
+    from tesseract_ocr_service_spark.config import ExtractConfig
+    from tesseract_ocr_service_spark.functions import kernel
+    from tesseract_ocr_service_spark.sources import gen
 
     records = [
         rec(2, 1, 1, "b2", left=5, top=6, width=11, height=13, conf=50),
@@ -196,14 +200,27 @@ def test_tuple_field_order_matches_spark_schema():
         rec(1, 2, 1, "next", left=17, top=40, width=30, height=14, conf=88),
     ]
     words = _df(records)
-    _, spans, _, _ = assembly.assemble_pages_arrays(
+    _, page_index, page_blocks, _, _ = assembly.assemble_pages_arrays(
         *(words[c].to_numpy() for c in REC_COLS[:5]),
         words["text"].tolist(),
         *(words[c].to_numpy() for c in REC_COLS[7:]),
     )
-    blocks = spans[(0, 1)]
-    arrow = pa.array([blocks], type=to_arrow_type(ArrayType(schema.BLOCK)))
-    assert arrow.to_pylist() == [assembly.blocks_to_dicts(blocks)]
+    assert page_blocks.type == to_arrow_type(ArrayType(schema.BLOCK))
+    got = page_blocks.to_pylist()
+    assert got[page_index[(0, 1)]] == oracle.hierarchy(records)
+    assert got[-1] == []  # the row of a page without blocks
+
+    want = to_arrow_schema(schema.EXTRACTED_SCHEMA)
+    batch = gen.gen_batch(list(range(64)), seed=5)
+    for b, cfg in [
+        (batch, ExtractConfig()),
+        (batch, ExtractConfig(emit_spans=False)),
+        (batch.assign(html=None), ExtractConfig()),  # no words at all
+    ]:
+        out = kernel.extract_batch(b, cfg)
+        assert out.schema == want
+        assert out.num_rows == len(b)
+        out.validate(full=True)
 
 
 @pytest.mark.parametrize("seed", [3, 99])

@@ -3,6 +3,7 @@ per-partition commit, lineage, resumability)."""
 
 from __future__ import annotations
 
+import datetime
 import glob
 import os
 import shutil
@@ -76,6 +77,32 @@ def test_window_runs_compose(spark, paths):
     assert set(s2.skipped_days) == set(s1.pending_days)
     assert s1.n_docs + s2.n_docs == N_DOCS
     assert len(_texts(spark, out)) == N_DOCS
+
+
+def test_pending_days_come_from_the_listing_without_a_job(spark, paths):
+    """The parquet source's input days are the warc_day directories of
+    its file listing, windowed as read_pages windows the rows: the same
+    days a distinct() over the rows finds, and no Spark job starts."""
+    pages, _ = paths
+    tracker = spark.sparkContext.statusTracker()
+    windows = [
+        (None, None),
+        ("2026-01-03", "2026-01-07"),
+        ("2026-01-03 18:30:00", datetime.datetime(2026, 1, 7, 6, 15)),
+        (None, "2026-01-02 23:59:59"),
+    ]
+    for ts_from, ts_to in windows:
+        df = X.read_pages(spark, pages, ts_from, ts_to)
+        last = max(tracker.getJobIdsForGroup(), default=-1)
+        expect = sorted(
+            str(r["warc_day"]) for r in df.select("warc_day").distinct().collect()
+        )
+        last_job = max(tracker.getJobIdsForGroup())
+        assert last_job > last  # the tracker sees the distinct()'s jobs
+        got = C.listed_days(df, ts_from, ts_to)
+        assert max(tracker.getJobIdsForGroup()) == last_job
+        assert got == expect, (ts_from, ts_to)
+        assert expect
 
 
 def test_crash_before_marker_then_resume_is_idempotent(spark, paths):

@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 
 from tesseract_ocr_service_spark.config import ExtractConfig
-from tesseract_ocr_service_spark.functions import assembly, htmlx, kernel, pdfstream
+from tesseract_ocr_service_spark.functions import htmlx, kernel, pdfstream
 from tesseract_ocr_service_spark.sources import gen
 
 from . import oracle
@@ -17,7 +17,7 @@ from . import oracle
 CFG = ExtractConfig()
 
 
-def run(payloads: list[bytes | None], cfg: ExtractConfig = CFG) -> pd.DataFrame:
+def run(payloads: list[bytes | None], cfg: ExtractConfig = CFG) -> list[dict]:
     batch = pd.DataFrame(
         {
             "url": [f"https://t.example/{i}" for i in range(len(payloads))],
@@ -26,11 +26,11 @@ def run(payloads: list[bytes | None], cfg: ExtractConfig = CFG) -> pd.DataFrame:
             "lang": "eng",
         }
     )
-    return kernel.extract_batch(batch, cfg)
+    return kernel.extract_batch(batch, cfg).to_pylist()
 
 
-def one(payload: bytes, cfg: ExtractConfig = CFG) -> pd.Series:
-    return run([payload], cfg).iloc[0]
+def one(payload: bytes, cfg: ExtractConfig = CFG) -> dict:
+    return run([payload], cfg)[0]
 
 
 # ------------------------------------------------------------- routing
@@ -46,19 +46,19 @@ def test_routing_and_rejection():
             pdfstream.encode([]),
         ]
     )
-    assert list(out["status"]) == [
+    assert [r["status"] for r in out] == [
         "rejected",
         "rejected",
         "rejected",
         "ok",
         "empty",
     ]
-    assert out.loc[2, "error"] == "invalid_payload"
-    assert out.loc[4, "error"] == "no pages to process"
+    assert out[2]["error"] == "invalid_payload"
+    assert out[4]["error"] == "no pages to process"
     # rejected rows keep the document-shaped empty outputs
-    assert out.loc[0, "total_pages"] == 0
-    assert out.loc[0, "canonical_text"] == ""
-    assert out.loc[0, "avg_confidence"] == 0.0
+    assert out[0]["total_pages"] == 0
+    assert out[0]["canonical_text"] == ""
+    assert out[0]["avg_confidence"] == 0.0
 
 
 def test_oversize_rejected():
@@ -126,7 +126,7 @@ def test_html_unicode_content():
 
 def test_html_spans_geometry():
     row = one(H("<p>alpha beta gamma</p>"))
-    blocks = assembly.blocks_to_dicts(row["spans"][0]["blocks"])
+    blocks = row["spans"][0]["blocks"]
     assert len(blocks) == 1
     words = blocks[0]["paragraphs"][0]["lines"][0]["words"]
     assert [w["text"] for w in words] == ["alpha", "beta", "gamma"]
@@ -153,6 +153,17 @@ def P(words, page=1, w=1000, h=1400, rotate=0, skew=0.0, poison=False):
 W = lambda b, p, ln, wn, t, conf=77: (b, p, ln, wn, t, 10 * wn, 20 * ln, 8 * len(t), 18, conf)
 
 
+def _recs(words) -> list[dict]:
+    """W tuples -> oracle records."""
+    return [
+        dict(
+            block_num=b, par_num=p, line_num=ln, text=t,
+            left=l, top=tp, width=wd, height=hg, conf=c,
+        )
+        for (b, p, ln, wn, t, l, tp, wd, hg, c) in words
+    ]
+
+
 def test_pdf_assembly_matches_oracle():
     words = [
         W(1, 1, 1, 1, "Hello"),
@@ -163,17 +174,63 @@ def test_pdf_assembly_matches_oracle():
         W(1, 1, 1, 3, "  "),  # empty -> skipped in text, absent from conf<0? conf=77 counts
     ]
     row = one(pdfstream.encode([P(words)]))
-    recs = [
-        dict(
-            block_num=b, par_num=p, line_num=ln, text=t,
-            left=l, top=tp, width=wd, height=hg, conf=c,
-        )
-        for (b, p, ln, wn, t, l, tp, wd, hg, c) in words
-    ]
+    recs = _recs(words)
     assert row["canonical_text"] == oracle.assemble_text(recs)
     assert row["avg_confidence"] == pytest.approx(oracle.page_confidence(recs))
-    assert assembly.blocks_to_dicts(row["spans"][0]["blocks"]) == oracle.hierarchy(recs)
+    assert row["spans"][0]["blocks"] == oracle.hierarchy(recs)
     assert row["status"] == "ok"
+
+
+def test_spans_taken_per_page_match_oracle():
+    """The spans column is assembled from assembly's block array by
+    per-page offsets: a failed page between two good ones, a page whose
+    words are all blank, a duplicate page_number (both entries show the
+    key's merged blocks, as its text does) and the docs around them
+    must each get their own slice; emit_spans=False gives [] per doc,
+    and a batch without a single word still gives well-formed rows."""
+    p1 = [W(1, 1, 1, 1, "alpha"), W(1, 1, 1, 2, "beta"), W(2, 1, 1, 1, "gamma")]
+    p3 = [W(1, 1, 1, 1, "delta"), W(1, 2, 1, 1, "eps")]
+    p3_dup = [W(3, 1, 1, 1, "zeta"), W(1, 1, 2, 1, "eta")]
+    blank = [W(1, 1, 1, 1, "  "), W(2, 1, 1, 1, "")]
+    doc = pdfstream.encode(
+        [
+            P(p1, page=1),
+            P([W(1, 1, 1, 1, "never")], page=2, poison=True),
+            P(p3, page=3),
+            P(blank, page=4),
+            P(p3_dup, page=3),
+        ]
+    )
+    payloads = [H("<p>first html doc</p>"), doc, None, doc]
+    rows = run(payloads)
+    h3 = oracle.hierarchy(_recs(p3 + p3_dup))
+    expect = [oracle.hierarchy(_recs(p1)), [], h3, h3, oracle.hierarchy(_recs(blank))]
+    assert expect[4] == []
+    for d in (1, 3):
+        row = rows[d]
+        assert [s["page_number"] for s in row["spans"]] == [1, 2, 3, 3, 4]
+        assert [s["blocks"] for s in row["spans"]] == expect
+        assert [(s["width"], s["height"]) for s in row["spans"]] == [
+            (p["width"], p["height"]) for p in row["pages"]
+        ]
+        p3_text = "delta\neta\neps\n\nzeta"
+        assert [p["text"] for p in row["pages"]] == [
+            "alpha beta\n\ngamma", "", p3_text, p3_text, "",
+        ]
+    assert rows[0]["spans"][0]["blocks"][0]["paragraphs"][0]["lines"][0]["text"] == (
+        "first html doc"
+    )
+    assert rows[2]["status"] == "rejected" and rows[2]["spans"] == []
+
+    no_spans = run(payloads, ExtractConfig(emit_spans=False))
+    assert [r["spans"] for r in no_spans] == [[]] * len(payloads)
+    assert [{**r, "spans": []} for r in rows] == no_spans
+
+    for cfg in (CFG, ExtractConfig(emit_spans=False)):
+        rejected = run([None, b"junk", b""], cfg)
+        assert [(r["status"], r["pages"], r["spans"]) for r in rejected] == [
+            ("rejected", [], [])
+        ] * 3
 
 
 def test_pdf_multipage_sort_and_doc_text():
@@ -229,6 +286,22 @@ def test_deskew_threshold_strictly_greater():
     exp = int(round(1000 * math.cos(a) + 1000 * math.sin(a)))
     assert (page["width"], page["height"]) == (exp, exp)
     assert page["deskew_angle"] == pytest.approx(-2.0)
+
+
+def test_deskewed_size_beyond_int32_is_error_row():
+    """A page inside int32 whose deskewed canvas is not: the corrected
+    size cannot cross the Arrow boundary, so the document becomes an
+    error row instead of failing its batch."""
+    big = 2**31 - 1
+    mk = lambda a: pdfstream.encode([P([W(1, 1, 1, 1, "x")], w=big, h=big, skew=a)])
+    row = one(mk(45.0))
+    assert row["status"] == "error"
+    assert row["error"].startswith("corrupt layout stream")
+    assert row["pages"] == [] and row["spans"] == []
+    # the same page below the skew threshold keeps its size: ok
+    row = one(mk(0.1))
+    assert row["status"] == "ok"
+    assert (row["pages"][0]["width"], row["pages"][0]["height"]) == (big, big)
 
 
 def test_page_failure_isolation():
@@ -326,30 +399,73 @@ def test_malformed_layout_stream_gives_row_not_task_failure(body, status):
         assert row["n_words"] == 0 and row["n_blocks_kept"] == 0
 
 
+def test_fractional_word_numbers_truncate_toward_zero():
+    """A layout stream's numbers may carry a fraction: each output
+    number is its value truncated toward zero, bbox ends computed
+    before the cut (the values the tuple-built spans gave)."""
+    words = [
+        [1, 1, 1, 1, "a", 1.5, 2, 3, 4, 96.7],
+        [1, 1, 1, 2, "b", -0.5, 2.5, 3.5, 4, -0.5],
+    ]
+    row = one(
+        pdfstream.HEADER
+        + json.dumps(
+            {"pages": [{"page_number": 1, "width": 10, "height": 10, "words": words}]}
+        ).encode("utf-8")
+    )
+    bbox = {"left": 0, "top": 2, "right": 4, "bottom": 6}
+    assert row["status"] == "ok" and row["avg_confidence"] == 48.0
+    assert row["spans"][0]["blocks"] == [
+        {
+            "block_id": 1,
+            "bbox": bbox,
+            "paragraphs": [
+                {
+                    "par_id": 1,
+                    "bbox": bbox,
+                    "lines": [
+                        {
+                            "line_id": 1,
+                            "text": "a b",
+                            "bbox": bbox,
+                            "words": [
+                                {"text": "a", "left": 1, "top": 2, "width": 3,
+                                 "height": 4, "conf": 96},
+                                {"text": "b", "left": 0, "top": 2, "width": 3,
+                                 "height": 4, "conf": 0},
+                            ],
+                        }
+                    ],
+                }
+            ],
+        }
+    ]
+
+
 def test_counters_independent_of_spans_and_match_hierarchy():
     """n_words / n_blocks_kept come from the assembly pass: the same
     with and without spans, and equal to the hierarchy's totals."""
     batch = gen.gen_batch(list(range(300)), seed=11)
-    with_spans = kernel.extract_batch(batch, ExtractConfig(emit_spans=True))
-    no_spans = kernel.extract_batch(batch, ExtractConfig(emit_spans=False))
+    with_spans = kernel.extract_batch(batch, ExtractConfig(emit_spans=True)).to_pylist()
+    no_spans = kernel.extract_batch(batch, ExtractConfig(emit_spans=False)).to_pylist()
     kinds = {
         "pdf" if p.startswith(pdfstream.MAGIC) else "html"
-        for p, st in zip(batch["html"], with_spans["status"])
-        if p is not None and st == "ok"
+        for p, row in zip(batch["html"], with_spans)
+        if p is not None and row["status"] == "ok"
     }
     assert kinds == {"pdf", "html"}
     for c in ("n_words", "n_blocks_kept", "n_blocks_dropped"):
-        assert list(with_spans[c]) == list(no_spans[c]), c
-    ok = with_spans[with_spans["status"] == "ok"]
-    assert len(ok) and ok["n_words"].sum() > 0
-    for _, row in ok.iterrows():
+        assert [r[c] for r in with_spans] == [r[c] for r in no_spans], c
+    ok = [r for r in with_spans if r["status"] == "ok"]
+    assert len(ok) and sum(r["n_words"] for r in ok) > 0
+    for row in ok:
         blocks = [b for page in row["spans"] for b in page["blocks"]]
         words = [
             w
-            for _, _, pars in blocks
-            for _, _, lines in pars
-            for _, _, _, ws in lines
-            for w in ws
+            for b in blocks
+            for par in b["paragraphs"]
+            for line in par["lines"]
+            for w in line["words"]
         ]
         assert row["n_blocks_kept"] == len(blocks)
         assert row["n_words"] == len(words)
@@ -365,13 +481,13 @@ def test_batch_mixed_kinds_alignment():
             H("<p>second html doc</p>"),
         ]
     )
-    assert list(out["canonical_text"]) == [
+    assert [r["canonical_text"] for r in out] == [
         "first html doc",
         "pdfdoc",
         "",
         "second html doc",
     ]
-    assert list(out["status"]) == ["ok", "ok", "rejected", "ok"]
+    assert [r["status"] for r in out] == ["ok", "ok", "rejected", "ok"]
 
 
 # ------------------------------------------------- per-row config columns
@@ -409,13 +525,13 @@ def test_per_row_page_selection_overrides_config():
             "page_end": [1.0, None, 2.0, None, float("nan")],
         }
     )
-    out = kernel.extract_batch(batch, ExtractConfig())
-    assert [p["page_number"] for p in out.loc[0, "pages"]] == [2]
-    assert [p["page_number"] for p in out.loc[1, "pages"]] == [2, 3]
-    assert [p["page_number"] for p in out.loc[2, "pages"]] == [1, 2]
-    assert [p["page_number"] for p in out.loc[3, "pages"]] == [1, 3]
+    out = kernel.extract_batch(batch, ExtractConfig()).to_pylist()
+    assert [p["page_number"] for p in out[0]["pages"]] == [2]
+    assert [p["page_number"] for p in out[1]["pages"]] == [2, 3]
+    assert [p["page_number"] for p in out[2]["pages"]] == [1, 2]
+    assert [p["page_number"] for p in out[3]["pages"]] == [1, 3]
     # html doc: page_start=2 excludes the synthetic page 1 -> empty
-    assert out.loc[4, "status"] == "empty"
+    assert out[4]["status"] == "empty"
 
 
 def test_per_row_null_falls_back_to_job_config():
@@ -431,8 +547,8 @@ def test_per_row_null_falls_back_to_job_config():
             "page_end": [None],
         }
     )
-    out = kernel.extract_batch(batch, ExtractConfig(page_end=2))
-    assert [p["page_number"] for p in out.loc[0, "pages"]] == [1, 2]
+    out = kernel.extract_batch(batch, ExtractConfig(page_end=2)).to_pylist()
+    assert [p["page_number"] for p in out[0]["pages"]] == [1, 2]
 
 
 def test_flow_template_fallback_matches_cached_path():
@@ -483,13 +599,13 @@ def test_content_type_gate_batch_level():
             "_ct_reject": [True, False, None],
         }
     )
-    out = kernel.extract_batch(batch, CFG)
-    assert list(out["status"]) == ["rejected", "ok", "rejected"]
-    assert out.loc[0, "error"] == "invalid_file_type"
-    assert out.loc[2, "error"] == "invalid_payload"  # NULL verdict: off
+    out = kernel.extract_batch(batch, CFG).to_pylist()
+    assert [r["status"] for r in out] == ["rejected", "ok", "rejected"]
+    assert out[0]["error"] == "invalid_file_type"
+    assert out[2]["error"] == "invalid_payload"  # NULL verdict: off
     # without the column, nothing changes (existing suite pins that)
     out2 = run([html])
-    assert out2.loc[0, "status"] == "ok"
+    assert out2[0]["status"] == "ok"
 
 
 def test_content_type_gate_e2e(spark):

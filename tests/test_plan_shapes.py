@@ -24,7 +24,7 @@ def test_extraction_plan_is_narrow(spark, pages_path):
     """scan -> project -> kernel, ZERO shuffles (no Exchange nodes)."""
     plan = _plan(X.extract(X.read_pages(spark, pages_path)))
     assert "Exchange" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_extraction_scan_prunes_partitions_and_columns(spark, pages_path):
@@ -52,7 +52,7 @@ def test_dim_joins_are_broadcast(spark):
 
 def test_no_python_row_udfs_anywhere(spark, pages_path):
     """'zero per-row Python': BatchEvalPython (row-at-a-time UDF) must
-    never appear; only Arrow-batched MapInPandas is allowed."""
+    never appear; only Arrow-batched MapInPandas/MapInArrow is allowed."""
     for df in [
         X.extract(X.read_pages(spark, pages_path)),
         R.assembly_relational(spark, "/root/testdata/sf0.001"),
@@ -360,7 +360,7 @@ def test_content_type_gate_keeps_narrow_plan(spark, pages_path, tmp_path):
     plan = _plan(X.extract(X.read_pages(spark, staged)))
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     scan = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "content_type" in scan and "text" not in scan.replace(
         "content_type", ""
