@@ -16,7 +16,7 @@ within each shard for line-stable files).
 
 Each shard value hashes to exactly one shuffle partition, so every
 shard directory holds exactly one data file — no small-file cleanup
-pass needed after export (see jobs/compact.py for parquet outputs).
+pass needed after export.
 
 Local smoke:
 

@@ -38,6 +38,11 @@ _SCRIPT_RE = re.compile(
     r"<(script|style)\b[^>]*>.*?</\1\s*>|<!--.*?-->",
     re.IGNORECASE | re.DOTALL,
 )
+#: where a ``_SCRIPT_RE`` match can start. Matching it only there, and
+#: never again for a name whose match failed, keeps the strip linear:
+#: ``sub`` would rescan to the end of the input for every unclosed
+#: opener (:func:`_strip_noise`).
+_NOISE_OPEN_RE = re.compile(r"<(?:(script|style)\b|!--)", re.IGNORECASE)
 #: an UNCLOSED script/style swallows everything to EOF (the HTML5
 #: tokenizer rule) — applied after the paired pass so well-formed
 #: documents never hit it.
@@ -60,6 +65,8 @@ _TAG_SCAN_RE = re.compile(
     re.IGNORECASE,
 )
 _ANCHOR_RE = re.compile(r"<a\b[^>]*>(.*?)</a\s*>", re.IGNORECASE | re.DOTALL)
+#: where an ``_ANCHOR_RE`` match can start (:func:`_anchor_tokens`)
+_ANCHOR_OPEN_RE = re.compile(r"<a\b", re.IGNORECASE)
 _TAG_RE = re.compile(r"<[^>]+>")
 _BOILER_TAGS = frozenset({"nav", "header", "footer", "aside"})
 _HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
@@ -94,7 +101,63 @@ def escape(text: str) -> str:
 
 
 def _visible_tokens(inner_html: str) -> list[str]:
-    return unescape(_TAG_RE.sub(" ", inner_html)).split()
+    if ">" in inner_html:
+        # a tag ends at a '>': a '<' after the last one opens none, and
+        # leaving those out of the scan keeps a run of them linear
+        end = inner_html.rfind(">") + 1
+        inner_html = _TAG_RE.sub(" ", inner_html[:end]) + inner_html[end:]
+    return unescape(inner_html).split()
+
+
+def _strip_noise(html: str) -> str:
+    """``_SCRIPT_RE.sub(" ", html)`` then ``_SCRIPT_OPEN_RE.sub(" ", …)``
+    in linear time.
+
+    ``_SCRIPT_RE`` is matched at each opener left of no earlier match.
+    A failed match proves that no later opener of the same name (or no
+    later comment) can match: its '>' and its closer would lie no
+    earlier. So each name fails once, and every other scan is consumed
+    by the match that made it."""
+    out: list[str] = []
+    last = 0
+    dead: set = set()  # opener names (None: comment) that cannot match
+    for m in _NOISE_OPEN_RE.finditer(html):
+        name = m.group(1)
+        key = name and name.lower()
+        if m.start() < last or key in dead:
+            continue
+        match = _SCRIPT_RE.match(html, m.start())
+        if match is None:
+            dead.add(key)
+            continue
+        out.append(html[last : m.start()])
+        out.append(" ")
+        last = match.end()
+    if last:
+        out.append(html[last:])
+        html = "".join(out)
+    if not dead - {None}:
+        return html  # every script/style opener was removed with its match
+    # an unclosed opener's '[^>]*>' ends at or before the last '>'
+    m = _SCRIPT_OPEN_RE.search(html, 0, html.rfind(">") + 1)
+    return html if m is None else html[: m.start()] + " "
+
+
+def _anchor_tokens(inner_html: str) -> int:
+    """Visible tokens inside the ``_ANCHOR_RE`` matches, in linear time:
+    it is matched at each opener left of no earlier match, and the first
+    failure ends the scan (no later opener's '>' or closer lies
+    earlier)."""
+    n = last = 0
+    for m in _ANCHOR_OPEN_RE.finditer(inner_html):
+        if m.start() < last:
+            continue
+        match = _ANCHOR_RE.match(inner_html, m.start())
+        if match is None:
+            break
+        n += len(_visible_tokens(match.group(1)))
+        last = match.end()
+    return n
 
 
 def segment_blocks(html: str) -> list[tuple[str, str]]:
@@ -118,9 +181,7 @@ def segment_blocks(html: str) -> list[tuple[str, str]]:
       byte-exact — the assembly contract depends on exact token
       bytes).
     """
-    cleaned = _SCRIPT_RE.sub(" ", html)
-    # paired script/style gone; any opener still present is unclosed
-    cleaned = _SCRIPT_OPEN_RE.sub(" ", cleaned)
+    cleaned = _strip_noise(html)
     out: list[tuple[str, str]] = []
     tag = ""  # open frame: tag name, slice start, same-name depth
     start = depth = 0
@@ -161,10 +222,7 @@ def classify_block(
         return False, tokens
     if tag in _BOILER_TAGS:
         return False, tokens
-    anchor_tokens = sum(
-        len(_visible_tokens(m.group(1))) for m in _ANCHOR_RE.finditer(inner_html)
-    )
-    if anchor_tokens / len(tokens) > cfg.max_link_density:
+    if _anchor_tokens(inner_html) / len(tokens) > cfg.max_link_density:
         return False, tokens
     if tag not in _HEADING_TAGS and len(tokens) < cfg.min_block_words:
         return False, tokens

@@ -347,9 +347,9 @@ def lookup_spans(spark: SparkSession, spans_path: str, url: str) -> DataFrame:
     url's day, so the read opens that one day directory (plus any entry
     the index does not cover, see :func:`_indexed_entries`) with the
     committed schema: no full-table listing and no schema-inference
-    job. A table without the index (a compacted or streaming root, a
-    ``spans_view`` written elsewhere) is read whole, partition-pruned
-    and min/max-skipped. Either way: a filter on url, no shuffle."""
+    job. A table without the index (a streaming root, a ``spans_view``
+    written elsewhere) is read whole, partition-pruned and
+    min/max-skipped. Either way: a filter on url, no shuffle."""
     entries = _indexed_entries(spans_path, url)
     if entries is None:
         df = spark.read.parquet(spans_path)

@@ -19,15 +19,18 @@ rule, with plain parquet — no Iceberg jars offline):
    whose warc_day is a parsed column, takes one ``distinct()`` over its
    persisted frame instead. The set difference runs on the driver
    against the days of a tiny lineage read.
-2. Process ONLY pending days. The raw pending pages are first
-   range-partitioned by ``(warc_day, url)`` (only the kernel's columns
-   cross the exchange; the kernel stage after it stays narrow), so each
-   task extracts one contiguous (day, url) slice and a day lands as ~one
-   file instead of one per input split. The wide output is written with
-   **dynamic partition overwrite** — a re-attempt replaces exactly the
-   partitions it produces, never touching committed ones, and Spark's
-   output committer keeps half-written files in ``_temporary`` out of
-   reads.
+2. Process ONLY pending days, through :func:`write_days` — the one
+   write of extracted rows, which ``streaming.ingest.epoch_sink`` calls
+   too. The raw pending pages are first range-partitioned by
+   ``(warc_day, url)`` (only the kernel's columns cross the exchange;
+   the kernel stage after it stays narrow), so each task extracts one
+   contiguous (day, url) slice and a day lands as ~one file instead of
+   one per input split. The wide output is written with **dynamic
+   partition overwrite** — a re-attempt replaces exactly the partitions
+   it produces, never touching committed ones, and Spark's output
+   committer keeps half-written files in ``_temporary`` out of reads.
+   A committed day directory is therefore written once, already at
+   ~one file, and no compaction pass is needed after it.
 3. Write the url -> day index of the pending days to
    ``extracted/_urls/`` (same dynamic overwrite, so a retried day's
    index rows are replaced, never duplicated), THEN append per-day
@@ -103,9 +106,11 @@ def committed_days(spark: SparkSession, out_root: str) -> set[str]:
 
 
 def _bound_day(ts) -> str | None:
-    """A ts_from/ts_to bound as the day ``X.read_pages`` compares
-    warc_day with: Spark casts the bound's text to a date, which keeps
-    the leading yyyy-MM-dd of a timestamp."""
+    """A ts_from/ts_to bound as its 'yyyy-MM-dd' day: the one bound rule
+    of both sources. It is what Spark compares the parquet source's
+    date-typed warc_day with (the cast keeps a timestamp's date), and
+    the WARC source's string warc_day compares with it as text (the
+    raw bound would not: "2026-01-02" < "2026-01-02 06:00:00")."""
     if ts is None:
         return None
     return datetime.date.fromisoformat(str(ts)[:10]).isoformat()
@@ -167,16 +172,18 @@ def run_checkpointed(
     """
     t0 = time.perf_counter()
     persisted = None
+    # one bound rule for both sources: a bound keeps its date
+    lo, hi = _bound_day(ts_from), _bound_day(ts_to)
     if source_format == "warc":
         from pyspark import StorageLevel
 
         from ..sources import warc as Wsrc
 
         pages = Wsrc.read_warc(spark, pages_path)
-        if ts_from is not None:
-            pages = pages.where(F.col("warc_day") >= F.lit(str(ts_from)))
-        if ts_to is not None:
-            pages = pages.where(F.col("warc_day") <= F.lit(str(ts_to)))
+        if lo is not None:
+            pages = pages.where(F.col("warc_day") >= F.lit(lo))
+        if hi is not None:
+            pages = pages.where(F.col("warc_day") <= F.lit(hi))
         # the day enumeration below and the extraction write are two
         # consumers, and each consumer re-runs the whole gunzip+parse
         # (CLAUDE.md extra-consumer rule) — which for WARC is the run's
@@ -186,7 +193,7 @@ def run_checkpointed(
         persisted = pages.persist(StorageLevel.MEMORY_AND_DISK)
         pages = persisted
     else:
-        pages = X.read_pages(spark, pages_path, ts_from, ts_to)
+        pages = X.read_pages(spark, pages_path, lo, hi)
 
     try:
         if source_format == "warc":
@@ -195,7 +202,7 @@ def run_checkpointed(
                 for r in pages.select("warc_day").distinct().collect()
             )
         else:
-            input_days = listed_days(pages, ts_from, ts_to)
+            input_days = listed_days(pages, lo, hi)
         return _run_checkpointed_body(
             spark, pages, input_days, out_root, cfg, t0, salt_partitions,
             languages, _fail_before_commit,
@@ -217,26 +224,16 @@ def _run_checkpointed_body(
         return RunSummary(pending, skipped, 0, int((time.perf_counter() - t0) * 1000))
 
     # ---- step 2: cluster, process + dynamic-partition-overwrite ------
-    # range-partition the raw pages by (day, url): each task then writes
-    # one contiguous slice, ~1 file per day instead of one per split
-    n = (
-        salt_partitions if salt_partitions > 0
-        else spark.sparkContext.defaultParallelism
-    )
-    todo = pages.where(F.col("warc_day").isin(pending)).repartitionByRange(
-        n, "warc_day", "url"
-    )
     # per-day kernel wall collected executor-side (accumulator filled
     # by kernel_iter during the write action below)
     day_acc = spark.sparkContext.accumulator({}, _DayMsParam())
-    wide = X.extract(
-        todo, cfg, languages=languages, day_timer_acc=day_acc,
-    )
     # warc_ts is non-null by schema contract (undated WARC records ride
-    # the epoch sentinel, sources/warc.UNDATED_TS), so warc_day here is
-    # always a real partition value step 1 can enumerate.
-    out = wide.withColumn("warc_day", X.warc_day())
-    _overwrite_days(out, f"{out_root}/extracted")
+    # the epoch sentinel, sources/warc.UNDATED_TS), so the warc_day
+    # written is always a real partition value step 1 can enumerate.
+    write_days(
+        pages.where(F.col("warc_day").isin(pending)), f"{out_root}/extracted",
+        cfg, salt_partitions, languages=languages, day_timer_acc=day_acc,
+    )
 
     if _fail_before_commit:
         raise RuntimeError("injected failure between data write and commit marker")
@@ -251,9 +248,10 @@ def _run_checkpointed_body(
             .parquet(f"{out_root}/extracted")
             .where(F.col("warc_day").isin(pending))
         )
-        _overwrite_days(
+        _overwrite(
             written.select("url", "warc_day"),
             f"{out_root}/extracted/{X.URL_INDEX}",
+            ["warc_day"],
         )
     else:
         written = spark.createDataFrame([], COMMITTED_SCHEMA)
@@ -282,14 +280,45 @@ def _run_checkpointed_body(
     return RunSummary(pending, skipped, sum(r["n_docs"] for r in rows), wall_ms)
 
 
-def _overwrite_days(df: DataFrame, path: str) -> None:
-    """Write ``df`` under ``path`` partitioned by warc_day, replacing
-    only the days present in ``df`` (dynamic overwrite, regardless of
-    the session-level default)."""
+def write_days(
+    pages: DataFrame,
+    path: str,
+    cfg: ExtractConfig = ExtractConfig(),
+    n: int = 0,
+    epoch_id: int | None = None,
+    languages=None,
+    day_timer_acc=None,
+) -> None:
+    """The one write of extracted rows, shared by a batch run (step 2)
+    and a streaming epoch (``streaming.ingest.epoch_sink``).
+
+    The raw pages are range-partitioned into ``n`` tasks (0: the
+    cluster's default parallelism) by (day, url) before the kernel, so
+    each task extracts one contiguous slice and a day lands as ~one
+    file: at most ``days + n - 1`` files per call.
+    Only the kernel's input columns cross the exchange, and the kernel
+    stage after it stays narrow. The output is written with dynamic
+    partition overwrite under ``warc_day``, or under ``epoch_id`` then
+    ``warc_day`` when ``epoch_id`` is given: a retry replaces exactly
+    the partitions it produces and touches no other."""
+    n = n if n > 0 else pages.sparkSession.sparkContext.defaultParallelism
+    todo = pages.repartitionByRange(n, X.warc_day(), "url")
+    out = X.extract(todo, cfg, languages=languages, day_timer_acc=day_timer_acc)
+    keys = ["warc_day"]
+    if epoch_id is not None:
+        out = out.withColumn("epoch_id", F.lit(int(epoch_id)))
+        keys.insert(0, "epoch_id")
+    _overwrite(out.withColumn("warc_day", X.warc_day()), path, keys)
+
+
+def _overwrite(df: DataFrame, path: str, keys: list[str]) -> None:
+    """Write ``df`` under ``path`` partitioned by ``keys``, replacing
+    only the partitions present in ``df`` (dynamic overwrite, regardless
+    of the session-level default)."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("warc_day")
+        .partitionBy(*keys)
         .parquet(path)
     )
 

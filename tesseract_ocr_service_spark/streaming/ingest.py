@@ -2,8 +2,12 @@
 
 Pattern: parquet file-source stream -> the SAME fused extraction kernel
 (mapInArrow works unchanged on streaming DataFrames — it is stateless)
--> ``foreachBatch`` sink partitioned by (epoch_id, warc_day) with
-DYNAMIC partition overwrite.
+-> ``foreachBatch`` sink that calls the batch commit's own writer,
+``plans.commit.write_days``: the epoch's pages are range-partitioned by
+(day, url) before the kernel, and the output is written partitioned by
+(epoch_id, warc_day) with DYNAMIC partition overwrite — about one file
+per day directory, at most days + n - 1 per epoch (n = the cluster's
+default parallelism).
 
 Exactly-once story: the streaming checkpoint records which input files
 each epoch consumed, and the sink keys its output on the epoch —
@@ -24,12 +28,19 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..config import ExtractConfig
-from ..operators import extract as X
+from ..plans import commit as C
 from ..schema import PAGES_SCHEMA
+
+
+def hidden_rel_path(rel: str) -> bool:
+    """True when any SEGMENT of the relative path is hidden/marker
+    (leading '_' or '.'): crashed-write leftovers like
+    _temporary/.../part-*.parquet carry plain FILE names under a
+    hidden DIRECTORY, so a file-name-only check misses them."""
+    return any(s.startswith(("_", ".")) for s in rel.split("/"))
 
 
 def _first_data_file(spark: SparkSession, root: str) -> Optional[str]:
@@ -38,12 +49,10 @@ def _first_data_file(spark: SparkSession, root: str) -> Optional[str]:
     not a full-tree enumeration, so probing a large object-store
     landing dir costs one LIST page + one footer read, not a second
     full listing on top of the stream's own. Hidden/marker path
-    SEGMENTS (_temporary leftovers etc.) are skipped — the SAME
-    predicate as the compaction listing (plans/compact.hidden_rel_path).
-    None = nothing landed yet (a missing or empty root is NOT an error
-    here; real FS errors — auth, network — propagate)."""
-    from ..plans.compact import hidden_rel_path
-
+    SEGMENTS (_temporary leftovers etc.) are skipped
+    (:func:`hidden_rel_path`). None = nothing landed yet (a missing or
+    empty root is NOT an error here; real FS errors — auth, network —
+    propagate)."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     path = jvm.org.apache.hadoop.fs.Path(root)
@@ -145,21 +154,13 @@ def stream_warc(
 
 
 def epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
-    """foreachBatch sink: extract + write keyed by (epoch_id, warc_day)
-    with dynamic partition overwrite — replaying an epoch rewrites
-    exactly its own partitions (idempotent), instead of appending
-    duplicate rows."""
+    """foreachBatch sink: ``plans.commit.write_days`` keyed by
+    (epoch_id, warc_day) — replaying an epoch rewrites exactly its own
+    partitions (idempotent) instead of appending duplicate rows, each
+    day at ~one file."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        wide = X.extract(batch_df, cfg)
-        (
-            wide.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .withColumn("warc_day", X.warc_day())
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id", "warc_day")
-            .parquet(f"{out_root}/extracted")
-        )
+        C.write_days(batch_df, f"{out_root}/extracted", cfg, epoch_id=epoch_id)
 
     return sink
 

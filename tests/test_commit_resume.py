@@ -299,3 +299,59 @@ def test_clustered_layout_matches_unclustered_extract(spark, paths):
     plain = X.extract(X.read_pages(spark, pages)).collect()
     key = lambda r: r["url"]
     assert sorted(committed, key=key) == sorted(plain, key=key)
+
+
+def _day_files(out, days):
+    """{path under extracted/: size} of the data files of ``days``."""
+    root = os.path.join(out, "extracted")
+    return {
+        os.path.relpath(f, root): os.path.getsize(f)
+        for d in days
+        for f in glob.glob(os.path.join(root, f"warc_day={d}", "*"))
+    }
+
+
+def test_committed_day_directories_are_written_once(spark, paths):
+    """A committed day directory is never rewritten: later runs (the
+    rest of the range, then a no-op resume) leave its file names and
+    sizes as the first run wrote them — so the layout the commit
+    writes is the layout readers keep."""
+    pages, out = paths
+    s1 = C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-10")
+    assert len(s1.pending_days) == 10
+    before = _day_files(out, s1.pending_days)
+    assert before
+    s2 = C.run_checkpointed(spark, pages, out)
+    assert set(s2.skipped_days) == set(s1.pending_days)
+    s3 = C.run_checkpointed(spark, pages, out)
+    assert not s3.pending_days
+    assert _day_files(out, s1.pending_days) == before
+
+
+def test_warc_and_parquet_sources_share_the_bound_rule(spark, tmp_path):
+    """A time-of-day window keeps the same days from both sources: the
+    WARC source's string warc_day is compared with the bound's date,
+    as the parquet source's date partition is (the first day of
+    [06:00 on 01-02, 01-04] was lost from the WARC source)."""
+    from tesseract_ocr_service_spark.sources import warc as W
+
+    seed, n = 5, 120
+    pages = str(tmp_path / "pages")
+    gen.write_pages(spark, pages, n, seed=seed, partitions=2)
+    archives = tmp_path / "archives"
+    archives.mkdir()
+    W.write_warc(
+        str(archives / "crawl.warc.gz"),
+        [
+            (d["url"], d["warc_ts"], bytes(d["html"]))
+            for d in (gen.doc(i, seed) for i in range(n))
+        ],
+    )
+    window = dict(ts_from="2026-01-02 06:00:00", ts_to="2026-01-04")
+    via_parquet = C.run_checkpointed(spark, pages, str(tmp_path / "p"), **window)
+    via_warc = C.run_checkpointed(
+        spark, str(archives), str(tmp_path / "w"), source_format="warc", **window
+    )
+    assert via_parquet.pending_days == ["2026-01-02", "2026-01-03", "2026-01-04"]
+    assert via_warc.pending_days == via_parquet.pending_days
+    assert via_warc.n_docs == via_parquet.n_docs > 0

@@ -307,26 +307,6 @@ def test_par_threshold_spreads_only_big_sources(spark):
     assert Q._input_bytes(big_ckpt) > 0
 
 
-def test_compaction_plan_table_join_is_broadcast(spark, tmp_path):
-    """compact()'s per-partition k table must broadcast: a shuffle
-    join keyed on partition values would re-shuffle the whole dataset
-    once more than the placement repartition already does."""
-    from pyspark.sql import functions as F
-
-    from tesseract_ocr_service_spark.plans import compact as C
-
-    root = str(tmp_path / "frag")
-    spark.range(0, 300).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 2).cast("string").alias("day"),
-    ).repartition(4).write.partitionBy("day").parquet(root)
-    plan_df, layout = C.plan_compaction(spark, root, target_bytes=1 << 30)
-    df = spark.read.parquet(root)
-    pcols = [c for c in plan_df.columns if c != "k"]
-    # the PRODUCTION join path, not a test-local reconstruction
-    assert "BroadcastHashJoin" in _plan(C._with_plan(df, plan_df, pcols))
-
-
 def test_corpus_funnel_dedup_reads_checkpoint_not_parquet(spark):
     """corpus_funnel cuts lineage at the gate boundary, so the dedup
     chain (eager signature build + survivors join) must consume the

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -52,9 +53,20 @@ def test_epoch_sink_replay_is_idempotent(spark, tmp_path):
     out = str(tmp_path / "out")
     batch = gen.generate_pages(spark, 40, seed=3, partitions=2)
     sink = ingest.epoch_sink(out)
+
+    def epoch_files():
+        pattern = os.path.join(out, "extracted", "epoch_id=7", "warc_day=*", "*.parquet")
+        return sorted(glob.glob(pattern))
+
     sink(batch, 7)
     first = spark.read.parquet(f"{out}/extracted").count()
+    # the epoch is written clustered by (day, url): about one file per day
+    files = epoch_files()
+    days = {os.path.dirname(f) for f in files}
+    n = spark.sparkContext.defaultParallelism
+    assert len(files) <= len(days) + n - 1, (len(files), len(days), n)
     sink(batch, 7)  # crash-retry replay of the same epoch
+    assert len(epoch_files()) == len(files)
     ext = spark.read.parquet(f"{out}/extracted")
     assert ext.count() == first == 40
     assert ext.select("url").distinct().count() == 40
@@ -486,9 +498,9 @@ def test_stream_pages_empty_landing_warns_and_falls_back(spark, tmp_path):
 
 def test_schema_probe_skips_crashed_write_leftovers(spark, tmp_path):
     """_first_data_file must not probe a _temporary/... leftover from a
-    crashed write: hidden path SEGMENTS are skipped (same rule as
-    compaction's listing), so the probed schema comes from a real data
-    file even when junk sorts first in the listing."""
+    crashed write: hidden path SEGMENTS are skipped
+    (ingest.hidden_rel_path), so the probed schema comes from a real
+    data file even when junk sorts first in the listing."""
     landing = str(tmp_path / "landing")
     staged = (
         gen.generate_pages(spark, 10, seed=9, partitions=1)
