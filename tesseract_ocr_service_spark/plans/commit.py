@@ -62,9 +62,11 @@ from __future__ import annotations
 import datetime
 import posixpath
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -171,45 +173,29 @@ def run_checkpointed(
     extraction-free pass) and run this job against that.
     """
     t0 = time.perf_counter()
-    persisted = None
     # one bound rule for both sources: a bound keeps its date
     lo, hi = _bound_day(ts_from), _bound_day(ts_to)
-    if source_format == "warc":
-        from pyspark import StorageLevel
-
-        from ..sources import warc as Wsrc
-
-        pages = Wsrc.read_warc(spark, pages_path)
-        if lo is not None:
-            pages = pages.where(F.col("warc_day") >= F.lit(lo))
-        if hi is not None:
-            pages = pages.where(F.col("warc_day") <= F.lit(hi))
-        # the day enumeration below and the extraction write are two
-        # consumers, and each consumer re-runs the whole gunzip+parse
-        # (CLAUDE.md extra-consumer rule) — which for WARC is the run's
-        # dominant cost. Persist for the run (spills to executor disk:
-        # this IS the staging pass the docstring recommends, done
-        # in-flight), release before returning.
-        persisted = pages.persist(StorageLevel.MEMORY_AND_DISK)
-        pages = persisted
-    else:
+    args = (out_root, cfg, t0, salt_partitions, languages, _fail_before_commit)
+    if source_format != "warc":
         pages = X.read_pages(spark, pages_path, lo, hi)
+        return _run_checkpointed_body(spark, pages, listed_days(pages, lo, hi), *args)
 
-    try:
-        if source_format == "warc":
-            input_days = sorted(
-                str(r["warc_day"])
-                for r in pages.select("warc_day").distinct().collect()
-            )
-        else:
-            input_days = listed_days(pages, lo, hi)
-        return _run_checkpointed_body(
-            spark, pages, input_days, out_root, cfg, t0, salt_partitions,
-            languages, _fail_before_commit,
+    from ..sources import warc as Wsrc
+
+    pages = Wsrc.read_warc(spark, pages_path)
+    if lo is not None:
+        pages = pages.where(F.col("warc_day") >= F.lit(lo))
+    if hi is not None:
+        pages = pages.where(F.col("warc_day") <= F.lit(hi))
+    # the day enumeration and the extraction write are two consumers,
+    # each re-running the whole gunzip+parse (CLAUDE.md extra-consumer
+    # rule), the run's dominant cost. Persisted for the run (spills to
+    # executor disk: the staging pass the docstring recommends, in-flight).
+    with persisted(pages) as pages:
+        input_days = sorted(
+            str(r["warc_day"]) for r in pages.select("warc_day").distinct().collect()
         )
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
+        return _run_checkpointed_body(spark, pages, input_days, *args)
 
 
 def _run_checkpointed_body(
@@ -309,6 +295,18 @@ def write_days(
         out = out.withColumn("epoch_id", F.lit(int(epoch_id)))
         keys.insert(0, "epoch_id")
     _overwrite(out.withColumn("warc_day", X.warc_day()), path, keys)
+
+
+@contextmanager
+def persisted(df: DataFrame):
+    """``df`` persisted (MEMORY_AND_DISK) for the block and released
+    after it — for a frame with several consumers whose upstream (the
+    WARC parse) is too costly to re-run for each."""
+    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield cached
+    finally:
+        cached.unpersist()
 
 
 def _overwrite(df: DataFrame, path: str, keys: list[str]) -> None:

@@ -1,13 +1,15 @@
 """Incremental extraction over a landing directory (Structured Streaming).
 
-Pattern: parquet file-source stream -> the SAME fused extraction kernel
-(mapInArrow works unchanged on streaming DataFrames — it is stateless)
--> ``foreachBatch`` sink that calls the batch commit's own writer,
-``plans.commit.write_days``: the epoch's pages are range-partitioned by
-(day, url) before the kernel, and the output is written partitioned by
-(epoch_id, warc_day) with DYNAMIC partition overwrite — about one file
-per day directory, at most days + n - 1 per epoch (n = the cluster's
-default parallelism).
+Pattern: parquet file-source stream, or a path-only stream of WARC
+archives parsed by the batch reader's own parse -> the SAME fused
+extraction kernel (mapInArrow works unchanged on streaming DataFrames —
+it is stateless) -> ``foreachBatch`` sink that calls the batch commit's
+own writer, ``plans.commit.write_days``: the epoch's pages are
+range-partitioned by (day, url) before the kernel (a WARC epoch's parsed
+pages persisted for it, so each archive is parsed once), and the output
+is written partitioned by (epoch_id, warc_day) with DYNAMIC partition
+overwrite — about one file per day directory, at most days + n - 1 per
+epoch (n = the cluster's default parallelism).
 
 Exactly-once story: the streaming checkpoint records which input files
 each epoch consumed, and the sink keys its output on the epoch —
@@ -128,29 +130,20 @@ def stream_warc(
     max_files_per_trigger: Optional[int] = None,
 ) -> DataFrame:
     """Stream ``.warc.gz`` archives as they land (crawler hand-off) into
-    the canonical pages shape — binaryFile is a regular file-source
-    stream, and the WARC parse (sources/warc._parse_archives) is a
-    stateless mapInPandas, so the same exactly-once epoch story applies
-    unchanged. ``maxFilesPerTrigger`` here bounds ARCHIVES per epoch
-    (each ~1 GB on a real crawl — the natural rate-limit unit)."""
+    the canonical pages shape through the batch reader's own stateless
+    path-only parse (``sources.warc.archive_pages``), so the same
+    exactly-once epoch story applies unchanged. ``maxFilesPerTrigger``
+    here bounds ARCHIVES per epoch (each ~1 GB on a real crawl — the
+    natural rate-limit unit)."""
     from ..sources import warc as Wsrc
 
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc.gz")
+    # a file-source stream needs binaryFile's fixed schema up front
+    reader = spark.readStream.schema(
+        "path string, modificationTime timestamp, length long, content binary"
     )
     if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    files = reader.load(landing_path).select("path", "content")
-    return files.mapInPandas(
-        Wsrc._parse_archives, Wsrc.WARC_PAGES_SCHEMA
-    )
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return Wsrc.archive_pages(reader, landing_path)
 
 
 def epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
@@ -161,6 +154,20 @@ def epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         C.write_days(batch_df, f"{out_root}/extracted", cfg, epoch_id=epoch_id)
+
+    return sink
+
+
+def warc_epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
+    """:func:`epoch_sink` with the epoch's parsed WARC pages persisted:
+    ``write_days`` samples its input for the range bounds in a job of
+    its own, which would otherwise gunzip and parse every archive a
+    second time. Parquet epochs re-read cheaply and stay unpersisted."""
+    write = epoch_sink(out_root, cfg)
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        with C.persisted(batch_df) as pages:
+            write(pages, epoch_id)
 
     return sink
 
@@ -180,14 +187,15 @@ def start_incremental_extract(
     ``max_files_per_trigger`` bounds each micro-batch's input (backlog
     catch-up in rate-limited epochs instead of one giant batch —
     availableNow honors it, draining in multiple epochs)."""
-    pages = (
-        stream_warc(spark, landing_path, max_files_per_trigger)
-        if source_format == "warc"
-        else stream_pages(spark, landing_path, max_files_per_trigger)
+    if source_format == "warc":
+        pages = stream_warc(spark, landing_path, max_files_per_trigger)
+        sink = warc_epoch_sink(out_root, cfg)
+    else:
+        pages = stream_pages(spark, landing_path, max_files_per_trigger)
+        sink = epoch_sink(out_root, cfg)
+    writer = pages.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint
     )
-    writer = pages.writeStream.foreachBatch(
-        epoch_sink(out_root, cfg)
-    ).option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -389,6 +389,47 @@ def test_streaming_warc_equals_batch_extract(spark, tmp_path):
     assert len(via_stream) == 60
 
 
+def test_warc_epoch_parses_each_archive_once(spark, tmp_path, monkeypatch):
+    """A WARC epoch's parsed pages are persisted for the epoch:
+    write_days' range partitioning samples its input in a job of its
+    own, and without the persist that job and the write each parsed
+    every archive. A counting wrapper around the parse (defined here,
+    so it is pickled by value with its accumulator) sees each archive
+    parsed exactly once."""
+    from tesseract_ocr_service_spark.plans import commit as C
+    from tesseract_ocr_service_spark.sources import warc as W
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    recs = [
+        (r["url"], r["warc_ts"], bytes(r["html"]))
+        for r in (gen.doc(i, 37) for i in range(40))
+    ]
+    W.write_warc(f"{landing}/cc-0.warc.gz", recs[:20])
+    W.write_warc(f"{landing}/cc-1.warc.gz", recs[20:], per_record_gzip=False)
+
+    parsed = spark.sparkContext.accumulator({}, C._DayMsParam())
+    parse = W._parse_paths
+
+    def counting_parse(it):
+        for pdf in it:
+            for path in pdf["path"]:
+                parsed.add({os.path.basename(path): 1})
+            yield from parse(iter([pdf]))
+
+    monkeypatch.setattr(W, "_parse_paths", counting_parse)
+    q = ingest.start_incremental_extract(
+        spark, landing, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        source_format="warc", max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert parsed.value == {"cc-0.warc.gz": 1, "cc-1.warc.gz": 1}
+    ext = spark.read.parquet(f"{tmp_path}/out/extracted")
+    assert ext.select("epoch_id").distinct().count() == 2
+    assert ext.count() == 40
+
+
 def test_streaming_warc_incremental_extract(spark, tmp_path):
     """WARC landing dir: archives stream through the same kernel +
     epoch sink; a second wave processes only the newly landed archive

@@ -26,6 +26,12 @@ def _records(n=40, seed=11):
     return out
 
 
+def _chunked(blob: bytes, n: int):
+    """``blob`` fed as ``n``-byte chunks (member boundaries mid-chunk)."""
+    for i in range(0, len(blob), n):
+        yield blob[i : i + n]
+
+
 def test_roundtrip_both_gzip_layouts(spark, tmp_path):
     recs = _records(30)
     p1 = str(tmp_path / "a.warc.gz")
@@ -259,7 +265,8 @@ def test_bounded_memory_parse():
     assert len(blob) < inflated // 50  # fixture really is compressible
 
     stats: dict = {}
-    got = list(W._parse_warc_stream(W._iter_inflated(blob), stats))
+    chunks = W._iter_inflated_stream(_chunked(blob, 1 << 16))
+    got = list(W._parse_warc_stream(chunks, stats))
     assert len(got) == n
     assert all(len(r["payload"]) > len(body) for r in got)  # http+body
     assert got[0]["payload"].endswith(body)
@@ -269,12 +276,12 @@ def test_bounded_memory_parse():
     assert stats["peak_buf"] < 8 * (1 << 20), stats
 
 
-def test_chunked_reader_equals_binaryfile_reader(spark, tmp_path):
-    """read_warc_chunked (the no-2-GiB-cap path: per-task streamed
-    compressed chunks, small chunk size forced so member boundaries
-    fall mid-chunk) must produce IDENTICAL rows to read_warc across
-    both gzip layouts, a compression-layer truncation, and a non-gzip
-    junk file."""
+def test_read_warc_equals_sparkless_parse(spark, tmp_path):
+    """read_warc (path-only binaryFile listing, each archive streamed
+    from its path in the task) must produce exactly the rows of a
+    Spark-free parse of each file fed in tiny chunks, so member
+    boundaries fall mid-chunk — across both gzip layouts, a
+    compression-layer truncation, and a non-gzip junk file."""
     recs = _records(25)
     W.write_warc(str(tmp_path / "a.warc.gz"), recs, per_record_gzip=True)
     W.write_warc(str(tmp_path / "b.warc.gz"), recs[:12], per_record_gzip=False)
@@ -282,26 +289,26 @@ def test_chunked_reader_equals_binaryfile_reader(spark, tmp_path):
     open(str(tmp_path / "cut.warc.gz"), "wb").write(raw[: len(raw) - 25])
     open(str(tmp_path / "junk.warc.gz"), "wb").write(b"not gzip at all")
 
-    def _rows(df):
-        return sorted(
-            (r["url"], r["warc_day"], bytes(r["html"]), r["warc_path"])
-            for r in df.collect()
-        )
-
-    via_binary = _rows(W.read_warc(spark, str(tmp_path)))
-    via_chunked = _rows(W.read_warc_chunked(spark, str(tmp_path)))
-    assert via_chunked == via_binary
-    assert len(via_chunked) == 25 + 12 + 24  # cut archive loses 1
-
-    # member boundaries mid-chunk: tiny chunks through the stream
-    # inflater reproduce the whole-buffer inflater byte-for-byte
-    def _tiny(n=37):
-        for i in range(0, len(raw), n):
-            yield raw[i : i + n]
-
-    assert b"".join(W._iter_inflated_stream(_tiny())) == b"".join(
-        W._iter_inflated(raw)
+    via_spark = sorted(
+        (r["url"], r["warc_day"], bytes(r["html"]), r["content_type"],
+         os.path.basename(r["warc_path"]))
+        for r in W.read_warc(spark, str(tmp_path)).collect()
     )
+    want = []
+    for name in sorted(os.listdir(tmp_path)):
+        blob = open(str(tmp_path / name), "rb").read()
+        chunks = W._iter_inflated_stream(_chunked(blob, 37))
+        for rec in W._parse_warc_stream(chunks):
+            ctype, body = W._http_split(rec["payload"])
+            day = W._warc_ts(rec["date"]).date().isoformat()
+            want.append((rec["uri"], day, body, ctype, name))
+    assert via_spark == sorted(want)
+    assert len(via_spark) == 25 + 12 + 24  # cut archive loses 1
+
+    # tiny chunks through the stream inflater reproduce the archive's
+    # whole inflated bytes
+    inflated = b"".join(W._iter_inflated_stream(_chunked(raw, 37)))
+    assert inflated == gzip.decompress(raw)
 
 
 def test_nanosecond_warc_date_keeps_real_day():
@@ -334,30 +341,39 @@ def test_corrupt_member_midway_keeps_clean_prefix():
     data = (" ".join(random.choices(words, k=300000))).encode()
     blob = bytearray(_gz.compress(data))
     blob[len(blob) // 2] ^= 0xFF
-    out = W._gunzip_salvage(bytes(blob))
-    assert out is not None
+    out = b"".join(W._iter_inflated_stream(_chunked(bytes(blob), 1 << 16)))
+    assert out
     assert len(out) < len(data)  # corruption detected, stream cut
     assert out[:700000] == data[:700000]  # clean prefix survives
 
 
-def test_chunked_reader_one_archive_per_task(spark, tmp_path):
-    """The chunked path exists for multi-GiB outlier archives: paths
-    must spread EXACTLY one per task (sc.parallelize slicing). A hash
-    repartition on path would leave ~1/e of tasks empty while the
-    colliding tasks stream several huge archives serially — wall
-    doubles exactly where this reader is supposed to help."""
+def test_read_warc_gives_a_large_archive_its_own_task(spark, tmp_path):
+    """WARC.gz is not splittable, so the archive is the unit of work:
+    Spark packs small archives into one task by size, and an archive of
+    at least spark.sql.files.maxPartitionBytes gets a task of its own —
+    a multi-GiB outlier never shares its task with another archive."""
     recs = _records(4)
     for i in range(5):
         W.write_warc(str(tmp_path / f"a{i}.warc.gz"), recs)
-    df = W.read_warc_chunked(spark, str(tmp_path))
-    per_part = (
-        df.select("warc_path")
-        .rdd.glom()
-        .map(lambda rows: {r[0] for r in rows})
-        .collect()
-    )
-    assert len(per_part) == 5
-    assert all(len(s) == 1 for s in per_part), per_part
+
+    def per_task():
+        return (
+            W.read_warc(spark, str(tmp_path))
+            .select("warc_path")
+            .rdd.glom()
+            .map(lambda rows: {r[0] for r in rows})
+            .collect()
+        )
+
+    assert len(per_task()) < 5  # small archives share tasks
+    size = os.path.getsize(str(tmp_path / "a0.warc.gz"))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(size // 2))
+    try:
+        tasks = per_task()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert len(tasks) == 5
+    assert all(len(s) == 1 for s in tasks), tasks
 
 
 def test_object_store_scheme_spellings():
@@ -373,10 +389,23 @@ def test_object_store_scheme_spellings():
         list(W._iter_file_chunks("foo://bucket/a.warc.gz"))
 
 
+def test_read_warc_under_literal_escapes_in_the_path(spark, tmp_path):
+    """Spark lists local archives unescaped, as Hadoop reads them: a
+    directory named 'a%41b c#d' is that name, not 'aAb c' + a fragment.
+    The task opens the archive by that same path (arrow_fs), so the
+    records are found."""
+    arch = tmp_path / "a%41b c#d"
+    arch.mkdir()
+    W.write_warc(str(arch / "x.warc.gz"), _records(3))
+    rows = W.read_warc(spark, str(arch)).collect()
+    assert len(rows) == 3
+    assert {r["warc_path"] for r in rows} == {f"file:{arch}/x.warc.gz"}
+
+
 def test_http_split_content_type():
     """_http_split captures the declared Content-Type from the HTTP
     head (case-insensitive, head-only — a body echo can't match) and
-    returns the exact same body as _http_body; bare (WET-style)
+    returns the bytes after the head as the body; bare (WET-style)
     payloads have no head and no declared type."""
     payload = (
         b"HTTP/1.1 200 OK\r\ncontent-TYPE: Text/HTML; charset=UTF-8\r\n"
@@ -385,7 +414,6 @@ def test_http_split_content_type():
     ct, body = W._http_split(payload)
     assert ct == "Text/HTML; charset=UTF-8"
     assert body == b"hello\r\nContent-Type: image/png"
-    assert W._http_body(payload) == body
     # no header -> None; bare body -> None + identity
     assert W._http_split(b"HTTP/1.1 200 OK\r\nX: 1\r\n\r\nbody")[0] is None
     assert W._http_split(b"just text") == (None, b"just text")
@@ -434,3 +462,83 @@ def test_warc_to_extract_gates_declared_type_end_to_end(spark, tmp_path):
     assert got["https://png.example/b"] == ("rejected", "invalid_file_type")
     assert got["https://ok.example/a"][0] == "ok"
     assert got["https://oct.example/c"][0] == "ok"
+
+
+def _with_length(rec: bytes, length: int) -> bytes:
+    """``rec``'s WARC head with its Content-Length set to ``length``."""
+    head = rec.partition(b"\r\n\r\n")[0]
+    lines = [
+        ln for ln in head.split(b"\r\n")
+        if not ln.lower().startswith(b"content-length:")
+    ]
+    lines.append(b"Content-Length: %d" % length)
+    return b"\r\n".join(lines) + b"\r\n\r\n"
+
+
+def test_negative_content_length_stops_the_parse(spark, tmp_path):
+    """A negative Content-Length is lost framing: the parse keeps the
+    whole records before it and stops. Minus the head's own length
+    (separator included) sends the cursor back to the record's first
+    byte, which then yielded itself without end (the parse task never
+    finished); any other negative length gave a bogus empty-payload
+    row. islice caps the Spark-free parse so a regression fails instead
+    of hanging."""
+    from itertools import islice
+
+    ts = datetime(2026, 3, 1)
+    good = W._warc_record("https://ex.com/good", ts, b"<html>ok</html>")
+    bad = W._warc_record("https://ex.com/bad", ts, b"<html>bad</html>")
+    n = next(n for n in range(1, 1000) if len(_with_length(bad, -n)) == n)
+    rewind = _with_length(bad, -n)
+    minus_one = _with_length(bad, -1) + bad.partition(b"\r\n\r\n")[2]
+    for poison in (rewind, minus_one):
+        stream = W._parse_warc_stream(iter([good + poison + good]))
+        got = list(islice(stream, 10))
+        assert [r["uri"] for r in got] == ["https://ex.com/good"]
+
+    arch = tmp_path / "arch"
+    arch.mkdir()
+    (arch / "p.warc.gz").write_bytes(gzip.compress(good + rewind + good))
+    rows = W.read_warc(spark, str(arch)).collect()
+    assert [r["url"] for r in rows] == ["https://ex.com/good"]
+
+
+def test_reader_ignores_binaryfile_max_length(spark, tmp_path):
+    """The binaryFile scan selects `path` only, so it never reads
+    `content` and Spark's binary-row size cap never applies: with
+    spark.sql.sources.binaryFile.maxLength below every archive's size,
+    read_warc, a checkpointed WARC run and a WARC stream still parse
+    every record."""
+    from tesseract_ocr_service_spark.config import ExtractConfig
+    from tesseract_ocr_service_spark.plans import commit as Cm
+    from tesseract_ocr_service_spark.streaming import ingest
+
+    arch = tmp_path / "arch"
+    arch.mkdir()
+    recs = _records(20)
+    W.write_warc(str(arch / "a.warc.gz"), recs[:12])
+    W.write_warc(str(arch / "b.warc.gz"), recs[12:], per_record_gzip=False)
+    assert min(os.path.getsize(str(p)) for p in arch.iterdir()) > 100
+
+    spark.conf.set("spark.sql.sources.binaryFile.maxLength", "100")
+    try:
+        df = W.read_warc(spark, str(arch))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ReadSchema: struct<path:string>" in plan, plan
+        assert df.count() == 20
+
+        s = Cm.run_checkpointed(
+            spark, str(arch), str(tmp_path / "out"), ExtractConfig(),
+            source_format="warc",
+        )
+        assert s.n_docs == 20
+
+        out = str(tmp_path / "stream")
+        q = ingest.start_incremental_extract(
+            spark, str(arch), out, str(tmp_path / "ckpt"), source_format="warc"
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        assert spark.read.parquet(f"{out}/extracted").count() == 20
+    finally:
+        spark.conf.unset("spark.sql.sources.binaryFile.maxLength")
