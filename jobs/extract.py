@@ -47,8 +47,9 @@ def parse_args(argv):
         "--salt",
         type=int,
         default=0,
-        help="extraction tasks: the width of the (warc_day, url) range "
-        "partitioning of the input (0 = the default parallelism)",
+        help="extraction tasks: the input's days are placed into this "
+        "many tasks, one file per day when there are at least as many "
+        "days (0 = the default parallelism)",
     )
     p.add_argument("--langs", default=None, help="comma list: lang gate")
     p.add_argument("--pages-list", default=None, help="comma page numbers")

@@ -46,12 +46,17 @@ from ..schema import COMMITTED_SCHEMA, EXTRACTED_SCHEMA
 KERNEL_INPUT = ("url", "warc_ts", "html", "lang")
 
 
+#: ``warc_ts`` as its 'yyyy-MM-dd' day string, as SQL text (the
+#: ``plans.commit`` day plan embeds it)
+WARC_DAY_SQL = "date_format(warc_ts, 'yyyy-MM-dd')"
+
+
 def warc_day() -> Column:
     """``warc_ts`` as its 'yyyy-MM-dd' day string: the partition value
     of the committed output and the key of the lineage counters (the
     one definition — ``kernel.kernel_iter``'s per-day accumulator keys
     are its Arrow mirror)."""
-    return F.date_format("warc_ts", "yyyy-MM-dd")
+    return F.expr(WARC_DAY_SQL)
 
 
 def content_type_ok(ct, allowed: tuple[str, ...] = ALLOWED_CONTENT_TYPES):
@@ -141,7 +146,7 @@ def extract(
     cfg: ExtractConfig = ExtractConfig(),
     salt_partitions: int = 0,
     languages: Optional[tuple[str, ...]] = None,
-    day_timer_acc=None,
+    day_acc=None,
 ) -> DataFrame:
     """pages -> one wide extracted row per document (EXTRACTED_SCHEMA).
 
@@ -162,8 +167,9 @@ def extract(
     override the job-level ExtractConfig per document (the reference's
     per-request OCRConfig, ocr/main.py:104-131).
 
-    ``day_timer_acc``: optional dict accumulator (plans.commit) that
-    collects per-warc_day kernel milliseconds for lineage metrics.
+    ``day_acc``: optional dict accumulator (plans.commit) that collects
+    per-warc_day kernel milliseconds and lineage counters
+    (``kernel.kernel_iter``).
     """
     per_row = [
         c
@@ -196,7 +202,7 @@ def extract(
     # the Arrow arrays it built (mapInPandas would rebuild every span
     # node as a Python dict before converting it back to Arrow)
     return df.mapInArrow(
-        functools.partial(kernel_iter, cfg=cfg, day_acc=day_timer_acc),
+        functools.partial(kernel_iter, cfg=cfg, day_acc=day_acc),
         schema=EXTRACTED_SCHEMA,
     )
 
@@ -260,7 +266,10 @@ def spans_view(wide: DataFrame) -> DataFrame:
 
 def lineage_view(wide: DataFrame) -> DataFrame:
     """Output table 3 `lineage` — per-warc_day counters (the reference
-    logs these per request, ocr_processor.py:463-475,512-527)."""
+    logs these per request, ocr_processor.py:463-475,512-527). A commit
+    takes the same sums from the kernel's accumulator during its write
+    (``kernel.kernel_iter``); this aggregate over written rows is what
+    they must equal."""
     return (
         wide.groupBy(warc_day().alias("warc_day"))
         .agg(

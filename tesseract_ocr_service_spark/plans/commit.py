@@ -21,29 +21,35 @@ rule, with plain parquet — no Iceberg jars offline):
    against the days of a tiny lineage read.
 2. Process ONLY pending days, through :func:`write_days` — the one
    write of extracted rows, which ``streaming.ingest.epoch_sink`` calls
-   too. The raw pending pages are first range-partitioned by
-   ``(warc_day, url)`` (only the kernel's columns cross the exchange;
-   the kernel stage after it stays narrow), so each task extracts one
-   contiguous (day, url) slice and a day lands as ~one file instead of
-   one per input split. The wide output is written with **dynamic
-   partition overwrite** — a re-attempt replaces exactly the partitions
-   it produces, never touching committed ones, and Spark's output
-   committer keeps half-written files in ``_temporary`` out of reads.
-   A committed day directory is therefore written once, already at
-   ~one file, and no compaction pass is needed after it.
+   too. The raw pending pages are first placed into tasks by a plan the
+   driver makes from the sorted pending days (``repartitionById``: no
+   sampling job; only the kernel's columns cross the exchange, and the
+   kernel stage after it stays narrow), so a day lands as one file, or
+   as an even url-hash split over several tasks when there are fewer
+   days than tasks. The layout is a function of the input and the task
+   count alone, so a rerun writes the same bytes. The wide output is
+   written with **dynamic partition overwrite** — a re-attempt replaces
+   exactly the partitions it produces, never touching committed ones,
+   and Spark's output committer keeps half-written files in
+   ``_temporary`` out of reads. A committed day directory is therefore
+   written once, already at its final layout, and no compaction pass is
+   needed after it. The kernel sums each day's lineage counters into an
+   accumulator as it goes (``kernel.kernel_iter``); it runs in the
+   write's result stage, so each partition's sums count once, however
+   often its task was retried.
 3. Write the url -> day index of the pending days to
    ``extracted/_urls/`` (same dynamic overwrite, so a retried day's
    index rows are replaced, never duplicated), THEN append per-day
    counter rows to ``lineage/`` LAST, as one file built on the driver
-   from one counter aggregate over the files just written. A crash
+   from step 2's accumulator (nothing is re-read for them). A crash
    before the marker leaves the day un-committed -> step 1 reprocesses
    it -> overwrite makes the retry idempotent; since the index precedes
    the marker, every committed day has its index. Committed partitions
    are never rewritten, so re-runs are byte-stable.
 
-``salt_partitions`` sizes step 2's range partitioning (the number of
-extraction tasks, and so at most ``days + n - 1`` data files per run);
-0 means the cluster's default parallelism.
+``salt_partitions`` is step 2's task count ``n`` (0 means the cluster's
+default parallelism): a run writes ``max(days, n)`` data files at most,
+one per day when ``days >= n``.
 
 Output layout (one wide columnar table — parquet column pruning means
 text-only readers never touch the fat ``spans`` pages):
@@ -60,6 +66,7 @@ one day directory per point read.
 from __future__ import annotations
 
 import datetime
+import operator
 import posixpath
 import time
 from contextlib import contextmanager
@@ -68,25 +75,36 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark import StorageLevel
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
 from ..operators import extract as X
-from ..schema import COMMITTED_SCHEMA, LINEAGE_SCHEMA
+from ..schema import COMMITTED_SCHEMA, LINEAGE_COUNTERS, LINEAGE_SCHEMA
 
 
 class _DayMsParam(AccumulatorParam):
-    """AccumulatorParam merging {warc_day: milliseconds} dicts — the
-    executor-side collector behind lineage's per-day kernel_ms."""
+    """AccumulatorParam merging {key: number} dicts by a per-key sum."""
 
     def zero(self, value):
         return {}
 
     def addInPlace(self, a, b):
         for k, v in b.items():
-            a[k] = a.get(k, 0.0) + v
+            a[k] = self._sum(a[k], v) if k in a else v
         return a
+
+    _sum = staticmethod(operator.add)
+
+
+class _DayLineageParam(_DayMsParam):
+    """{warc_day: [kernel_ms, *LINEAGE_COUNTERS]} dicts, summed
+    elementwise — the executor-side collector behind a commit's lineage
+    rows (``kernel.kernel_iter``)."""
+
+    @staticmethod
+    def _sum(a, b):
+        return [x + y for x, y in zip(a, b)]
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -209,16 +227,16 @@ def _run_checkpointed_body(
     if not pending:
         return RunSummary(pending, skipped, 0, int((time.perf_counter() - t0) * 1000))
 
-    # ---- step 2: cluster, process + dynamic-partition-overwrite ------
-    # per-day kernel wall collected executor-side (accumulator filled
-    # by kernel_iter during the write action below)
-    day_acc = spark.sparkContext.accumulator({}, _DayMsParam())
+    # ---- step 2: place, process + dynamic-partition-overwrite --------
+    # per-day kernel wall and counters, collected executor-side by
+    # kernel_iter during the write action below
+    day_acc = spark.sparkContext.accumulator({}, _DayLineageParam())
     # warc_ts is non-null by schema contract (undated WARC records ride
     # the epoch sentinel, sources/warc.UNDATED_TS), so the warc_day
     # written is always a real partition value step 1 can enumerate.
     write_days(
         pages.where(F.col("warc_day").isin(pending)), f"{out_root}/extracted",
-        cfg, salt_partitions, languages=languages, day_timer_acc=day_acc,
+        pending, cfg, salt_partitions, languages=languages, day_acc=day_acc,
     )
 
     if _fail_before_commit:
@@ -226,8 +244,7 @@ def _run_checkpointed_body(
 
     # ---- step 3: the url index, then lineage rows LAST (the marker) --
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    # Explicit schema: an all-filtered run writes no files, and
-    # inferring an empty dir throws.
+    # An all-filtered run writes no files: no index to write.
     if _exists(spark, f"{out_root}/extracted"):
         written = (
             spark.read.schema(COMMITTED_SCHEMA)
@@ -239,24 +256,22 @@ def _run_checkpointed_body(
             f"{out_root}/extracted/{X.URL_INDEX}",
             ["warc_day"],
         )
-    else:
-        written = spark.createDataFrame([], COMMITTED_SCHEMA)
-    # counters: ONE aggregate over the just-written files
-    got = {r["warc_day"]: r.asDict() for r in X.lineage_view(written).collect()}
+    # counters: step 2's accumulator, exactly once per written row.
     # EVERY pending day gets a marker, zero-filled if all its rows were
     # filtered away (else it stays pending and resume never converges).
-    # kernel_ms: the write's per-day accumulator (metrics, not a contract).
-    zero = dict.fromkeys(LINEAGE_SCHEMA.fieldNames(), 0)
-    rows = [
-        {
-            **got.get(d, zero),
-            "warc_day": d,
-            "kernel_ms": int(day_acc.value.get(d, 0)),
-            "wall_ms": wall_ms,
-            "attempt": 1,  # a pending day has no lineage row yet
-        }
-        for d in pending
-    ]
+    zero = [0] * (1 + len(LINEAGE_COUNTERS))
+    rows = []
+    for d in pending:
+        kernel_ms, *counters = day_acc.value.get(d, zero)
+        rows.append(
+            {
+                "warc_day": d,
+                **dict(zip(LINEAGE_COUNTERS, counters)),
+                "kernel_ms": int(kernel_ms),
+                "wall_ms": wall_ms,
+                "attempt": 1,  # a pending day has no lineage row yet
+            }
+        )
     # from pandas (Arrow), not the row list: createDataFrame(list) pickles
     # the rows through parallelize and runs a Python-worker job.
     lineage = spark.createDataFrame(
@@ -269,32 +284,59 @@ def _run_checkpointed_body(
 def write_days(
     pages: DataFrame,
     path: str,
+    days: list[str],
     cfg: ExtractConfig = ExtractConfig(),
     n: int = 0,
     epoch_id: int | None = None,
     languages=None,
-    day_timer_acc=None,
+    day_acc=None,
 ) -> None:
     """The one write of extracted rows, shared by a batch run (step 2)
     and a streaming epoch (``streaming.ingest.epoch_sink``).
 
-    The raw pages are range-partitioned into ``n`` tasks (0: the
-    cluster's default parallelism) by (day, url) before the kernel, so
-    each task extracts one contiguous slice and a day lands as ~one
-    file: at most ``days + n - 1`` files per call.
-    Only the kernel's input columns cross the exchange, and the kernel
-    stage after it stays narrow. The output is written with dynamic
-    partition overwrite under ``warc_day``, or under ``epoch_id`` then
-    ``warc_day`` when ``epoch_id`` is given: a retry replaces exactly
-    the partitions it produces and touches no other."""
+    ``days`` are the sorted days ``pages`` holds. The raw pages are
+    placed into ``n`` tasks (0: the cluster's default parallelism) by
+    :func:`_day_tasks`' plan over them: one task per day when there are
+    at least ``n`` days, else each day split evenly by url hash over its
+    share of the tasks — at most ``max(days, n)`` files per call, the
+    same for the same input. Only the kernel's input columns cross the
+    exchange, and the kernel stage after it stays narrow (and in the
+    write's result stage, which ``day_acc``'s exactly-once counters
+    need: see ``kernel.kernel_iter``). The output is written with
+    dynamic partition overwrite under ``warc_day``, or under
+    ``epoch_id`` then ``warc_day`` when ``epoch_id`` is given: a retry
+    replaces exactly the partitions it produces and touches no other."""
     n = n if n > 0 else pages.sparkSession.sparkContext.defaultParallelism
-    todo = pages.repartitionByRange(n, X.warc_day(), "url")
-    out = X.extract(todo, cfg, languages=languages, day_timer_acc=day_timer_acc)
+    todo = pages.repartitionById(n, _day_tasks(days, n))
+    out = X.extract(todo, cfg, languages=languages, day_acc=day_acc)
     keys = ["warc_day"]
     if epoch_id is not None:
         out = out.withColumn("epoch_id", F.lit(int(epoch_id)))
         keys.insert(0, "epoch_id")
     _overwrite(out.withColumn("warc_day", X.warc_day()), path, keys)
+
+
+def _day_tasks(days: list[str], n: int) -> Column:
+    """The task of each row as one SQL-text expression (CLAUDE.md
+    big-expression rule), planned on the driver over the D sorted
+    ``days``: day i goes to task i·n // D. When D >= n that is its one
+    task, so each day lands in one file; when D < n the day spans the
+    k tasks from there to (i+1)·n // D - 1, split by
+    ``pmod(xxhash64(url), k)``. A row of an unlisted day goes to task 0."""
+    if not days:
+        return F.lit(0)
+    d = len(days)
+    groups: dict[str, list[str]] = {}
+    for i, day in enumerate(days):
+        lo, hi = i * n // d, (i + 1) * n // d
+        task = str(lo) if hi - lo <= 1 else f"{lo} + pmod(xxhash64(url), {hi - lo})"
+        quoted = day.replace("\\", "\\\\").replace("'", "\\'")
+        groups.setdefault(task, []).append(f"'{quoted}'")
+    whens = " ".join(
+        f"WHEN {X.WARC_DAY_SQL} IN ({', '.join(ds)}) THEN {task}"
+        for task, ds in groups.items()
+    )
+    return F.expr(f"CAST(CASE {whens} ELSE 0 END AS INT)")
 
 
 @contextmanager

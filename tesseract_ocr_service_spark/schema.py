@@ -169,3 +169,8 @@ LINEAGE_SCHEMA = StructType(
         StructField("attempt", IntegerType(), False),
     ]
 )
+
+#: the lineage counters, in LINEAGE_SCHEMA order: what
+#: ``kernel.kernel_iter`` sums per day from its output batches, and
+#: ``operators.extract.lineage_view`` as a Spark aggregate
+LINEAGE_COUNTERS = tuple(f for f in LINEAGE_SCHEMA.fieldNames() if f.startswith("n_"))

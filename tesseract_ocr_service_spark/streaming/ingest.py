@@ -4,12 +4,14 @@ Pattern: parquet file-source stream, or a path-only stream of WARC
 archives parsed by the batch reader's own parse -> the SAME fused
 extraction kernel (mapInArrow works unchanged on streaming DataFrames —
 it is stateless) -> ``foreachBatch`` sink that calls the batch commit's
-own writer, ``plans.commit.write_days``: the epoch's pages are
-range-partitioned by (day, url) before the kernel (a WARC epoch's parsed
-pages persisted for it, so each archive is parsed once), and the output
-is written partitioned by (epoch_id, warc_day) with DYNAMIC partition
-overwrite — about one file per day directory, at most days + n - 1 per
-epoch (n = the cluster's default parallelism).
+own writer, ``plans.commit.write_days``: the epoch's days come from one
+``distinct`` over the epoch's ``warc_ts``, its pages are placed into
+tasks by the writer's driver-side day plan before the kernel (a WARC
+epoch's parsed pages persisted for both, so each archive is parsed
+once), and the output is written partitioned by (epoch_id, warc_day)
+with DYNAMIC partition overwrite — one file per day directory when the
+epoch holds at least n days, at most max(days, n) per epoch (n = the
+cluster's default parallelism).
 
 Exactly-once story: the streaming checkpoint records which input files
 each epoch consumed, and the sink keys its output on the epoch —
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..config import ExtractConfig
+from ..operators import extract as X
 from ..plans import commit as C
 from ..schema import PAGES_SCHEMA
 
@@ -147,22 +150,24 @@ def stream_warc(
 
 
 def epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
-    """foreachBatch sink: ``plans.commit.write_days`` keyed by
+    """foreachBatch sink: ``plans.commit.write_days`` over the epoch's
+    days (one ``distinct``, reading ``warc_ts`` only), keyed by
     (epoch_id, warc_day) — replaying an epoch rewrites exactly its own
-    partitions (idempotent) instead of appending duplicate rows, each
-    day at ~one file."""
+    partitions (idempotent) instead of appending duplicate rows, with
+    the same layout."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        C.write_days(batch_df, f"{out_root}/extracted", cfg, epoch_id=epoch_id)
+        days = sorted(r[0] for r in batch_df.select(X.warc_day()).distinct().collect())
+        C.write_days(batch_df, f"{out_root}/extracted", days, cfg, epoch_id=epoch_id)
 
     return sink
 
 
 def warc_epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
     """:func:`epoch_sink` with the epoch's parsed WARC pages persisted:
-    ``write_days`` samples its input for the range bounds in a job of
-    its own, which would otherwise gunzip and parse every archive a
-    second time. Parquet epochs re-read cheaply and stay unpersisted."""
+    the day ``distinct`` and the write are two consumers of them, and
+    without the persist each would gunzip and parse every archive.
+    Parquet epochs re-read cheaply and stay unpersisted."""
     write = epoch_sink(out_root, cfg)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:

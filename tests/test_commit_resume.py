@@ -5,8 +5,12 @@ from __future__ import annotations
 
 import datetime
 import glob
+import json
 import os
 import shutil
+import subprocess
+import sys
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +21,7 @@ from tesseract_ocr_service_spark.sources import gen
 
 N_DOCS = 300
 SEED = 11
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -285,15 +290,20 @@ def test_lookup_reads_days_the_index_does_not_cover(spark, paths):
     assert _lookup(spark, out, url) == indexed
 
 
+def _files_per_day(out):
+    """{warc_day: number of data files} of a committed root."""
+    files = glob.glob(os.path.join(out, "extracted", "warc_day=*", "*.parquet"))
+    return dict(Counter(X.dir_day(os.path.basename(os.path.dirname(f))) for f in files))
+
+
 def test_clustered_layout_matches_unclustered_extract(spark, paths):
-    """salt_partitions=n range-partitions the input into n extraction
-    tasks by (day, url): at most days + n - 1 data files, and the same
-    rows as the plain extraction of the same input."""
+    """salt_partitions=n places the input into n extraction tasks by
+    day: with at least n days, each day is exactly one data file, and
+    the rows are those of the plain extraction of the same input."""
     pages, out = paths
     n = 3
     s = C.run_checkpointed(spark, pages, out, salt_partitions=n)
-    files = glob.glob(os.path.join(out, "extracted", "warc_day=*", "*.parquet"))
-    assert len(files) <= len(s.pending_days) + n - 1
+    assert _files_per_day(out) == dict.fromkeys(s.pending_days, 1)
 
     committed = C.read_extracted(spark, out).drop("warc_day").collect()
     plain = X.extract(X.read_pages(spark, pages)).collect()
@@ -355,3 +365,132 @@ def test_warc_and_parquet_sources_share_the_bound_rule(spark, tmp_path):
     assert via_parquet.pending_days == ["2026-01-02", "2026-01-03", "2026-01-04"]
     assert via_warc.pending_days == via_parquet.pending_days
     assert via_warc.n_docs == via_parquet.n_docs > 0
+
+
+@pytest.fixture(scope="module")
+def corpus_1000(spark, tmp_path_factory):
+    pages = str(tmp_path_factory.mktemp("corpus_1000") / "pages")
+    gen.write_pages(spark, pages, 1000, seed=7, partitions=8)
+    return pages
+
+
+@pytest.mark.parametrize(
+    "window, files",
+    [
+        (("2026-01-05", "2026-01-05"), {"2026-01-05": 4}),
+        (("2026-01-05", "2026-01-06"), {"2026-01-05": 2, "2026-01-06": 2}),
+    ],
+)
+def test_fewer_days_than_tasks_split_each_day_evenly(
+    spark, corpus_1000, tmp_path, window, files
+):
+    """With D < n days, each day spans n / D of the n tasks (split by
+    url hash): one day at n = 4 is 4 files, two days 2 + 2."""
+    out = str(tmp_path / "out")
+    s = C.run_checkpointed(
+        spark, corpus_1000, out, ts_from=window[0], ts_to=window[1], salt_partitions=4
+    )
+    assert s.pending_days == sorted(files)
+    assert _files_per_day(out) == files
+
+
+def test_layout_does_not_depend_on_earlier_jobs(spark, corpus_1000, tmp_path):
+    """The file layout is a function of the input and the task count:
+    two commits of one corpus in one session, with unrelated jobs
+    between them, write the same files per day with the same sizes (a
+    sampled range partitioning split some days at different urls)."""
+    def sizes(out):
+        root = os.path.join(out, "extracted")
+        got = {}
+        for f in glob.glob(os.path.join(root, "warc_day=*", "*.parquet")):
+            got.setdefault(os.path.dirname(os.path.relpath(f, root)), []).append(
+                os.path.getsize(f)
+            )
+        return {d: sorted(v) for d, v in got.items()}
+
+    first, second = str(tmp_path / "a"), str(tmp_path / "b")
+    C.run_checkpointed(spark, corpus_1000, first)
+    spark.sparkContext.parallelize(range(100), 3).count()
+    spark.sparkContext.parallelize(range(10)).count()
+    C.run_checkpointed(spark, corpus_1000, second)
+    assert len(sizes(first)) == 30
+    assert sizes(first) == sizes(second)
+
+
+def test_fresh_run_makes_five_jobs(spark, paths):
+    """A fresh parquet-source run is five Spark jobs: the placement
+    exchange and the data write, the url index write, and the lineage
+    append (no sampling job, no counter aggregate)."""
+    pages, out = paths
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-commit", "fresh commit")
+    try:
+        s = C.run_checkpointed(spark, pages, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s.n_docs == N_DOCS
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 5
+
+
+#: one commit on local[2,2] (a task may fail once) whose kernel fails
+#: attempt 0 of partition 0 after two batches
+_RETRY_SCRIPT = r"""
+import json, sys
+from pyspark import TaskContext
+from tesseract_ocr_service_spark.operators import extract as X
+from tesseract_ocr_service_spark.plans import commit as C
+
+pages, out, fired = sys.argv[1:]
+kernel_iter = X.kernel_iter
+
+
+def failing_kernel_iter(batches, **kw):
+    ctx = TaskContext.get()
+    for i, batch in enumerate(kernel_iter(batches, **kw)):
+        if i == 2 and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            open(fired, "w").close()
+            raise RuntimeError("injected task failure")
+        yield batch
+
+
+X.kernel_iter = failing_kernel_iter
+spark = (
+    X.session_builder(master="local[2,2]", arrow_batch_rows=16)
+    .config("spark.ui.enabled", "false")
+    .config("spark.ui.showConsoleProgress", "false")
+    .getOrCreate()
+)
+print(json.dumps({"n_docs": C.run_checkpointed(spark, pages, out).n_docs}))
+spark.stop()
+"""
+
+
+@pytest.mark.slow
+def test_lineage_counters_survive_a_task_retry(spark, paths, tmp_path):
+    """The lineage counters count each written row once although a task
+    of the write failed after extracting three batches and was retried:
+    the kernel's accumulator is merged from result tasks only, once per
+    partition (kernel.kernel_iter)."""
+    pages, out = paths
+    fired = str(tmp_path / "fired")
+    script = tmp_path / "retry.py"
+    script.write_text(_RETRY_SCRIPT)
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, str(script), pages, out, fired],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert os.path.exists(fired)  # the injected failure happened
+    summary = next(json.loads(l) for l in r.stdout.splitlines() if l.startswith("{"))
+    assert summary["n_docs"] == N_DOCS
+
+    lineage = {r["warc_day"]: r.asDict() for r in C.read_lineage(spark, out).collect()}
+    view = {
+        r["warc_day"]: r.asDict()
+        for r in X.lineage_view(C.read_extracted(spark, out)).collect()
+    }
+    assert set(lineage) == set(view)
+    for day, counters in view.items():
+        assert {k: lineage[day][k] for k in counters} == counters, day
+    assert sum(r["n_docs"] for r in lineage.values()) == N_DOCS

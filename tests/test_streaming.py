@@ -390,10 +390,9 @@ def test_streaming_warc_equals_batch_extract(spark, tmp_path):
 
 
 def test_warc_epoch_parses_each_archive_once(spark, tmp_path, monkeypatch):
-    """A WARC epoch's parsed pages are persisted for the epoch:
-    write_days' range partitioning samples its input in a job of its
-    own, and without the persist that job and the write each parsed
-    every archive. A counting wrapper around the parse (defined here,
+    """A WARC epoch's parsed pages are persisted for the epoch: the
+    sink's day distinct and write_days are two consumers of them, and
+    without the persist each parsed every archive. A counting wrapper around the parse (defined here,
     so it is pickled by value with its accumulator) sees each archive
     parsed exactly once."""
     from tesseract_ocr_service_spark.plans import commit as C
