@@ -19,18 +19,15 @@ Scale design notes (100 TB / 1000 executors):
   stays well inside executor memory.
 - Partition pruning on warc_ts is expressed as a plain filter on the
   partition column so Catalyst prunes warc_day directories at plan time.
-- A point read (``lookup_spans``/``document_json``) pays per file it
-  lists plus one schema-inference job, not per row it returns. On a root
-  committed by plans/commit.py the ``_urls`` url -> day index (one
-  filtered driver-side pyarrow read) narrows the read to the url's day
-  directory, read with the committed schema. A table without the index
-  is read whole.
+- A point read (``lookup_spans``/``document_json``) runs no Spark job:
+  the driver finds the url's files by a pyarrow scan of the table's own
+  ``url`` column, reads the matching rows from those files with pyarrow,
+  and hands Spark one small local frame.
 """
 
 from __future__ import annotations
 
 import functools
-import posixpath
 from typing import Optional
 from urllib.parse import unquote
 
@@ -39,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..config import ALLOWED_CONTENT_TYPES, ExtractConfig
 from ..functions.kernel import kernel_iter
-from ..schema import COMMITTED_SCHEMA, EXTRACTED_SCHEMA
+from ..schema import EXTRACTED_SCHEMA
 
 #: columns the kernel needs — `text` (the raw noise column) is never read,
 #: so parquet column pruning skips it (verify: ReadSchema in explain()).
@@ -289,10 +286,6 @@ def lineage_view(wide: DataFrame) -> DataFrame:
     )
 
 
-#: the url -> day index beside a committed table (plans/commit.py step 3)
-URL_INDEX = "_urls"
-
-
 def dir_day(name: str) -> Optional[str]:
     """The day of a ``warc_day=...`` directory name (hive-unescaped, as
     pyarrow's hive partitioning reads it); None for any other entry."""
@@ -300,84 +293,74 @@ def dir_day(name: str) -> Optional[str]:
     return unquote(value) if key == "warc_day" and eq else None
 
 
-def _indexed_entries(spans_path: str, url: str) -> Optional[list[str]]:
-    """Names of the table entries a read of ``url`` must open, or None
-    when the table has no url index.
-
-    The index covers the days that have a ``_urls/warc_day=D`` directory
-    (found by the index dataset's one listing). Of those, only the
-    url's own days are kept (one filtered driver-side read); every
-    entry the index does not cover is kept too: days committed before
-    the index existed, streaming ``epoch_id=`` directories, the files
-    of an unpartitioned table."""
-    import pyarrow as pa
+def spans_table(spans_path: str):
+    """The table at ``spans_path`` as a pyarrow dataset, its hive
+    partition values typed as the directories name them (``warc_day``
+    a string, ``epoch_id`` an int). Entries starting with ``_`` or
+    ``.`` are skipped, as Spark skips them."""
     import pyarrow.dataset as ds
-    from pyarrow import fs as pafs
 
     from ..sources.warc import arrow_fs
 
     fs, root = arrow_fs(spans_path)
-    root = root.rstrip("/")
-    try:
-        index = ds.dataset(
-            f"{root}/{URL_INDEX}",
-            filesystem=fs,
-            format="parquet",
-            schema=pa.schema([("url", pa.string()), ("warc_day", pa.string())]),
-            partitioning="hive",
-        )
-    except FileNotFoundError:
-        return None
-    covered = {
-        dir_day(posixpath.basename(posixpath.dirname(f))) for f in index.files
-    } - {None}
-    days = set(
-        index.to_table(columns=["warc_day"], filter=ds.field("url") == url)
-        .column("warc_day")
-        .to_pylist()
-    )
-    names = [
-        posixpath.basename(e.path)
-        for e in fs.get_file_info(pafs.FileSelector(root))
-    ]
-    return [
-        n
-        for n in names
-        if not n.startswith(("_", "."))
-        and (dir_day(n) not in covered or dir_day(n) in days)
-    ]
+    return ds.dataset(root, filesystem=fs, format="parquet", partitioning="hive")
+
+
+def url_files(table, url: str) -> list[str]:
+    """The paths of the data files of ``table`` (:func:`spans_table`)
+    that hold ``url``: one scan of the table's own ``url`` column (a
+    row group whose url min/max excludes ``url`` is skipped),
+    projecting each match's file name."""
+    import pyarrow.dataset as ds
+
+    hits = table.to_table(columns=["__filename"], filter=ds.field("url") == url)
+    return sorted(set(hits.column("__filename").to_pylist()))
 
 
 def lookup_spans(spark: SparkSession, spans_path: str, url: str) -> DataFrame:
     """Point lookup: url -> full hierarchy (GET /documents/{id}/coordinates,
     ocr/main.py:198-228; store get at coordinates_store.py:61-78).
 
-    On a committed root (plans/commit.py) the ``_urls`` index names the
-    url's day, so the read opens that one day directory (plus any entry
-    the index does not cover, see :func:`_indexed_entries`) with the
-    committed schema: no full-table listing and no schema-inference
-    job. A table without the index (a streaming root, a ``spans_view``
-    written elsewhere) is read whole, partition-pruned and
-    min/max-skipped. Either way: a filter on url, no shuffle."""
-    entries = _indexed_entries(spans_path, url)
-    if entries is None:
-        df = spark.read.parquet(spans_path)
-    else:
-        base = spans_path.rstrip("/")
-        df = (
-            spark.read.schema(COMMITTED_SCHEMA)
-            .option("basePath", base)
-            .parquet(*(f"{base}/{n}" for n in entries))
+    One path for every table kind — a committed root, a streaming
+    ``epoch_id=N/warc_day=D`` root, a plain ``spans_view`` table: the
+    files holding ``url`` (:func:`url_files`) are read on the driver
+    with pyarrow, filtered on url (memory bounded by row groups, not
+    files), and handed to Spark as one small local frame, so the read
+    runs no Spark job. Naive parquet timestamps are read as UTC
+    instants, so ``warc_ts`` does not shift under a non-UTC session
+    time zone."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    table = spans_table(spans_path)
+    files = set(url_files(table, url))
+    rows = ds.FileSystemDataset(
+        [f for f in table.get_fragments() if f.path in files],
+        table.schema,
+        table.format,
+        table.filesystem,
+    ).to_table(filter=ds.field("url") == url)
+    utc = pa.timestamp("us", "UTC")
+    rows = rows.cast(
+        pa.schema(
+            f.with_type(utc)
+            if pa.types.is_timestamp(f.type) and f.type.tz is None
+            else f
+            for f in rows.schema
         )
-    return df.where(F.col("url") == F.lit(url))
+    )
+    # through pandas: createDataFrame(pa.Table) rejects the non-null
+    # nested span structs
+    return spark.createDataFrame(rows.to_pandas(), from_arrow_schema(rows.schema))
 
 
 def document_json(spark: SparkSession, spans_path: str, url: str) -> DataFrame:
     """GET /documents/{id}/coordinates response shape (S12): the nested
     spans hierarchy rendered as unicode-preserving JSON — the reference's
     ``_document_to_dict`` + UnicodeJSONResponse (ocr/main.py:244-298,
-    41-51) as one :func:`lookup_spans` read (one day directory on an
-    indexed root) + to_json projection."""
+    41-51) as one :func:`lookup_spans` read + to_json projection, which
+    Spark folds into the local frame on the driver: no Spark job."""
     return lookup_spans(spark, spans_path, url).select(
         F.col("url").alias("doc_id"),  # deterministic key (uuid4 delta)
         F.to_json(

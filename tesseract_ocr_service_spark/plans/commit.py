@@ -37,15 +37,11 @@ rule, with plain parquet — no Iceberg jars offline):
    accumulator as it goes (``kernel.kernel_iter``); it runs in the
    write's result stage, so each partition's sums count once, however
    often its task was retried.
-3. Write the url -> day index of the pending days to
-   ``extracted/_urls/`` (same dynamic overwrite, so a retried day's
-   index rows are replaced, never duplicated), THEN append per-day
-   counter rows to ``lineage/`` LAST, as one file built on the driver
-   from step 2's accumulator (nothing is re-read for them). A crash
-   before the marker leaves the day un-committed -> step 1 reprocesses
-   it -> overwrite makes the retry idempotent; since the index precedes
-   the marker, every committed day has its index. Committed partitions
-   are never rewritten, so re-runs are byte-stable.
+3. Append per-day counter rows to ``lineage/`` LAST, as one file built
+   on the driver from step 2's accumulator (nothing is re-read for
+   them). A crash before the marker leaves the day un-committed -> step
+   1 reprocesses it -> overwrite makes the retry idempotent. Committed
+   partitions are never rewritten, so re-runs are byte-stable.
 
 ``salt_partitions`` is step 2's task count ``n`` (0 means the cluster's
 default parallelism): a run writes ``max(days, n)`` data files at most,
@@ -54,13 +50,12 @@ one per day when ``days >= n``.
 Output layout (one wide columnar table — parquet column pruning means
 text-only readers never touch the fat ``spans`` pages):
 
-    out_root/extracted/warc_day=YYYY-MM-DD/*.parquet        (COMMITTED_SCHEMA)
-    out_root/extracted/_urls/warc_day=YYYY-MM-DD/*.parquet  (url: the index)
-    out_root/lineage/*.parquet                              (LINEAGE_SCHEMA)
+    out_root/extracted/warc_day=YYYY-MM-DD/*.parquet   (EXTRACTED_SCHEMA)
+    out_root/lineage/*.parquet                         (LINEAGE_SCHEMA)
 
-The ``_`` prefix hides ``_urls`` from every Spark and pyarrow listing of
-``extracted``; only ``operators.extract.lookup_spans`` reads it, to open
-one day directory per point read.
+A point read (``operators.extract.lookup_spans``) finds a url by a scan
+of the data files' own ``url`` column, so no index is written beside
+them.
 """
 
 from __future__ import annotations
@@ -80,7 +75,7 @@ from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
 from ..operators import extract as X
-from ..schema import COMMITTED_SCHEMA, LINEAGE_COUNTERS, LINEAGE_SCHEMA
+from ..schema import LINEAGE_COUNTERS, LINEAGE_SCHEMA
 
 
 class _DayMsParam(AccumulatorParam):
@@ -242,20 +237,8 @@ def _run_checkpointed_body(
     if _fail_before_commit:
         raise RuntimeError("injected failure between data write and commit marker")
 
-    # ---- step 3: the url index, then lineage rows LAST (the marker) --
+    # ---- step 3: lineage rows LAST (the marker) ----------------------
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    # An all-filtered run writes no files: no index to write.
-    if _exists(spark, f"{out_root}/extracted"):
-        written = (
-            spark.read.schema(COMMITTED_SCHEMA)
-            .parquet(f"{out_root}/extracted")
-            .where(F.col("warc_day").isin(pending))
-        )
-        _overwrite(
-            written.select("url", "warc_day"),
-            f"{out_root}/extracted/{X.URL_INDEX}",
-            ["warc_day"],
-        )
     # counters: step 2's accumulator, exactly once per written row.
     # EVERY pending day gets a marker, zero-filled if all its rows were
     # filtered away (else it stays pending and resume never converges).
@@ -313,7 +296,14 @@ def write_days(
     if epoch_id is not None:
         out = out.withColumn("epoch_id", F.lit(int(epoch_id)))
         keys.insert(0, "epoch_id")
-    _overwrite(out.withColumn("warc_day", X.warc_day()), path, keys)
+    # dynamic overwrite per write, whatever the session-level default
+    (
+        out.withColumn("warc_day", X.warc_day())
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*keys)
+        .parquet(path)
+    )
 
 
 def _day_tasks(days: list[str], n: int) -> Column:
@@ -349,18 +339,6 @@ def persisted(df: DataFrame):
         yield cached
     finally:
         cached.unpersist()
-
-
-def _overwrite(df: DataFrame, path: str, keys: list[str]) -> None:
-    """Write ``df`` under ``path`` partitioned by ``keys``, replacing
-    only the partitions present in ``df`` (dynamic overwrite, regardless
-    of the session-level default)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*keys)
-        .parquet(path)
-    )
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

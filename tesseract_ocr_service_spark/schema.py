@@ -141,13 +141,6 @@ EXTRACTED_SCHEMA = StructType(
 #: functions/assembly.py are read off it).
 EXTRACTED_ARROW = to_arrow_schema(EXTRACTED_SCHEMA)
 
-#: a committed root's ``extracted/`` table as readers see it: the kernel
-#: row plus the ``warc_day`` directory value (plans/commit.py). Reading
-#: with it skips Spark's schema-inference job and keeps warc_day a string.
-COMMITTED_SCHEMA = StructType(
-    EXTRACTED_SCHEMA.fields + [StructField("warc_day", StringType(), False)]
-)
-
 #: lineage table — per-partition counters (the reference logs these per
 #: request at ocr_processor.py:463-475,512-527; we persist them).
 LINEAGE_SCHEMA = StructType(

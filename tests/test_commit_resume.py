@@ -7,7 +7,6 @@ import datetime
 import glob
 import json
 import os
-import shutil
 import subprocess
 import sys
 from collections import Counter
@@ -122,7 +121,7 @@ def test_crash_before_marker_then_resume_is_idempotent(spark, paths):
 
     # the crashed days are NOT committed...
     assert C.committed_days(spark, out) == committed_before
-    # ...their rows have no index yet, yet a point read still finds them
+    # ...yet a point read already finds their rows
     crashed = [u for u, d in _days(spark, out).items() if d not in committed_before]
     assert [r["doc_id"] for r in _lookup(spark, out, crashed[0])] == [crashed[0]]
 
@@ -245,49 +244,83 @@ def test_all_filtered_run_commits_zero_markers(spark, paths):
     assert not s2.pending_days and s2.skipped_days == s1.pending_days
 
 
-def test_index_covers_every_day_a_later_run_commits(spark, paths):
-    """Each run writes its days' url index before its marker: after a
-    second run adds days, the index has one directory per committed
-    day and a url only the second run committed is found."""
+def test_lookup_finds_a_day_a_later_run_commits(spark, paths):
+    """A url only the second run committed is found by a point read."""
     pages, out = paths
     C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-10")
     s2 = C.run_checkpointed(spark, pages, out)
-    index = sorted(os.listdir(os.path.join(out, "extracted", "_urls")))
-    assert index == [f"warc_day={d}" for d in sorted(C.committed_days(spark, out))]
     late = [u for u, d in _days(spark, out).items() if d == s2.pending_days[-1]]
     assert late
     assert [r["doc_id"] for r in _lookup(spark, out, late[0])] == [late[0]]
 
 
 def test_point_read_opens_only_the_urls_day(spark, paths):
+    """The files a point read opens all lie in the url's day directory
+    (the read builds a local frame, so ``inputFiles()`` is empty: the
+    file-resolving helper is what is checked)."""
     pages, out = paths
     C.run_checkpointed(spark, pages, out)
     days = _days(spark, out)
+    table = X.spans_table(f"{out}/extracted")
     for url in sorted(days)[:: len(days) // 5]:
-        df = X.document_json(spark, f"{out}/extracted", url)
-        files = df.inputFiles()
+        files = X.url_files(table, url)
         assert files and all(f"/warc_day={days[url]}/" in f for f in files), url
-        assert len(df.collect()) == 1
+        assert len(_lookup(spark, out, url)) == 1
 
 
-def test_lookup_reads_days_the_index_does_not_cover(spark, paths):
-    """A day without its index directory (committed before the index
-    existed) is read whole; a root without any index is read as a
-    plain table. Both return the same response bytes."""
+def test_point_read_runs_no_job(spark, paths):
+    """A point read (``document_json(...).collect()``) starts no Spark
+    job: the rows are read on the driver and the to_json projection is
+    folded into the local frame."""
     pages, out = paths
     C.run_checkpointed(spark, pages, out)
-    days = _days(spark, out)
-    url = sorted(days)[len(days) // 2]
-    indexed = _lookup(spark, out, url)
-    assert len(indexed) == 1
+    url = sorted(_days(spark, out))[N_DOCS // 2]
+    sc = spark.sparkContext
+    sc.setJobGroup("point-read", "point read")
+    try:
+        rows = _lookup(spark, out, url)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["doc_id"] for r in rows] == [url]
+    assert sc.statusTracker().getJobIdsForGroup("point-read") == []
 
-    shutil.rmtree(os.path.join(out, "extracted", "_urls", f"warc_day={days[url]}"))
-    assert _lookup(spark, out, url) == indexed
-    other = next(u for u, d in sorted(days.items()) if d != days[url])
-    assert [r["doc_id"] for r in _lookup(spark, out, other)] == [other]
 
-    shutil.rmtree(os.path.join(out, "extracted", "_urls"))
-    assert _lookup(spark, out, url) == indexed
+def test_lookup_matches_a_spark_read_on_every_table_kind(spark, paths, tmp_path):
+    """On a committed root, a streaming root and a plain ``spans_view``
+    table, a point read returns the rows a Spark read of the table
+    filtered on url returns, data columns (``warc_ts`` included) equal,
+    whatever the session time zone; a url in no file gives no row."""
+    from tesseract_ocr_service_spark.streaming import ingest
+
+    pages, out = paths
+    C.run_checkpointed(spark, pages, out)
+    committed = f"{out}/extracted"
+    stream_out = str(tmp_path / "stream")
+    q = ingest.start_incremental_extract(
+        spark, pages, stream_out, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(300)
+    plain = str(tmp_path / "spans")
+    X.spans_view(spark.read.parquet(committed)).write.parquet(plain)
+    urls = sorted(_days(spark, out))[:: N_DOCS // 12]
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for zone in ("UTC", "America/Los_Angeles"):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            for root in (committed, f"{stream_out}/extracted", plain):
+                table = spark.read.parquet(root)
+                cols = [c for c in table.columns if c not in ("warc_day", "epoch_id")]
+                expect = {}
+                for r in table.where(F.col("url").isin(urls)).select(*cols).collect():
+                    expect.setdefault(r["url"], []).append(r)
+                assert sorted(expect) == urls, root
+                for url in urls:
+                    got = X.lookup_spans(spark, root, url).select(*cols).collect()
+                    assert got == expect[url], (zone, root, url)
+                assert X.lookup_spans(spark, root, "http://absent.invalid/").collect() == []
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def _files_per_day(out):
@@ -417,10 +450,10 @@ def test_layout_does_not_depend_on_earlier_jobs(spark, corpus_1000, tmp_path):
     assert sizes(first) == sizes(second)
 
 
-def test_fresh_run_makes_five_jobs(spark, paths):
-    """A fresh parquet-source run is five Spark jobs: the placement
-    exchange and the data write, the url index write, and the lineage
-    append (no sampling job, no counter aggregate)."""
+def test_fresh_run_makes_four_jobs(spark, paths):
+    """A fresh parquet-source run is four Spark jobs: the pages schema
+    read, the placement exchange, the kernel and data write, and the
+    lineage append (no sampling job, no counter aggregate, no index)."""
     pages, out = paths
     sc = spark.sparkContext
     sc.setJobGroup("fresh-commit", "fresh commit")
@@ -429,7 +462,7 @@ def test_fresh_run_makes_five_jobs(spark, paths):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert s.n_docs == N_DOCS
-    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 4
 
 
 #: one commit on local[2,2] (a task may fail once) whose kernel fails
