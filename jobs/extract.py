@@ -19,6 +19,14 @@ Local smoke:
 The run is idempotent and resumable: re-submitting the same command
 after any failure processes only the un-committed warc_day partitions
 (see plans/commit.py).
+
+The driver reads and appends the commit log (--out/lineage) with its
+own pyarrow, at the path Spark resolves --out to (a path without a
+scheme lies on fs.defaultFS). pyarrow does not see Hadoop's fs.*
+settings: an s3a:// root needs the AWS environment or profile on the
+driver (an endpoint or keys set only as spark.hadoop.fs.s3a.* do not
+carry over), an hdfs:// root needs libhdfs there, and a scheme pyarrow
+cannot open (abfs, wasb) fails the run before it writes anything.
 """
 
 from __future__ import annotations
@@ -40,7 +48,11 @@ if _REPO not in sys.path:
 def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--pages", required=True, help="pages table root")
-    p.add_argument("--out", required=True, help="output root")
+    p.add_argument(
+        "--out",
+        required=True,
+        help="output root; the driver's pyarrow must reach it too",
+    )
     p.add_argument("--ts-from", default=None, help="warc_day lower bound")
     p.add_argument("--ts-to", default=None, help="warc_day upper bound")
     p.add_argument(

@@ -326,14 +326,18 @@ def lookup_spans(spark: SparkSession, spans_path: str, url: str) -> DataFrame:
     files holding ``url`` (:func:`url_files`) are read on the driver
     with pyarrow, filtered on url (memory bounded by row groups, not
     files), and handed to Spark as one small local frame, so the read
-    runs no Spark job. Naive parquet timestamps are read as UTC
-    instants, so ``warc_ts`` does not shift under a non-UTC session
-    time zone."""
+    runs no Spark job. ``spans_path`` is first resolved as Spark
+    resolves it (``sources.warc.spark_uri``), then opened with the
+    driver's own pyarrow configuration (no Hadoop ``fs.*`` setting
+    carries over). Naive parquet timestamps are read as UTC instants,
+    so ``warc_ts`` does not shift under a non-UTC session time zone."""
     import pyarrow as pa
     import pyarrow.dataset as ds
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    table = spans_table(spans_path)
+    from ..sources.warc import spark_uri
+
+    table = spans_table(spark_uri(spark, spans_path))
     files = set(url_files(table, url))
     rows = ds.FileSystemDataset(
         [f for f in table.get_fragments() if f.path in files],

@@ -12,13 +12,13 @@ Protocol (emulating the Iceberg snapshot-commit behaviors named by the
 rule, with plain parquet — no Iceberg jars offline):
 
 1. ``pending = input warc_days - committed warc_days`` where committed =
-   days present in the lineage table. The input days are the
+   days present in the lineage table, read on the driver with pyarrow
+   (:func:`committed_days`: no job runs). The input days are the
    ``warc_day=`` directories of the pages table's file listing (held by
    the file index already, so no job runs; a day directory whose files
    hold no rows is pending too, and gets a zero marker). A WARC source,
    whose warc_day is a parsed column, takes one ``distinct()`` over its
-   persisted frame instead. The set difference runs on the driver
-   against the days of a tiny lineage read.
+   persisted frame instead.
 2. Process ONLY pending days, through :func:`write_days` — the one
    write of extracted rows, which ``streaming.ingest.epoch_sink`` calls
    too. The raw pending pages are first placed into tasks by a plan the
@@ -27,21 +27,30 @@ rule, with plain parquet — no Iceberg jars offline):
    kernel stage after it stays narrow), so a day lands as one file, or
    as an even url-hash split over several tasks when there are fewer
    days than tasks. The layout is a function of the input and the task
-   count alone, so a rerun writes the same bytes. The wide output is
-   written with **dynamic partition overwrite** — a re-attempt replaces
-   exactly the partitions it produces, never touching committed ones,
-   and Spark's output committer keeps half-written files in
-   ``_temporary`` out of reads. A committed day directory is therefore
-   written once, already at its final layout, and no compaction pass is
-   needed after it. The kernel sums each day's lineage counters into an
-   accumulator as it goes (``kernel.kernel_iter``); it runs in the
-   write's result stage, so each partition's sums count once, however
-   often its task was retried.
-3. Append per-day counter rows to ``lineage/`` LAST, as one file built
-   on the driver from step 2's accumulator (nothing is re-read for
-   them). A crash before the marker leaves the day un-committed -> step
-   1 reprocesses it -> overwrite makes the retry idempotent. Committed
-   partitions are never rewritten, so re-runs are byte-stable.
+   count alone, so a rerun writes the same rows in the same files, at
+   the same sizes. The wide output is written with **dynamic partition
+   overwrite** — a re-attempt replaces exactly the partitions it
+   produces, never touching committed ones, and Spark's output
+   committer keeps half-written files in ``_temporary`` out of reads. A
+   committed day directory is therefore written once, already at its
+   final layout, and no compaction pass is needed after it. The kernel
+   sums each day's lineage counters into an accumulator as it goes
+   (``kernel.kernel_iter``); it runs in the write's result stage, so
+   each partition's sums count once, however often its task was
+   retried.
+3. Append per-day counter rows to ``lineage/`` LAST, as one parquet
+   file pyarrow builds from step 2's accumulator (nothing is re-read)
+   and writes on the driver (no job) under a ``_`` name readers skip,
+   then publishes by one move to ``part-<uuid>.parquet``. A crash before
+   the marker leaves the day un-committed -> step 1 reprocesses it ->
+   overwrite makes the retry idempotent. Committed partitions are never
+   rewritten, so re-runs are byte-stable.
+
+Steps 1 and 3 open ``out_root/lineage`` where Spark resolves it
+(``sources.warc.spark_uri``; no scheme: ``fs.defaultFS``) with the
+driver's pyarrow, as point reads do. pyarrow never sees Hadoop's
+``fs.*``: ``hdfs://`` needs libhdfs on the driver, ``s3a://`` the AWS
+environment or profile; a scheme pyarrow cannot open fails step 1.
 
 ``salt_partitions`` is step 2's task count ``n`` (0 means the cluster's
 default parallelism): a run writes ``max(days, n)`` data files at most,
@@ -61,13 +70,16 @@ them.
 from __future__ import annotations
 
 import datetime
-import operator
 import posixpath
 import time
-from contextlib import contextmanager
+import uuid
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark import StorageLevel
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -75,49 +87,36 @@ from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
 from ..operators import extract as X
-from ..schema import LINEAGE_COUNTERS, LINEAGE_SCHEMA
+from ..schema import LINEAGE_ARROW, LINEAGE_COUNTERS
+from ..sources import warc as Wsrc
 
 
-class _DayMsParam(AccumulatorParam):
-    """AccumulatorParam merging {key: number} dicts by a per-key sum."""
+class _DayLineageParam(AccumulatorParam):
+    """{warc_day: [kernel_ms, *LINEAGE_COUNTERS]} dicts, merged by an
+    elementwise per-key sum — the executor-side collector behind a
+    commit's lineage rows (``kernel.kernel_iter``)."""
 
     def zero(self, value):
         return {}
 
     def addInPlace(self, a, b):
         for k, v in b.items():
-            a[k] = self._sum(a[k], v) if k in a else v
+            a[k] = [x + y for x, y in zip(a[k], v)] if k in a else v
         return a
-
-    _sum = staticmethod(operator.add)
-
-
-class _DayLineageParam(_DayMsParam):
-    """{warc_day: [kernel_ms, *LINEAGE_COUNTERS]} dicts, summed
-    elementwise — the executor-side collector behind a commit's lineage
-    rows (``kernel.kernel_iter``)."""
-
-    @staticmethod
-    def _sum(a, b):
-        return [x + y for x, y in zip(a, b)]
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf).exists(p)
 
 
 def committed_days(spark: SparkSession, out_root: str) -> set[str]:
-    """Days already committed = days present in the lineage table."""
-    path = f"{out_root}/lineage"
-    if not _exists(spark, path):
-        return set()
-    return {
-        r["warc_day"]
-        for r in spark.read.parquet(path).select("warc_day").distinct().collect()
-    }
+    """Days already committed = days present in the lineage table, read
+    on the driver with pyarrow (no Spark job). The listing allows a
+    missing directory and the schema is known, so a missing or empty
+    log is no days; entries starting with ``_`` or ``.`` (an unpublished
+    marker, Spark's ``_SUCCESS`` and ``.crc`` files) are skipped, as
+    Spark skips them. The log is where Spark resolves it."""
+    fs, root = Wsrc.arrow_fs(Wsrc.spark_uri(spark, f"{out_root}/lineage"))
+    listing = pafs.FileSelector(root, allow_not_found=True)
+    log = ds.FileSystemDatasetFactory(fs, listing, ds.ParquetFileFormat())
+    days = log.finish(LINEAGE_ARROW).to_table(columns=["warc_day"])
+    return set(days.column("warc_day").to_pylist())
 
 
 def _bound_day(ts) -> str | None:
@@ -188,51 +187,47 @@ def run_checkpointed(
     t0 = time.perf_counter()
     # one bound rule for both sources: a bound keeps its date
     lo, hi = _bound_day(ts_from), _bound_day(ts_to)
-    args = (out_root, cfg, t0, salt_partitions, languages, _fail_before_commit)
-    if source_format != "warc":
-        pages = X.read_pages(spark, pages_path, lo, hi)
-        return _run_checkpointed_body(spark, pages, listed_days(pages, lo, hi), *args)
+    with ExitStack() as stack:
+        if source_format != "warc":
+            pages = X.read_pages(spark, pages_path, lo, hi)
+            input_days = listed_days(pages, lo, hi)
+        else:
+            pages = Wsrc.read_warc(spark, pages_path)
+            if lo is not None:
+                pages = pages.where(F.col("warc_day") >= F.lit(lo))
+            if hi is not None:
+                pages = pages.where(F.col("warc_day") <= F.lit(hi))
+            # the day enumeration and the extraction write are two
+            # consumers, each re-running the whole gunzip+parse (CLAUDE.md
+            # extra-consumer rule), the run's dominant cost. Persisted for
+            # the run (spills to executor disk: the staging pass the
+            # docstring recommends, in-flight).
+            pages = stack.enter_context(persisted(pages))
+            input_days = sorted(
+                str(r["warc_day"])
+                for r in pages.select("warc_day").distinct().collect()
+            )
 
-    from ..sources import warc as Wsrc
+        # ---- step 1: partition-level anti-join against the commit log
+        done = committed_days(spark, out_root)
+        pending = [d for d in input_days if d not in done]
+        skipped = [d for d in input_days if d in done]
+        if not pending:
+            wall_ms = int((time.perf_counter() - t0) * 1000)
+            return RunSummary(pending, skipped, 0, wall_ms)
 
-    pages = Wsrc.read_warc(spark, pages_path)
-    if lo is not None:
-        pages = pages.where(F.col("warc_day") >= F.lit(lo))
-    if hi is not None:
-        pages = pages.where(F.col("warc_day") <= F.lit(hi))
-    # the day enumeration and the extraction write are two consumers,
-    # each re-running the whole gunzip+parse (CLAUDE.md extra-consumer
-    # rule), the run's dominant cost. Persisted for the run (spills to
-    # executor disk: the staging pass the docstring recommends, in-flight).
-    with persisted(pages) as pages:
-        input_days = sorted(
-            str(r["warc_day"]) for r in pages.select("warc_day").distinct().collect()
+        # ---- step 2: place, process + dynamic-partition-overwrite ----
+        # per-day kernel wall and counters, collected executor-side by
+        # kernel_iter during the write action below
+        day_acc = spark.sparkContext.accumulator({}, _DayLineageParam())
+        # warc_ts is non-null by schema contract (undated WARC records
+        # ride the epoch sentinel, sources/warc.UNDATED_TS), so the
+        # warc_day written is always a real partition value step 1 can
+        # enumerate.
+        write_days(
+            pages.where(F.col("warc_day").isin(pending)), f"{out_root}/extracted",
+            pending, cfg, salt_partitions, languages=languages, day_acc=day_acc,
         )
-        return _run_checkpointed_body(spark, pages, input_days, *args)
-
-
-def _run_checkpointed_body(
-    spark, pages, input_days, out_root, cfg, t0, salt_partitions,
-    languages, _fail_before_commit,
-) -> RunSummary:
-    # ---- step 1: partition-level anti-join against the commit log ----
-    done = committed_days(spark, out_root)
-    pending = [d for d in input_days if d not in done]
-    skipped = [d for d in input_days if d in done]
-    if not pending:
-        return RunSummary(pending, skipped, 0, int((time.perf_counter() - t0) * 1000))
-
-    # ---- step 2: place, process + dynamic-partition-overwrite --------
-    # per-day kernel wall and counters, collected executor-side by
-    # kernel_iter during the write action below
-    day_acc = spark.sparkContext.accumulator({}, _DayLineageParam())
-    # warc_ts is non-null by schema contract (undated WARC records ride
-    # the epoch sentinel, sources/warc.UNDATED_TS), so the warc_day
-    # written is always a real partition value step 1 can enumerate.
-    write_days(
-        pages.where(F.col("warc_day").isin(pending)), f"{out_root}/extracted",
-        pending, cfg, salt_partitions, languages=languages, day_acc=day_acc,
-    )
 
     if _fail_before_commit:
         raise RuntimeError("injected failure between data write and commit marker")
@@ -255,12 +250,13 @@ def _run_checkpointed_body(
                 "attempt": 1,  # a pending day has no lineage row yet
             }
         )
-    # from pandas (Arrow), not the row list: createDataFrame(list) pickles
-    # the rows through parallelize and runs a Python-worker job.
-    lineage = spark.createDataFrame(
-        pd.DataFrame(rows, columns=LINEAGE_SCHEMA.fieldNames()), LINEAGE_SCHEMA
-    ).coalesce(1)
-    lineage.write.mode("append").parquet(f"{out_root}/lineage")
+    # one file, written under a `_` name readers skip, then published
+    fs, root = Wsrc.arrow_fs(Wsrc.spark_uri(spark, f"{out_root}/lineage"))
+    fs.create_dir(root)
+    name = f"part-{uuid.uuid4()}.parquet"
+    marker = pa.Table.from_pylist(rows, LINEAGE_ARROW)
+    pq.write_table(marker, f"{root}/_{name}", filesystem=fs)
+    fs.move(f"{root}/_{name}", f"{root}/{name}")
     return RunSummary(pending, skipped, sum(r["n_docs"] for r in rows), wall_ms)
 
 

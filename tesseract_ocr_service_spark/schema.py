@@ -163,6 +163,9 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 
+#: LINEAGE_SCHEMA as the Arrow schema the commit log is read and written in
+LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+
 #: the lineage counters, in LINEAGE_SCHEMA order: what
 #: ``kernel.kernel_iter`` sums per day from its output batches, and
 #: ``operators.extract.lineage_view`` as a Spark aggregate

@@ -307,6 +307,18 @@ def arrow_fs(uri: str):
     return pafs.FileSystem.from_uri(_pafs_uri(uri))
 
 
+def spark_uri(spark, path: str) -> str:
+    """``path`` as Spark's data sources resolve it: qualified by Hadoop
+    under the session's configuration, so a path without a scheme takes
+    ``fs.defaultFS`` and that filesystem's working directory, as a
+    Spark read or write of it does. Through :func:`arrow_fs`, pyarrow
+    on the driver then opens the files Spark wrote (py4j calls, no
+    job)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return p.getFileSystem(conf).makeQualified(p).toString()
+
+
 def _iter_file_chunks(uri: str, chunk: int = 1 << 20) -> Iterator[bytes]:
     """Stream a file's bytes in bounded chunks via pyarrow's
     FileSystem layer (:func:`arrow_fs`)."""

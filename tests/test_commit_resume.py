@@ -450,10 +450,11 @@ def test_layout_does_not_depend_on_earlier_jobs(spark, corpus_1000, tmp_path):
     assert sizes(first) == sizes(second)
 
 
-def test_fresh_run_makes_four_jobs(spark, paths):
-    """A fresh parquet-source run is four Spark jobs: the pages schema
-    read, the placement exchange, the kernel and data write, and the
-    lineage append (no sampling job, no counter aggregate, no index)."""
+def test_fresh_run_makes_three_jobs(spark, paths):
+    """A fresh parquet-source run is three Spark jobs: the pages schema
+    read, the placement exchange, and the kernel and data write (no
+    sampling job, no counter aggregate, no index; the commit log is
+    read and appended on the driver)."""
     pages, out = paths
     sc = spark.sparkContext
     sc.setJobGroup("fresh-commit", "fresh commit")
@@ -462,8 +463,102 @@ def test_fresh_run_makes_four_jobs(spark, paths):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert s.n_docs == N_DOCS
-    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 3
 
+
+def test_committed_days_runs_no_job(spark, paths):
+    """Reading the commit log starts no Spark job: pyarrow reads
+    ``lineage/`` on the driver."""
+    pages, out = paths
+    s = C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-10")
+    sc = spark.sparkContext
+    sc.setJobGroup("log-read", "commit log read")
+    try:
+        done = C.committed_days(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert done == set(s.pending_days) and len(done) == 10
+    assert sc.statusTracker().getJobIdsForGroup("log-read") == []
+
+
+def test_commit_log_reads_spark_written_markers(spark, paths):
+    """A log whose marker Spark wrote (``_SUCCESS`` and ``.crc`` files
+    beside it), plus an unpublished ``_part-x.parquet`` left by a crash:
+    the committed days are exactly the Spark-written ones, the next run
+    appends one file, and Spark reads both markers."""
+    import shutil
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from tesseract_ocr_service_spark.schema import LINEAGE_SCHEMA
+
+    pages, out = paths
+    s1 = C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-10")
+    log = os.path.join(out, "lineage")
+    (marker,) = _lineage_files(out)
+    rows = pq.read_table(marker).to_pylist()
+    shutil.rmtree(log)
+    spark.createDataFrame(
+        pd.DataFrame(rows, columns=LINEAGE_SCHEMA.fieldNames()), LINEAGE_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(log)
+    assert os.path.exists(os.path.join(log, "_SUCCESS"))
+    assert any(n.endswith(".crc") for n in os.listdir(log))
+    with open(os.path.join(log, "_part-x.parquet"), "wb") as f:
+        f.write(b"half-written")
+    assert len(glob.glob(os.path.join(log, "part-*.parquet"))) == 1
+
+    assert C.committed_days(spark, out) == set(s1.pending_days)
+    s2 = C.run_checkpointed(spark, pages, out)
+    assert s2.skipped_days == s1.pending_days and len(s2.pending_days) == 20
+    assert len(glob.glob(os.path.join(log, "part-*.parquet"))) == 2
+
+    lineage = C.read_lineage(spark, out)
+    assert sorted(r["warc_day"] for r in lineage.collect()) == sorted(
+        s1.pending_days + s2.pending_days
+    )
+    assert lineage.agg(F.sum("n_docs")).collect()[0][0] == N_DOCS
+    assert C.committed_days(spark, out) == set(s1.pending_days + s2.pending_days)
+
+
+
+def test_commit_log_is_where_spark_resolves_the_root(
+    spark, paths, tmp_path, monkeypatch
+):
+    """A root given without a scheme lies where Spark's Hadoop resolves
+    it (``fs.defaultFS`` and its working directory), not where the
+    driver's own cwd would put it. Here the two differ, as on a cluster
+    whose default filesystem is HDFS: the data and the marker land in
+    one root, ``committed_days`` and ``read_lineage`` agree on it, a
+    resume skips every day, and a point read finds a url."""
+    pages, _ = paths
+    hadoop_dir, driver_dir = tmp_path / "hadoop", tmp_path / "driver"
+    hadoop_dir.mkdir()
+    driver_dir.mkdir()
+    monkeypatch.chdir(driver_dir)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    local = spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    )
+    cwd = local.getWorkingDirectory()
+    local.setWorkingDirectory(hpath(str(hadoop_dir)))
+    try:
+        s1 = C.run_checkpointed(
+            spark, pages, "out", ts_from="2026-01-01", ts_to="2026-01-10"
+        )
+        assert os.listdir(driver_dir) == []
+        assert len(_lineage_files(str(hadoop_dir / "out"))) == 1
+        assert C.committed_days(spark, "out") == set(s1.pending_days)
+        lineage = C.read_lineage(spark, "out").collect()
+        assert {r["warc_day"] for r in lineage} == set(s1.pending_days)
+        s2 = C.run_checkpointed(
+            spark, pages, "out", ts_from="2026-01-01", ts_to="2026-01-10"
+        )
+        assert s2.pending_days == [] and s2.skipped_days == s1.pending_days
+        url = C.read_extracted(spark, "out").select("url").first()["url"]
+        assert X.document_json(spark, "out/extracted", url).count() == 1
+    finally:
+        local.setWorkingDirectory(cwd)
 
 #: one commit on local[2,2] (a task may fail once) whose kernel fails
 #: attempt 0 of partition 0 after two batches

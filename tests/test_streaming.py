@@ -407,13 +407,13 @@ def test_warc_epoch_parses_each_archive_once(spark, tmp_path, monkeypatch):
     W.write_warc(f"{landing}/cc-0.warc.gz", recs[:20])
     W.write_warc(f"{landing}/cc-1.warc.gz", recs[20:], per_record_gzip=False)
 
-    parsed = spark.sparkContext.accumulator({}, C._DayMsParam())
+    parsed = spark.sparkContext.accumulator({}, C._DayLineageParam())
     parse = W._parse_paths
 
     def counting_parse(it):
         for pdf in it:
             for path in pdf["path"]:
-                parsed.add({os.path.basename(path): 1})
+                parsed.add({os.path.basename(path): [1]})
             yield from parse(iter([pdf]))
 
     monkeypatch.setattr(W, "_parse_paths", counting_parse)
@@ -423,7 +423,7 @@ def test_warc_epoch_parses_each_archive_once(spark, tmp_path, monkeypatch):
     )
     q.awaitTermination(300)
     assert q.exception() is None
-    assert parsed.value == {"cc-0.warc.gz": 1, "cc-1.warc.gz": 1}
+    assert parsed.value == {"cc-0.warc.gz": [1], "cc-1.warc.gz": [1]}
     ext = spark.read.parquet(f"{tmp_path}/out/extracted")
     assert ext.select("epoch_id").distinct().count() == 2
     assert ext.count() == 40
