@@ -22,11 +22,14 @@ after any failure processes only the un-committed warc_day partitions
 
 The driver reads and appends the commit log (--out/lineage) with its
 own pyarrow, at the path Spark resolves --out to (a path without a
-scheme lies on fs.defaultFS). pyarrow does not see Hadoop's fs.*
-settings: an s3a:// root needs the AWS environment or profile on the
-driver (an endpoint or keys set only as spark.hadoop.fs.s3a.* do not
-carry over), an hdfs:// root needs libhdfs there, and a scheme pyarrow
-cannot open (abfs, wasb) fails the run before it writes anything.
+scheme lies on fs.defaultFS), and the executors write the day files
+under --out/extracted with their own pyarrow, as the WARC reader opens
+archives. pyarrow does not see Hadoop's fs.* settings: an s3a:// root
+needs the AWS environment or profile on the driver and every executor
+(an endpoint or keys set only as spark.hadoop.fs.s3a.* do not carry
+over), an hdfs:// root needs libhdfs on each of them, and a scheme
+pyarrow cannot open (abfs, wasb) fails the run before it writes
+anything.
 """
 
 from __future__ import annotations
@@ -51,7 +54,7 @@ def parse_args(argv):
     p.add_argument(
         "--out",
         required=True,
-        help="output root; the driver's pyarrow must reach it too",
+        help="output root; the driver's and the executors' pyarrow must reach it too",
     )
     p.add_argument("--ts-from", default=None, help="warc_day lower bound")
     p.add_argument("--ts-to", default=None, help="warc_day upper bound")

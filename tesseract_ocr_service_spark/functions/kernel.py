@@ -35,7 +35,6 @@ from typing import Any, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from ..config import (
     STATUS_EMPTY,
@@ -44,7 +43,7 @@ from ..config import (
     STATUS_REJECTED,
     ExtractConfig,
 )
-from ..schema import EXTRACTED_ARROW, LINEAGE_COUNTERS
+from ..schema import EXTRACTED_ARROW
 from . import assembly, htmlx, pdfstream
 
 #: the input columns the kernel reads (schema.PAGES_SCHEMA minus the
@@ -427,66 +426,15 @@ def extract_batch(batch, cfg: ExtractConfig) -> pa.RecordBatch:
     )
 
 
-def _day_lineage(out: pa.RecordBatch, ms: float) -> dict[str, list]:
-    """{warc_day: [kernel_ms, *LINEAGE_COUNTERS]} of one output batch:
-    the batch's kernel wall ``ms`` split by its rows per day, then the
-    sums ``operators.extract.lineage_view`` takes over the same rows."""
-    status = out.column("status")
-    cols = {
-        "n_docs": np.ones(out.num_rows, np.int64),
-        **{
-            f"n_{s}": pc.cast(pc.equal(status, s), pa.int64())
-            for s in (STATUS_OK, STATUS_REJECTED, STATUS_ERROR, STATUS_EMPTY)
-        },
-        "n_pages": out.column("total_pages"),
-        **{
-            c: out.column(c)
-            for c in ("n_blocks_kept", "n_blocks_dropped", "n_words", "n_chars")
-        },
-    }
-    agg = (
-        pa.table({"day": pc.strftime(out.column("warc_ts"), "%Y-%m-%d"), **cols})
-        .group_by("day")
-        .aggregate([(c, "sum") for c in LINEAGE_COUNTERS])
-    )
-    sums = [agg.column(f"{c}_sum").to_pylist() for c in LINEAGE_COUNTERS]
-    return {
-        day: [ms * v[0] / out.num_rows, *v]
-        for day, *v in zip(agg.column("day").to_pylist(), *sums)
-    }
-
-
 def kernel_iter(
-    batches: Iterable[pa.RecordBatch],
-    cfg: ExtractConfig,
-    day_acc=None,
+    batches: Iterable[pa.RecordBatch], cfg: ExtractConfig
 ) -> Iterator[pa.RecordBatch]:
-    """``mapInArrow`` entrypoint: lazily extract each Arrow batch.
-
-    ``day_acc`` (optional Spark accumulator, see
-    ``plans.commit._DayLineageParam``) collects, per warc_day, the
-    kernel wall milliseconds (each batch's wall split by its rows per
-    day) and the lineage counters of the output rows (``_day_lineage``).
-    Its day keys are the Arrow mirror of ``operators.extract.warc_day``
-    (the lineage key: the date in the timestamp's own, the session's,
-    time zone); ``test_lineage_per_day_kernel_ms`` pins that the two
-    agree.
-
-    The counters are exactly-once when the kernel runs in the result
-    stage of the job that writes its rows: Spark merges a result task's
-    accumulator updates once per partition and drops those of failed
-    attempts (a shuffle-map stage would merge a recomputed partition
-    again). So no exchange may sit between ``X.extract`` and the write
-    in ``plans.commit.write_days``;
-    ``test_commit_resume.test_lineage_counters_survive_a_task_retry``
-    pins it."""
-    import time as _time
-
+    """``mapInArrow`` entrypoint of ``operators.extract.extract``:
+    lazily extract each non-empty Arrow batch (:func:`extract_batch`).
+    A commit's write tasks call :func:`extract_batch` per batch
+    themselves (``plans.commit.write_days``): they write the output to
+    their day files, time it and count it, and return Spark one row per
+    file, not the rows."""
     for batch in batches:
-        if not batch.num_rows:
-            continue
-        t0 = _time.perf_counter()
-        out = extract_batch(batch, cfg)
-        if day_acc is not None:
-            day_acc.add(_day_lineage(out, (_time.perf_counter() - t0) * 1000.0))
-        yield out
+        if batch.num_rows:
+            yield extract_batch(batch, cfg)

@@ -49,10 +49,10 @@ WARC_DAY_SQL = "date_format(warc_ts, 'yyyy-MM-dd')"
 
 
 def warc_day() -> Column:
-    """``warc_ts`` as its 'yyyy-MM-dd' day string: the partition value
-    of the committed output and the key of the lineage counters (the
-    one definition — ``kernel.kernel_iter``'s per-day accumulator keys
-    are its Arrow mirror)."""
+    """``warc_ts`` as its 'yyyy-MM-dd' day string, in the session time
+    zone: the partition value of the committed output and the key of
+    the lineage counters (the one definition — ``plans.commit``'s
+    writer reads it as a column of the kernel's input)."""
     return F.expr(WARC_DAY_SQL)
 
 
@@ -138,22 +138,15 @@ def read_pages(
     return df
 
 
-def extract(
+def kernel_input(
     pages: DataFrame,
     cfg: ExtractConfig = ExtractConfig(),
-    salt_partitions: int = 0,
     languages: Optional[tuple[str, ...]] = None,
-    day_acc=None,
 ) -> DataFrame:
-    """pages -> one wide extracted row per document (EXTRACTED_SCHEMA).
-
-    ``salt_partitions`` > 0 adds an explicit hash(url)-salted repartition
-    before the kernel — breaks up byte-skewed input splits (heavy-tailed
-    page sizes mean a split's row count says nothing about its work).
-    0 = narrow zero-shuffle plan. Measured guidance: on the synthetic
-    heavy-tail corpus the salted plan (2x cores) is ~3.3x faster than
-    the narrow plan at local[32] (BENCH/BASELINE.md) — at cluster scale
-    prefer salting whenever input files aren't size-uniform.
+    """The kernel's input rows: ``pages`` projected to the columns the
+    kernel reads, gated by ``languages`` and carrying the Content-Type
+    verdict — the one projection of :func:`extract` and of the commit's
+    writer (``plans.commit.write_days``).
 
     ``languages`` optionally gates rows by the `lang` column (the
     reference's language config, ocr/schemas.py:38-41, as a relational
@@ -163,10 +156,6 @@ def extract(
     ``page_start`` or ``page_end`` columns, they ride into the kernel and
     override the job-level ExtractConfig per document (the reference's
     per-request OCRConfig, ocr/main.py:104-131).
-
-    ``day_acc``: optional dict accumulator (plans.commit) that collects
-    per-warc_day kernel milliseconds and lineage counters
-    (``kernel.kernel_iter``).
     """
     per_row = [
         c
@@ -191,6 +180,32 @@ def extract(
     df = pages.select(*KERNEL_INPUT, *per_row, *ct_cols)
     if languages:
         df = df.where(F.col("lang").isin(list(languages)))
+    return df
+
+
+def extract(
+    pages: DataFrame,
+    cfg: ExtractConfig = ExtractConfig(),
+    salt_partitions: int = 0,
+    languages: Optional[tuple[str, ...]] = None,
+) -> DataFrame:
+    """pages -> one wide extracted row per document (EXTRACTED_SCHEMA):
+    :func:`kernel_input`, then ``kernel.kernel_iter`` under
+    ``mapInArrow``. The rows API for readers of the rows themselves; a
+    commit writes its day files from the kernel's tasks instead
+    (``plans.commit.write_days``), so its rows never come back here.
+
+    ``salt_partitions`` > 0 adds an explicit hash(url)-salted repartition
+    before the kernel — breaks up byte-skewed input splits (heavy-tailed
+    page sizes mean a split's row count says nothing about its work).
+    0 = narrow zero-shuffle plan. Measured guidance: on the synthetic
+    heavy-tail corpus the salted plan (2x cores) is ~3.3x faster than
+    the narrow plan at local[32] (BENCH/BASELINE.md) — at cluster scale
+    prefer salting whenever input files aren't size-uniform.
+
+    ``languages`` and per-row config: see :func:`kernel_input`.
+    """
+    df = kernel_input(pages, cfg, languages)
     if salt_partitions > 0:
         # explicit skew control: uniform hash of the unique key ->
         # near-perfectly even partitions regardless of domain skew.
@@ -199,8 +214,7 @@ def extract(
     # the Arrow arrays it built (mapInPandas would rebuild every span
     # node as a Python dict before converting it back to Arrow)
     return df.mapInArrow(
-        functools.partial(kernel_iter, cfg=cfg, day_acc=day_acc),
-        schema=EXTRACTED_SCHEMA,
+        functools.partial(kernel_iter, cfg=cfg), schema=EXTRACTED_SCHEMA
     )
 
 
@@ -264,9 +278,9 @@ def spans_view(wide: DataFrame) -> DataFrame:
 def lineage_view(wide: DataFrame) -> DataFrame:
     """Output table 3 `lineage` — per-warc_day counters (the reference
     logs these per request, ocr_processor.py:463-475,512-527). A commit
-    takes the same sums from the kernel's accumulator during its write
-    (``kernel.kernel_iter``); this aggregate over written rows is what
-    they must equal."""
+    takes the same sums from the rows its write tasks return, one per
+    file written (``plans.commit.write_days``); this aggregate over
+    written rows is what they must equal."""
     return (
         wide.groupBy(warc_day().alias("warc_day"))
         .agg(

@@ -166,7 +166,7 @@ LINEAGE_SCHEMA = StructType(
 #: LINEAGE_SCHEMA as the Arrow schema the commit log is read and written in
 LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
-#: the lineage counters, in LINEAGE_SCHEMA order: what
-#: ``kernel.kernel_iter`` sums per day from its output batches, and
+#: the lineage counters, in LINEAGE_SCHEMA order: what a commit's write
+#: tasks sum per day file (``plans.commit.write_days``), and
 #: ``operators.extract.lineage_view`` as a Spark aggregate
 LINEAGE_COUNTERS = tuple(f for f in LINEAGE_SCHEMA.fieldNames() if f.startswith("n_"))

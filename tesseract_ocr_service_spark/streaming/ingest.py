@@ -8,15 +8,16 @@ own writer, ``plans.commit.write_days``: the epoch's days come from one
 ``distinct`` over the epoch's ``warc_ts``, its pages are placed into
 tasks by the writer's driver-side day plan before the kernel (a WARC
 epoch's parsed pages persisted for both, so each archive is parsed
-once), and the output is written partitioned by (epoch_id, warc_day)
-with DYNAMIC partition overwrite — one file per day directory when the
+once), and the kernel tasks write the output themselves, url-sorted,
+under (epoch_id, warc_day), published by the driver with DYNAMIC
+partition overwrite semantics — one file per day directory when the
 epoch holds at least n days, at most max(days, n) per epoch (n = the
 cluster's default parallelism).
 
 Exactly-once story: the streaming checkpoint records which input files
 each epoch consumed, and the sink keys its output on the epoch —
-a replayed epoch dynamically OVERWRITES exactly its own
-``epoch_id=N/warc_day=D`` partitions (same deterministic rows), never
+a replayed epoch OVERWRITES exactly its own ``epoch_id=N/warc_day=D``
+partitions (same deterministic rows), never
 appending duplicates and never touching other epochs' partitions. The
 combination (checkpointed source offsets + idempotent epoch-keyed
 overwrite) is the standard Structured Streaming exactly-once recipe;

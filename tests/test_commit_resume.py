@@ -428,17 +428,24 @@ def test_fewer_days_than_tasks_split_each_day_evenly(
 
 
 def test_layout_does_not_depend_on_earlier_jobs(spark, corpus_1000, tmp_path):
-    """The file layout is a function of the input and the task count:
-    two commits of one corpus in one session, with unrelated jobs
-    between them, write the same files per day with the same sizes (a
-    sampled range partitioning split some days at different urls)."""
-    def sizes(out):
+    """The committed bytes are a function of the input and the task
+    count: two commits of one corpus in one session, with unrelated jobs
+    between them, write byte-identical files per day (equal md5; a
+    sampled range partitioning split some days at different urls), and
+    each file holds its rows sorted by url."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    def digests(out):
         root = os.path.join(out, "extracted")
         got = {}
         for f in glob.glob(os.path.join(root, "warc_day=*", "*.parquet")):
-            got.setdefault(os.path.dirname(os.path.relpath(f, root)), []).append(
-                os.path.getsize(f)
-            )
+            urls = pq.read_table(f, columns=["url"]).column("url").to_pylist()
+            assert urls == sorted(urls), f
+            with open(f, "rb") as fh:
+                md5 = hashlib.md5(fh.read()).hexdigest()
+            got.setdefault(os.path.dirname(os.path.relpath(f, root)), []).append(md5)
         return {d: sorted(v) for d, v in got.items()}
 
     first, second = str(tmp_path / "a"), str(tmp_path / "b")
@@ -446,8 +453,64 @@ def test_layout_does_not_depend_on_earlier_jobs(spark, corpus_1000, tmp_path):
     spark.sparkContext.parallelize(range(100), 3).count()
     spark.sparkContext.parallelize(range(10)).count()
     C.run_checkpointed(spark, corpus_1000, second)
-    assert len(sizes(first)) == 30
-    assert sizes(first) == sizes(second)
+    assert len(digests(first)) == 30
+    assert digests(first) == digests(second)
+
+
+@pytest.mark.parametrize("flush_each_slice", [False, True])
+def test_write_task_stages_one_url_sorted_file_per_day(
+    tmp_path, monkeypatch, flush_each_slice
+):
+    """The write task, fed day- and url-sorted input batches as the
+    commit feeds them, in batches that cross day boundaries: one file
+    per day holding exactly the kernel's rows of that day in input
+    order, a staged row per file whose counters equal
+    ``X.lineage_view``'s sums over those rows, and the rows buffered
+    into row groups of ``_ROW_GROUP_BYTES`` at most (one row group per
+    file by default, one per batch slice at 1 byte)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tesseract_ocr_service_spark.config import ExtractConfig
+    from tesseract_ocr_service_spark.functions import kernel
+
+    if flush_each_slice:
+        monkeypatch.setattr(C, "_ROW_GROUP_BYTES", 1)
+    pages = pa.Table.from_pandas(
+        gen.gen_batch(list(range(200)), seed=SEED), preserve_index=False
+    )
+    pages = pages.append_column(C._DAY, pc.strftime(pages.column("warc_ts"), "%Y-%m-%d"))
+    days = sorted(set(pages.column(C._DAY).to_pylist()))[:3]
+    pages = pages.filter(pc.is_in(pages.column(C._DAY), pa.array(days)))
+    pages = pages.sort_by([(C._DAY, "ascending"), ("url", "ascending")])
+    batches = pages.to_batches(max_chunksize=5)
+    staged = pa.Table.from_batches(
+        C._write_task(
+            batches, cfg=ExtractConfig(), stage_uri=str(tmp_path), prefix="epoch_id=3/"
+        )
+    ).to_pylist()
+
+    slices = Counter(d for b in batches for d in set(b.column(C._DAY).to_pylist()))
+    assert max(slices.values()) > 1 and sum(slices.values()) > len(batches)
+    assert [r["warc_day"] for r in staged] == days
+    for r in staged:
+        assert r["path"].startswith(f"epoch_id=3/warc_day={r['warc_day']}/part-")
+        f = pq.ParquetFile(os.path.join(str(tmp_path), r["path"]))
+        assert f.num_row_groups == (slices[r["warc_day"]] if flush_each_slice else 1)
+        got = f.read().to_pylist()
+        mine = pages.filter(pc.equal(pages.column(C._DAY), r["warc_day"]))
+        (mine,) = mine.drop_columns([C._DAY]).combine_chunks().to_batches()
+        assert got == kernel.extract_batch(mine, ExtractConfig()).to_pylist()
+        assert [row["url"] for row in got] == sorted(row["url"] for row in got)
+        status = Counter(row["status"] for row in got)
+        assert r["n_docs"] == len(got) and r["n_ok"] == status["ok"]
+        assert r["n_error"] == status["error"] and r["n_empty"] == status["empty"]
+        assert r["n_rejected"] == status["rejected"]
+        assert r["n_pages"] == sum(row["total_pages"] for row in got)
+        for c in ("n_blocks_kept", "n_blocks_dropped", "n_words", "n_chars"):
+            assert r[c] == sum(row[c] for row in got), c
+        assert r["kernel_ms"] > 0
 
 
 def test_fresh_run_makes_three_jobs(spark, paths):
@@ -560,8 +623,180 @@ def test_commit_log_is_where_spark_resolves_the_root(
     finally:
         local.setWorkingDirectory(cwd)
 
-#: one commit on local[2,2] (a task may fail once) whose kernel fails
-#: attempt 0 of partition 0 after two batches
+#: a run whose driver dies after the write tasks staged every day file
+#: and before the first move publishes one (no ``finally`` runs)
+_CRASH_SCRIPT = r"""
+import os, sys
+from tesseract_ocr_service_spark.operators import extract as X
+from tesseract_ocr_service_spark.plans import commit as C
+
+pages, out = sys.argv[1:]
+
+
+def crash(*args):
+    os._exit(3)
+
+
+C._publish = crash
+spark = (
+    X.session_builder(master="local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.ui.showConsoleProgress", "false")
+    .getOrCreate()
+)
+C.run_checkpointed(spark, pages, out)
+"""
+
+
+@pytest.mark.slow
+def test_crash_between_staging_and_publish_then_resume(spark, paths, tmp_path):
+    """A driver that dies after the write staged its day files and
+    before it moved them leaves ``extracted/_staging-<uuid>/``: readers
+    (``read_extracted``, ``lookup_spans``, ``committed_days``) see none
+    of it, and a resume converges to a fresh run's rows with lineage
+    summing to ``n_docs``."""
+    pages, out = paths
+    s1 = C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-05")
+    committed = C.committed_days(spark, out)
+    before = _texts(spark, out)
+
+    script = tmp_path / "crash.py"
+    script.write_text(_CRASH_SCRIPT)
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, str(script), pages, out],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
+    )
+    assert r.returncode == 3, r.stderr[-3000:]
+    (stage,) = glob.glob(os.path.join(out, "extracted", "_staging-*"))
+    staged = glob.glob(os.path.join(stage, "warc_day=*", "*.parquet"))
+    assert len(staged) == 30 - len(committed)
+
+    assert C.committed_days(spark, out) == committed
+    assert _texts(spark, out) == before
+    late = (
+        X.read_pages(spark, pages, "2026-01-06")
+        .select("url").orderBy("url").first()["url"]
+    )
+    assert X.lookup_spans(spark, f"{out}/extracted", late).collect() == []
+    early = sorted(before)[0]
+    assert [r["doc_id"] for r in _lookup(spark, out, early)] == [early]
+
+    s2 = C.run_checkpointed(spark, pages, out)
+    assert s2.skipped_days == s1.pending_days
+    assert s1.n_docs + s2.n_docs == N_DOCS
+    lineage = C.read_lineage(spark, out)
+    assert lineage.count() == 30
+    assert lineage.agg(F.sum("n_docs")).collect()[0][0] == N_DOCS
+    ref = str(tmp_path / "ref")
+    C.run_checkpointed(spark, pages, ref)
+    assert _texts(spark, out) == _texts(spark, ref)
+    assert C.read_extracted(spark, out).exceptAll(C.read_extracted(spark, ref)).count() == 0
+
+
+def _spark_commit(spark, pages, out, lo, hi):
+    """Commit the days [lo, hi] as the Spark writer the engine used
+    before wrote them: ``X.extract``'s rows written by Spark with
+    dynamic partition overwrite under ``warc_day`` (``warc_ts`` as
+    INT96), and a lineage marker of ``X.lineage_view`` over them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tesseract_ocr_service_spark.schema import LINEAGE_ARROW
+
+    (
+        X.extract(X.read_pages(spark, pages, lo, hi))
+        .withColumn("warc_day", X.warc_day())
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("warc_day")
+        .parquet(f"{out}/extracted")
+    )
+    days = [F.lit(d) for d in (lo, hi)]
+    rows = [
+        {**r.asDict(), "kernel_ms": 0, "wall_ms": 0, "attempt": 1}
+        for r in X.lineage_view(
+            spark.read.parquet(f"{out}/extracted").where(
+                F.col("warc_day").cast("string").between(*days)
+            )
+        ).collect()
+    ]
+    os.makedirs(f"{out}/lineage")
+    pq.write_table(
+        pa.Table.from_pylist(rows, LINEAGE_ARROW), f"{out}/lineage/part-spark.parquet"
+    )
+    return sorted(r["warc_day"] for r in rows)
+
+
+@pytest.mark.parametrize(
+    "spark_days, first_ts",
+    [
+        (("2026-01-01", "2026-01-10"), "timestamp[ns]"),
+        (("2026-01-21", "2026-01-30"), "timestamp[us, tz=UTC]"),
+    ],
+)
+def test_root_written_by_both_writers_reads(spark, paths, tmp_path, spark_days, first_ts):
+    """A root whose days Spark wrote before (``warc_ts`` INT96) and whose
+    other days the pyarrow writer wrote (``warc_ts`` INT64 UTC micros)
+    reads whole: a resume skips the Spark-written days, every row is
+    read, and a point read of a url on each kind of day equals a Spark
+    read, in UTC and in America/Los_Angeles. The pyarrow dataset takes
+    ``warc_ts``'s type from the first file it finds: Spark's (naive) in
+    one case, pyarrow's (UTC) in the other."""
+    import pyarrow.parquet as pq
+
+    pages, out = paths
+    old_days = _spark_commit(spark, pages, out, *spark_days)
+    s = C.run_checkpointed(spark, pages, out)
+    assert s.skipped_days == old_days and len(s.pending_days) == 20
+
+    root = f"{out}/extracted"
+    physical = {
+        X.dir_day(os.path.basename(os.path.dirname(f))): pq.ParquetFile(f)
+        .schema.column(1).physical_type
+        for f in glob.glob(os.path.join(root, "warc_day=*", "*.parquet"))
+    }
+    assert {d for d, t in physical.items() if t == "INT96"} == set(old_days)
+    assert {d for d, t in physical.items() if t == "INT64"} == set(s.pending_days)
+    assert str(X.spans_table(root).schema.field("warc_ts").type) == first_ts
+
+    ref = str(tmp_path / "ref")
+    C.run_checkpointed(spark, pages, ref)
+    got, want = C.read_extracted(spark, out), C.read_extracted(spark, ref)
+    assert got.count() == N_DOCS
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+    days = _days(spark, out)
+    urls = [min(u for u, d in days.items() if d == old_days[0])]
+    urls.append(min(u for u, d in days.items() if d == s.pending_days[0]))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for zone in ("UTC", "America/Los_Angeles"):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            table = spark.read.parquet(root).drop("warc_day")
+            for url in urls:
+                expect = table.where(F.col("url") == url)
+                got = X.lookup_spans(spark, root, url).select(*table.columns)
+                assert got.collect() == expect.collect(), (zone, url)
+                as_json = expect.select(
+                    F.col("url").alias("doc_id"),
+                    F.to_json(
+                        F.struct(
+                            F.col("url").alias("doc_id"),
+                            F.size("spans").alias("total_pages"),
+                            F.col("spans").alias("pages"),
+                        )
+                    ).alias("coordinates_json"),
+                )
+                assert X.document_json(spark, root, url).collect() == as_json.collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+#: one commit on local[2,2] (a task may fail once) whose write task
+#: fails attempt 0 of partition 0 at its fourth input batch, after it
+#: staged the files of the days it had finished; their paths go to
+#: ``fired``
 _RETRY_SCRIPT = r"""
 import json, sys
 from pyspark import TaskContext
@@ -569,19 +804,28 @@ from tesseract_ocr_service_spark.operators import extract as X
 from tesseract_ocr_service_spark.plans import commit as C
 
 pages, out, fired = sys.argv[1:]
-kernel_iter = X.kernel_iter
+write_task = C._write_task
 
 
-def failing_kernel_iter(batches, **kw):
+def failing_write_task(batches, **kw):
     ctx = TaskContext.get()
-    for i, batch in enumerate(kernel_iter(batches, **kw)):
-        if i == 2 and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
-            open(fired, "w").close()
-            raise RuntimeError("injected task failure")
-        yield batch
+    first = ctx.partitionId() == 0 and ctx.attemptNumber() == 0
+    staged = []
+
+    def fed():
+        for i, batch in enumerate(batches):
+            if i == 3 and first:
+                with open(fired, "w") as f:
+                    json.dump(staged, f)
+                raise RuntimeError("injected task failure")
+            yield batch
+
+    for row in write_task(fed(), **kw):
+        staged.extend(row.column("path").to_pylist())
+        yield row
 
 
-X.kernel_iter = failing_kernel_iter
+C._write_task = failing_write_task
 spark = (
     X.session_builder(master="local[2,2]", arrow_batch_rows=16)
     .config("spark.ui.enabled", "false")
@@ -595,10 +839,12 @@ spark.stop()
 
 @pytest.mark.slow
 def test_lineage_counters_survive_a_task_retry(spark, paths, tmp_path):
-    """The lineage counters count each written row once although a task
-    of the write failed after extracting three batches and was retried:
-    the kernel's accumulator is merged from result tasks only, once per
-    partition (kernel.kernel_iter)."""
+    """The lineage counters count each written row once although a write
+    task failed at its fourth input batch, after staging files, and was
+    retried: the driver collects each partition's file rows once, from
+    the attempt that succeeded (commit.write_days). No file of the
+    failed attempt is published: each day is one file, none of them
+    staged by the failed attempt, and no staging directory is left."""
     pages, out = paths
     fired = str(tmp_path / "fired")
     script = tmp_path / "retry.py"
@@ -622,3 +868,13 @@ def test_lineage_counters_survive_a_task_retry(spark, paths, tmp_path):
     for day, counters in view.items():
         assert {k: lineage[day][k] for k in counters} == counters, day
     assert sum(r["n_docs"] for r in lineage.values()) == N_DOCS
+
+    with open(fired) as f:
+        failed = {os.path.basename(p) for p in json.load(f)}
+    assert failed  # the failed attempt had staged files
+    assert _files_per_day(out) == dict.fromkeys(lineage, 1)
+    published = glob.glob(os.path.join(out, "extracted", "warc_day=*", "*.parquet"))
+    assert not failed & {os.path.basename(p) for p in published}
+    assert sorted(os.listdir(os.path.join(out, "extracted"))) == sorted(
+        f"warc_day={d}" for d in lineage
+    )

@@ -395,7 +395,8 @@ def test_warc_epoch_parses_each_archive_once(spark, tmp_path, monkeypatch):
     without the persist each parsed every archive. A counting wrapper around the parse (defined here,
     so it is pickled by value with its accumulator) sees each archive
     parsed exactly once."""
-    from tesseract_ocr_service_spark.plans import commit as C
+    from pyspark.accumulators import AccumulatorParam
+
     from tesseract_ocr_service_spark.sources import warc as W
 
     landing = str(tmp_path / "landing")
@@ -407,7 +408,14 @@ def test_warc_epoch_parses_each_archive_once(spark, tmp_path, monkeypatch):
     W.write_warc(f"{landing}/cc-0.warc.gz", recs[:20])
     W.write_warc(f"{landing}/cc-1.warc.gz", recs[20:], per_record_gzip=False)
 
-    parsed = spark.sparkContext.accumulator({}, C._DayLineageParam())
+    class Parses(AccumulatorParam):  # {archive: [1] per parse}
+        def zero(self, value):
+            return {}
+
+        def addInPlace(self, a, b):
+            return {k: a.get(k, []) + b.get(k, []) for k in a.keys() | b.keys()}
+
+    parsed = spark.sparkContext.accumulator({}, Parses())
     parse = W._parse_paths
 
     def counting_parse(it):
