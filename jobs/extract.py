@@ -20,15 +20,16 @@ The run is idempotent and resumable: re-submitting the same command
 after any failure processes only the un-committed warc_day partitions
 (see plans/commit.py).
 
-The driver reads and appends the commit log (--out/lineage) with its
-own pyarrow, at the path Spark resolves --out to (a path without a
-scheme lies on fs.defaultFS), and the executors write the day files
-under --out/extracted with their own pyarrow, as the WARC reader opens
-archives. pyarrow does not see Hadoop's fs.* settings: an s3a:// root
-needs the AWS environment or profile on the driver and every executor
-(an endpoint or keys set only as spark.hadoop.fs.s3a.* do not carry
-over), an hdfs:// root needs libhdfs on each of them, and a scheme
-pyarrow cannot open (abfs, wasb) fails the run before it writes
+The driver lists the pages table (--pages) and reads and appends the
+commit log (--out/lineage) with its own pyarrow, at the paths Spark
+resolves them to (a path without a scheme lies on fs.defaultFS); the
+executors read their days' page files under --pages and write the day
+files under --out/extracted with their own pyarrow, as the WARC reader
+opens archives. pyarrow does not see Hadoop's fs.* settings: an s3a://
+root needs the AWS environment or profile on the driver and every
+executor (an endpoint or keys set only as spark.hadoop.fs.s3a.* do not
+carry over), an hdfs:// root needs libhdfs on each of them, and a
+scheme pyarrow cannot open (abfs, wasb) fails the run before it writes
 anything.
 """
 
@@ -50,7 +51,12 @@ if _REPO not in sys.path:
 
 def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--pages", required=True, help="pages table root")
+    p.add_argument(
+        "--pages",
+        required=True,
+        help="pages table root (warc_day= directories); the driver lists it "
+        "and the executors open its files with their own pyarrow",
+    )
     p.add_argument(
         "--out",
         required=True,

@@ -13,8 +13,9 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 #: THE declared-Content-Type allow-list — the single source shared by
-#: ExtractConfig.allowed_content_types (engine path) and
-#: operators.extract.content_type_ok's default (harness oracle path),
+#: ExtractConfig.allowed_content_types (engine path, the kernel's
+#: gate) and operators.extract.content_type_ok's default (harness
+#: oracle path),
 #: so the two can never drift apart. Reference set (ocr/main.py:354-363)
 #: plus text/html (HTML payloads are first-class here).
 ALLOWED_CONTENT_TYPES: tuple[str, ...] = (

@@ -35,6 +35,7 @@ from typing import Any, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..config import (
     STATUS_EMPTY,
@@ -48,10 +49,10 @@ from . import assembly, htmlx, pdfstream
 
 #: the input columns the kernel reads (schema.PAGES_SCHEMA minus the
 #: noise column ``text``, plus the optional per-row config and the
-#: pre-computed Content-Type verdict)
+#: declared Content-Type)
 _INPUT_COLS = (
     "url", "warc_ts", "html", "lang",
-    "pages", "page_start", "page_end", "_ct_reject",
+    "pages", "page_start", "page_end", "content_type",
 )
 _PAGES = EXTRACTED_ARROW.field("pages").type
 _SPANS = EXTRACTED_ARROW.field("spans").type
@@ -71,6 +72,35 @@ _REC_COLS = [
     "conf",
 ]
 
+def content_type_allowed(ct: pa.Array, allowed: tuple[str, ...]) -> pa.Array:
+    """The declared-Content-Type gate over one Arrow column: True where a
+    row passes. The reference's upload gate (ocr/main.py:354-363: any
+    declared type other than application/pdf is rejected, octet-stream
+    and an ABSENT type tolerated), generalized for crawl headers: the
+    base type (before the first ';', spaces trimmed) is lower-cased
+    before the allow-list check ('Text/HTML; charset=UTF-8' ->
+    'text/html'), and NULL or an all-space value passes — crawl MIME
+    labels are advisory, magic sniffing still decides the parse path
+    (:func:`_route`).
+
+    The one implementation the kernel applies, for every caller. It
+    equals Spark's ``operators.extract.content_type_ok`` (the SQL
+    oracle's gate) value for value: Spark's ``trim`` strips U+0020 only
+    (not tabs or NBSP), and its ``lower`` maps 'İ' (U+0130) to 'i' plus
+    a combining dot where Arrow's simple case mapping gives a bare 'i'
+    — the one code point whose lower-casing differs between the two
+    and makes either side ASCII (the Kelvin sign goes to 'k' in both;
+    ``tests/test_kernel.py`` pins the equality)."""
+    ct = ct.cast(pa.string())
+    trimmed = pc.utf8_trim(ct, " ")
+    base = pc.list_element(pc.split_pattern(ct, ";", max_splits=1), 0)
+    base = pc.replace_substring(pc.utf8_trim(base, " "), "İ", "i\u0307")
+    base = pc.utf8_lower(base)
+    listed = pc.is_in(base, value_set=pa.array(allowed, pa.string()))
+    # NULL content_type: both terms are NULL, and an absent type passes
+    return pc.fill_null(pc.or_(pc.equal(trimmed, ""), listed), True)
+
+
 def _route(
     payload: Any, max_bytes: int, ct_reject: bool = False
 ) -> tuple[str, str | None]:
@@ -82,13 +112,10 @@ def _route(
     anything else is rejected, as a status row rather than an HTTP
     400/413.
 
-    ``ct_reject`` is the Content-Type gate's PRE-COMPUTED verdict: the
-    normalization + allow-list decision is one JVM expression
-    (operators.extract.content_type_ok) evaluated before the kernel and
-    riding in as a boolean column, so exactly ONE implementation of the
-    gate semantics exists and the kernel stays string-logic-free. Rows
-    without a content_type column never set it (gate off — the
-    reference likewise tolerates an absent declared type)."""
+    ``ct_reject`` is the row's Content-Type verdict from
+    :func:`content_type_allowed`, taken once per batch; rows without a
+    ``content_type`` column never set it (gate off — the reference
+    likewise tolerates an absent declared type)."""
     if ct_reject:
         # reference: HTTP 400 invalid_file_type (ocr/main.py:357-363),
         # checked BEFORE the file is even read.
@@ -201,10 +228,12 @@ def extract_batch(batch, cfg: ExtractConfig) -> pa.RecordBatch:
     :func:`_arrow_input`) with columns url, warc_ts, html, lang (the
     noise column ``text`` is pruned before the kernel — column-pruning
     is part of the contract), plus the optional per-row config columns
-    ``pages``/``page_start``/``page_end`` (see :func:`_row_selections`).
-    Output: a ``pa.RecordBatch`` in ``schema.EXTRACTED_ARROW``; url,
-    warc_ts and lang pass straight from the input, the span hierarchy
-    is assembly's Arrow arrays taken per page.
+    ``pages``/``page_start``/``page_end`` (see :func:`_row_selections`)
+    and ``content_type`` (see :func:`content_type_allowed`; gated only
+    while ``cfg.allowed_content_types`` is set). Output: a
+    ``pa.RecordBatch`` in ``schema.EXTRACTED_ARROW``; url, warc_ts and
+    lang pass straight from the input, the span hierarchy is assembly's
+    Arrow arrays taken per page.
 
     Both payload kinds run one page loop: an HTML document is a single
     synthetic page (page_number=1) carrying its word columns, so page
@@ -214,11 +243,14 @@ def extract_batch(batch, cfg: ExtractConfig) -> pa.RecordBatch:
     n = batch.num_rows
     payloads = batch.column("html").to_pylist()
     selections = _row_selections(batch, cfg, n)
-    # pre-computed Content-Type verdicts (see _route): absent column =
-    # gate off for the whole batch, and a NULL verdict means OFF.
+    # Content-Type verdicts (see _route): no column or no allow-list =
+    # gate off for the whole batch
+    allowed = cfg.allowed_content_types
     ct_rej = (
-        [x is True for x in batch.column("_ct_reject").to_pylist()]
-        if "_ct_reject" in batch.schema.names
+        pc.invert(
+            content_type_allowed(batch.column("content_type"), allowed)
+        ).to_pylist()
+        if "content_type" in batch.schema.names and allowed is not None
         else [False] * n
     )
 

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import functools
 from typing import Optional
-from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,32 +41,30 @@ from ..schema import EXTRACTED_SCHEMA
 #: so parquet column pruning skips it (verify: ReadSchema in explain()).
 KERNEL_INPUT = ("url", "warc_ts", "html", "lang")
 
-
-#: ``warc_ts`` as its 'yyyy-MM-dd' day string, as SQL text (the
-#: ``plans.commit`` day plan embeds it)
-WARC_DAY_SQL = "date_format(warc_ts, 'yyyy-MM-dd')"
+#: the input columns the kernel reads when a table has them: the per-row
+#: config and the declared Content-Type (see :func:`kernel_input`)
+KERNEL_OPTIONAL = ("pages", "page_start", "page_end", "content_type")
 
 
 def warc_day() -> Column:
     """``warc_ts`` as its 'yyyy-MM-dd' day string, in the session time
-    zone: the partition value of the committed output and the key of
-    the lineage counters (the one definition — ``plans.commit``'s
-    writer reads it as a column of the kernel's input)."""
-    return F.expr(WARC_DAY_SQL)
+    zone: the key of :func:`lineage_view`'s counters, and the day of a
+    streamed parquet row (``plans.commit.frame_day``)."""
+    return F.date_format("warc_ts", "yyyy-MM-dd")
 
 
 def content_type_ok(ct, allowed: tuple[str, ...] = ALLOWED_CONTENT_TYPES):
-    """Declared-Content-Type gate as ONE JVM boolean expression — the
-    reference's upload gate (ocr/main.py:354-363: reject any declared
-    type other than application/pdf, tolerating octet-stream and an
-    ABSENT type) generalized for crawl headers: the base type is
-    parameter-stripped and case-folded ('Text/HTML; charset=UTF-8' ->
-    'text/html') before the allow-list check, and NULL/empty passes —
-    crawl MIME labels are advisory, magic sniffing still decides the
-    parse path (kernel._route). NULL-safe by construction (a NULL
-    predicate would otherwise silently PASS a gate built from
-    comparisons — CLAUDE.md NULL-gate rule works in reverse here:
-    tolerance must be EXPLICIT, not an accident of NULL logic)."""
+    """Declared-Content-Type gate as ONE JVM boolean expression, for the
+    SQL-oracle operator ``relational.content_type_gate``: the base type
+    is parameter-stripped, trimmed and case-folded ('Text/HTML;
+    charset=UTF-8' -> 'text/html') before the allow-list check, and
+    NULL/empty passes. The kernel applies the same gate to Arrow
+    batches (``kernel.content_type_allowed``), which equals this
+    expression value for value (``tests/test_kernel.py``).
+    NULL-safe by construction (a NULL predicate would otherwise
+    silently PASS a gate built from comparisons — CLAUDE.md NULL-gate
+    rule works in reverse here: tolerance must be EXPLICIT, not an
+    accident of NULL logic)."""
     c = F.col(ct) if isinstance(ct, str) else ct
     base = F.lower(F.trim(F.substring_index(c, ";", 1)))
     return c.isNull() | (F.trim(c) == "") | base.isin(list(allowed))
@@ -140,13 +137,15 @@ def read_pages(
 
 def kernel_input(
     pages: DataFrame,
-    cfg: ExtractConfig = ExtractConfig(),
     languages: Optional[tuple[str, ...]] = None,
+    *extra: Column,
 ) -> DataFrame:
     """The kernel's input rows: ``pages`` projected to the columns the
-    kernel reads, gated by ``languages`` and carrying the Content-Type
-    verdict — the one projection of :func:`extract` and of the commit's
-    writer (``plans.commit.write_days``).
+    kernel reads (``KERNEL_INPUT``, and of ``KERNEL_OPTIONAL`` those
+    ``pages`` has), plus the ``extra`` columns, gated by ``languages``
+    — the one projection of :func:`extract` and of the commit's frame
+    feed (``plans.commit.write_days``). A commit of a parquet table
+    reads the same columns with pyarrow in its tasks instead.
 
     ``languages`` optionally gates rows by the `lang` column (the
     reference's language config, ocr/schemas.py:38-41, as a relational
@@ -155,29 +154,12 @@ def kernel_input(
     Per-row config: if the input carries ``pages`` (array<int>),
     ``page_start`` or ``page_end`` columns, they ride into the kernel and
     override the job-level ExtractConfig per document (the reference's
-    per-request OCRConfig, ocr/main.py:104-131).
+    per-request OCRConfig, ocr/main.py:104-131). A ``content_type``
+    column rides in as it is; the kernel takes the gate's verdict
+    (``kernel.content_type_allowed``).
     """
-    per_row = [
-        c
-        for c in ("pages", "page_start", "page_end")
-        if c in pages.columns
-    ]
-    ct_cols = []
-    if (
-        "content_type" in pages.columns
-        and cfg.allowed_content_types is not None
-    ):
-        # Content-Type gate verdict computed HERE, JVM-side, as one
-        # boolean riding into the kernel — single implementation of the
-        # gate semantics (see content_type_ok / kernel._route).
-        ct_cols = [
-            (
-                ~content_type_ok(
-                    F.col("content_type"), cfg.allowed_content_types
-                )
-            ).alias("_ct_reject")
-        ]
-    df = pages.select(*KERNEL_INPUT, *per_row, *ct_cols)
+    optional = [c for c in KERNEL_OPTIONAL if c in pages.columns]
+    df = pages.select(*KERNEL_INPUT, *optional, *extra)
     if languages:
         df = df.where(F.col("lang").isin(list(languages)))
     return df
@@ -205,7 +187,7 @@ def extract(
 
     ``languages`` and per-row config: see :func:`kernel_input`.
     """
-    df = kernel_input(pages, cfg, languages)
+    df = kernel_input(pages, languages)
     if salt_partitions > 0:
         # explicit skew control: uniform hash of the unique key ->
         # near-perfectly even partitions regardless of domain skew.
@@ -298,13 +280,6 @@ def lineage_view(wide: DataFrame) -> DataFrame:
             F.sum("n_chars").alias("n_chars"),
         )
     )
-
-
-def dir_day(name: str) -> Optional[str]:
-    """The day of a ``warc_day=...`` directory name (hive-unescaped, as
-    pyarrow's hive partitioning reads it); None for any other entry."""
-    key, eq, value = name.partition("=")
-    return unquote(value) if key == "warc_day" and eq else None
 
 
 def spans_table(spans_path: str):

@@ -192,10 +192,11 @@ def validation_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- S3 (Content-Type leg): the reference's declared-type gate
 # (ocr/main.py:354-363) through the ENGINE's real expression
-# (extract.content_type_ok — the same one the kernel's pre-routing
-# verdict uses). The documents table carries no MIME column, so the
-# declared types are PLANTED deterministically from doc_id (identical
-# derivation in the SQL oracle — same planted-data pattern as
+# (extract.content_type_ok — equal value for value to the Arrow gate
+# the kernel applies, kernel.content_type_allowed). The documents table
+# carries no MIME column, so the declared types are PLANTED
+# deterministically from doc_id (identical derivation in the SQL
+# oracle — same planted-data pattern as
 # pii_redaction: a hash match proves the normalization + allow-list
 # decision, not an identity pass). Covers: exact allowed, uppercase +
 # parameters, octet-stream tolerance, html with charset, a disallowed

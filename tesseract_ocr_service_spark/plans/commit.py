@@ -14,32 +14,41 @@ rule, with plain parquet — no Iceberg jars offline):
 1. ``pending = input warc_days - committed warc_days`` where committed =
    days present in the lineage table, read on the driver with pyarrow
    (:func:`committed_days`: no job runs). The input days are the
-   ``warc_day=`` directories of the pages table's file listing (held by
-   the file index already, so no job runs; a day directory whose files
-   hold no rows is pending too, and gets a zero marker). A WARC source,
-   whose warc_day is a parsed column, takes one ``distinct()`` over its
-   persisted frame instead.
-2. Process ONLY pending days, through :func:`write_days` — the one
-   write of extracted rows, which ``streaming.ingest.epoch_sink`` calls
-   too. The kernel's input columns are placed into tasks by a plan the
-   driver makes from the sorted pending days (``repartitionById``: no
-   sampling job), so a day lands as one file, or as an even url-hash
-   split when there are fewer days than tasks, and each task is sorted
-   by (day, url). Each task runs the kernel and writes its rows itself
-   with pyarrow, one url-sorted file per day, under
-   ``extracted/_staging-<uuid>/`` (a ``_`` name, which readers skip),
-   and returns one row per file: day, path, kernel wall and lineage
-   counters. The committed rows never cross back into the JVM. Two
-   commits of one input write byte-identical files (in one session,
-   and in two sessions with one pyarrow version; across pyarrow
-   versions it is unmeasured). The driver
-   ``collect``s the rows — a result stage returns each partition's
-   rows once, from the attempt that succeeded, so their sums count
-   each written row once however often a task was retried, and the
-   files of a failed attempt are never published — then replaces each
-   day directory the write produced with its staged files by moves
-   (**dynamic partition overwrite**: exactly the produced partitions,
-   never a committed one) and removes the staging directory. A
+   ``warc_day=`` directories of the pages table, listed on the driver
+   as a ``pyarrow.dataset`` with the window as a partition filter
+   (:func:`day_files`: no job runs, no footer is read; a day directory
+   whose files hold no rows is pending too, and gets a zero marker). A
+   WARC source, whose warc_day is a parsed column, takes one
+   ``distinct()`` over its persisted frame instead.
+2. Process ONLY pending days, in ONE Spark stage whose tasks run the
+   kernel and write their rows themselves. A parquet source takes the
+   file feed (:func:`write_day_files`): the driver places the pending
+   days' files into tasks (day i of D to task i·n // D; with fewer
+   days than tasks a day's sorted files are split over its tasks), and
+   ``spark.range(0, n, 1, n).mapInArrow`` runs one task per place,
+   which reads its files with the executor's pyarrow, sorted by (day,
+   url) — no JVM scan, no exchange, no schema job. A WARC source and a
+   streaming epoch (``streaming.ingest.epoch_sink``) take the frame
+   feed (:func:`write_days`): ``X.kernel_input`` placed into tasks by
+   the same rule (``repartitionById``: no sampling job; a url-hash split
+   when there are fewer days than tasks) and sorted by (day, url). A
+   row is written under the day step 1 enumerated it by: its input
+   directory, or a frame's ``warc_day`` column (:func:`frame_day`), so
+   a session time zone other than the pages' never moves a row into
+   another day's directory. Each task writes with pyarrow, one
+   url-sorted file per day, under ``extracted/_staging-<uuid>/`` (a
+   ``_`` name, which readers skip), and returns one row per file: day,
+   path, kernel wall and lineage counters. The committed rows never
+   cross the JVM. Two commits of one input write byte-identical files
+   (in one session, and in two sessions with one pyarrow version;
+   across pyarrow versions it is unmeasured). The driver ``collect``s
+   the rows — a result stage returns each partition's rows once, from
+   the attempt that succeeded, so their sums count each written row
+   once however often a task was retried, and the files of a failed
+   attempt are never published — then replaces each day directory the
+   write produced with its staged files by moves (**dynamic partition
+   overwrite**: exactly the produced partitions, never a committed
+   one) and removes the staging directory (:func:`_stage`). A
    committed day directory is written once, at its final layout, so no
    compaction pass follows. A driver that dies before the moves leaves
    the staging directory behind, unread, and its days pending.
@@ -51,14 +60,14 @@ rule, with plain parquet — no Iceberg jars offline):
    overwrite makes the retry idempotent. Committed partitions are never
    rewritten, so re-runs are byte-stable.
 
-Steps 1 and 3 open ``out_root/lineage`` where Spark resolves it
-(``sources.warc.spark_uri``; no scheme: ``fs.defaultFS``) with the
-driver's pyarrow, as point reads do, and step 2's tasks open
-``out_root/extracted`` there with the executors' pyarrow, as the WARC
-reader opens archives. pyarrow never sees Hadoop's ``fs.*``:
-``hdfs://`` needs libhdfs on the driver and the executors, ``s3a://``
-the AWS environment or profile there; a scheme pyarrow cannot open
-fails step 1.
+Steps 1 and 3 open ``out_root/lineage`` and the pages table where Spark
+resolves them (``sources.warc.spark_uri``; no scheme: ``fs.defaultFS``)
+with the driver's pyarrow, as point reads do, and step 2's tasks open
+the pages table and ``out_root/extracted`` there with the executors'
+pyarrow, as the WARC reader opens archives. pyarrow never sees
+Hadoop's ``fs.*``: ``hdfs://`` needs libhdfs on the driver and the
+executors, ``s3a://`` the AWS environment or profile there; a scheme
+pyarrow cannot open fails step 1.
 
 ``salt_partitions`` is step 2's task count ``n`` (0 means the cluster's
 default parallelism): a run writes ``max(days, n)`` data files at most,
@@ -107,9 +116,10 @@ from ..operators import extract as X
 from ..schema import EXTRACTED_ARROW, LINEAGE_ARROW, LINEAGE_COUNTERS
 from ..sources import warc as Wsrc
 
-#: the day column :func:`write_days` adds to the kernel's input
-#: (``X.warc_day()``): the write tasks sort by it and name day
-#: directories with it, and it is not written
+#: the day column of the kernel input both feeds give the write tasks
+#: (:func:`frame_day` in :func:`write_days`, the directory day in
+#: :func:`_day_table`): the tasks name day directories with it, and it
+#: is not written
 _DAY = "_warc_day"
 
 #: what a write task returns per data file it staged: the file's day,
@@ -158,23 +168,41 @@ def _bound_day(ts) -> str | None:
     return datetime.date.fromisoformat(str(ts)[:10]).isoformat()
 
 
-def listed_days(pages: DataFrame, ts_from=None, ts_to=None) -> list[str]:
-    """The sorted ``warc_day`` values of the files a pages table read
-    lists (``pages.inputFiles()``: the file index holds them, so no job
-    runs), kept inside [ts_from, ts_to] as ``X.read_pages`` keeps them:
-    by date, a timestamp bound comparing by its date."""
-    days = {
-        day
-        for f in pages.inputFiles()
-        for day in map(X.dir_day, posixpath.dirname(f).split("/"))
-        if day is not None
-    }
-    lo, hi = _bound_day(ts_from), _bound_day(ts_to)
-    return sorted(
-        d
-        for d in days
-        if (lo is None or d >= lo) and (hi is None or d <= hi)
+#: the pages table's hive partitioning as :func:`day_files` lists it:
+#: ``warc_day`` the directory's name, a string
+_DAY_SCHEMA = pa.schema([("warc_day", pa.string())])
+
+
+def day_files(uri: str, ts_from=None, ts_to=None) -> dict[str, list[str]]:
+    """The pages table's data files by ``warc_day`` directory, days and
+    files sorted, kept inside [ts_from, ts_to] by date as
+    ``X.read_pages`` keeps them (a timestamp bound compares by its
+    date). ``uri`` is the table's path as Spark resolves it
+    (``sources.warc.spark_uri``); the files are paths inside its
+    ``sources.warc.arrow_fs`` filesystem. One ``pyarrow.dataset``
+    listing on the driver, no Spark job: hive partitioning with
+    ``warc_day`` a string, the window a partition filter (files of
+    other days are never opened, not even their footers), entries
+    starting with ``_`` or ``.`` skipped as Spark skips them. A day
+    directory whose files hold no rows is listed too."""
+    fs, root = Wsrc.arrow_fs(uri)
+    table = ds.dataset(
+        root, schema=_DAY_SCHEMA, filesystem=fs, format="parquet",
+        partitioning=ds.partitioning(_DAY_SCHEMA, flavor="hive"),
     )
+    day = ds.field("warc_day")
+    keep = day.is_valid()
+    lo, hi = _bound_day(ts_from), _bound_day(ts_to)
+    if lo is not None:
+        keep &= day >= lo
+    if hi is not None:
+        keep &= day <= hi
+    files: dict[str, list[str]] = {}
+    for frag in table.get_fragments(filter=keep):
+        d = ds.get_partition_keys(frag.partition_expression).get("warc_day")
+        if d is not None:  # a file outside any warc_day directory
+            files.setdefault(d, []).append(frag.path)
+    return {d: sorted(files[d]) for d in sorted(files)}
 
 
 @dataclass
@@ -215,10 +243,19 @@ def run_checkpointed(
     t0 = time.perf_counter()
     # one bound rule for both sources: a bound keeps its date
     lo, hi = _bound_day(ts_from), _bound_day(ts_to)
+    out = f"{out_root}/extracted"
     with ExitStack() as stack:
         if source_format != "warc":
-            pages = X.read_pages(spark, pages_path, lo, hi)
-            input_days = listed_days(pages, lo, hi)
+            uri = Wsrc.spark_uri(spark, pages_path)
+            files = day_files(uri, lo, hi)
+            input_days = list(files)
+
+            def write(days):
+                todo = {d: files[d] for d in days}
+                return write_day_files(
+                    spark, uri, todo, out, cfg, salt_partitions, languages
+                )
+
         else:
             pages = Wsrc.read_warc(spark, pages_path)
             if lo is not None:
@@ -236,6 +273,15 @@ def run_checkpointed(
                 for r in pages.select("warc_day").distinct().collect()
             )
 
+            def write(days):
+                # warc_ts is non-null by schema contract (undated WARC
+                # records ride the epoch sentinel, sources/warc.UNDATED_TS),
+                # so every row has a real warc_day step 1 enumerates
+                todo = pages.where(F.col("warc_day").isin(days))
+                return write_days(
+                    todo, out, days, cfg, salt_partitions, languages=languages
+                )
+
         # ---- step 1: partition-level anti-join against the commit log
         done = committed_days(spark, out_root)
         pending = [d for d in input_days if d not in done]
@@ -244,15 +290,8 @@ def run_checkpointed(
             wall_ms = int((time.perf_counter() - t0) * 1000)
             return RunSummary(pending, skipped, 0, wall_ms)
 
-        # ---- step 2: place, process, stage and publish the day files
-        # warc_ts is non-null by schema contract (undated WARC records
-        # ride the epoch sentinel, sources/warc.UNDATED_TS), so the
-        # warc_day written is always a real partition value step 1 can
-        # enumerate.
-        sums = write_days(
-            pages.where(F.col("warc_day").isin(pending)), f"{out_root}/extracted",
-            pending, cfg, salt_partitions, languages=languages,
-        )
+        # ---- step 2: process, stage and publish the pending day files
+        sums = write(pending)
 
     if _fail_before_commit:
         raise RuntimeError("injected failure between data write and commit marker")
@@ -295,40 +334,105 @@ def write_days(
     epoch_id: int | None = None,
     languages=None,
 ) -> dict[str, list]:
-    """The one write of extracted rows, shared by a batch run (step 2
-    above) and a streaming epoch (``streaming.ingest.epoch_sink``).
-    Returns ``{warc_day: [kernel_ms, *LINEAGE_COUNTERS]}`` of the rows
-    it wrote.
+    """The frame feed of the one write of extracted rows: a WARC run
+    (step 2 above) and a streaming epoch (``streaming.ingest.epoch_sink``)
+    write through it; a parquet run reads its files in the write tasks
+    instead (:func:`write_day_files`). Returns ``{warc_day: [kernel_ms,
+    *LINEAGE_COUNTERS]}`` of the rows it wrote.
 
-    ``days`` are the sorted days ``pages`` holds. ``X.kernel_input``
-    of ``pages`` is placed into ``n`` tasks (0: the cluster's default
-    parallelism) by :func:`_day_tasks`' plan — at most ``max(days, n)``
-    files per call, the same for the same input — and sorted by (day,
-    url) in each. Each task writes its day files with pyarrow under
-    ``path/_staging-<uuid>/`` (:func:`_write_task`) and returns one
-    ``STAGED_SCHEMA`` row per file. The driver collects them, moves
-    the files into ``[epoch_id=N/]warc_day=D/``, replacing exactly
-    those directories (:func:`_publish`), and removes the staging
-    directory. Executors open ``path`` where Spark resolves it, with
-    their own pyarrow (``sources.warc.arrow_fs``)."""
+    ``days`` are the sorted days ``pages`` holds, by :func:`frame_day`,
+    the day each row is written under. ``X.kernel_input`` of ``pages``
+    is placed into ``n`` tasks (0: the cluster's default parallelism)
+    by :func:`_day_tasks`' plan — at most ``max(days, n)`` files per
+    call, the same for the same input — and sorted by (day, url) in
+    each; the tasks stage, the driver publishes (:func:`_stage`)."""
     spark = pages.sparkSession
     n = n if n > 0 else spark.sparkContext.defaultParallelism
+    todo = (
+        X.kernel_input(pages, languages, frame_day(pages).alias(_DAY))
+        .repartitionById(n, _day_tasks(days, n))
+        .sortWithinPartitions(_DAY, "url")
+    )
+    return _stage(
+        spark, path, cfg, epoch_id, lambda write: todo.mapInArrow(write, STAGED_SCHEMA)
+    )
+
+
+def frame_day(pages: DataFrame) -> Column:
+    """The day a frame's row is written under, as a 'yyyy-MM-dd' string:
+    its ``warc_day`` column where it has one (a WARC frame's parsed
+    day; a Spark read of the pages table's directory day), else
+    ``X.warc_day()`` of its ``warc_ts`` (a streamed parquet epoch,
+    whose recursive file listing has no partition column). Callers
+    enumerate a frame's days by it too, so each row lands under a day
+    that was enumerated."""
+    if "warc_day" in pages.columns:
+        return F.col("warc_day").cast("string")
+    return X.warc_day()
+
+
+def write_day_files(
+    spark: SparkSession,
+    uri: str,
+    files: dict[str, list[str]],
+    path: str,
+    cfg: ExtractConfig = ExtractConfig(),
+    n: int = 0,
+    languages=None,
+) -> dict[str, list]:
+    """The file feed of the one write of extracted rows: a parquet run's
+    step 2, ONE Spark stage. ``files`` are :func:`day_files` of the
+    pages table at ``uri``; returns what :func:`write_days` returns.
+
+    The driver places the sorted days into ``n`` tasks (0: the
+    cluster's default parallelism) with :func:`_day_tasks`' rule — day
+    i goes to task i·n // D; when D < n its sorted files are split
+    into contiguous shares over its k tasks (:func:`_file_plan`) — and
+    runs ``spark.range(0, n, 1, n).mapInArrow(...)``: each task reads
+    its own files with the executor's pyarrow (:func:`_file_task`),
+    so no JVM scan, exchange or schema job runs, and every row is
+    written under the directory day it was read from. Executors open
+    ``uri`` with their own pyarrow (``sources.warc.arrow_fs``), as
+    they open the output root."""
+    n = n if n > 0 else spark.sparkContext.defaultParallelism
+    task = functools.partial(
+        _file_task,
+        plan=_file_plan(files, n),
+        uri=uri,
+        languages=None if not languages else list(languages),
+        rows=int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+    )
+
+    def feed(write):
+        return spark.range(0, n, 1, n).mapInArrow(
+            functools.partial(task, write=write), STAGED_SCHEMA
+        )
+
+    return _stage(spark, path, cfg, None, feed)
+
+
+def _stage(
+    spark: SparkSession, path: str, cfg: ExtractConfig, epoch_id, feed
+) -> dict[str, list]:
+    """Stage, publish and sum one write: ``feed(write)`` is the frame of
+    ``STAGED_SCHEMA`` rows whose tasks call ``write``
+    (:func:`_write_task`) on their day- and url-sorted kernel input.
+    Each task writes its day files with pyarrow under
+    ``path/_staging-<uuid>/``; the driver collects the rows, moves the
+    files into ``[epoch_id=N/]warc_day=D/``, replacing exactly those
+    directories (:func:`_publish`), removes the staging directory and
+    sums the rows per day. Executors open ``path`` where Spark resolves
+    it, with their own pyarrow (``sources.warc.arrow_fs``)."""
     uri = Wsrc.spark_uri(spark, path)
     fs, root = Wsrc.arrow_fs(uri)
     stage = f"_staging-{uuid.uuid4()}"
     prefix = "" if epoch_id is None else f"epoch_id={int(epoch_id)}/"
-    todo = (
-        X.kernel_input(pages, cfg, languages)
-        .withColumn(_DAY, X.warc_day())
-        .repartitionById(n, _day_tasks(days, n))
-        .sortWithinPartitions(_DAY, "url")
-    )
     write = functools.partial(
         _write_task, cfg=cfg, stage_uri=f"{uri}/{stage}", prefix=prefix
     )
     fs.create_dir(f"{root}/{stage}")
     try:
-        files = todo.mapInArrow(write, STAGED_SCHEMA).collect()
+        files = feed(write).collect()
         _publish(fs, f"{root}/{stage}", root, [f["path"] for f in files])
     finally:
         fs.delete_dir(f"{root}/{stage}")
@@ -340,8 +444,86 @@ def write_days(
     return sums
 
 
+def _file_plan(files: dict[str, list[str]], n: int) -> list[list[tuple]]:
+    """Each of the ``n`` tasks' ``(day, files)`` pairs, in day order:
+    day i of the D sorted days goes to the tasks of :func:`_day_span`,
+    its sorted files cut into one contiguous share per task (a task
+    whose share is empty gets none of the day)."""
+    plan: list[list[tuple]] = [[] for _ in range(n)]
+    for i, day in enumerate(sorted(files)):
+        paths = files[day]
+        lo, k = _day_span(i, len(files), n)
+        for j in range(k):
+            share = paths[j * len(paths) // k : (j + 1) * len(paths) // k]
+            if share:
+                plan[lo + j].append((day, share))
+    return plan
+
+
+def _file_task(ids, plan, uri: str, languages, rows: int, write):
+    """``mapInArrow`` body of :func:`write_day_files` over
+    ``spark.range(0, n, 1, n)``: the one id a task gets is its index
+    into ``plan``. Its days are read (:func:`_day_table`) and cut into
+    batches of ``rows`` rows as Spark cuts a sorted partition
+    (:func:`_batches`), then handed to ``write``."""
+    fs, _ = Wsrc.arrow_fs(uri)
+    for batch in ids:
+        for task in batch.column("id").to_pylist():
+            days = (_day_table(fs, d, paths, languages) for d, paths in plan[task])
+            yield from write(_batches(days, rows))
+
+
+#: what the file feed reads of each pages file: the kernel's input
+#: columns, the optional ones where the file has them
+_FILE_COLUMNS = (*X.KERNEL_INPUT, *X.KERNEL_OPTIONAL)
+_UTC = pa.timestamp("us", "UTC")
+
+
+def _day_table(fs, day: str, paths: list[str], languages) -> pa.Table:
+    """One day's share of the kernel input, read with pyarrow: of each
+    file the columns of ``_FILE_COLUMNS`` it has, ``warc_ts`` as UTC
+    microseconds (Spark's INT96 is a naive instant in UTC; pyarrow's
+    INT64 keeps its zone), kept where ``lang`` is in ``languages`` (a
+    NULL lang is not), sorted by url, with the day as ``_DAY``. A
+    column one file lacks is NULL in its rows."""
+    parts = []
+    for p in paths:
+        with fs.open_input_file(p) as f:
+            pf = pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
+            have = set(pf.schema_arrow.names)
+            t = pf.read(columns=[c for c in _FILE_COLUMNS if c in have])
+        i = t.schema.get_field_index("warc_ts")
+        parts.append(t.set_column(i, "warc_ts", t.column(i).cast(_UTC)))
+    t = pa.concat_tables(parts, promote_options="permissive")
+    if languages:
+        langs = pa.array(languages, pa.string())
+        t = t.filter(pc.is_in(t.column("lang"), value_set=langs))
+    t = t.sort_by("url")
+    return t.append_column(_DAY, pa.array([day] * t.num_rows, pa.string()))
+
+
+def _batches(tables, rows: int):
+    """The rows of ``tables``, in order, as record batches of ``rows``
+    rows (the last one shorter; ``rows`` <= 0: no limit), cut across
+    table bounds as Spark's ``maxRecordsPerBatch`` cuts a partition
+    sorted by (day, url), so the kernel sees the batches it would see
+    behind a JVM scan."""
+    carry = None
+    for t in tables:
+        if carry is not None:
+            t = pa.concat_tables([carry, t], promote_options="permissive")
+        t = t.combine_chunks()
+        cut = t.num_rows - t.num_rows % rows if rows > 0 else 0
+        if cut:
+            yield from t.slice(0, cut).to_batches(max_chunksize=rows)
+        carry = t.slice(cut)
+    if carry is not None and carry.num_rows:
+        yield from carry.to_batches()
+
+
 def _write_task(batches, cfg: ExtractConfig, stage_uri: str, prefix: str):
-    """``mapInArrow`` body of :func:`write_days`: extract each input
+    """The write of both feeds (the ``write`` :func:`_stage` hands
+    them), run in each task of the one write stage: extract each input
     batch, and write its rows to the current day's file under
     ``stage_uri/<prefix>warc_day=D/``. The input is sorted by day, so
     one file is open at a time and each day of the task is one file;
@@ -437,24 +619,31 @@ def _publish(fs, stage: str, root: str, paths: list[str]) -> None:
         fs.move(f"{stage}/{p}", f"{root}/{p}")
 
 
+def _day_span(i: int, d: int, n: int) -> tuple[int, int]:
+    """(first task, task count) of day ``i`` of ``d`` sorted days over
+    ``n`` tasks: day i goes to task i·n // D; when D >= n that is its
+    one task, when D < n the day spans the k tasks from there to
+    (i+1)·n // D - 1."""
+    lo, hi = i * n // d, (i + 1) * n // d
+    return lo, max(hi - lo, 1)
+
+
 def _day_tasks(days: list[str], n: int) -> Column:
-    """The task of each row as one SQL-text expression (CLAUDE.md
-    big-expression rule), planned on the driver over the D sorted
-    ``days``: day i goes to task i·n // D. When D >= n that is its one
-    task, so each day lands in one file; when D < n the day spans the
-    k tasks from there to (i+1)·n // D - 1, split by
-    ``pmod(xxhash64(url), k)``. A row of an unlisted day goes to task 0."""
+    """The frame feed's task of each row as one SQL-text expression
+    (CLAUDE.md big-expression rule), planned on the driver over the D
+    sorted ``days`` by :func:`_day_span`: a day spanning k > 1 tasks is
+    split by ``pmod(xxhash64(url), k)``, so each day lands in one file
+    when D >= n. A row of an unlisted day goes to task 0."""
     if not days:
         return F.lit(0)
-    d = len(days)
     groups: dict[str, list[str]] = {}
     for i, day in enumerate(days):
-        lo, hi = i * n // d, (i + 1) * n // d
-        task = str(lo) if hi - lo <= 1 else f"{lo} + pmod(xxhash64(url), {hi - lo})"
+        lo, k = _day_span(i, len(days), n)
+        task = str(lo) if k == 1 else f"{lo} + pmod(xxhash64(url), {k})"
         quoted = day.replace("\\", "\\\\").replace("'", "\\'")
         groups.setdefault(task, []).append(f"'{quoted}'")
     whens = " ".join(
-        f"WHEN {X.WARC_DAY_SQL} IN ({', '.join(ds)}) THEN {task}"
+        f"WHEN `{_DAY}` IN ({', '.join(ds)}) THEN {task}"
         for task, ds in groups.items()
     )
     return F.expr(f"CAST(CASE {whens} ELSE 0 END AS INT)")

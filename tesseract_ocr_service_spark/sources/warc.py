@@ -65,7 +65,7 @@ _CRLF2 = b"\r\n\r\n"
 
 #: output schema — the canonical pages shape + per-archive lineage +
 #: the HTTP response's declared Content-Type (NULL when absent), which
-#: feeds ExtractConfig.allowed_content_types' pre-kernel gate
+#: feeds the kernel's ExtractConfig.allowed_content_types gate
 #: (reference ocr/main.py:354-363).
 WARC_PAGES_SCHEMA = (
     "url string, warc_ts timestamp, warc_day string, html binary, "

@@ -5,7 +5,7 @@ archives parsed by the batch reader's own parse -> the SAME fused
 extraction kernel (mapInArrow works unchanged on streaming DataFrames —
 it is stateless) -> ``foreachBatch`` sink that calls the batch commit's
 own writer, ``plans.commit.write_days``: the epoch's days come from one
-``distinct`` over the epoch's ``warc_ts``, its pages are placed into
+``distinct`` over the epoch's day column, its pages are placed into
 tasks by the writer's driver-side day plan before the kernel (a WARC
 epoch's parsed pages persisted for both, so each archive is parsed
 once), and the kernel tasks write the output themselves, url-sorted,
@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..config import ExtractConfig
-from ..operators import extract as X
 from ..plans import commit as C
 from ..schema import PAGES_SCHEMA
 
@@ -152,13 +151,15 @@ def stream_warc(
 
 def epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
     """foreachBatch sink: ``plans.commit.write_days`` over the epoch's
-    days (one ``distinct``, reading ``warc_ts`` only), keyed by
+    days (one ``distinct`` of ``plans.commit.frame_day``, the day each
+    row is written under), keyed by
     (epoch_id, warc_day) — replaying an epoch rewrites exactly its own
     partitions (idempotent) instead of appending duplicate rows, with
     the same layout."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        days = sorted(r[0] for r in batch_df.select(X.warc_day()).distinct().collect())
+        day = C.frame_day(batch_df)
+        days = sorted(r[0] for r in batch_df.select(day).distinct().collect())
         C.write_days(batch_df, f"{out_root}/extracted", days, cfg, epoch_id=epoch_id)
 
     return sink

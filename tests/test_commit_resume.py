@@ -10,6 +10,7 @@ import os
 import subprocess
 import sys
 from collections import Counter
+from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,6 +30,12 @@ def paths(spark, tmp_path):
     out = str(tmp_path / "out")
     gen.write_pages(spark, pages, N_DOCS, seed=SEED, partitions=4)
     return pages, out
+
+
+def _dir_day(name):
+    """The day of a ``warc_day=...`` directory name (hive-unescaped)."""
+    key, eq, value = name.partition("=")
+    return unquote(value) if key == "warc_day" and eq else None
 
 
 def _days(spark, out):
@@ -85,9 +92,14 @@ def test_window_runs_compose(spark, paths):
 
 def test_pending_days_come_from_the_listing_without_a_job(spark, paths):
     """The parquet source's input days are the warc_day directories of
-    its file listing, windowed as read_pages windows the rows: the same
-    days a distinct() over the rows finds, and no Spark job starts."""
+    its pyarrow listing (``C.day_files``), windowed as read_pages
+    windows the rows: the same days a distinct() over the rows finds,
+    each with the data files Spark lists under it, and no Spark job
+    starts."""
+    from tesseract_ocr_service_spark.sources import warc as W
+
     pages, _ = paths
+    uri = W.spark_uri(spark, pages)
     tracker = spark.sparkContext.statusTracker()
     windows = [
         (None, None),
@@ -103,10 +115,18 @@ def test_pending_days_come_from_the_listing_without_a_job(spark, paths):
         )
         last_job = max(tracker.getJobIdsForGroup())
         assert last_job > last  # the tracker sees the distinct()'s jobs
-        got = C.listed_days(df, ts_from, ts_to)
+        got = C.day_files(uri, ts_from, ts_to)
         assert max(tracker.getJobIdsForGroup()) == last_job
-        assert got == expect, (ts_from, ts_to)
+        assert list(got) == expect, (ts_from, ts_to)
         assert expect
+        listed = {
+            (_dir_day(os.path.basename(os.path.dirname(f))), os.path.basename(f))
+            for f in df.inputFiles()
+        }
+        assert {
+            (d, os.path.basename(f)) for d, files in got.items() for f in files
+        } == {(d, f) for d, f in listed if d in expect}
+        assert all(files == sorted(files) for files in got.values())
 
 
 def test_crash_before_marker_then_resume_is_idempotent(spark, paths):
@@ -326,7 +346,7 @@ def test_lookup_matches_a_spark_read_on_every_table_kind(spark, paths, tmp_path)
 def _files_per_day(out):
     """{warc_day: number of data files} of a committed root."""
     files = glob.glob(os.path.join(out, "extracted", "warc_day=*", "*.parquet"))
-    return dict(Counter(X.dir_day(os.path.basename(os.path.dirname(f))) for f in files))
+    return dict(Counter(_dir_day(os.path.basename(os.path.dirname(f))) for f in files))
 
 
 def test_clustered_layout_matches_unclustered_extract(spark, paths):
@@ -427,6 +447,128 @@ def test_fewer_days_than_tasks_split_each_day_evenly(
     assert _files_per_day(out) == files
 
 
+#: declared types the differential table cycles through: mixed case,
+#: parameters, empty, all-space, NULL and disallowed
+_CONTENT_TYPES = [
+    "Text/HTML; charset=UTF-8",
+    "application/pdf",
+    "",
+    None,
+    "image/png",
+    " APPLICATION/Octet-Stream ;q=1",
+    "   ",
+    "text/plain",
+]
+
+
+def _mixed_pages(spark, root):
+    """A pages table of four days with per-row config and content_type
+    columns: two days written by Spark (``warc_ts`` INT96, two files
+    each), one by pyarrow (``warc_ts`` INT64 UTC micros, two files), and
+    one whose only file holds no rows. Returns the days."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegerType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from tesseract_ocr_service_spark.schema import PAGES_SCHEMA
+
+    docs = gen.gen_batch(list(range(240)), seed=SEED)
+    docs["day"] = docs["warc_ts"].dt.strftime("%Y-%m-%d")
+    days = sorted(docs["day"].unique())[:3]
+    docs = docs[docs["day"].isin(days)].reset_index(drop=True)
+    i = pd.Series(range(len(docs)))
+    docs["content_type"] = [_CONTENT_TYPES[k % len(_CONTENT_TYPES)] for k in i]
+    docs["page_start"] = [2 if k % 9 == 4 else None for k in i]
+    docs["page_end"] = [1 if k % 11 == 6 else None for k in i]
+    docs["pages"] = [[2, 1] if k % 7 == 3 else None for k in i]
+    docs.loc[i % 13 == 5, "lang"] = None
+    schema = StructType(
+        [
+            *PAGES_SCHEMA.fields,
+            StructField("content_type", StringType()),
+            StructField("page_start", IntegerType()),
+            StructField("page_end", IntegerType()),
+            StructField("pages", ArrayType(IntegerType())),
+        ]
+    )
+    cols = schema.fieldNames()
+
+    by_spark = docs[docs["day"].isin(days[:2])]
+    (
+        spark.createDataFrame(by_spark[cols], schema)
+        .repartition(2)
+        .withColumn("warc_day", F.to_date("warc_ts"))
+        .write.partitionBy("warc_day")
+        .parquet(root)
+    )
+    arrow_schema = pa.schema(
+        [
+            ("url", pa.string()),
+            ("warc_ts", pa.timestamp("us", "UTC")),
+            ("html", pa.binary()),
+            ("text", pa.string()),
+            ("lang", pa.string()),
+            ("content_type", pa.string()),
+            ("page_start", pa.int32()),
+            ("page_end", pa.int32()),
+            ("pages", pa.list_(pa.int32())),
+        ]
+    )
+    by_arrow = docs[docs["day"] == days[2]].copy()
+    by_arrow["warc_ts"] = by_arrow["warc_ts"].dt.tz_localize("UTC")
+    table = pa.Table.from_pandas(by_arrow[cols], arrow_schema, preserve_index=False)
+    empty = "2026-02-01"
+    for day, parts in ((days[2], (table[::2], table[1::2])), (empty, (table[:0],))):
+        os.makedirs(os.path.join(root, f"warc_day={day}"))
+        for k, part in enumerate(parts):
+            pq.write_table(part, os.path.join(root, f"warc_day={day}", f"part-{k}.pq"))
+    return [*days, empty]
+
+
+def test_file_feed_matches_extract_of_read_pages(spark, tmp_path):
+    """A parquet run's file feed writes exactly the rows of
+    ``X.extract(X.read_pages(...))`` on a table that mixes Spark- and
+    pyarrow-written files, carries per-row config and every kind of
+    declared Content-Type, under a ``languages`` filter (a NULL lang is
+    dropped), with fewer days than tasks and a day whose file holds no
+    rows (it gets a zero marker). Each row lies under its input day and
+    the lineage sums to the rows."""
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    days = _mixed_pages(spark, pages)
+    langs = ("eng", "rus", "es", "de")
+    s = C.run_checkpointed(spark, pages, out, salt_partitions=8, languages=langs)
+    assert s.pending_days == days
+
+    table = X.read_pages(spark, pages)
+    expect = X.extract(table, languages=langs).collect()
+    got = C.read_extracted(spark, out).drop("warc_day").collect()
+    key = lambda r: r["url"]
+    assert sorted(got, key=key) == sorted(expect, key=key)
+    assert {r["error"] for r in got} >= {None, "invalid_file_type", "no pages to process"}
+    assert len(got) < table.count()  # the filter dropped rows
+
+    input_day = {
+        r["url"]: r["day"]
+        for r in table.select("url", F.col("warc_day").cast("string").alias("day"))
+        .collect()
+    }
+    assert {u: input_day[u] for u in _days(spark, out)} == _days(spark, out)
+    files = _files_per_day(out)
+    assert set(files) == set(days[:3]) and max(files.values()) == 2  # split days
+    lineage = {r["warc_day"]: r.asDict() for r in C.read_lineage(spark, out).collect()}
+    assert sorted(lineage) == days
+    assert lineage[days[3]]["n_docs"] == 0
+    assert sum(r["n_docs"] for r in lineage.values()) == s.n_docs == len(got)
+
+
 def test_layout_does_not_depend_on_earlier_jobs(spark, corpus_1000, tmp_path):
     """The committed bytes are a function of the input and the task
     count: two commits of one corpus in one session, with unrelated jobs
@@ -513,11 +655,12 @@ def test_write_task_stages_one_url_sorted_file_per_day(
         assert r["kernel_ms"] > 0
 
 
-def test_fresh_run_makes_three_jobs(spark, paths):
-    """A fresh parquet-source run is three Spark jobs: the pages schema
-    read, the placement exchange, and the kernel and data write (no
-    sampling job, no counter aggregate, no index; the commit log is
-    read and appended on the driver)."""
+def test_fresh_run_makes_one_job(spark, paths):
+    """A fresh parquet-source run is one Spark job: the kernel and data
+    write, whose tasks read their own page files (no schema job, no
+    scan or placement exchange, no sampling job, no counter aggregate,
+    no index; the pages table is listed and the commit log read and
+    appended on the driver)."""
     pages, out = paths
     sc = spark.sparkContext
     sc.setJobGroup("fresh-commit", "fresh commit")
@@ -526,7 +669,57 @@ def test_fresh_run_makes_three_jobs(spark, paths):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert s.n_docs == N_DOCS
-    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 1
+
+
+def test_noop_resume_makes_no_job(spark, paths):
+    """A resume with every day committed starts no Spark job: the input
+    days come from the driver's listing and the committed days from
+    the driver's read of the log."""
+    pages, out = paths
+    C.run_checkpointed(spark, pages, out)
+    sc = spark.sparkContext
+    sc.setJobGroup("noop-resume", "no-op resume")
+    try:
+        s = C.run_checkpointed(spark, pages, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not s.pending_days and len(s.skipped_days) == 30
+    assert sc.statusTracker().getJobIdsForGroup("noop-resume") == []
+
+
+def test_non_utc_session_writes_rows_under_their_input_day(spark, paths):
+    """Pages written in UTC, committed from an America/Los_Angeles
+    session in two runs (through 01-05, then 01-06..01-10): every row
+    lies under the day directory it was read from, so the second run
+    neither empties a day the first committed nor takes rows of another
+    day into it, and no directory step 1 did not enumerate (2025-12-31)
+    is written."""
+    pages, out = paths
+    expect = {
+        r["url"]: r["day"]
+        for r in X.read_pages(spark, pages, "2026-01-01", "2026-01-10")
+        .select("url", F.col("warc_day").cast("string").alias("day"))
+        .collect()
+    }
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        s1 = C.run_checkpointed(spark, pages, out, ts_to="2026-01-05")
+        s2 = C.run_checkpointed(
+            spark, pages, out, ts_from="2026-01-06", ts_to="2026-01-10"
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert s1.pending_days == [f"2026-01-{d:02d}" for d in range(1, 6)]
+    assert s2.pending_days == [f"2026-01-{d:02d}" for d in range(6, 11)]
+    assert sorted(os.listdir(os.path.join(out, "extracted"))) == [
+        f"warc_day=2026-01-{d:02d}" for d in range(1, 11)
+    ]
+    assert _days(spark, out) == expect
+    lineage = {r["warc_day"]: r["n_docs"] for r in C.read_lineage(spark, out).collect()}
+    assert lineage == dict(Counter(expect.values()))
+    assert s1.n_docs + s2.n_docs == len(expect)
 
 
 def test_committed_days_runs_no_job(spark, paths):
@@ -752,7 +945,7 @@ def test_root_written_by_both_writers_reads(spark, paths, tmp_path, spark_days, 
 
     root = f"{out}/extracted"
     physical = {
-        X.dir_day(os.path.basename(os.path.dirname(f))): pq.ParquetFile(f)
+        _dir_day(os.path.basename(os.path.dirname(f))): pq.ParquetFile(f)
         .schema.column(1).physical_type
         for f in glob.glob(os.path.join(root, "warc_day=*", "*.parquet"))
     }

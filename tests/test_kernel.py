@@ -585,10 +585,12 @@ def test_flow_template_fallback_matches_cached_path():
 
 
 def test_content_type_gate_batch_level():
-    """The reference's declared-type gate (ocr/main.py:354-363) rides
-    into the kernel as a PRE-COMPUTED boolean (_ct_reject): True
-    rejects with invalid_file_type BEFORE size/magic (a gated row's
-    payload is never sniffed); False/NULL/absent column = gate off."""
+    """The reference's declared-type gate (ocr/main.py:354-363) is
+    applied by the kernel to a ``content_type`` column
+    (kernel.content_type_allowed): a disallowed type rejects with
+    invalid_file_type BEFORE size/magic (a gated row's payload is never
+    sniffed); an allowed type, NULL, an absent column or
+    ``allowed_content_types=None`` = gate off."""
     html = b"<html><body><p>three word block</p></body></html>"
     batch = pd.DataFrame(
         {
@@ -596,23 +598,101 @@ def test_content_type_gate_batch_level():
             "warc_ts": pd.Timestamp("2026-01-05"),
             "html": [html, html, b"\x89PNG garbage"],
             "lang": "eng",
-            "_ct_reject": [True, False, None],
+            "content_type": ["image/png", "Text/HTML; charset=UTF-8", None],
         }
     )
     out = kernel.extract_batch(batch, CFG).to_pylist()
     assert [r["status"] for r in out] == ["rejected", "ok", "rejected"]
     assert out[0]["error"] == "invalid_file_type"
-    assert out[2]["error"] == "invalid_payload"  # NULL verdict: off
+    assert out[2]["error"] == "invalid_payload"  # NULL type: gate passes
+    off = kernel.extract_batch(batch, ExtractConfig(allowed_content_types=None))
+    assert [r["status"] for r in off.to_pylist()] == ["ok", "ok", "rejected"]
     # without the column, nothing changes (existing suite pins that)
     out2 = run([html])
     assert out2[0]["status"] == "ok"
 
 
+#: declared types built from the allow-list's letters and the
+#: characters where Spark's string functions and Arrow's could part:
+#: 'İ' (Java lower-cases it to 'i' + U+0307, Arrow to 'i'), the Kelvin
+#: sign (both: 'k'), 'ß', dotless and long s, NBSP, tabs, newlines
+#: (Spark's trim strips U+0020 only)
+_CT_CHARS = list("aApPlLiIcCtTkKoOnNdDfFhHmMsSrReE/;=- ") + [
+    "İ", "\u212a", "ß", "ı", "ſ", "\xa0", "\t", "\n",
+]
+
+
+#: allow-lists the gate is compared under: the default, and one whose
+#: entry has a 'k' (the Kelvin sign lower-cases to it)
+_ALLOW_LISTS = [CFG.allowed_content_types, ("text/markdown",)]
+
+
+def _declared_types():
+    from hypothesis import strategies as st
+
+    listed = st.sampled_from([t for a in _ALLOW_LISTS for t in a])
+    noise = st.text(alphabet=st.sampled_from(_CT_CHARS), max_size=4)
+    cased = st.builds(
+        lambda t, flips: "".join(
+            c.upper() if f else c for c, f in zip(t, flips + [False] * len(t))
+        ),
+        listed,
+        st.lists(st.booleans(), max_size=24),
+    )
+    # one character of a listed type swapped for a trap
+    swapped = st.builds(
+        lambda t, i, c: t[: i % len(t)] + c + t[i % len(t) + 1 :],
+        listed,
+        st.integers(0, 23),
+        st.sampled_from(["İ", "\u212a", "ı", "ſ", "\xa0", "\t", "ß"]),
+    )
+    return st.one_of(
+        st.none(),
+        st.text(alphabet=st.sampled_from(_CT_CHARS), max_size=24),
+        cased,
+        swapped,
+        st.builds(lambda a, b, c: a + b + c, noise, st.one_of(cased, swapped), noise),
+    )
+
+
+def test_arrow_content_type_gate_equals_spark_expression(spark):
+    """kernel.content_type_allowed (the gate the kernel applies) equals
+    operators.extract.content_type_ok (the Spark expression the SQL
+    oracle's content_type_gate keeps) on generated declared types,
+    under the default allow-list and one with a 'k'."""
+    import pyarrow as pa
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import functions as F
+
+    from tesseract_ocr_service_spark.operators import extract as X
+
+    @settings(max_examples=40, deadline=None)
+    @given(st.lists(_declared_types(), min_size=1, max_size=40))
+    @example(["applİcation/pdf", "text/mar\u212adown", " text/html\t", "\xa0"])
+    def check(values):
+        df = spark.createDataFrame(
+            pd.DataFrame({"c": pd.Series(values, dtype=object)}), "c string"
+        )
+        got = df.select(
+            *(
+                X.content_type_ok(F.col("c"), a).alias(f"a{i}")
+                for i, a in enumerate(_ALLOW_LISTS)
+            )
+        ).collect()
+        for i, allowed in enumerate(_ALLOW_LISTS):
+            arrow = kernel.content_type_allowed(pa.array(values, pa.string()), allowed)
+            assert arrow.to_pylist() == [r[f"a{i}"] for r in got], allowed
+
+    check()
+
+
 def test_content_type_gate_e2e(spark):
-    """extract() computes the verdict JVM-side from a `content_type`
-    column (content_type_ok: parameter-strip + case-fold + allow-list,
-    NULL/empty tolerated) — one implementation of the gate semantics,
-    checked end to end through the fused kernel."""
+    """extract() hands a `content_type` column to the kernel, which
+    takes the verdict (kernel.content_type_allowed: parameter-strip +
+    case-fold + allow-list, NULL/empty tolerated) — one implementation
+    of the gate semantics, checked end to end through the fused
+    kernel."""
     from pyspark.sql import functions as F
 
     from tesseract_ocr_service_spark.operators import extract as X
