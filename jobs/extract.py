@@ -29,8 +29,9 @@ opens archives. pyarrow does not see Hadoop's fs.* settings: an s3a://
 root needs the AWS environment or profile on the driver and every
 executor (an endpoint or keys set only as spark.hadoop.fs.s3a.* do not
 carry over), an hdfs:// root needs libhdfs on each of them, and a
-scheme pyarrow cannot open (abfs, wasb) fails the run before it writes
-anything.
+scheme pyarrow cannot open (which ones depends on its build) fails the
+run on the driver, before any task (on --pages, with an error that
+names it).
 """
 
 from __future__ import annotations

@@ -27,7 +27,9 @@ rule, with plain parquet — no Iceberg jars offline):
    days than tasks a day's sorted files are split over its tasks), and
    ``spark.range(0, n, 1, n).mapInArrow`` runs one task per place,
    which reads its files with the executor's pyarrow, sorted by (day,
-   url) — no JVM scan, no exchange, no schema job. A WARC source and a
+   url) — no JVM scan, no exchange, no schema job; a day share over
+   ``_SORT_BYTES`` is sorted in runs spilled to local disk and merged,
+   so a task's memory does not grow with its days. A WARC source and a
    streaming epoch (``streaming.ingest.epoch_sink``) take the frame
    feed (:func:`write_days`): ``X.kernel_input`` placed into tasks by
    the same rule (``repartitionById``: no sampling job; a url-hash split
@@ -40,8 +42,10 @@ rule, with plain parquet — no Iceberg jars offline):
    ``_`` name, which readers skip), and returns one row per file: day,
    path, kernel wall and lineage counters. The committed rows never
    cross the JVM. Two commits of one input write byte-identical files
-   (in one session, and in two sessions with one pyarrow version;
-   across pyarrow versions it is unmeasured). The driver ``collect``s
+   (in one session, and in two sessions with one pyarrow version and
+   one ``maxRecordsPerBatch``, whose cuts reach a day file's bytes once
+   one of its columns outgrows a parquet data page; across pyarrow
+   versions it is unmeasured). The driver ``collect``s
    the rows — a result stage returns each partition's rows once, from
    the attempt that succeeded, so their sums count each written row
    once however often a task was retried, and the files of a failed
@@ -93,11 +97,14 @@ from __future__ import annotations
 import datetime
 import functools
 import itertools
+import os
 import posixpath
+import tempfile
 import time
 import uuid
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -118,7 +125,7 @@ from ..sources import warc as Wsrc
 
 #: the day column of the kernel input both feeds give the write tasks
 #: (:func:`frame_day` in :func:`write_days`, the directory day in
-#: :func:`_day_table`): the tasks name day directories with it, and it
+#: :func:`_day_pieces`): the tasks name day directories with it, and it
 #: is not written
 _DAY = "_warc_day"
 
@@ -184,8 +191,19 @@ def day_files(uri: str, ts_from=None, ts_to=None) -> dict[str, list[str]]:
     ``warc_day`` a string, the window a partition filter (files of
     other days are never opened, not even their footers), entries
     starting with ``_`` or ``.`` skipped as Spark skips them. A day
-    directory whose files hold no rows is listed too."""
-    fs, root = Wsrc.arrow_fs(uri)
+    directory whose files hold no rows is listed too. A scheme pyarrow
+    cannot open raises ``ValueError`` here, on the driver, before any
+    task would fail on it."""
+    try:
+        fs, root = Wsrc.arrow_fs(uri)
+    except pa.lib.ArrowInvalid as e:
+        raise ValueError(
+            f"cannot list the pages table {uri!r} (the job's --pages): the "
+            "driver and the executors open it with pyarrow, whose "
+            f"FileSystem.from_uri does not recognize scheme "
+            f"{urlparse(uri).scheme.lower()!r} (the schemes it opens "
+            "depend on the pyarrow build)"
+        ) from e
     table = ds.dataset(
         root, schema=_DAY_SCHEMA, filesystem=fs, format="parquet",
         partitioning=ds.partitioning(_DAY_SCHEMA, flavor="hive"),
@@ -463,43 +481,172 @@ def _file_plan(files: dict[str, list[str]], n: int) -> list[list[tuple]]:
 def _file_task(ids, plan, uri: str, languages, rows: int, write):
     """``mapInArrow`` body of :func:`write_day_files` over
     ``spark.range(0, n, 1, n)``: the one id a task gets is its index
-    into ``plan``. Its days are read (:func:`_day_table`) and cut into
-    batches of ``rows`` rows as Spark cuts a sorted partition
-    (:func:`_batches`), then handed to ``write``."""
+    into ``plan``. Its days are read url-sorted (:func:`_day_pieces`,
+    spilling under a local temporary directory) and cut into batches of
+    ``rows`` rows as Spark cuts a sorted partition (:func:`_batches`),
+    then handed to ``write``."""
     fs, _ = Wsrc.arrow_fs(uri)
     for batch in ids:
         for task in batch.column("id").to_pylist():
-            days = (_day_table(fs, d, paths, languages) for d, paths in plan[task])
-            yield from write(_batches(days, rows))
+            with tempfile.TemporaryDirectory(prefix="commit-sort-") as spill:
+                pieces = itertools.chain.from_iterable(
+                    _day_pieces(fs, d, paths, languages, rows, spill)
+                    for d, paths in plan[task]
+                )
+                yield from write(_batches(pieces, rows))
 
 
 #: what the file feed reads of each pages file: the kernel's input
 #: columns, the optional ones where the file has them
 _FILE_COLUMNS = (*X.KERNEL_INPUT, *X.KERNEL_OPTIONAL)
 _UTC = pa.timestamp("us", "UTC")
+_UTC_TS = pa.field("warc_ts", _UTC)
+
+#: the most Arrow bytes of page rows a file-feed task sorts in memory
+#: at once: a day share holding more is sorted in runs of about this
+#: size, each spilled to a local Arrow IPC file, and the runs merged
+#: (:func:`_merge`), as Spark's sort spills, so a task's memory does not
+#: grow with its days
+_SORT_BYTES = 32 << 20
 
 
-def _day_table(fs, day: str, paths: list[str], languages) -> pa.Table:
-    """One day's share of the kernel input, read with pyarrow: of each
-    file the columns of ``_FILE_COLUMNS`` it has, ``warc_ts`` as UTC
-    microseconds (Spark's INT96 is a naive instant in UTC; pyarrow's
-    INT64 keeps its zone), kept where ``lang`` is in ``languages`` (a
-    NULL lang is not), sorted by url, with the day as ``_DAY``. A
-    column one file lacks is NULL in its rows."""
-    parts = []
-    for p in paths:
+def _day_pieces(fs, day: str, paths: list[str], languages, rows: int, spill: str):
+    """One day's share of the kernel input, read with pyarrow, as a
+    stream of url-sorted tables of bounded size with the day as
+    ``_DAY``: the rows of :func:`_read_share` in the order a stable sort
+    by url of all of them gives (NULL last). A share of at most about
+    ``_SORT_BYTES`` is sorted in memory; a larger one is sorted in runs
+    of that size, spilled under ``spill`` and merged."""
+    buf: list[pa.RecordBatch] = []
+    size, runs = 0, []
+    for batch in _read_share(fs, paths, languages, rows):
+        if size >= _SORT_BYTES:  # a full run, and more rows follow
+            runs.append(
+                _spill(pa.Table.from_batches(buf).sort_by("url"), spill, rows)
+            )
+            buf, size = [], 0
+        buf.append(batch)
+        size += batch.nbytes
+    last = pa.Table.from_batches(buf).sort_by("url") if buf else None
+    buf = None
+    if runs:
+        runs.append(_spill(last, spill, rows))
+        last = None
+        pieces = _merge(runs, rows)
+    else:
+        pieces = [] if last is None else [last]
+    for t in pieces:
+        yield t.append_column(_DAY, pa.array([day] * t.num_rows, pa.string()))
+
+
+def _read_share(fs, paths: list[str], languages, rows: int):
+    """The rows of the pages files ``paths``, in order, as record
+    batches of ``rows`` rows at most (``rows`` <= 0: 65536), all in one
+    schema: of each file the columns of ``_FILE_COLUMNS`` it has, a
+    column one file lacks NULL in its rows, types promoted as
+    ``pa.unify_schemas`` promotes them, ``warc_ts`` as UTC microseconds
+    (Spark's INT96 is a naive instant in UTC; pyarrow's INT64 keeps its
+    zone); kept where ``lang`` is in ``languages`` (a NULL lang is
+    not). pyarrow decodes a file one row group at a time."""
+    metas = [pq.read_metadata(p, filesystem=fs) for p in paths]
+    schemas = []
+    for m in metas:
+        have = m.schema.to_arrow_schema()
+        schemas.append(
+            pa.schema(
+                [_UTC_TS if c == "warc_ts" else have.field(c)
+                 for c in _FILE_COLUMNS if c in have.names]
+            )
+        )
+    schema = pa.unify_schemas(schemas, promote_options="permissive") if metas else None
+    langs = pa.array(languages, pa.string()) if languages else None
+    for p, meta in zip(paths, metas):
         with fs.open_input_file(p) as f:
-            pf = pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
+            pf = pq.ParquetFile(f, metadata=meta, coerce_int96_timestamp_unit="us")
             have = set(pf.schema_arrow.names)
-            t = pf.read(columns=[c for c in _FILE_COLUMNS if c in have])
-        i = t.schema.get_field_index("warc_ts")
-        parts.append(t.set_column(i, "warc_ts", t.column(i).cast(_UTC)))
-    t = pa.concat_tables(parts, promote_options="permissive")
-    if languages:
-        langs = pa.array(languages, pa.string())
-        t = t.filter(pc.is_in(t.column("lang"), value_set=langs))
-    t = t.sort_by("url")
-    return t.append_column(_DAY, pa.array([day] * t.num_rows, pa.string()))
+            for b in pf.iter_batches(
+                batch_size=rows if rows > 0 else 1 << 16,
+                columns=[c for c in _FILE_COLUMNS if c in have],
+            ):
+                cols = [
+                    b.column(c.name).cast(c.type) if c.name in have
+                    else pa.nulls(b.num_rows, c.type)
+                    for c in schema
+                ]
+                b = pa.RecordBatch.from_arrays(cols, schema=schema)
+                if langs is not None:
+                    b = b.filter(pc.is_in(b.column("lang"), value_set=langs))
+                if b.num_rows:
+                    yield b
+
+
+def _spill(run: pa.Table, spill: str, rows: int) -> str:
+    """Write the sorted run to a new Arrow IPC file under ``spill``, in
+    batches of ``rows`` rows; returns its path."""
+    path = f"{spill}/run-{uuid.uuid4()}.arrow"
+    with pa.OSFile(path, "wb") as sink, pa.ipc.new_file(sink, run.schema) as w:
+        w.write_table(run, max_chunksize=rows if rows > 0 else None)
+    return path
+
+
+def _merge(paths: list[str], rows: int):
+    """The rows of the url-sorted runs spilled at ``paths`` as one
+    url-sorted stream of tables of ``rows`` rows at most (``rows`` <=
+    0: 65536), equal urls in run order (the order a stable sort of the
+    runs' concatenation gives): a k-way merge that holds one
+    memory-mapped batch of each run. A buffered row may go out once no
+    unread row sorts before it: it sorts at or before the least (last
+    buffered url, run) among the runs with unread batches, a NULL url
+    above every other. Each step sorts the urls of those rows and takes
+    the first ``rows``. The files are removed at the end."""
+    m = rows if rows > 0 else 1 << 16
+    with ExitStack() as maps:
+        runs = [pa.ipc.open_file(maps.enter_context(pa.memory_map(p))) for p in paths]
+        read = [0] * len(runs)
+        bufs = [run.schema.empty_table() for run in runs]
+        while True:
+            for r, run in enumerate(runs):
+                while not bufs[r].num_rows and read[r] < run.num_record_batches:
+                    bufs[r] = pa.Table.from_batches([run.get_batch(read[r])])
+                    read[r] += 1
+            live = [r for r in range(len(runs)) if bufs[r].num_rows]
+            if not live:
+                break
+            ends = [
+                (bufs[r].column("url")[-1].as_py(), r)
+                for r in live if read[r] < runs[r].num_record_batches
+            ]
+            bound = min(  # a NULL url sorts after every other
+                ends, key=lambda e: (e[0] is None, e[0] or "", e[1]), default=None
+            )
+            ready = [_upto(bufs[r].column("url"), bound, r) for r in live]
+            urls = pa.concat_tables(
+                [bufs[r].select(["url"]).slice(0, k) for r, k in zip(live, ready)]
+            )
+            first = pc.sort_indices(urls, [("url", "ascending")])[:m].to_numpy()
+            at, parts = 0, []
+            for r, k in zip(live, ready):
+                used = int(((first >= at) & (first < at + k)).sum())
+                parts.append(bufs[r].slice(0, used))
+                bufs[r] = bufs[r].slice(used)
+                at += k
+            yield pa.concat_tables(parts).sort_by("url")
+    for p in paths:
+        os.remove(p)
+
+
+def _upto(urls: pa.ChunkedArray, bound: tuple | None, r: int) -> int:
+    """How many of run ``r``'s url-sorted ``urls`` sort at or before
+    ``bound`` = (url, run) by (url, run), a NULL url last (``None``: no
+    bound, all of them)."""
+    if bound is None:
+        return len(urls)
+    url, last = bound
+    inclusive = r <= last
+    if url is None:
+        return len(urls) if inclusive else len(urls) - urls.null_count
+    cmp = pc.less_equal if inclusive else pc.less
+    return pc.sum(cmp(urls, url)).as_py() or 0
 
 
 def _batches(tables, rows: int):
@@ -507,18 +654,19 @@ def _batches(tables, rows: int):
     rows (the last one shorter; ``rows`` <= 0: no limit), cut across
     table bounds as Spark's ``maxRecordsPerBatch`` cuts a partition
     sorted by (day, url), so the kernel sees the batches it would see
-    behind a JVM scan."""
+    behind a JVM scan (a day file's bytes depend on where its rows'
+    batches are cut). Each batch is copied out on its own: no table is
+    combined whole, and fewer than ``rows`` rows are carried."""
     carry = None
     for t in tables:
         if carry is not None:
             t = pa.concat_tables([carry, t], promote_options="permissive")
-        t = t.combine_chunks()
         cut = t.num_rows - t.num_rows % rows if rows > 0 else 0
-        if cut:
-            yield from t.slice(0, cut).to_batches(max_chunksize=rows)
+        for at in range(0, cut, max(rows, 1)):
+            yield from t.slice(at, rows).combine_chunks().to_batches()
         carry = t.slice(cut)
     if carry is not None and carry.num_rows:
-        yield from carry.to_batches()
+        yield from carry.combine_chunks().to_batches()
 
 
 def _write_task(batches, cfg: ExtractConfig, stage_uri: str, prefix: str):

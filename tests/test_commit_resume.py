@@ -437,8 +437,8 @@ def corpus_1000(spark, tmp_path_factory):
 def test_fewer_days_than_tasks_split_each_day_evenly(
     spark, corpus_1000, tmp_path, window, files
 ):
-    """With D < n days, each day spans n / D of the n tasks (split by
-    url hash): one day at n = 4 is 4 files, two days 2 + 2."""
+    """With D < n days, each day spans n / D of the n tasks (a share of
+    its sorted files each): one day at n = 4 is 4 files, two days 2 + 2."""
     out = str(tmp_path / "out")
     s = C.run_checkpointed(
         spark, corpus_1000, out, ts_from=window[0], ts_to=window[1], salt_partitions=4
@@ -599,6 +599,210 @@ def test_layout_does_not_depend_on_earlier_jobs(spark, corpus_1000, tmp_path):
     assert digests(first) == digests(second)
 
 
+def _md5s(root):
+    """{day directory: md5 of its one data file} under ``root``."""
+    import hashlib
+
+    got = {}
+    for f in glob.glob(os.path.join(root, "warc_day=*", "*.parquet")):
+        d = os.path.basename(os.path.dirname(f))
+        assert d not in got, d
+        with open(f, "rb") as fh:
+            got[d] = hashlib.md5(fh.read()).hexdigest()
+    return got
+
+
+def _large_html_pages(root, days, docs_per_day):
+    """A pages table written by pyarrow, one file a day, of html
+    documents whose canonical text takes ~100 KB each, so a day's text
+    columns outgrow one parquet data page. Returns the days."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    names = []
+    for d in range(days):
+        day = datetime.date(2026, 1, 1 + d)
+        names.append(day.isoformat())
+        html = [
+            (
+                "<html><body>"
+                + "".join(
+                    f"<p>day {d} doc {i} paragraph {j} lorem ipsum dolor sit amet "
+                    "consectetur adipiscing elit sed do eiusmod tempor</p>"
+                    for j in range(1000)
+                )
+                + "</body></html>"
+            ).encode()
+            for i in range(docs_per_day)
+        ]
+        noon = datetime.datetime(day.year, day.month, day.day, 12)
+        urls = [f"https://ex.com/{d}/{i * 7 % docs_per_day}" for i in range(docs_per_day)]
+        table = pa.table(
+            {
+                "url": urls,
+                "warc_ts": pa.array([noon] * docs_per_day, pa.timestamp("us", "UTC")),
+                "html": pa.array(html, pa.binary()),
+                "text": pa.array([None] * docs_per_day, pa.string()),
+                "lang": ["eng"] * docs_per_day,
+            }
+        )
+        os.makedirs(os.path.join(root, f"warc_day={names[-1]}"))
+        pq.write_table(table, os.path.join(root, f"warc_day={names[-1]}", "part-0.pq"))
+    return names
+
+
+def test_file_feed_writes_the_frame_feeds_bytes(spark, tmp_path):
+    """The file feed cuts its input into batches as Spark's
+    ``maxRecordsPerBatch`` cuts a (day, url)-sorted partition, across
+    day bounds, so each day file is byte-identical to the one the frame
+    feed writes from ``X.read_pages`` in the same tasks. The cuts reach
+    the bytes once a column of a day outgrows one parquet data page
+    (1 MiB): the writer's pages follow the chunks of the rows it gets,
+    and a day cut on its own (here 16 rows at 7 a batch, 2 days a task)
+    is chunked otherwise."""
+    from tesseract_ocr_service_spark.sources import warc as W
+
+    pages = str(tmp_path / "pages")
+    days = _large_html_pages(pages, 4, 16)
+    uri = W.spark_uri(spark, pages)
+    files = C.day_files(uri)
+    assert list(files) == days
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        C.write_day_files(spark, uri, files, str(tmp_path / "file"), n=2)
+        C.write_days(X.read_pages(spark, pages), str(tmp_path / "frame"), days, n=2)
+    finally:
+        spark.conf.set(key, old)
+    got = _md5s(str(tmp_path / "file"))
+    assert len(got) == 4
+    assert got == _md5s(str(tmp_path / "frame"))
+
+
+def _share(root, n_files, rows_per_file, html_bytes, row_group, seed, n_urls):
+    """Pages files of one day under ``root``: urls drawn from ``n_urls``
+    with repeats (across files too) and NULLs, in random order,
+    ``html`` a row's (file, row) tag padded to ``html_bytes``, every
+    other file with a ``content_type`` column. Returns the sorted paths."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rnd = random.Random(seed)
+    os.makedirs(root)
+    paths = []
+    for k in range(n_files):
+        m = rows_per_file
+        urls = [
+            None if rnd.random() < 0.05 else f"https://ex.com/{rnd.randrange(n_urls)}"
+            for _ in range(m)
+        ]
+        ts = datetime.datetime(2026, 1, 5)
+        cols = {
+            "url": pa.array(urls, pa.string()),
+            "warc_ts": pa.array([ts] * m, pa.timestamp("us", "UTC")),
+            "html": [f"{k}:{i}:".encode().ljust(html_bytes, b"x") for i in range(m)],
+            "lang": pa.array([rnd.choice(["eng", "de", None]) for _ in range(m)]),
+        }
+        if k % 2:
+            cols["content_type"] = pa.array(["text/html"] * m, pa.string())
+        paths.append(os.path.join(root, f"part-{k:03d}.parquet"))
+        pq.write_table(pa.table(cols), paths[-1], row_group_size=row_group)
+    return paths
+
+
+@pytest.mark.parametrize("languages", [None, ["eng"]])
+def test_file_feed_sort_spills_and_merges_as_one_stable_sort(
+    tmp_path, monkeypatch, languages
+):
+    """A day share larger than ``_SORT_BYTES`` is sorted in runs, spilled
+    and merged: its batches equal those of the share sorted in memory,
+    rows and cuts, and the rows are those of one stable url sort of the
+    files' concatenation (equal urls in file and row order, NULL last),
+    under a ``languages`` filter too. The spill files are removed."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    paths = _share(str(tmp_path / "day"), 6, 40, 300, 7, seed=5, n_urls=9)
+    fs = pafs.LocalFileSystem()
+    spilled = []
+    spill_run = C._spill
+    monkeypatch.setattr(C, "_spill", lambda *a: spilled.append(1) or spill_run(*a))
+
+    def feed(sort_bytes, rows):
+        monkeypatch.setattr(C, "_SORT_BYTES", sort_bytes)
+        spill = tmp_path / f"spill-{sort_bytes}-{rows}"
+        spill.mkdir()
+        spilled.clear()
+        pieces = C._day_pieces(fs, "2026-01-05", paths, languages, rows, str(spill))
+        got = list(C._batches(pieces, rows))
+        assert not os.listdir(spill)
+        return got
+
+    want = feed(1 << 40, 16)
+    assert not spilled
+    for sort_bytes, rows in ((4000, 16), (1, 16), (1, 3)):
+        got = feed(sort_bytes, rows)
+        assert len(spilled) > 2
+        if rows == 16:
+            assert [b.num_rows for b in got] == [b.num_rows for b in want]
+        got, expect = pa.Table.from_batches(got), pa.Table.from_batches(want)
+        assert got.to_pylist() == expect.to_pylist()
+
+    ref = pa.concat_tables(
+        [pq.read_table(p, columns=["url", "html", "lang"]) for p in paths]
+    ).sort_by("url")
+    if languages:
+        ref = ref.filter(pc.is_in(ref.column("lang"), value_set=pa.array(languages)))
+    table = pa.Table.from_batches(want)
+    assert table.column("html").to_pylist() == ref.column("html").to_pylist()
+    assert table.column("url").null_count > 0
+    assert len(set(table.column("url").to_pylist())) < table.num_rows
+    assert set(table.column(C._DAY).to_pylist()) == {"2026-01-05"}
+
+
+def test_file_feed_reads_a_large_day_in_bounded_memory(tmp_path):
+    """A 36 MiB day share (144 rows of 256 KiB html, in 2 MiB row
+    groups) runs through one write task's file feed in a fresh
+    interpreter with a 2 MiB sort budget: the Arrow pool's peak stays
+    under 16 MiB (one row group being decoded, one sort run and its
+    sorted copy, one merged batch), where reading and sorting the day
+    whole took 108 MiB; every row reaches the kernel, url-sorted, in
+    batches of 4."""
+    paths = _share(str(tmp_path / "day"), 3, 48, 256 << 10, 8, seed=9, n_urls=144)
+    probe = f"""
+import pyarrow as pa
+from tesseract_ocr_service_spark.plans import commit as C
+C._SORT_BYTES = 2 << 20
+pool = pa.default_memory_pool()
+base = pool.max_memory()
+seen = []
+def write(batches):
+    for b in batches:
+        seen.append((b.num_rows, b.column("url").to_pylist()))
+    return iter(())
+ids = iter([pa.record_batch({{"id": pa.array([0], pa.int64())}})])
+plan = [[("2026-01-05", {paths!r})]]
+list(C._file_task(ids, plan, {str(tmp_path)!r}, None, 4, write))
+urls = [u for _, us in seen for u in us]
+key = lambda u: (u is None, u or "")
+assert urls == sorted(urls, key=key), "not url-sorted"
+assert {{n for n, _ in seen}} == {{4}}, "batch sizes"
+print(len(urls), (pool.max_memory() - base) / 2**20)
+"""
+    done = subprocess.run(
+        [sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True
+    )
+    assert done.returncode == 0, done.stderr
+    rows, peak_mib = done.stdout.split()
+    assert int(rows) == 144
+    assert float(peak_mib) < 16, peak_mib
+
+
 @pytest.mark.parametrize("flush_each_slice", [False, True])
 def test_write_task_stages_one_url_sorted_file_per_day(
     tmp_path, monkeypatch, flush_each_slice
@@ -720,6 +924,15 @@ def test_non_utc_session_writes_rows_under_their_input_day(spark, paths):
     lineage = {r["warc_day"]: r["n_docs"] for r in C.read_lineage(spark, out).collect()}
     assert lineage == dict(Counter(expect.values()))
     assert s1.n_docs + s2.n_docs == len(expect)
+
+
+def test_day_files_names_a_scheme_pyarrow_cannot_open():
+    """A pages table on a scheme pyarrow does not recognize fails the
+    listing on the driver, before any task, with an error that names
+    the pages table and ``--pages``."""
+    names = r"pages table 'nosuchfs://b/pages' \(the job's --pages\)"
+    with pytest.raises(ValueError, match=names):
+        C.day_files("nosuchfs://b/pages")
 
 
 def test_committed_days_runs_no_job(spark, paths):
