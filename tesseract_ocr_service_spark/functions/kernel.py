@@ -45,6 +45,7 @@ from ..config import (
     ExtractConfig,
 )
 from ..schema import EXTRACTED_ARROW
+from ..worker import forget_zip_finders
 from . import assembly, htmlx, pdfstream
 
 #: the input columns the kernel reads (schema.PAGES_SCHEMA minus the
@@ -467,6 +468,7 @@ def kernel_iter(
     themselves (``plans.commit.write_days``): they write the output to
     their day files, time it and count it, and return Spark one row per
     file, not the rows."""
+    forget_zip_finders()
     for batch in batches:
         if batch.num_rows:
             yield extract_batch(batch, cfg)

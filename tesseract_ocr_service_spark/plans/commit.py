@@ -41,12 +41,15 @@ rule, with plain parquet — no Iceberg jars offline):
    url-sorted file per day, under ``extracted/_staging-<uuid>/`` (a
    ``_`` name, which readers skip), and returns one row per file: day,
    path, kernel wall and lineage counters. The committed rows never
-   cross the JVM. Two commits of one input write byte-identical files
-   (in one session, and in two sessions with one pyarrow version and
-   one ``maxRecordsPerBatch``, whose cuts reach a day file's bytes once
-   one of its columns outgrows a parquet data page; across pyarrow
-   versions it is unmeasured). The driver ``collect``s
-   the rows — a result stage returns each partition's rows once, from
+   cross the JVM. A task first drops its worker's zip importers
+   (``worker.forget_zip_finders``), so the next task the reused worker
+   runs does not re-read every zip on its path. Two commits of one
+   input write byte-identical files (in one session, and in two
+   sessions with one pyarrow version and one ``maxRecordsPerBatch``,
+   whose cuts reach a day file's bytes once one of its columns
+   outgrows a parquet data page; across pyarrow versions it is
+   unmeasured). The driver ``collect``s the rows — a result
+   stage returns each partition's rows once, from
    the attempt that succeeded, so their sums count each written row
    once however often a task was retried, and the files of a failed
    attempt are never published — then replaces each day directory the
@@ -55,7 +58,10 @@ rule, with plain parquet — no Iceberg jars offline):
    one) and removes the staging directory (:func:`_stage`). A
    committed day directory is written once, at its final layout, so no
    compaction pass follows. A driver that dies before the moves leaves
-   the staging directory behind, unread, and its days pending.
+   the staging directory behind, unread, and its days pending; one
+   that dies between the moves leaves its days pending too, some
+   emptied and some holding their new files, and a resume rewrites
+   them all.
 3. Append per-day counter rows to ``lineage/`` LAST, as one parquet
    file pyarrow builds from step 2's summed rows (nothing is re-read)
    and writes on the driver (no job) under a ``_`` name readers skip,
@@ -122,6 +128,7 @@ from ..functions.kernel import extract_batch
 from ..operators import extract as X
 from ..schema import EXTRACTED_ARROW, LINEAGE_ARROW, LINEAGE_COUNTERS
 from ..sources import warc as Wsrc
+from ..worker import forget_zip_finders
 
 #: the day column of the kernel input both feeds give the write tasks
 #: (:func:`frame_day` in :func:`write_days`, the directory day in
@@ -677,6 +684,7 @@ def _write_task(batches, cfg: ExtractConfig, stage_uri: str, prefix: str):
     one file is open at a time and each day of the task is one file;
     when a day ends its file is closed and its ``STAGED_SCHEMA`` row
     yielded. A batch's kernel wall is split over its days by rows."""
+    forget_zip_finders()
     fs, stage = Wsrc.arrow_fs(stage_uri)
     file = None
     for batch in batches:

@@ -27,6 +27,7 @@ from typing import Iterator
 import pandas as pd
 
 from ..functions import htmlx, pdfstream
+from ..worker import forget_zip_finders
 
 EPOCH = datetime(2026, 1, 1)
 N_DOMAINS = 50
@@ -260,6 +261,7 @@ def gen_batches_iter(
     batches: Iterator[pd.DataFrame], seed: int
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas entrypoint over spark.range(n) -> pages rows."""
+    forget_zip_finders()
     for b in batches:
         if len(b):
             yield gen_batch(b["id"].tolist(), seed)

@@ -60,6 +60,8 @@ from typing import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..worker import forget_zip_finders
+
 _BATCH_ROWS = 512
 _CRLF2 = b"\r\n\r\n"
 
@@ -353,6 +355,7 @@ def _parse_paths(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas over archive paths: each archive streamed from its
     path -> inflate -> rolling-buffer WARC parse -> bounded Arrow-batch
     DataFrames of canonical page rows."""
+    forget_zip_finders()
     for pdf in it:
         for path in pdf["path"]:
             yield from _archive_rows(path)

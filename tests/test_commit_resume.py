@@ -1100,6 +1100,63 @@ def test_crash_between_staging_and_publish_then_resume(spark, paths, tmp_path):
     assert C.read_extracted(spark, out).exceptAll(C.read_extracted(spark, ref)).count() == 0
 
 
+class _FailingMove:
+    """A pyarrow filesystem whose ``k``-th ``move`` raises; every other
+    call passes through."""
+
+    def __init__(self, fs, k):
+        self._fs, self._left = fs, k
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def move(self, src, dest):
+        self._left -= 1
+        if self._left == 0:
+            raise OSError("injected failure between the moves")
+        return self._fs.move(src, dest)
+
+
+@pytest.mark.parametrize("k", [1, 13])
+def test_crash_between_the_moves_then_resume(spark, paths, tmp_path, monkeypatch, k):
+    """A run that fails at the ``k``-th move of its publish (k - 1 day
+    files moved, every pending day directory already emptied) leaves
+    the days an earlier run committed byte for byte as they were and
+    its own days pending; a resume writes the rows a clean run writes,
+    with lineage summing to ``n_docs``."""
+    pages, out = paths
+    s1 = C.run_checkpointed(spark, pages, out, ts_from="2026-01-01", ts_to="2026-01-05")
+    committed = C.committed_days(spark, out)
+    before = _md5s(f"{out}/extracted")
+    assert len(before) == len(committed) == 5
+
+    publish = C._publish
+    monkeypatch.setattr(
+        C, "_publish", lambda fs, *args: publish(_FailingMove(fs, k), *args)
+    )
+    with pytest.raises(OSError, match="injected failure between the moves"):
+        C.run_checkpointed(spark, pages, out)
+    monkeypatch.setattr(C, "_publish", publish)
+
+    assert C.committed_days(spark, out) == committed
+    assert not glob.glob(os.path.join(out, "extracted", "_staging-*"))
+    left = _md5s(f"{out}/extracted")
+    assert {d: left[d] for d in before} == before
+    assert len(left) == len(before) + k - 1  # the files moved before the failure
+
+    s2 = C.run_checkpointed(spark, pages, out)
+    assert s2.skipped_days == s1.pending_days
+    assert s1.n_docs + s2.n_docs == N_DOCS
+    assert {d: m for d, m in _md5s(f"{out}/extracted").items() if d in before} == before
+    lineage = C.read_lineage(spark, out)
+    assert lineage.count() == 30
+    assert lineage.agg(F.sum("n_docs")).collect()[0][0] == N_DOCS
+    ref = str(tmp_path / "ref")
+    C.run_checkpointed(spark, pages, ref)
+    mine, clean = C.read_extracted(spark, out), C.read_extracted(spark, ref)
+    assert mine.exceptAll(clean).count() == 0 and clean.exceptAll(mine).count() == 0
+
+
 def _spark_commit(spark, pages, out, lo, hi):
     """Commit the days [lo, hi] as the Spark writer the engine used
     before wrote them: ``X.extract``'s rows written by Spark with
