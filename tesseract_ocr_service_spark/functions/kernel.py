@@ -465,7 +465,7 @@ def kernel_iter(
     """``mapInArrow`` entrypoint of ``operators.extract.extract``:
     lazily extract each non-empty Arrow batch (:func:`extract_batch`).
     A commit's write tasks call :func:`extract_batch` per batch
-    themselves (``plans.commit.write_days``): they write the output to
+    themselves (``plans.commit.write_day_files``): they write the output to
     their day files, time it and count it, and return Spark one row per
     file, not the rows."""
     forget_zip_finders()

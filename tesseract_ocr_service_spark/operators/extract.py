@@ -143,9 +143,9 @@ def kernel_input(
     """The kernel's input rows: ``pages`` projected to the columns the
     kernel reads (``KERNEL_INPUT``, and of ``KERNEL_OPTIONAL`` those
     ``pages`` has), plus the ``extra`` columns, gated by ``languages``
-    — the one projection of :func:`extract` and of the commit's frame
-    feed (``plans.commit.write_days``). A commit of a parquet table
-    reads the same columns with pyarrow in its tasks instead.
+    — the one projection of :func:`extract` and of the pages a WARC
+    run or a streaming epoch stages (``plans.commit._stage_pages``). A
+    commit's write tasks read the same columns with pyarrow.
 
     ``languages`` optionally gates rows by the `lang` column (the
     reference's language config, ocr/schemas.py:38-41, as a relational
@@ -175,7 +175,7 @@ def extract(
     :func:`kernel_input`, then ``kernel.kernel_iter`` under
     ``mapInArrow``. The rows API for readers of the rows themselves; a
     commit writes its day files from the kernel's tasks instead
-    (``plans.commit.write_days``), so its rows never come back here.
+    (``plans.commit.write_day_files``), so its rows never come back here.
 
     ``salt_partitions`` > 0 adds an explicit hash(url)-salted repartition
     before the kernel — breaks up byte-skewed input splits (heavy-tailed
@@ -261,7 +261,7 @@ def lineage_view(wide: DataFrame) -> DataFrame:
     """Output table 3 `lineage` — per-warc_day counters (the reference
     logs these per request, ocr_processor.py:463-475,512-527). A commit
     takes the same sums from the rows its write tasks return, one per
-    file written (``plans.commit.write_days``); this aggregate over
+    file written (``plans.commit.write_day_files``); this aggregate over
     written rows is what they must equal."""
     return (
         wide.groupBy(warc_day().alias("warc_day"))

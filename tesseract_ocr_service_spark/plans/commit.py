@@ -18,26 +18,29 @@ rule, with plain parquet — no Iceberg jars offline):
    as a ``pyarrow.dataset`` with the window as a partition filter
    (:func:`day_files`: no job runs, no footer is read; a day directory
    whose files hold no rows is pending too, and gets a zero marker). A
-   WARC source, whose warc_day is a parsed column, takes one
-   ``distinct()`` over its persisted frame instead.
+   WARC source, whose warc_day is a parsed column, first stages its
+   window's pages (:func:`_stage_pages`): ONE ``mapInArrow`` over
+   ``X.kernel_input`` whose tasks write each day's rows with pyarrow
+   under the run's staging directory, ``_pages/warc_day=D/``, and
+   return one ``(day, path)`` row per file; the driver ``collect``s
+   them into the same ``{day: files}`` plan, so every archive is parsed
+   once and a failed attempt's files are never read. A streaming epoch
+   (``streaming.ingest.epoch_sink``, :func:`write_frame`) stages its
+   pages the same way.
 2. Process ONLY pending days, in ONE Spark stage whose tasks run the
-   kernel and write their rows themselves. A parquet source takes the
-   file feed (:func:`write_day_files`): the driver places the pending
-   days' files into tasks (day i of D to task i·n // D; with fewer
-   days than tasks a day's sorted files are split over its tasks), and
+   kernel and write their rows themselves: the file feed
+   (:func:`write_day_files`). The driver places the pending days'
+   files into tasks (day i of D to task i·n // D; with fewer days than
+   tasks a day's sorted files are split over its tasks), and
    ``spark.range(0, n, 1, n).mapInArrow`` runs one task per place,
    which reads its files with the executor's pyarrow, sorted by (day,
    url) — no JVM scan, no exchange, no schema job; a day share over
    ``_SORT_BYTES`` is sorted in runs spilled to local disk and merged,
-   so a task's memory does not grow with its days. A WARC source and a
-   streaming epoch (``streaming.ingest.epoch_sink``) take the frame
-   feed (:func:`write_days`): ``X.kernel_input`` placed into tasks by
-   the same rule (``repartitionById``: no sampling job; a url-hash split
-   when there are fewer days than tasks) and sorted by (day, url). A
-   row is written under the day step 1 enumerated it by: its input
-   directory, or a frame's ``warc_day`` column (:func:`frame_day`), so
-   a session time zone other than the pages' never moves a row into
-   another day's directory. Each task writes with pyarrow, one
+   so a task's memory does not grow with its days. A row is written
+   under the day step 1 enumerated it by: its input directory, or a
+   frame's ``warc_day`` column (:func:`frame_day`), so a session time
+   zone other than the pages' never moves a row into another day's
+   directory. Each task writes with pyarrow, one
    url-sorted file per day, under ``extracted/_staging-<uuid>/`` (a
    ``_`` name, which readers skip), and returns one row per file: day,
    path, kernel wall and lineage counters. The committed rows never
@@ -55,7 +58,7 @@ rule, with plain parquet — no Iceberg jars offline):
    attempt are never published — then replaces each day directory the
    write produced with its staged files by moves (**dynamic partition
    overwrite**: exactly the produced partitions, never a committed
-   one) and removes the staging directory (:func:`_stage`). A
+   one) and removes the staging directory (:func:`staging`). A
    committed day directory is written once, at its final layout, so no
    compaction pass follows. A driver that dies before the moves leaves
    the staging directory behind, unread, and its days pending; one
@@ -117,7 +120,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
-from pyspark import StorageLevel
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -130,9 +133,9 @@ from ..schema import EXTRACTED_ARROW, LINEAGE_ARROW, LINEAGE_COUNTERS
 from ..sources import warc as Wsrc
 from ..worker import forget_zip_finders
 
-#: the day column of the kernel input both feeds give the write tasks
-#: (:func:`frame_day` in :func:`write_days`, the directory day in
-#: :func:`_day_pieces`): the tasks name day directories with it, and it
+#: the day column of the kernel input the file feed gives the write
+#: tasks (the planned day in :func:`_day_pieces`; :func:`frame_day` in
+#: :func:`_stage_pages`): the tasks name day directories with it, and it
 #: is not written
 _DAY = "_warc_day"
 
@@ -261,62 +264,41 @@ def run_checkpointed(
     ``source_format='warc'`` reads ``.warc.gz`` archives directly
     (sources/warc.py) — the direct-from-crawl path. Its warc_day is a
     parsed column, not a directory partition, so the ts range filters
-    rows but cannot prune archive files; for repeated runs over one
-    crawl, stage to the partitioned parquet/Iceberg table first (one
-    extraction-free pass) and run this job against that.
+    rows but cannot prune archive files: the run parses every archive
+    once and stages the window's pages by day (:func:`_stage_pages`),
+    then commits the pending days from the staged files as a parquet
+    run commits them from the pages table.
     """
     t0 = time.perf_counter()
     # one bound rule for both sources: a bound keeps its date
     lo, hi = _bound_day(ts_from), _bound_day(ts_to)
     out = f"{out_root}/extracted"
     with ExitStack() as stack:
-        if source_format != "warc":
-            uri = Wsrc.spark_uri(spark, pages_path)
-            files = day_files(uri, lo, hi)
-            input_days = list(files)
-
-            def write(days):
-                todo = {d: files[d] for d in days}
-                return write_day_files(
-                    spark, uri, todo, out, cfg, salt_partitions, languages
-                )
-
-        else:
+        stage = None
+        if source_format == "warc":
             pages = Wsrc.read_warc(spark, pages_path)
             if lo is not None:
                 pages = pages.where(F.col("warc_day") >= F.lit(lo))
             if hi is not None:
                 pages = pages.where(F.col("warc_day") <= F.lit(hi))
-            # the day enumeration and the extraction write are two
-            # consumers, each re-running the whole gunzip+parse (CLAUDE.md
-            # extra-consumer rule), the run's dominant cost. Persisted for
-            # the run (spills to executor disk: the staging pass the
-            # docstring recommends, in-flight).
-            pages = stack.enter_context(persisted(pages))
-            input_days = sorted(
-                str(r["warc_day"])
-                for r in pages.select("warc_day").distinct().collect()
-            )
-
-            def write(days):
-                # warc_ts is non-null by schema contract (undated WARC
-                # records ride the epoch sentinel, sources/warc.UNDATED_TS),
-                # so every row has a real warc_day step 1 enumerates
-                todo = pages.where(F.col("warc_day").isin(days))
-                return write_days(
-                    todo, out, days, cfg, salt_partitions, languages=languages
-                )
+            stage = stack.enter_context(staging(spark, out))
+            uri, files = stage, _stage_pages(pages, stage)
+        else:
+            uri = Wsrc.spark_uri(spark, pages_path)
+            files = day_files(uri, lo, hi)
 
         # ---- step 1: partition-level anti-join against the commit log
         done = committed_days(spark, out_root)
-        pending = [d for d in input_days if d not in done]
-        skipped = [d for d in input_days if d in done]
+        pending = [d for d in files if d not in done]
+        skipped = [d for d in files if d in done]
         if not pending:
             wall_ms = int((time.perf_counter() - t0) * 1000)
             return RunSummary(pending, skipped, 0, wall_ms)
 
         # ---- step 2: process, stage and publish the pending day files
-        sums = write(pending)
+        stage = stage or stack.enter_context(staging(spark, out))
+        todo = {d: files[d] for d in pending}
+        sums = write_day_files(spark, uri, todo, stage, cfg, salt_partitions, languages)
 
     if _fail_before_commit:
         raise RuntimeError("injected failure between data write and commit marker")
@@ -350,119 +332,155 @@ def run_checkpointed(
     return RunSummary(pending, skipped, sum(r["n_docs"] for r in rows), wall_ms)
 
 
-def write_days(
-    pages: DataFrame,
-    path: str,
-    days: list[str],
-    cfg: ExtractConfig = ExtractConfig(),
-    n: int = 0,
-    epoch_id: int | None = None,
-    languages=None,
-) -> dict[str, list]:
-    """The frame feed of the one write of extracted rows: a WARC run
-    (step 2 above) and a streaming epoch (``streaming.ingest.epoch_sink``)
-    write through it; a parquet run reads its files in the write tasks
-    instead (:func:`write_day_files`). Returns ``{warc_day: [kernel_ms,
-    *LINEAGE_COUNTERS]}`` of the rows it wrote.
-
-    ``days`` are the sorted days ``pages`` holds, by :func:`frame_day`,
-    the day each row is written under. ``X.kernel_input`` of ``pages``
-    is placed into ``n`` tasks (0: the cluster's default parallelism)
-    by :func:`_day_tasks`' plan — at most ``max(days, n)`` files per
-    call, the same for the same input — and sorted by (day, url) in
-    each; the tasks stage, the driver publishes (:func:`_stage`)."""
-    spark = pages.sparkSession
-    n = n if n > 0 else spark.sparkContext.defaultParallelism
-    todo = (
-        X.kernel_input(pages, languages, frame_day(pages).alias(_DAY))
-        .repartitionById(n, _day_tasks(days, n))
-        .sortWithinPartitions(_DAY, "url")
-    )
-    return _stage(
-        spark, path, cfg, epoch_id, lambda write: todo.mapInArrow(write, STAGED_SCHEMA)
-    )
-
-
 def frame_day(pages: DataFrame) -> Column:
     """The day a frame's row is written under, as a 'yyyy-MM-dd' string:
     its ``warc_day`` column where it has one (a WARC frame's parsed
     day; a Spark read of the pages table's directory day), else
     ``X.warc_day()`` of its ``warc_ts`` (a streamed parquet epoch,
-    whose recursive file listing has no partition column). Callers
-    enumerate a frame's days by it too, so each row lands under a day
-    that was enumerated."""
-    if "warc_day" in pages.columns:
-        return F.col("warc_day").cast("string")
-    return X.warc_day()
+    whose recursive file listing has no partition column). A row
+    without a day (a NULL ``warc_ts``) goes under
+    ``sources.warc.UNDATED_DAY``, as an undated WARC record does."""
+    has_day = "warc_day" in pages.columns
+    day = F.col("warc_day").cast("string") if has_day else X.warc_day()
+    return F.coalesce(day, F.lit(Wsrc.UNDATED_DAY))
+
+
+def write_frame(
+    pages: DataFrame,
+    path: str,
+    cfg: ExtractConfig = ExtractConfig(),
+    epoch_id: int | None = None,
+) -> dict[str, list]:
+    """The extracted rows of a frame's pages (a streaming epoch,
+    ``streaming.ingest.epoch_sink``) written under ``path``: its pages
+    staged by day (:func:`_stage_pages`), then committed from the
+    staged files by :func:`write_day_files`, in one :func:`staging`
+    directory. Returns what :func:`write_day_files` returns."""
+    spark = pages.sparkSession
+    with staging(spark, path) as stage:
+        files = _stage_pages(pages, stage)
+        return write_day_files(spark, stage, files, stage, cfg, epoch_id=epoch_id)
+
+
+@contextmanager
+def staging(spark: SparkSession, path: str):
+    """A new staging directory ``path/_staging-<uuid>/`` (a ``_`` name,
+    which readers skip), as its URI where Spark resolves it; removed
+    with all it holds when the block ends. It holds a commit's staged
+    pages (``_pages/``) and staged output until the moves publish it."""
+    uri = f"{Wsrc.spark_uri(spark, path)}/_staging-{uuid.uuid4()}"
+    fs, root = Wsrc.arrow_fs(uri)
+    fs.create_dir(root)
+    try:
+        yield uri
+    finally:
+        fs.delete_dir(root)
+
+
+def _stage_pages(pages: DataFrame, stage: str) -> dict[str, list[str]]:
+    """Write the kernel input of ``pages`` under ``stage/_pages/``, by
+    :func:`frame_day`, in ONE ``mapInArrow`` stage (:func:`_page_task`);
+    returns ``{day: sorted paths}`` of the files the tasks wrote, as
+    :func:`day_files` returns a pages table's. The plan is built from
+    the rows the driver ``collect``s, never from a listing: they come
+    from the attempt of each task that succeeded, so the files a failed
+    attempt left are never read."""
+    todo = X.kernel_input(pages, None, frame_day(pages).alias(_DAY))
+    write = functools.partial(_page_task, stage_uri=stage)
+    files: dict[str, list[str]] = {}
+    for r in todo.mapInArrow(write, "warc_day string, path string").collect():
+        files.setdefault(r["warc_day"], []).append(r["path"])
+    return {d: sorted(files[d]) for d in sorted(files)}
+
+
+def _page_task(batches, stage_uri: str):
+    """``mapInArrow`` body of :func:`_stage_pages`: the task's rows of
+    each day, in input order and without ``_DAY``, written by pyarrow
+    to one file under ``stage_uri/_pages/warc_day=D/``, named by the
+    task's partition first, so a day's sorted paths keep the input
+    order. Rows are buffered across days and written out, one row
+    group per day, each time ``_ROW_GROUP_BYTES`` have gathered; each
+    file's ``(day, path)`` row is returned once every file is closed."""
+    forget_zip_finders()
+    fs, stage = Wsrc.arrow_fs(stage_uri)
+    part = TaskContext.get().partitionId()
+    writers: dict[str, pq.ParquetWriter] = {}
+    paths: dict[str, str] = {}
+    rows: dict[str, list[pa.RecordBatch]] = {}
+    size = 0
+
+    def flush():
+        for day, buf in rows.items():
+            if day not in writers:
+                d = f"{stage}/_pages/warc_day={day}"
+                fs.create_dir(d)
+                paths[day] = f"{d}/part-{part:05d}-{uuid.uuid4()}.parquet"
+                writers[day] = pq.ParquetWriter(paths[day], buf[0].schema, filesystem=fs)
+            writers[day].write_table(pa.Table.from_batches(buf))
+        rows.clear()
+
+    for batch in batches:
+        days = batch.column(_DAY)
+        page = batch.drop_columns([_DAY])
+        for day in pc.unique(days).to_pylist():
+            rows.setdefault(day, []).append(page.filter(pc.equal(days, day)))
+        size += batch.nbytes
+        if size >= _ROW_GROUP_BYTES:
+            flush()
+            size = 0
+    flush()
+    for w in writers.values():
+        w.close()
+    if paths:
+        yield pa.RecordBatch.from_pydict(
+            {"warc_day": list(paths), "path": list(paths.values())}
+        )
 
 
 def write_day_files(
     spark: SparkSession,
     uri: str,
     files: dict[str, list[str]],
-    path: str,
+    stage: str,
     cfg: ExtractConfig = ExtractConfig(),
     n: int = 0,
     languages=None,
+    epoch_id: int | None = None,
 ) -> dict[str, list]:
-    """The file feed of the one write of extracted rows: a parquet run's
-    step 2, ONE Spark stage. ``files`` are :func:`day_files` of the
-    pages table at ``uri``; returns what :func:`write_days` returns.
+    """The one write of extracted rows, the file feed: ONE Spark stage.
+    ``files`` are :func:`day_files` of the pages table at ``uri`` (or
+    the plan :func:`_stage_pages` returns); their rows are extracted,
+    staged under ``stage`` (a :func:`staging` directory) and published
+    beside it, in ``[epoch_id=N/]warc_day=D/``. Returns ``{warc_day:
+    [kernel_ms, *LINEAGE_COUNTERS]}`` of the rows written.
 
     The driver places the sorted days into ``n`` tasks (0: the
-    cluster's default parallelism) with :func:`_day_tasks`' rule — day
-    i goes to task i·n // D; when D < n its sorted files are split
-    into contiguous shares over its k tasks (:func:`_file_plan`) — and
-    runs ``spark.range(0, n, 1, n).mapInArrow(...)``: each task reads
-    its own files with the executor's pyarrow (:func:`_file_task`),
-    so no JVM scan, exchange or schema job runs, and every row is
-    written under the directory day it was read from. Executors open
-    ``uri`` with their own pyarrow (``sources.warc.arrow_fs``), as
-    they open the output root."""
+    cluster's default parallelism) — day i of D goes to task i·n // D;
+    when D < n its sorted files are split into contiguous shares over
+    its k tasks (:func:`_file_plan`) — and runs
+    ``spark.range(0, n, 1, n).mapInArrow(...)``: each task reads its
+    own files with the executor's pyarrow (:func:`_file_task`), so no
+    JVM scan, exchange or schema job runs, and every row is written
+    under the day it was planned under, by :func:`_write_task`. The
+    driver collects the rows, moves the files out of ``stage``,
+    replacing exactly the directories they go to (:func:`_publish`),
+    and sums the rows per day. Executors open ``uri`` and ``stage``
+    with their own pyarrow (``sources.warc.arrow_fs``)."""
     n = n if n > 0 else spark.sparkContext.defaultParallelism
+    prefix = "" if epoch_id is None else f"epoch_id={int(epoch_id)}/"
     task = functools.partial(
         _file_task,
         plan=_file_plan(files, n),
         uri=uri,
         languages=None if not languages else list(languages),
         rows=int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+        write=functools.partial(_write_task, cfg=cfg, stage_uri=stage, prefix=prefix),
     )
-
-    def feed(write):
-        return spark.range(0, n, 1, n).mapInArrow(
-            functools.partial(task, write=write), STAGED_SCHEMA
-        )
-
-    return _stage(spark, path, cfg, None, feed)
-
-
-def _stage(
-    spark: SparkSession, path: str, cfg: ExtractConfig, epoch_id, feed
-) -> dict[str, list]:
-    """Stage, publish and sum one write: ``feed(write)`` is the frame of
-    ``STAGED_SCHEMA`` rows whose tasks call ``write``
-    (:func:`_write_task`) on their day- and url-sorted kernel input.
-    Each task writes its day files with pyarrow under
-    ``path/_staging-<uuid>/``; the driver collects the rows, moves the
-    files into ``[epoch_id=N/]warc_day=D/``, replacing exactly those
-    directories (:func:`_publish`), removes the staging directory and
-    sums the rows per day. Executors open ``path`` where Spark resolves
-    it, with their own pyarrow (``sources.warc.arrow_fs``)."""
-    uri = Wsrc.spark_uri(spark, path)
-    fs, root = Wsrc.arrow_fs(uri)
-    stage = f"_staging-{uuid.uuid4()}"
-    prefix = "" if epoch_id is None else f"epoch_id={int(epoch_id)}/"
-    write = functools.partial(
-        _write_task, cfg=cfg, stage_uri=f"{uri}/{stage}", prefix=prefix
-    )
-    fs.create_dir(f"{root}/{stage}")
-    try:
-        files = feed(write).collect()
-        _publish(fs, f"{root}/{stage}", root, [f["path"] for f in files])
-    finally:
-        fs.delete_dir(f"{root}/{stage}")
+    staged = spark.range(0, n, 1, n).mapInArrow(task, STAGED_SCHEMA).collect()
+    fs, root = Wsrc.arrow_fs(stage)
+    _publish(fs, root, posixpath.dirname(root), [f["path"] for f in staged])
     sums: dict[str, list] = {}
-    for f in files:
+    for f in staged:
         row = [f["kernel_ms"], *(f[c] for c in LINEAGE_COUNTERS)]
         old = sums.get(f["warc_day"])
         sums[f["warc_day"]] = row if old is None else [x + y for x, y in zip(old, row)]
@@ -677,13 +695,13 @@ def _batches(tables, rows: int):
 
 
 def _write_task(batches, cfg: ExtractConfig, stage_uri: str, prefix: str):
-    """The write of both feeds (the ``write`` :func:`_stage` hands
-    them), run in each task of the one write stage: extract each input
-    batch, and write its rows to the current day's file under
-    ``stage_uri/<prefix>warc_day=D/``. The input is sorted by day, so
-    one file is open at a time and each day of the task is one file;
-    when a day ends its file is closed and its ``STAGED_SCHEMA`` row
-    yielded. A batch's kernel wall is split over its days by rows."""
+    """The write of the file feed (the ``write`` :func:`write_day_files`
+    hands :func:`_file_task`), run in each task of the one write stage:
+    extract each input batch, and write its rows to the current day's
+    file under ``stage_uri/<prefix>warc_day=D/``. The input is sorted by
+    day, so one file is open at a time and each day of the task is one
+    file; when a day ends its file is closed and its ``STAGED_SCHEMA``
+    row yielded. A batch's kernel wall is split over its days by rows."""
     forget_zip_finders()
     fs, stage = Wsrc.arrow_fs(stage_uri)
     file = None
@@ -782,39 +800,6 @@ def _day_span(i: int, d: int, n: int) -> tuple[int, int]:
     (i+1)·n // D - 1."""
     lo, hi = i * n // d, (i + 1) * n // d
     return lo, max(hi - lo, 1)
-
-
-def _day_tasks(days: list[str], n: int) -> Column:
-    """The frame feed's task of each row as one SQL-text expression
-    (CLAUDE.md big-expression rule), planned on the driver over the D
-    sorted ``days`` by :func:`_day_span`: a day spanning k > 1 tasks is
-    split by ``pmod(xxhash64(url), k)``, so each day lands in one file
-    when D >= n. A row of an unlisted day goes to task 0."""
-    if not days:
-        return F.lit(0)
-    groups: dict[str, list[str]] = {}
-    for i, day in enumerate(days):
-        lo, k = _day_span(i, len(days), n)
-        task = str(lo) if k == 1 else f"{lo} + pmod(xxhash64(url), {k})"
-        quoted = day.replace("\\", "\\\\").replace("'", "\\'")
-        groups.setdefault(task, []).append(f"'{quoted}'")
-    whens = " ".join(
-        f"WHEN `{_DAY}` IN ({', '.join(ds)}) THEN {task}"
-        for task, ds in groups.items()
-    )
-    return F.expr(f"CAST(CASE {whens} ELSE 0 END AS INT)")
-
-
-@contextmanager
-def persisted(df: DataFrame):
-    """``df`` persisted (MEMORY_AND_DISK) for the block and released
-    after it — for a frame with several consumers whose upstream (the
-    WARC parse) is too costly to re-run for each."""
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        yield cached
-    finally:
-        cached.unpersist()
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

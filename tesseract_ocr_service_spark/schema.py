@@ -167,6 +167,6 @@ LINEAGE_SCHEMA = StructType(
 LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 #: the lineage counters, in LINEAGE_SCHEMA order: what a commit's write
-#: tasks sum per day file (``plans.commit.write_days``), and
+#: tasks sum per day file (``plans.commit.write_day_files``), and
 #: ``operators.extract.lineage_view`` as a Spark aggregate
 LINEAGE_COUNTERS = tuple(f for f in LINEAGE_SCHEMA.fieldNames() if f.startswith("n_"))

@@ -3,16 +3,15 @@
 Pattern: parquet file-source stream, or a path-only stream of WARC
 archives parsed by the batch reader's own parse -> the SAME fused
 extraction kernel (mapInArrow works unchanged on streaming DataFrames —
-it is stateless) -> ``foreachBatch`` sink that calls the batch commit's
-own writer, ``plans.commit.write_days``: the epoch's days come from one
-``distinct`` over the epoch's day column, its pages are placed into
-tasks by the writer's driver-side day plan before the kernel (a WARC
-epoch's parsed pages persisted for both, so each archive is parsed
-once), and the kernel tasks write the output themselves, url-sorted,
-under (epoch_id, warc_day), published by the driver with DYNAMIC
-partition overwrite semantics — one file per day directory when the
-epoch holds at least n days, at most max(days, n) per epoch (n = the
-cluster's default parallelism).
+it is stateless) -> ``foreachBatch`` sink that calls the batch
+commit's own writer, ``plans.commit.write_frame``: one stage writes the
+epoch's pages by day with pyarrow into a staging directory (each
+archive of a WARC epoch parsed once), and the file feed's kernel tasks
+read them back and write the output themselves, url-sorted, under
+(epoch_id, warc_day), published by the driver with DYNAMIC partition
+overwrite semantics — one file per day directory when the epoch holds
+at least n days, at most max(days, n) per epoch (n = the cluster's
+default parallelism).
 
 Exactly-once story: the streaming checkpoint records which input files
 each epoch consumed, and the sink keys its output on the epoch —
@@ -150,31 +149,13 @@ def stream_warc(
 
 
 def epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
-    """foreachBatch sink: ``plans.commit.write_days`` over the epoch's
-    days (one ``distinct`` of ``plans.commit.frame_day``, the day each
-    row is written under), keyed by
-    (epoch_id, warc_day) — replaying an epoch rewrites exactly its own
-    partitions (idempotent) instead of appending duplicate rows, with
-    the same layout."""
+    """foreachBatch sink of both sources: ``plans.commit.write_frame``
+    of the epoch, keyed by (epoch_id, warc_day) — replaying an epoch
+    rewrites exactly its own partitions (idempotent) instead of
+    appending duplicate rows, with the same layout."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        day = C.frame_day(batch_df)
-        days = sorted(r[0] for r in batch_df.select(day).distinct().collect())
-        C.write_days(batch_df, f"{out_root}/extracted", days, cfg, epoch_id=epoch_id)
-
-    return sink
-
-
-def warc_epoch_sink(out_root: str, cfg: ExtractConfig = ExtractConfig()):
-    """:func:`epoch_sink` with the epoch's parsed WARC pages persisted:
-    the day ``distinct`` and the write are two consumers of them, and
-    without the persist each would gunzip and parse every archive.
-    Parquet epochs re-read cheaply and stay unpersisted."""
-    write = epoch_sink(out_root, cfg)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        with C.persisted(batch_df) as pages:
-            write(pages, epoch_id)
+        C.write_frame(batch_df, f"{out_root}/extracted", cfg, epoch_id)
 
     return sink
 
@@ -196,11 +177,9 @@ def start_incremental_extract(
     availableNow honors it, draining in multiple epochs)."""
     if source_format == "warc":
         pages = stream_warc(spark, landing_path, max_files_per_trigger)
-        sink = warc_epoch_sink(out_root, cfg)
     else:
         pages = stream_pages(spark, landing_path, max_files_per_trigger)
-        sink = epoch_sink(out_root, cfg)
-    writer = pages.writeStream.foreachBatch(sink).option(
+    writer = pages.writeStream.foreachBatch(epoch_sink(out_root, cfg)).option(
         "checkpointLocation", checkpoint
     )
     if available_now:

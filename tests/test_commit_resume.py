@@ -654,12 +654,19 @@ def _large_html_pages(root, days, docs_per_day):
 def test_file_feed_writes_the_frame_feeds_bytes(spark, tmp_path):
     """The file feed cuts its input into batches as Spark's
     ``maxRecordsPerBatch`` cuts a (day, url)-sorted partition, across
-    day bounds, so each day file is byte-identical to the one the frame
-    feed writes from ``X.read_pages`` in the same tasks. The cuts reach
-    the bytes once a column of a day outgrows one parquet data page
-    (1 MiB): the writer's pages follow the chunks of the rows it gets,
-    and a day cut on its own (here 16 rows at 7 a batch, 2 days a task)
-    is chunked otherwise."""
+    day bounds, so each day file is byte-identical to the one the same
+    write tasks make behind a JVM scan: ``X.read_pages`` placed by day
+    (day i of 4 in task i·2 // 4), sorted within each task by (day,
+    url), staged by ``C._write_task`` and published by ``C._publish``.
+    The cuts reach the bytes once a column of a day outgrows one
+    parquet data page (1 MiB): the writer's pages follow the chunks of
+    the rows it gets, and a day cut on its own (here 16 rows at 7 a
+    batch, 2 days a task) is chunked otherwise."""
+    import functools
+
+    from pyarrow import fs as pafs
+
+    from tesseract_ocr_service_spark.config import ExtractConfig
     from tesseract_ocr_service_spark.sources import warc as W
 
     pages = str(tmp_path / "pages")
@@ -667,17 +674,30 @@ def test_file_feed_writes_the_frame_feeds_bytes(spark, tmp_path):
     uri = W.spark_uri(spark, pages)
     files = C.day_files(uri)
     assert list(files) == days
+    frame, stage = str(tmp_path / "frame"), str(tmp_path / "frame" / "_staging")
+    os.makedirs(stage)
+    day = F.col("warc_day").cast("string")
+    behind_a_scan = (
+        X.kernel_input(X.read_pages(spark, pages), None, day.alias(C._DAY))
+        .repartitionById(2, F.when(day.isin(days[:2]), 0).otherwise(1))
+        .sortWithinPartitions(C._DAY, "url")
+    )
+    write = functools.partial(
+        C._write_task, cfg=ExtractConfig(), stage_uri=stage, prefix=""
+    )
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
-        C.write_day_files(spark, uri, files, str(tmp_path / "file"), n=2)
-        C.write_days(X.read_pages(spark, pages), str(tmp_path / "frame"), days, n=2)
+        with C.staging(spark, str(tmp_path / "file")) as file_stage:
+            C.write_day_files(spark, uri, files, file_stage, n=2)
+        staged = behind_a_scan.mapInArrow(write, C.STAGED_SCHEMA).collect()
     finally:
         spark.conf.set(key, old)
+    C._publish(pafs.LocalFileSystem(), stage, frame, [r["path"] for r in staged])
     got = _md5s(str(tmp_path / "file"))
     assert len(got) == 4
-    assert got == _md5s(str(tmp_path / "frame"))
+    assert got == _md5s(frame)
 
 
 def _share(root, n_files, rows_per_file, html_bytes, row_group, seed, n_urls):
@@ -876,6 +896,37 @@ def test_fresh_run_makes_one_job(spark, paths):
     assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) == 1
 
 
+def _archives(root, n_docs=N_DOCS, seed=SEED, k=2):
+    """``n_docs`` generated documents written as ``k`` WARC archives
+    under ``root``; returns ``root``."""
+    from tesseract_ocr_service_spark.sources import warc as W
+
+    os.makedirs(root)
+    recs = [
+        (d["url"], d["warc_ts"], bytes(d["html"]))
+        for d in (gen.doc(i, seed) for i in range(n_docs))
+    ]
+    for j in range(k):
+        W.write_warc(os.path.join(root, f"cc-{j}.warc.gz"), recs[j::k])
+    return root
+
+
+def test_fresh_warc_run_makes_two_jobs(spark, tmp_path):
+    """A fresh WARC run is two Spark jobs: one stage parses every
+    archive once and stages its pages by day with pyarrow, whose rows
+    are the driver's day plan, and one is the file feed's write (no day
+    ``distinct``, no persist, no placement exchange)."""
+    archives = _archives(str(tmp_path / "archives"))
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-warc", "fresh WARC run")
+    try:
+        s = C.run_checkpointed(spark, archives, str(tmp_path / "out"), source_format="warc")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s.n_docs == N_DOCS
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-warc")) == 2
+
+
 def test_noop_resume_makes_no_job(spark, paths):
     """A resume with every day committed starts no Spark job: the input
     days come from the driver's listing and the committed days from
@@ -1036,7 +1087,7 @@ import os, sys
 from tesseract_ocr_service_spark.operators import extract as X
 from tesseract_ocr_service_spark.plans import commit as C
 
-pages, out = sys.argv[1:]
+pages, out, source = sys.argv[1:]
 
 
 def crash(*args):
@@ -1050,8 +1101,23 @@ spark = (
     .config("spark.ui.showConsoleProgress", "false")
     .getOrCreate()
 )
-C.run_checkpointed(spark, pages, out)
+C.run_checkpointed(spark, pages, out, source_format=source)
 """
+
+
+def _crash_before_publish(tmp_path, pages, out, source):
+    """Run ``_CRASH_SCRIPT`` over ``pages`` into ``out``; returns the
+    staging directory the dead driver left (it must be the only one)."""
+    script = tmp_path / "crash.py"
+    script.write_text(_CRASH_SCRIPT)
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, str(script), pages, out, source],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
+    )
+    assert r.returncode == 3, r.stderr[-3000:]
+    (stage,) = glob.glob(os.path.join(out, "extracted", "_staging-*"))
+    return stage
 
 
 @pytest.mark.slow
@@ -1066,15 +1132,7 @@ def test_crash_between_staging_and_publish_then_resume(spark, paths, tmp_path):
     committed = C.committed_days(spark, out)
     before = _texts(spark, out)
 
-    script = tmp_path / "crash.py"
-    script.write_text(_CRASH_SCRIPT)
-    env = dict(os.environ, PYTHONPATH=REPO)
-    r = subprocess.run(
-        [sys.executable, str(script), pages, out],
-        capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
-    )
-    assert r.returncode == 3, r.stderr[-3000:]
-    (stage,) = glob.glob(os.path.join(out, "extracted", "_staging-*"))
+    stage = _crash_before_publish(tmp_path, pages, out, "parquet")
     staged = glob.glob(os.path.join(stage, "warc_day=*", "*.parquet"))
     assert len(staged) == 30 - len(committed)
 
@@ -1098,6 +1156,50 @@ def test_crash_between_staging_and_publish_then_resume(spark, paths, tmp_path):
     C.run_checkpointed(spark, pages, ref)
     assert _texts(spark, out) == _texts(spark, ref)
     assert C.read_extracted(spark, out).exceptAll(C.read_extracted(spark, ref)).count() == 0
+
+
+@pytest.mark.slow
+def test_crash_between_staging_and_publish_of_a_warc_run_then_resume(spark, tmp_path):
+    """A WARC run whose driver dies after the write staged its day files
+    leaves one directory behind, ``extracted/_staging-<uuid>/``,
+    holding both the staged pages (``_pages/``) and the staged output:
+    readers see none of it, and a resume converges to a fresh run's
+    rows with lineage summing to ``n_docs``."""
+    from tesseract_ocr_service_spark.sources import warc as W
+
+    archives = _archives(str(tmp_path / "archives"))
+    out = str(tmp_path / "out")
+    window = dict(ts_from="2026-01-01", ts_to="2026-01-05")
+    s1 = C.run_checkpointed(spark, archives, out, source_format="warc", **window)
+    committed = C.committed_days(spark, out)
+    before = _texts(spark, out)
+
+    stage = _crash_before_publish(tmp_path, archives, out, "warc")
+    left = sorted(os.listdir(os.path.join(out, "extracted")))
+    assert left == sorted([os.path.basename(stage), *(f"warc_day={d}" for d in committed)])
+    assert len(glob.glob(os.path.join(stage, "_pages", "warc_day=*"))) == 30
+    staged = glob.glob(os.path.join(stage, "warc_day=*", "*.parquet"))
+    assert len(staged) == 30 - len(committed)
+
+    assert C.committed_days(spark, out) == committed
+    assert _texts(spark, out) == before
+    late = (
+        W.read_warc(spark, archives).where(F.col("warc_day") >= "2026-01-06")
+        .select("url").orderBy("url").first()["url"]
+    )
+    assert X.lookup_spans(spark, f"{out}/extracted", late).collect() == []
+
+    s2 = C.run_checkpointed(spark, archives, out, source_format="warc")
+    assert s2.skipped_days == s1.pending_days
+    assert s1.n_docs + s2.n_docs == N_DOCS
+    lineage = C.read_lineage(spark, out)
+    assert lineage.count() == 30
+    assert lineage.agg(F.sum("n_docs")).collect()[0][0] == N_DOCS
+    ref = str(tmp_path / "ref")
+    C.run_checkpointed(spark, archives, ref, source_format="warc")
+    assert _md5s(f"{out}/extracted") == _md5s(f"{ref}/extracted")
+    mine, clean = C.read_extracted(spark, out), C.read_extracted(spark, ref)
+    assert mine.exceptAll(clean).count() == 0 and clean.exceptAll(mine).count() == 0
 
 
 class _FailingMove:
@@ -1341,3 +1443,76 @@ def test_lineage_counters_survive_a_task_retry(spark, paths, tmp_path):
     assert sorted(os.listdir(os.path.join(out, "extracted"))) == sorted(
         f"warc_day={d}" for d in lineage
     )
+
+
+#: fails attempt 0 of the WARC run's staging task 0 after it wrote and
+#: closed its page files, whose paths go to ``fired``
+_STAGE_RETRY_SCRIPT = r"""
+import json, sys
+from pyspark import TaskContext
+from tesseract_ocr_service_spark.operators import extract as X
+from tesseract_ocr_service_spark.plans import commit as C
+
+archives, out, fired = sys.argv[1:]
+page_task = C._page_task
+
+
+def failing_page_task(batches, **kw):
+    ctx = TaskContext.get()
+    first = ctx.partitionId() == 0 and ctx.attemptNumber() == 0
+    for row in page_task(batches, **kw):
+        if first:
+            with open(fired, "w") as f:
+                json.dump(row.column("path").to_pylist(), f)
+            raise RuntimeError("injected task failure")
+        yield row
+
+
+C._page_task = failing_page_task
+spark = (
+    X.session_builder(master="local[2,2]", arrow_batch_rows=16)
+    .config("spark.ui.enabled", "false")
+    .config("spark.ui.showConsoleProgress", "false")
+    .getOrCreate()
+)
+summary = C.run_checkpointed(spark, archives, out, source_format="warc")
+print(json.dumps({"n_docs": summary.n_docs}))
+spark.stop()
+"""
+
+
+@pytest.mark.slow
+def test_staged_pages_survive_a_staging_task_retry(spark, tmp_path):
+    """A WARC run's staging task that failed after it wrote its page
+    files, and was retried, adds no row: the day plan is built from the
+    rows the driver collects, which come from the attempt that
+    succeeded, so the failed attempt's files (left in the staging
+    directory) are never read. ``n_docs`` is the input's, lineage
+    equals ``X.lineage_view`` over the output, each url is written once,
+    and no staging directory is left."""
+    archives = _archives(str(tmp_path / "archives"))
+    out, fired = str(tmp_path / "out"), str(tmp_path / "fired")
+    script = tmp_path / "retry.py"
+    script.write_text(_STAGE_RETRY_SCRIPT)
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, str(script), archives, out, fired],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    with open(fired) as f:
+        assert json.load(f)  # the failed attempt had written page files
+    summary = next(json.loads(l) for l in r.stdout.splitlines() if l.startswith("{"))
+    assert summary["n_docs"] == N_DOCS
+
+    lineage = {r["warc_day"]: r.asDict() for r in C.read_lineage(spark, out).collect()}
+    view = {
+        r["warc_day"]: r.asDict()
+        for r in X.lineage_view(C.read_extracted(spark, out)).collect()
+    }
+    assert set(lineage) == set(view)
+    for day, counters in view.items():
+        assert {k: lineage[day][k] for k in counters} == counters, day
+    ext = C.read_extracted(spark, out)
+    assert ext.count() == ext.select("url").distinct().count() == N_DOCS
+    assert not glob.glob(os.path.join(out, "extracted", "_staging-*"))

@@ -75,6 +75,62 @@ def test_epoch_sink_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(f"{out}/extracted").count() == 50
 
 
+def test_epoch_makes_two_jobs(spark, tmp_path):
+    """One epoch of the sink is two Spark jobs for either source: one
+    stage writes the epoch's pages by day into the staging directory
+    and one is the file feed's write (no day ``distinct``, no persist,
+    no placement exchange)."""
+    from tesseract_ocr_service_spark.sources import warc as W
+
+    archives = str(tmp_path / "archives")
+    os.makedirs(archives)
+    docs = [gen.doc(i, 3) for i in range(40)]
+    W.write_warc(
+        f"{archives}/cc-0.warc.gz", [(d["url"], d["warc_ts"], bytes(d["html"])) for d in docs]
+    )
+    sink = ingest.epoch_sink(str(tmp_path / "out"))
+    sc = spark.sparkContext
+    for epoch, batch in enumerate(
+        [W.read_warc(spark, archives), gen.generate_pages(spark, 40, seed=3, partitions=2)]
+    ):
+        sc.setJobGroup(f"epoch-{epoch}", "one epoch")
+        try:
+            sink(batch, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(f"epoch-{epoch}")) == 2, epoch
+    assert spark.read.parquet(f"{tmp_path}/out/extracted").count() == 80
+
+
+def test_epoch_sink_writes_undated_rows_under_the_undated_day(spark, tmp_path):
+    """A parquet epoch's rows whose ``warc_ts`` is NULL go under
+    ``warc_day=1970-01-01`` (``sources.warc.UNDATED_DAY``, where the
+    WARC source puts undated records), in an epoch that mixes them
+    with dated rows and in one that holds nothing else; no row is
+    lost."""
+    import pyarrow.dataset as ds
+
+    out = str(tmp_path / "out")
+    sink = ingest.epoch_sink(out)
+    pages = gen.generate_pages(spark, 40, seed=3, partitions=2)
+    undated = F.xxhash64("url") % 3 == 0
+    mixed = pages.withColumn("warc_ts", F.when(undated, None).otherwise(F.col("warc_ts")))
+    n_undated = pages.where(undated).count()
+    assert 0 < n_undated < 40
+    sink(mixed, 1)
+    sink(pages.withColumn("warc_ts", F.lit(None).cast("timestamp")), 2)
+
+    def rows(epoch, day=None):
+        root = f"{out}/extracted/epoch_id={epoch}"
+        if day is not None:
+            root += f"/warc_day={day}"
+        return ds.dataset(root, format="parquet").count_rows()
+
+    assert rows(1) == 40 and rows(1, "1970-01-01") == n_undated
+    assert rows(2) == rows(2, "1970-01-01") == 40
+    assert len(os.listdir(f"{out}/extracted/epoch_id=2")) == 1
+
+
 @pytest.mark.slow
 def test_streaming_first_seen_dedups_across_epochs(spark, tmp_path):
     """applyInPandasWithState: a url that reappears in a later wave is
@@ -390,11 +446,11 @@ def test_streaming_warc_equals_batch_extract(spark, tmp_path):
 
 
 def test_warc_epoch_parses_each_archive_once(spark, tmp_path, monkeypatch):
-    """A WARC epoch's parsed pages are persisted for the epoch: the
-    sink's day distinct and write_days are two consumers of them, and
-    without the persist each parsed every archive. A counting wrapper around the parse (defined here,
-    so it is pickled by value with its accumulator) sees each archive
-    parsed exactly once."""
+    """A WARC epoch parses each archive once: the sink's one stage over
+    the parsed pages writes them by day into its staging directory, and
+    the write reads them back from there. A counting wrapper around the
+    parse (defined here, so it is pickled by value with its
+    accumulator) sees each archive parsed exactly once."""
     from pyspark.accumulators import AccumulatorParam
 
     from tesseract_ocr_service_spark.sources import warc as W
